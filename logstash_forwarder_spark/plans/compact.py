@@ -14,9 +14,8 @@ downtime.
 
 Protocol (each step object-store-safe — no directory ever moves):
 
-1. resolve the sink's CURRENT manifest (compaction requires
-   ``commit_mode="manifest"``; rename-mode layouts have no commit
-   pointer to swap and fail loudly);
+1. resolve the sink's CURRENT manifest (a sink with none is uncommitted
+   — there is no commit pointer to swap — and fails loudly);
 2. read exactly the manifest-listed files and ``coalesce`` them down to
    ``ceil(bytes / target_bytes)`` outputs — a narrow dependency, NO
    shuffle: each output task just concatenates input files;
@@ -58,7 +57,7 @@ import uuid
 
 from pyspark.sql import SparkSession
 
-from .manifest import publish_manifest, read_manifest
+from .manifest import publish_manifest, published_sinks, read_manifest
 
 DEFAULT_TARGET_BYTES = 128 * 1024 * 1024
 
@@ -75,8 +74,8 @@ def gc_unreferenced(run_dir: str, sink: str) -> int:
     if m is None:
         raise ValueError(
             f"sink {sink!r} has no manifest in {run_dir} — gc_unreferenced "
-            "is for manifest-mode sinks (resume-path cleanup of "
-            "uncommitted sinks is plans/manifest.gc_sink)"
+            "is for committed sinks (resume-path cleanup of uncommitted "
+            "sinks is plans/manifest.gc_sink)"
         )
     referenced = {os.path.join(run_dir, f) for f in m["files"]}
     d = _sink_dir(run_dir, sink)
@@ -106,9 +105,8 @@ def compact_sink(
     m = read_manifest(run_dir, sink)
     if m is None:
         raise ValueError(
-            f"sink {sink!r} has no manifest in {run_dir}; compaction "
-            "requires commit_mode='manifest' (rename-mode has no commit "
-            "pointer to swap atomically)"
+            f"sink {sink!r} has no manifest in {run_dir}: it is uncommitted, "
+            "so there is nothing to compact"
         )
     old_rel = m["files"]
     old_abs = [os.path.join(run_dir, f) for f in old_rel]
@@ -182,18 +180,11 @@ def compact_run(
     row_group_bytes: int | None = None,
     sort_cols: list[str] | None = None,
 ) -> list[dict]:
-    """Compact every manifest-committed sink of a run."""
-    from .manifest import MANIFEST_DIR
-
+    """Compact every committed sink of a run."""
     run_dir = os.path.join(out_dir, f"run_id={run_id}")
-    mdir = os.path.join(run_dir, MANIFEST_DIR)
-    if not os.path.isdir(mdir):
-        raise ValueError(f"{run_dir} has no {MANIFEST_DIR}/ — nothing to compact")
-    sinks = sorted(
-        f[len("sink=") : -len(".json")]
-        for f in os.listdir(mdir)
-        if f.startswith("sink=") and f.endswith(".json")
-    )
+    sinks = published_sinks(run_dir)
+    if not sinks:
+        raise ValueError(f"{run_dir} has no committed sink — nothing to compact")
     return [
         compact_sink(
             spark,

@@ -1,17 +1,19 @@
-"""Rename-free commit protocol: manifest files instead of directory moves.
+"""The commit protocol: manifest files instead of directory moves.
 
-The default pipeline publish is `os.replace(staging/sink=X, run_dir/sink=X)`
-— atomic on POSIX, but object stores (S3/GCS) have NO atomic directory
-rename: a "rename" is a copy-per-key + delete, and a reader can observe a
-half-moved prefix. The scale-safe mechanism (what Iceberg/Delta do, and the
-reference's own write-temp-then-rename-one-file trick at
-/root/reference/registrar_other.go:9-15 scaled up) is:
+Every sink a run publishes is committed the same way — the reference's
+own write-temp-then-rename-one-file trick (its registrar_other.go:9-15)
+applied to a table. It needs no atomic directory rename, which object
+stores (S3/GCS) do not have (a "rename" there is copy-per-key + delete,
+and a reader can observe a half-moved prefix); Iceberg and Delta commit
+the same way:
 
 * data files are written ONCE, under unique names, directly in their final
   partition directory — never moved;
 * a commit atomically publishes ONE SMALL MANIFEST file listing exactly the
   data files that belong to the table; readers resolve files through the
-  manifest and ignore everything else in the directory;
+  manifest (:func:`resolve_sink_paths`) and ignore everything else in the
+  directory — a sink with no manifest is uncommitted and has no readable
+  data;
 * crash recovery = delete unreferenced files and redo — readers never saw
   them because no manifest named them.
 
@@ -19,14 +21,14 @@ Scope of the rename-free claim: the PUBLISH/COMMIT layer. At this layer
 only single-FILE atomic swaps remain (`_publish_file`), which object-store
 catalogs provide (S3 conditional PUT, GCS preconditions); directory renames
 are gone — enforced in tests by a shim that makes `os.replace` raise on
-directories (tests/test_manifest_commit.py). The DATA-WRITE path underneath
-(`df.write...parquet()`) still commits tasks through Hadoop's
-FileOutputCommitter, which renames `_temporary` task directories JVM-side;
-manifest gating keeps READS correct on an object store regardless (a file
-is visible only once a manifest names it), but a real object-store
-deployment should additionally configure a store-appropriate output
-committer (e.g. the S3A magic committer) so the data writes themselves
-avoid copy-and-delete renames.
+directories (the ``no_dir_rename`` fixture, tests/conftest.py). The
+DATA-WRITE path underneath (`df.write...parquet()`) still commits tasks
+through Hadoop's FileOutputCommitter, which renames `_temporary` task
+directories JVM-side; manifest gating keeps READS correct on an object
+store regardless (a file is visible only once a manifest names it), but a
+real object-store deployment should additionally configure a
+store-appropriate output committer (e.g. the S3A magic committer) so the
+data writes themselves avoid copy-and-delete renames.
 """
 
 from __future__ import annotations
@@ -68,14 +70,45 @@ def read_manifest(run_dir: str, sink: str) -> dict | None:
         return None
 
 
-def resolve_sink_files(run_dir: str, sink: str) -> list[str] | None:
-    """Reader-side resolution: the manifest's file list (absolute paths), or
-    None when this sink has no manifest (rename-mode layout — the caller
-    falls back to the directory)."""
-    m = read_manifest(run_dir, sink)
-    if m is None:
-        return None
-    return [os.path.join(run_dir, f) for f in m["files"]]
+def resolve_sink_paths(run_dir: str, sinks) -> list[str]:
+    """Reader-side resolution: the paths a scan must name to see exactly
+    the committed files of ``sinks``. A sink with no manifest (never
+    committed) or an empty one contributes nothing. When the manifest
+    names exactly the visible files in the sink directory — the normal
+    case — the directory itself stands for them: one path per sink keeps a
+    multi-sink read under Spark's parallel-listing threshold
+    (``spark.sql.sources.parallelPartitionDiscovery.threshold``, 32 paths),
+    which would otherwise cost a listing job per read. When anything else
+    is there (orphans of a crashed attempt, or of a crashed compaction),
+    the listed files are named one by one so the orphans stay invisible."""
+    out: list[str] = []
+    for sink in sinks:
+        m = read_manifest(run_dir, sink)
+        if m is None or not m["files"]:
+            continue
+        d = os.path.join(run_dir, f"sink={sink}")
+        visible = {
+            os.path.join(f"sink={sink}", f)
+            for f in os.listdir(d)
+            if not f.startswith((".", "_"))
+        }
+        if visible == set(m["files"]):
+            out.append(d)
+        else:
+            out.extend(os.path.join(run_dir, f) for f in m["files"])
+    return out
+
+
+def published_sinks(run_dir: str) -> list[str]:
+    """Sinks of a run that have a manifest, sorted."""
+    mdir = os.path.join(run_dir, MANIFEST_DIR)
+    if not os.path.isdir(mdir):
+        return []
+    return sorted(
+        f[len("sink=") : -len(".json")]
+        for f in os.listdir(mdir)
+        if f.startswith("sink=") and f.endswith(".json")
+    )
 
 
 def list_data_files(run_dir: str, sink: str) -> list[str]:

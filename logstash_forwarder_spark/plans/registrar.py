@@ -29,6 +29,8 @@ import pyarrow as pa
 import pyarrow.parquet as pq
 from pyspark.sql import DataFrame, SparkSession
 
+from .manifest import gc_sink, resolve_sink_paths
+
 _ARROW_SCHEMA = pa.schema(
     [
         pa.field("run_id", pa.string(), nullable=False),
@@ -416,8 +418,6 @@ class Registrar:
         dir rmdir'd — so Spark write residue (`_SUCCESS`, `.crc`,
         `_metrics/`) goes with it. No directory is ever renamed.
         Returns files removed."""
-        from .manifest import gc_sink, read_manifest
-
         n = 0
         dead_runs = set()
         for s in snaps:
@@ -425,16 +425,7 @@ class Registrar:
             if s.run_id not in surviving_runs:
                 dead_runs.add(run_dir)
                 continue
-            if read_manifest(run_dir, s.sink) is not None:
-                n += gc_sink(run_dir, s.sink)
-            else:
-                d = os.path.join(run_dir, f"sink={s.sink}")
-                if os.path.isdir(d):
-                    for f in os.listdir(d):
-                        p = os.path.join(d, f)
-                        if os.path.isfile(p):
-                            os.remove(p)
-                            n += 1
+            n += gc_sink(run_dir, s.sink)
             try:
                 os.rmdir(os.path.join(run_dir, f"sink={s.sink}"))
             except OSError:
@@ -553,8 +544,9 @@ class SnapshotLog:
         """Time-travel read of a run's published data: only sinks whose
         commit is <= the requested snapshot (by id) or timestamp are
         visible — Iceberg `VERSION AS OF` / `TIMESTAMP AS OF`, at sink-
-        commit granularity. Pure metadata filter + parquet scan of whole
-        immutable sink dirs (basePath keeps the sink partition column).
+        commit granularity. Pure metadata filter + parquet scan of each
+        visible sink's manifest-listed files (basePath keeps the sink
+        partition column).
 
         `snapshot_id` is the precise mechanism: it resolves to a point in
         the GLOBAL commit order (so an id from any run — e.g. one listed
@@ -580,12 +572,8 @@ class SnapshotLog:
             cut_at = _as_utc(as_of)
             snaps = [s for s in snaps if s.committed_at <= cut_at]
         run_dir = os.path.join(out_dir, f"run_id={run_id}")
-        # commit-protocol-aware resolution: manifest-committed sinks expose
-        # exactly their manifest-listed files (rename-free protocol,
-        # plans/manifest.py); others the whole immutable sink dir
-        from ..pipeline import _published_sources
-
-        dirs = _published_sources(run_dir, sorted({s.sink for s in snaps}))
+        # each visible sink exposes exactly its manifest-listed files
+        dirs = resolve_sink_paths(run_dir, sorted({s.sink for s in snaps}))
         if not dirs:
             # Iceberg semantics: reading before the first visible snapshot
             # is an error, not an empty relation of guessed schema

@@ -161,7 +161,7 @@ def main(argv: list[str] | None = None) -> int:
     p.add_argument(
         "--compact-sinks",
         action="store_true",
-        help="maintenance: rewrite --run-id's manifest-committed sinks to "
+        help="maintenance: rewrite --run-id's committed sinks to "
         "--target-mb files via an atomic manifest swap (plans/compact.py; "
         "content-preserving, zero read downtime), then exit",
     )
@@ -202,13 +202,6 @@ def main(argv: list[str] | None = None) -> int:
         "rows by COL before staging so parquet min-max envelopes prune "
         "selective scans (plans/layout.py at the ship surface; one range "
         "exchange at publish)",
-    )
-    p.add_argument(
-        "--commit-mode",
-        choices=["rename", "manifest"],
-        default="rename",
-        help="sink publish protocol: atomic directory rename (POSIX) or "
-        "rename-free manifest files (object-store-safe; plans/manifest.py)",
     )
     p.add_argument(
         "--dedup-store",
@@ -441,7 +434,7 @@ def main(argv: list[str] | None = None) -> int:
             "--conf is required"
         )
 
-    spec_kwargs = {"out_dir": args.out, "commit_mode": args.commit_mode}
+    spec_kwargs = {"out_dir": args.out}
     if args.run_id:
         spec_kwargs["run_id"] = args.run_id
     if args.sort_by:
@@ -748,7 +741,6 @@ def _tail_loop(spark, args) -> int:
                     PipelineSpec(
                         out_dir=args.out,
                         run_id=f"{base}-p{poll_no}-{fp}",
-                        commit_mode=args.commit_mode,
                         sort_col=args.sort_by,
                     ),
                 )

@@ -1,5 +1,7 @@
 from __future__ import annotations
 
+import os
+
 import pytest
 
 from logstash_forwarder_spark.session import get_spark
@@ -21,6 +23,21 @@ def spark():
 @pytest.fixture()
 def tmp_out(tmp_path):
     return str(tmp_path / "out")
+
+
+@pytest.fixture
+def no_dir_rename(monkeypatch):
+    """Make ``os.replace`` raise on directories: a test using it proves its
+    publish/resume/maintenance path needs only single-FILE atomic swaps,
+    the primitive object stores provide (plans/manifest.py)."""
+    real = os.replace
+
+    def guarded(src, dst, *a, **k):
+        if os.path.isdir(src):
+            raise AssertionError(f"directory rename attempted: {src} -> {dst}")
+        return real(src, dst, *a, **k)
+
+    monkeypatch.setattr(os, "replace", guarded)
 
 
 # events table schema shared by the streaming/aggregate tests

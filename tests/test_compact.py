@@ -8,28 +8,22 @@ import pytest
 from pyspark.sql import functions as F
 
 from logstash_forwarder_spark.datagen import gen_sequences, gen_source_dim
-from logstash_forwarder_spark.pipeline import PipelineSpec, read_sink, run_pipeline
+from logstash_forwarder_spark.pipeline import (
+    InjectedFailure,
+    PipelineSpec,
+    read_sink,
+    run_pipeline,
+)
 from logstash_forwarder_spark.plans import compact as compact_mod
 from logstash_forwarder_spark.plans.compact import (
     compact_run,
     compact_sink,
     gc_unreferenced,
 )
-from logstash_forwarder_spark.plans.manifest import read_manifest
+from logstash_forwarder_spark.plans.manifest import list_data_files, read_manifest
+from logstash_forwarder_spark.plans.registrar import Registrar
 
 N = 2_000
-
-
-@pytest.fixture
-def no_dir_rename(monkeypatch):
-    real = os.replace
-
-    def guarded(src, dst, *a, **k):
-        if os.path.isdir(src):
-            raise AssertionError(f"directory rename attempted: {src} -> {dst}")
-        return real(src, dst, *a, **k)
-
-    monkeypatch.setattr(os, "replace", guarded)
 
 
 def _publish(spark, tmp_out, run_id="c1"):
@@ -38,7 +32,7 @@ def _publish(spark, tmp_out, run_id="c1"):
         spark,
         seqs,
         gen_source_dim(spark),
-        PipelineSpec(out_dir=tmp_out, run_id=run_id, commit_mode="manifest"),
+        PipelineSpec(out_dir=tmp_out, run_id=run_id),
     )
     assert res.rows_staged == N
     run_dir = os.path.join(tmp_out, f"run_id={run_id}")
@@ -135,19 +129,31 @@ def test_compact_refuses_row_count_mismatch(spark, tmp_out, no_dir_rename):
     assert not [f for f in os.listdir(run_dir) if f.startswith("_compact_tmp")]
 
 
-def test_compact_requires_manifest_mode(spark, tmp_out):
-    seqs = gen_sequences(spark, 200)
-    run_pipeline(
-        spark,
-        seqs,
-        gen_source_dim(spark),
-        PipelineSpec(out_dir=tmp_out, run_id="r1"),  # rename mode
-    )
+def test_compact_refuses_uncommitted_sink(spark, tmp_out, no_dir_rename):
+    """A sink whose data files are on disk but that has no manifest (the
+    run crashed before committing it) has no commit pointer to swap:
+    compaction refuses it rather than promoting orphans."""
+    with pytest.raises(InjectedFailure):
+        run_pipeline(
+            spark,
+            gen_sequences(spark, N),
+            gen_source_dim(spark),
+            PipelineSpec(out_dir=tmp_out, run_id="r1", fail_after_sinks=1),
+        )
     run_dir = os.path.join(tmp_out, "run_id=r1")
-    with pytest.raises(ValueError, match="requires commit_mode='manifest'"):
-        compact_sink(spark, run_dir, "sink_default")
+    done = Registrar(os.path.join(tmp_out, "_checkpoint")).committed_sinks("r1")
+    orphaned = [
+        s
+        for s in ("sink_apache", "sink_default", "sink_dev", "sink_syslog")
+        if s not in done and list_data_files(run_dir, s)
+    ]
+    assert orphaned
+    for s in orphaned:
+        assert read_manifest(run_dir, s) is None
+        with pytest.raises(ValueError, match="uncommitted"):
+            compact_sink(spark, run_dir, s)
     with pytest.raises(ValueError, match="nothing to compact"):
-        compact_run(spark, tmp_out, "r1")
+        compact_run(spark, tmp_out, "never-ran")
 
 
 def test_compact_composes_with_sorted_layout(spark, tmp_out, no_dir_rename):
@@ -167,7 +173,6 @@ def test_compact_composes_with_sorted_layout(spark, tmp_out, no_dir_rename):
         PipelineSpec(
             out_dir=tmp_out,
             run_id="s1",
-            commit_mode="manifest",
             sort_col="n_tok",
             sort_partitions=16,
         ),

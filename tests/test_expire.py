@@ -21,25 +21,13 @@ from logstash_forwarder_spark.plans.registrar import Registrar, SnapshotLog
 N = 1_500
 
 
-@pytest.fixture
-def no_dir_rename(monkeypatch):
-    real = os.replace
-
-    def guarded(src, dst, *a, **k):
-        if os.path.isdir(src):
-            raise AssertionError(f"directory rename attempted: {src} -> {dst}")
-        return real(src, dst, *a, **k)
-
-    monkeypatch.setattr(os, "replace", guarded)
-
-
-def _publish(spark, tmp_out, run_id, mode="manifest"):
+def _publish(spark, tmp_out, run_id):
     seqs = gen_sequences(spark, N, num_partitions=4)
     res = run_pipeline(
         spark,
         seqs,
         gen_source_dim(spark),
-        PipelineSpec(out_dir=tmp_out, run_id=run_id, commit_mode=mode),
+        PipelineSpec(out_dir=tmp_out, run_id=run_id),
     )
     assert res.rows_staged == N
     return res
@@ -90,7 +78,7 @@ def test_expire_keep_last_drops_old_run_and_gcs_data(
         spark,
         gen_sequences(spark, N, num_partitions=4),
         gen_source_dim(spark),
-        PipelineSpec(out_dir=tmp_out, run_id="new", commit_mode="manifest"),
+        PipelineSpec(out_dir=tmp_out, run_id="new"),
     )
     assert not res.sinks_committed and res.sinks_skipped
     assert res.rows_staged == 0
@@ -139,31 +127,6 @@ def test_expire_works_across_compaction_boundary(spark, tmp_out, no_dir_rename):
     assert reg.lineage("old").num_rows == 0
     # resume unaffected post-expiry-of-others
     assert reg.committed_sinks("new")
-
-
-def test_expire_rename_mode_data_gc(spark, tmp_out, monkeypatch):
-    """Rename-committed runs have no manifests; GC must still remove the
-    expired sink dirs per-key. The publish itself uses directory renames
-    (that's rename mode's contract), so the no-dir-rename shim guards
-    only the EXPIRY here."""
-    _publish(spark, tmp_out, "old", mode="rename")
-    _publish(spark, tmp_out, "new", mode="rename")
-    reg = _reg(tmp_out)
-    new_count = sum(
-        1 for s in SnapshotLog(reg).snapshots() if s.run_id == "new"
-    )
-    real = os.replace
-
-    def guarded(src, dst, *a, **k):
-        if os.path.isdir(src):
-            raise AssertionError(f"directory rename attempted: {src} -> {dst}")
-        return real(src, dst, *a, **k)
-
-    monkeypatch.setattr(os, "replace", guarded)
-    rep = reg.expire_snapshots(keep_last=new_count, out_dir=tmp_out)
-    assert rep["data_files_removed"] > 0
-    assert not os.path.exists(os.path.join(tmp_out, "run_id=old"))
-    assert os.path.isdir(os.path.join(tmp_out, "run_id=new"))
 
 
 def test_expire_keep_last_runs_is_run_aware(spark, tmp_out, no_dir_rename):

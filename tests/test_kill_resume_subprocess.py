@@ -5,7 +5,8 @@ Python exception — it cannot crash INSIDE os.replace or leave a half-written
 checkpoint tmp file. This test does what spec/lumberjack_spec.rb:66-91 does
 to the reference binary: run the CLI in a subprocess, SIGKILL the whole
 process group mid-publish, resume with the same run_id in a fresh process,
-and assert exactly-once delivery (no loss, no duplicates, lineage == data).
+and assert exactly-once delivery through the manifests (no loss, no
+duplicates, lineage == data).
 Verification is pure DuckDB — no Spark session in the test process.
 """
 
@@ -43,96 +44,24 @@ def _cli(out_dir: str, run_id: str) -> list[str]:
     ]
 
 
-def test_sigkill_mid_publish_then_resume(tmp_path):
-    out = str(tmp_path / "out")
+def _kill_then_resume(out: str, run_id: str, kill_glob: str) -> None:
+    """Run the CLI, SIGKILL its process group as soon as ``kill_glob``
+    (relative to the run directory) or the first checkpoint matches, resume
+    with the same run_id in a fresh process, then verify exactly-once
+    delivery through the manifests. If the run outraces both polls, the
+    resume checks must still hold."""
+    run_dir = os.path.join(out, f"run_id={run_id}")
     ckpt_glob = os.path.join(out, "_checkpoint", "*.parquet")
     env = {**os.environ, "PYTHONPATH": os.path.dirname(os.path.dirname(__file__))}
 
     proc = subprocess.Popen(
-        _cli(out, "killrun"),
+        _cli(out, run_id),
         stdout=subprocess.DEVNULL,
         stderr=subprocess.DEVNULL,
         start_new_session=True,  # so killpg takes the JVM down too
         env=env,
     )
-    # kill mid-staging-write (a seconds-wide window: torn parquet part files
-    # and no checkpoint) or, failing that, at the first checkpoint commit;
-    # if the run outraces both polls, the resume checks below still must hold
-    staging_glob = os.path.join(out, "run_id=killrun", "_staging", "sink=*", "*")
-    killed = False
-    deadline = time.monotonic() + 300
-    while time.monotonic() < deadline and proc.poll() is None:
-        if glob.glob(staging_glob) or glob.glob(ckpt_glob):
-            os.killpg(proc.pid, signal.SIGKILL)
-            killed = True
-            break
-        time.sleep(0.005)
-    proc.wait(timeout=60)
-    assert killed or proc.returncode == 0, "run neither progressed nor finished"
-    committed_after_kill = len(glob.glob(ckpt_glob))
-
-    # resume with the SAME run_id in a fresh process
-    res = subprocess.run(
-        _cli(out, "killrun"), capture_output=True, text=True, timeout=300, env=env
-    )
-    assert res.returncode == 0, res.stderr[-2000:]
-    summary = json.loads(
-        [ln for ln in res.stdout.splitlines() if ln.startswith("{")][-1]
-    )
-    assert sorted(summary["sinks_committed"] + summary["sinks_skipped"]) == SINKS
-    if killed and committed_after_kill < len(SINKS):
-        assert summary["sinks_committed"], "resume had work but did none"
-
-    con = duckdb.connect()
-    n, n_distinct = con.sql(
-        f"SELECT count(*), count(DISTINCT doc_id) FROM "
-        f"read_parquet('{out}/run_id=killrun/sink=*/*.parquet', hive_partitioning=true)"
-    ).fetchone()
-    # exactly-once: no loss, no duplicates — regardless of where the kill hit
-    assert n == N_ROWS and n_distinct == N_ROWS
-    lineage = dict(
-        con.sql(
-            f"SELECT sink, sum(row_count) FROM read_parquet('{out}/_checkpoint/*.parquet') "
-            f"WHERE run_id = 'killrun' GROUP BY sink"
-        ).fetchall()
-    )
-    data = dict(
-        con.sql(
-            f"SELECT sink, count(*) FROM "
-            f"read_parquet('{out}/run_id=killrun/sink=*/*.parquet', hive_partitioning=true) "
-            f"GROUP BY sink"
-        ).fetchall()
-    )
-    for s in SINKS:
-        assert lineage.get(s, 0) == data.get(s, 0), (s, lineage, data)
-    # no stale staging dirs survive a completed resume
-    assert not os.path.exists(f"{out}/run_id=killrun/_staging")
-    assert not os.path.exists(f"{out}/run_id=killrun/_lineage_staging")
-
-
-def test_sigkill_manifest_mode_then_resume(tmp_path):
-    """The same real-SIGKILL exactly-once proof for the rename-free manifest
-    protocol: kill mid-write/mid-commit, resume in a fresh process, then
-    verify through the MANIFESTS (the only read path that protocol
-    defines) — no loss, no duplicates, no unreferenced files left."""
-    out = str(tmp_path / "outm")
-    ckpt_glob = os.path.join(out, "_checkpoint", "*.parquet")
-    env = {**os.environ, "PYTHONPATH": os.path.dirname(os.path.dirname(__file__))}
-    cmd = _cli(out, "mkill") + ["--commit-mode", "manifest"]
-
-    proc = subprocess.Popen(
-        cmd,
-        stdout=subprocess.DEVNULL,
-        stderr=subprocess.DEVNULL,
-        start_new_session=True,
-        env=env,
-    )
-    run_dir = os.path.join(out, "run_id=mkill")
-    progress_globs = [
-        os.path.join(run_dir, "sink=*", "*"),  # data files landing in place
-        os.path.join(run_dir, "_manifests", "*.json"),
-        ckpt_glob,
-    ]
+    progress_globs = [os.path.join(run_dir, kill_glob), ckpt_glob]
     killed = False
     deadline = time.monotonic() + 300
     while time.monotonic() < deadline and proc.poll() is None:
@@ -143,13 +72,19 @@ def test_sigkill_manifest_mode_then_resume(tmp_path):
         time.sleep(0.005)
     proc.wait(timeout=60)
     assert killed or proc.returncode == 0, "run neither progressed nor finished"
+    committed_after_kill = len(glob.glob(ckpt_glob))
 
-    res = subprocess.run(cmd, capture_output=True, text=True, timeout=300, env=env)
+    # resume with the SAME run_id in a fresh process
+    res = subprocess.run(
+        _cli(out, run_id), capture_output=True, text=True, timeout=300, env=env
+    )
     assert res.returncode == 0, res.stderr[-2000:]
     summary = json.loads(
         [ln for ln in res.stdout.splitlines() if ln.startswith("{")][-1]
     )
     assert sorted(summary["sinks_committed"] + summary["sinks_skipped"]) == SINKS
+    if killed and committed_after_kill < len(SINKS):
+        assert summary["sinks_committed"], "resume had work but did none"
 
     # read through the manifests — the protocol's only defined read path
     manifest_files: list[str] = []
@@ -177,12 +112,27 @@ def test_sigkill_manifest_mode_then_resume(tmp_path):
     n, n_distinct = con.sql(
         f"SELECT count(*), count(DISTINCT doc_id) FROM read_parquet({manifest_files!r})"
     ).fetchone()
+    # exactly-once: no loss, no duplicates — regardless of where the kill hit
     assert n == N_ROWS and n_distinct == N_ROWS
     lineage = dict(
         con.sql(
             f"SELECT sink, sum(row_count) FROM read_parquet('{ckpt_glob}') "
-            f"WHERE run_id = 'mkill' GROUP BY sink"
+            f"WHERE run_id = '{run_id}' GROUP BY sink"
         ).fetchall()
     )
     for s in SINKS:
         assert lineage.get(s, 0) == per_sink_manifest[s], (s, lineage, per_sink_manifest)
+    # no stale lineage staging survives a completed resume
+    assert not os.path.exists(os.path.join(run_dir, "_lineage_staging"))
+
+
+def test_sigkill_mid_publish_then_resume(tmp_path):
+    # kill at the first data file landing in place (mid-write: files no
+    # manifest names yet)
+    _kill_then_resume(str(tmp_path / "out"), "killrun", os.path.join("sink=*", "*"))
+
+
+def test_sigkill_manifest_mode_then_resume(tmp_path):
+    # kill at the first manifest swap: a sink published but not yet
+    # checkpointed, so resume must recognise it from the manifest alone
+    _kill_then_resume(str(tmp_path / "outm"), "mkill", os.path.join("_manifests", "*.json"))

@@ -1,9 +1,10 @@
-"""Rename-free manifest commit protocol (plans/manifest.py).
+"""The manifest commit protocol (plans/manifest.py).
 
-Every test runs under a shim that makes `os.replace` RAISE on directories —
-proving the whole publish/checkpoint/resume/time-travel cycle needs only
-single-file atomic swaps, the primitive object stores can provide (the
-default rename protocol moves whole sink dirs, which they cannot)."""
+Every pipeline test runs under the ``no_dir_rename`` shim (tests/conftest.py)
+that makes `os.replace` RAISE on directories — proving the whole
+publish/checkpoint/resume/time-travel cycle needs only single-file atomic
+swaps, the primitive object stores can provide. The resolver tests need only
+the filesystem."""
 
 from __future__ import annotations
 
@@ -20,28 +21,18 @@ from logstash_forwarder_spark.pipeline import (
     read_sink,
     run_pipeline,
 )
-from logstash_forwarder_spark.plans.manifest import read_manifest
+from logstash_forwarder_spark.plans.manifest import (
+    publish_manifest,
+    read_manifest,
+    resolve_sink_paths,
+)
 from logstash_forwarder_spark.plans.registrar import Registrar, SnapshotLog
 
 N = 2_000
 
 
-@pytest.fixture
-def no_dir_rename(monkeypatch):
-    real = os.replace
-
-    def guarded(src, dst, *a, **k):
-        if os.path.isdir(src):
-            raise AssertionError(f"directory rename attempted: {src} -> {dst}")
-        return real(src, dst, *a, **k)
-
-    monkeypatch.setattr(os, "replace", guarded)
-
-
 def _spec(tmp_out, run_id, **kw):
-    return PipelineSpec(
-        out_dir=tmp_out, run_id=run_id, commit_mode="manifest", **kw
-    )
+    return PipelineSpec(out_dir=tmp_out, run_id=run_id, **kw)
 
 
 def _all_rows(spark, tmp_out, run_id, sinks):
@@ -55,6 +46,45 @@ def _all_rows(spark, tmp_out, run_id, sinks):
     for f in frames[1:]:
         df = df.unionByName(f)
     return df
+
+
+def _touch_sink_files(run_dir, sink, names):
+    d = os.path.join(run_dir, f"sink={sink}")
+    os.makedirs(d, exist_ok=True)
+    for name in names:
+        open(os.path.join(d, name), "wb").close()
+    return [os.path.join(f"sink={sink}", name) for name in names]
+
+
+def test_resolve_clean_sink_to_its_directory(tmp_path):
+    """No orphans: the sink resolves to ONE directory path (hidden write
+    residue such as checksum files does not count)."""
+    run_dir = str(tmp_path / "run_id=r")
+    files = _touch_sink_files(run_dir, "a", ["part-0.parquet", "part-1.parquet"])
+    _touch_sink_files(run_dir, "a", [".part-0.parquet.crc"])
+    publish_manifest(run_dir, "a", files, 2)
+    assert resolve_sink_paths(run_dir, ["a"]) == [os.path.join(run_dir, "sink=a")]
+
+
+def test_resolve_sink_with_orphan_to_manifest_files(tmp_path):
+    """An orphan beside the committed files: the sink resolves to exactly
+    the manifest's files, so the orphan stays invisible."""
+    run_dir = str(tmp_path / "run_id=r")
+    files = _touch_sink_files(run_dir, "a", ["part-0.parquet", "part-1.parquet"])
+    publish_manifest(run_dir, "a", files, 2)
+    _touch_sink_files(run_dir, "a", ["part-orphan.parquet"])
+    assert sorted(resolve_sink_paths(run_dir, ["a"])) == sorted(
+        os.path.join(run_dir, f) for f in files
+    )
+
+
+def test_resolve_empty_or_uncommitted_sink_to_nothing(tmp_path):
+    """An empty manifest, a sink with files but no manifest, and an unknown
+    sink all resolve to no path."""
+    run_dir = str(tmp_path / "run_id=r")
+    publish_manifest(run_dir, "empty", [], 0)
+    _touch_sink_files(run_dir, "uncommitted", ["part-0.parquet"])
+    assert resolve_sink_paths(run_dir, ["empty", "uncommitted", "missing"]) == []
 
 
 def test_manifest_run_resume_exactly_once(spark, tmp_out, no_dir_rename):
@@ -187,7 +217,7 @@ def test_manifest_empty_sinks(spark, tmp_out, no_dir_rename):
 
 def test_read_table_skips_uncommitted_orphans(spark, tmp_out, no_dir_rename):
     """read_table: the cross-run consumer surface. A bare run_id=*/sink=*
-    glob would see a crashed manifest-mode attempt's in-place data files;
+    glob would see a crashed attempt's in-place data files;
     read_table resolves through manifests and must not."""
     import glob as globmod
 

@@ -20,6 +20,7 @@ from logstash_forwarder_spark.pipeline import (
     PipelineSpec,
     run_pipeline,
 )
+from logstash_forwarder_spark.plans.manifest import read_manifest
 from logstash_forwarder_spark.plans.registrar import LineageRow, Registrar
 
 from .oracle import oracle_pipeline, oracle_sink_source_counts
@@ -35,7 +36,7 @@ def _read_all_sinks(spark, out_dir, run_id):
     )
 
 
-def test_kill_after_first_sink_then_resume(spark, tmp_out):
+def test_kill_after_first_sink_then_resume(spark, tmp_out, no_dir_rename):
     seqs = gen_sequences(spark, N_ROWS, num_partitions=8).cache()
     dim = gen_source_dim(spark)
     spec = PipelineSpec(out_dir=tmp_out, run_id="killrun", fail_after_sinks=1)
@@ -72,10 +73,13 @@ def test_kill_after_first_sink_then_resume(spark, tmp_out):
     seqs.unpersist()
 
 
-def test_published_but_uncheckpointed_sink_is_redone(spark, tmp_out):
+def test_published_but_uncheckpointed_sink_is_redone(
+    spark, tmp_out, no_dir_rename
+):
     """Crash in the gap between atomic publish and checkpoint write (the
     reference's duplicate window, SURVEY §3.4): the resume must treat the
-    unreferenced published dir as garbage and redo it exactly-once."""
+    unreferenced published manifest and its files as garbage and redo the
+    sink exactly-once."""
     import shutil
 
     seqs = gen_sequences(spark, 2_000, num_partitions=4).cache()
@@ -98,22 +102,27 @@ def test_published_but_uncheckpointed_sink_is_redone(spark, tmp_out):
     seqs.unpersist()
 
 
-def test_partial_staging_dir_from_crashed_attempt(spark, tmp_out):
-    """A crash DURING the staging write leaves a partial _staging dir; the
-    next attempt must discard it and produce exactly-once output."""
+def test_partial_staging_dir_from_crashed_attempt(spark, tmp_out, no_dir_rename):
+    """A crash DURING the in-place data write leaves a partial sink dir: a
+    data file that no manifest names. The next attempt must delete it and
+    publish exactly once."""
     seqs = gen_sequences(spark, 1_000, num_partitions=2)
     dim = gen_source_dim(spark)
     run_dir = os.path.join(tmp_out, "run_id=stale")
-    staging = os.path.join(run_dir, "_staging")
-    os.makedirs(os.path.join(staging, "sink=sink_dev"), exist_ok=True)
-    with open(os.path.join(staging, "sink=sink_dev", "junk.parquet"), "wb") as fh:
+    junk = os.path.join(run_dir, "sink=sink_dev", "part-00000-junk.parquet")
+    os.makedirs(os.path.dirname(junk))
+    with open(junk, "wb") as fh:
         fh.write(b"not a parquet file")
 
     res = run_pipeline(spark, seqs, dim, PipelineSpec(out_dir=tmp_out, run_id="stale"))
     assert res.rows_staged == 1_000
+    assert not os.path.exists(junk)
     got = _read_all_sinks(spark, tmp_out, "stale").toPandas()
     assert len(got) == 1_000 and got.doc_id.is_unique
-    assert not os.path.exists(staging)
+    assert (
+        sum(read_manifest(run_dir, s)["row_count"] for s in res.sinks_committed)
+        == 1_000
+    )
 
 
 def test_registrar_atomic_and_idempotent(tmp_path, spark):

@@ -23,6 +23,36 @@ def test_run_cli_input_path(spark, tmp_path, capsys):
     assert summary["sinks_skipped"] == sorted(summary["sinks_skipped"])
 
 
+def test_run_cli_manifest_mode(spark, tmp_path, capsys):
+    """Every sink the CLI commits has a manifest: exactly-once resume and
+    manifest-resolved reads total the input."""
+    out = str(tmp_path / "outm")
+    rc = main(["--gen", "800", "--out", out, "--run-id", "m1"])
+    assert rc == 0
+    summary = json.loads(capsys.readouterr().out.strip().splitlines()[-1])
+    assert summary["rows_staged"] == 800
+    assert len(summary["sinks_committed"]) == 4
+
+    rc = main(["--gen", "800", "--out", out, "--run-id", "m1"])
+    assert rc == 0
+    summary = json.loads(capsys.readouterr().out.strip().splitlines()[-1])
+    assert summary["rows_staged"] == 0 and len(summary["sinks_skipped"]) == 4
+
+    import os
+
+    from logstash_forwarder_spark.pipeline import read_sink
+    from logstash_forwarder_spark.plans.manifest import read_manifest
+
+    run_dir = os.path.join(out, "run_id=m1")
+    total = 0
+    for s in summary["sinks_skipped"]:
+        m = read_manifest(run_dir, s)
+        assert m is not None
+        if m["files"]:
+            total += read_sink(spark, out, "m1", s).count()
+    assert total == 800
+
+
 def test_run_cli_gen(spark, tmp_path, capsys):
     rc = main(["--gen", "500", "--out", str(tmp_path / "out2")])
     assert rc == 0
@@ -78,36 +108,6 @@ def test_run_cli_snapshots_and_as_of(spark, tmp_path, capsys):
     res = json.loads(capsys.readouterr().out.strip().splitlines()[-1])
     assert set(res["sink_rows"]) == {s["sink"] for s in snaps}
     assert sum(res["sink_rows"].values()) == 2000
-
-
-def test_run_cli_manifest_mode(spark, tmp_path, capsys):
-    """--commit-mode manifest: same CLI surface, rename-free protocol;
-    exactly-once resume and manifest-resolved reads."""
-    out = str(tmp_path / "outm")
-    rc = main(["--gen", "800", "--out", out, "--run-id", "m1", "--commit-mode", "manifest"])
-    assert rc == 0
-    summary = json.loads(capsys.readouterr().out.strip().splitlines()[-1])
-    assert summary["rows_staged"] == 800
-    assert len(summary["sinks_committed"]) == 4
-
-    rc = main(["--gen", "800", "--out", out, "--run-id", "m1", "--commit-mode", "manifest"])
-    assert rc == 0
-    summary = json.loads(capsys.readouterr().out.strip().splitlines()[-1])
-    assert summary["rows_staged"] == 0 and len(summary["sinks_skipped"]) == 4
-
-    import os
-
-    from logstash_forwarder_spark.pipeline import read_sink
-    from logstash_forwarder_spark.plans.manifest import read_manifest
-
-    run_dir = os.path.join(out, "run_id=m1")
-    total = 0
-    for s in summary["sinks_skipped"]:
-        m = read_manifest(run_dir, s)
-        assert m is not None
-        if m["files"]:
-            total += read_sink(spark, out, "m1", s).count()
-    assert total == 800
 
 
 def test_cli_tail_glob_polls(spark, tmp_path, capsys):
@@ -526,18 +526,15 @@ def test_cli_tail_dedup_store_colocated(spark, tmp_path, capsys):
 
 
 def test_cli_compact_sinks(spark, tmp_path, capsys):
-    """--compact-sinks: manifest-committed run rewritten to fewer files
-    with identical reader-visible contents."""
+    """--compact-sinks: a committed run rewritten to fewer files with
+    identical reader-visible contents."""
     import os
 
     from logstash_forwarder_spark.pipeline import read_sink
     from logstash_forwarder_spark.plans.manifest import read_manifest
 
     out = str(tmp_path / "outc")
-    rc = main(
-        ["--gen", "2000", "--out", out, "--run-id", "k1",
-         "--commit-mode", "manifest"]
-    )
+    rc = main(["--gen", "2000", "--out", out, "--run-id", "k1"])
     assert rc == 0
     capsys.readouterr()
 
@@ -567,16 +564,13 @@ def test_cli_compact_sinks(spark, tmp_path, capsys):
 
 
 def test_cli_export_shards(spark, tmp_path, capsys):
-    """--export-shards: every committed run (both commit protocols) ->
-    deterministic training shards; crashed-attempt orphans excluded."""
+    """--export-shards: every committed run -> deterministic training
+    shards; crashed-attempt orphans excluded."""
     import os
 
     out = str(tmp_path / "oute")
     assert main(["--gen", "600", "--out", out, "--run-id", "e1"]) == 0
-    assert main(
-        ["--gen", "400", "--out", out, "--run-id", "e2",
-         "--commit-mode", "manifest"]
-    ) == 0
+    assert main(["--gen", "400", "--out", out, "--run-id", "e2"]) == 0
     capsys.readouterr()
 
     shard_dir = str(tmp_path / "shards")
