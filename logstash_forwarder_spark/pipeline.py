@@ -163,6 +163,7 @@ def run_pipeline(
 
         phase("staging_read_setup")
         lineage_files: dict[str, str] = {}
+        sink_rows: dict[str, int] = {}
         if staged_dirs:
             staged = spark.read.option("basePath", run_dir).parquet(*staged_dirs)
             # per-partition lineage, one columnar scan, WRITTEN BY EXECUTORS
@@ -199,15 +200,16 @@ def run_pipeline(
                     if f.endswith(".parquet")
                 ]
                 lineage_files[sink] = os.path.join(lineage_staging, d, parts[0])
-            # rows_staged from the metadata-sized lineage files, summed
-            # DRIVER-SIDE with pyarrow (the per-sink file list is already
-            # in hand) — not a second staged-data scan, and since r8 not
-            # even a Spark job (the read-back + agg cost a whole job for
-            # a handful of rows)
-            rows_staged = sum(
-                pq_read_column_sum(f, "row_count")
-                for f in lineage_files.values()
-            )
+            # per-sink and staged row counts from the metadata-sized
+            # lineage files, each read ONCE DRIVER-SIDE with pyarrow (the
+            # per-sink file list is already in hand) — not a second
+            # staged-data scan, and not even a Spark job (the read-back +
+            # agg cost a whole job for a handful of rows)
+            sink_rows = {
+                sink: pq_read_column_sum(f, "row_count")
+                for sink, f in lineage_files.items()
+            }
+            rows_staged = sum(sink_rows.values())
             phase("lineage")
 
         n_committed = 0
@@ -218,13 +220,12 @@ def run_pipeline(
                 reg.commit(spec.run_id, sink, [LineageRow(-1, 0, 0)])
                 committed.append(sink)
                 continue
-            n_rows = int(pq_read_column_sum(lineage_files[sink], "row_count"))
             # publish = the ack (O-R5: one atomic FILE swap names the data
             # files); checkpoint second = adopting the executor-written
             # lineage file. A crash between the two leaves a manifest the
             # registrar never adopted, which resume's gc_sink deletes and
             # redoes (idempotent re-commit).
-            publish_manifest(run_dir, sink, files[sink], n_rows)
+            publish_manifest(run_dir, sink, files[sink], sink_rows[sink])
             reg.commit_file(spec.run_id, sink, lineage_files[sink])
             committed.append(sink)
             n_committed += 1

@@ -156,7 +156,7 @@ def main(argv: list[str] | None = None) -> int:
         "--read-as-of",
         metavar="SNAPSHOT_ID",
         help="time-travel read: per-sink row counts of --run-id's published "
-        "data as of SNAPSHOT_ID (plans/registrar.py SnapshotLog), then exit",
+        "data as of SNAPSHOT_ID (plans/registrar.py Registrar.read_as_of), then exit",
     )
     p.add_argument(
         "--compact-sinks",
@@ -328,11 +328,11 @@ def main(argv: list[str] | None = None) -> int:
         # (parquet footers via pyarrow), so don't pay JVM startup for it
         import os
 
-        from .plans.registrar import Registrar, SnapshotLog
+        from .plans.registrar import Registrar
 
         if args.read_as_of and not args.run_id:
             p.error("--read-as-of requires --run-id")
-        log = SnapshotLog(Registrar(os.path.join(args.out, "_checkpoint")))
+        reg = Registrar(os.path.join(args.out, "_checkpoint"))
         if args.snapshots:
             print(
                 json.dumps(
@@ -344,13 +344,13 @@ def main(argv: list[str] | None = None) -> int:
                             "sink": s.sink,
                             "committed_at": s.committed_at.isoformat(),
                         }
-                        for s in log.snapshots()
+                        for s in reg.snapshots()
                     ]
                 )
             )
             return 0
         spark = _get_session(args)
-        df = log.read_as_of(spark, args.out, args.run_id, snapshot_id=args.read_as_of)
+        df = reg.read_as_of(spark, args.out, args.run_id, snapshot_id=args.read_as_of)
         counts = {
             r["sink"]: r["n"]
             for r in df.groupBy("sink").count().withColumnRenamed("count", "n").collect()

@@ -43,20 +43,6 @@ ROUTES_SCHEMA = T.StructType(
     ]
 )
 
-# Checkpoint/lineage metadata: the .logstash-forwarder registrar file
-# (registrar.go:38-51, filestate_linux.go:3-8) reborn as one row per
-# (run_id, sink, partition_id) commit.
-CHECKPOINT_SCHEMA = T.StructType(
-    [
-        T.StructField("run_id", T.StringType(), False),
-        T.StructField("sink", T.StringType(), False),
-        T.StructField("partition_id", T.IntegerType(), False),
-        T.StructField("row_count", T.LongType(), False),
-        T.StructField("token_total", T.LongType(), False),
-        T.StructField("committed_at", T.TimestampType(), False),
-    ]
-)
-
 # Output of the vectorized parse stage (O-P1): grok/regex-style field
 # extraction over the token payload.
 PARSED_FIELDS_SCHEMA = T.StructType(

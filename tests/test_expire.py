@@ -16,7 +16,7 @@ import pytest
 
 from logstash_forwarder_spark.datagen import gen_sequences, gen_source_dim
 from logstash_forwarder_spark.pipeline import PipelineSpec, run_pipeline
-from logstash_forwarder_spark.plans.registrar import Registrar, SnapshotLog
+from logstash_forwarder_spark.plans.registrar import Registrar
 
 N = 1_500
 
@@ -43,8 +43,7 @@ def test_expire_keep_last_drops_old_run_and_gcs_data(
     _publish(spark, tmp_out, "old")
     _publish(spark, tmp_out, "new")
     reg = _reg(tmp_out)
-    log = SnapshotLog(reg)
-    snaps = log.snapshots()
+    snaps = reg.snapshots()
     new_count = sum(1 for s in snaps if s.run_id == "new")
     old_snaps = [s for s in snaps if s.run_id == "old"]
     assert old_snaps and new_count
@@ -56,20 +55,20 @@ def test_expire_keep_last_drops_old_run_and_gcs_data(
     assert rep["data_files_removed"] > 0
 
     # metadata: only the new run's snapshots survive, sequence renumbered
-    left = log.snapshots()
+    left = reg.snapshots()
     assert {s.run_id for s in left} == {"new"}
     assert [s.sequence_number for s in left] == list(range(len(left)))
     # data: the expired run's dir is fully gone (per-key GC + empty rmdir)
     assert not os.path.exists(os.path.join(tmp_out, "run_id=old"))
 
     # time travel to a SURVIVING snapshot is intact
-    df = log.read_as_of(
+    df = reg.read_as_of(
         spark, tmp_out, "new", snapshot_id=left[-1].snapshot_id
     )
     assert df.count() == N
     # ... and to an expired one raises, like Iceberg
     with pytest.raises(ValueError, match="unknown snapshot_id"):
-        log.read_as_of(
+        reg.read_as_of(
             spark, tmp_out, "new", snapshot_id=old_snaps[0].snapshot_id
         )
 
@@ -91,11 +90,11 @@ def test_expire_keep_last_drops_old_run_and_gcs_data(
 def test_expire_older_than_respects_retain_floor(spark, tmp_out, no_dir_rename):
     _publish(spark, tmp_out, "only")
     reg = _reg(tmp_out)
-    snaps = SnapshotLog(reg).snapshots()
+    snaps = reg.snapshots()
     future = snaps[-1].committed_at + timedelta(days=1)
     # a cutoff in the future still retains the keep_last floor (default 1)
     rep = reg.expire_snapshots(older_than=future, out_dir=tmp_out)
-    left = SnapshotLog(reg).snapshots()
+    left = reg.snapshots()
     assert len(left) == 1
     assert left[0].snapshot_id == snaps[-1].snapshot_id
     assert len(rep["expired"]) == len(snaps) - 1
@@ -112,12 +111,11 @@ def test_expire_works_across_compaction_boundary(spark, tmp_out, no_dir_rename):
     _publish(spark, tmp_out, "new")
     reg = _reg(tmp_out)
     assert reg.compact() > 0  # everything now lives in _index.parquet
-    log = SnapshotLog(reg)
-    new_count = sum(1 for s in log.snapshots() if s.run_id == "new")
+    new_count = sum(1 for s in reg.snapshots() if s.run_id == "new")
 
     rep = reg.expire_snapshots(keep_last=new_count, out_dir=tmp_out)
     assert rep["expired"]
-    left = log.snapshots()
+    left = reg.snapshots()
     assert {s.run_id for s in left} == {"new"}
     # lineage of the survivor is complete (one row per partition per sink)
     lin = reg.lineage("new")
@@ -138,7 +136,7 @@ def test_expire_keep_last_runs_is_run_aware(spark, tmp_out, no_dir_rename):
     reg = _reg(tmp_out)
     rep = reg.expire_snapshots(keep_last_runs=2, out_dir=tmp_out)
     assert {e["run_id"] for e in rep["expired"]} == {"p0"}
-    left = SnapshotLog(reg).snapshots()
+    left = reg.snapshots()
     assert {s.run_id for s in left} == {"p1", "p2"}
     # BOTH surviving runs keep their full sink set
     per_run: dict[str, int] = {}

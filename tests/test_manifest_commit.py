@@ -26,7 +26,7 @@ from logstash_forwarder_spark.plans.manifest import (
     read_manifest,
     resolve_sink_paths,
 )
-from logstash_forwarder_spark.plans.registrar import Registrar, SnapshotLog
+from logstash_forwarder_spark.plans.registrar import Registrar
 
 N = 2_000
 
@@ -166,9 +166,9 @@ def test_manifest_orphan_files_invisible(spark, tmp_out, no_dir_rename):
     )
     assert read_sink(spark, tmp_out, "mo", sink).count() == before
     # snapshot read is manifest-aware too
-    log = SnapshotLog(Registrar(os.path.join(tmp_out, "_checkpoint")))
-    cur = log.current()
-    df = log.read_as_of(spark, tmp_out, "mo", snapshot_id=cur.snapshot_id)
+    reg = Registrar(os.path.join(tmp_out, "_checkpoint"))
+    cur = reg.current()
+    df = reg.read_as_of(spark, tmp_out, "mo", snapshot_id=cur.snapshot_id)
     assert df.count() == N
 
 
@@ -178,11 +178,11 @@ def test_manifest_time_travel_midpoint(spark, tmp_out, no_dir_rename):
     seqs = gen_sequences(spark, N)
     dim = gen_source_dim(spark)
     run_pipeline(spark, seqs, dim, _spec(tmp_out, "mt"))
-    log = SnapshotLog(Registrar(os.path.join(tmp_out, "_checkpoint")))
-    snaps = [s for s in log.snapshots() if s.run_id == "mt"]
+    reg = Registrar(os.path.join(tmp_out, "_checkpoint"))
+    snaps = [s for s in reg.snapshots() if s.run_id == "mt"]
     assert len(snaps) == 4
     cut = snaps[1]
-    df = log.read_as_of(spark, tmp_out, "mt", snapshot_id=cut.snapshot_id)
+    df = reg.read_as_of(spark, tmp_out, "mt", snapshot_id=cut.snapshot_id)
     visible = {s.sink for s in snaps[:2]}
     assert set(r.sink for r in df.select("sink").distinct().collect()) <= visible
     want = sum(

@@ -125,7 +125,7 @@ def test_partial_staging_dir_from_crashed_attempt(spark, tmp_out, no_dir_rename)
     )
 
 
-def test_registrar_atomic_and_idempotent(tmp_path, spark):
+def test_registrar_atomic_and_idempotent(tmp_path):
     reg = Registrar(str(tmp_path / "ck"))
     reg.commit("r1", "sink_a", [LineageRow(0, 10, 100), LineageRow(1, 5, 50)])
     reg.commit("r1", "sink_a", [LineageRow(0, 10, 100), LineageRow(1, 5, 50)])  # re-commit
@@ -139,9 +139,9 @@ def test_registrar_atomic_and_idempotent(tmp_path, spark):
     lin = reg.lineage("r1").to_pandas()
     assert lin[lin.sink == "sink_a"].row_count.sum() == 15  # no dup from re-commit
 
-    df = reg.load(spark)
-    assert df.count() == 4
-    assert set(df.columns) == {
+    everything = reg.lineage()
+    assert everything.num_rows == 4
+    assert set(everything.column_names) == {
         "run_id",
         "sink",
         "partition_id",
@@ -149,3 +149,63 @@ def test_registrar_atomic_and_idempotent(tmp_path, spark):
         "token_total",
         "committed_at",
     }
+
+
+def test_resume_lookup_reads_only_the_runs_commit_files(tmp_path, monkeypatch):
+    """The registrar is a keyed map: committed_sinks/lineage of one run read
+    that run's commit files (plus the compaction index once one exists),
+    never the whole commit history."""
+    import pyarrow.parquet as pq
+
+    reg = Registrar(str(tmp_path / "ck"))
+    for i in range(200):
+        reg.commit(f"other-{i}", "sink_a", [LineageRow(0, 1, 1)])
+    reg.commit("R", "sink_a", [LineageRow(0, 3, 30)])
+    reg.commit("R", "sink_b", [LineageRow(0, 4, 40)])
+
+    reads: list[str] = []
+    real_read = pq.read_table
+
+    def counting_read(path, *args, **kwargs):
+        reads.append(os.path.basename(path))
+        return real_read(path, *args, **kwargs)
+
+    monkeypatch.setattr(pq, "read_table", counting_read)
+
+    def reads_of(lookup) -> list[str]:
+        reads.clear()
+        lookup()
+        return sorted(reads)
+
+    def assert_lookups_read(names: list[str]) -> None:
+        assert reads_of(lambda: reg.committed_sinks("R")) == sorted(names)
+        assert reads_of(lambda: reg.lineage("R")) == sorted(names)
+        assert reg.committed_sinks("R") == {"sink_a", "sink_b"}
+        assert sum(reg.lineage("R")["row_count"].to_pylist()) == 7
+
+    assert_lookups_read([Registrar._commit_name("R", s) for s in ("sink_a", "sink_b")])
+    reg.compact()
+    assert_lookups_read([Registrar.INDEX_NAME])
+    # a re-commit after compaction is a live file read beside the index
+    reg.commit("R", "sink_b", [LineageRow(0, 4, 40)])
+    assert_lookups_read([Registrar.INDEX_NAME, Registrar._commit_name("R", "sink_b")])
+
+
+@pytest.mark.parametrize(
+    "first, second",
+    [
+        (("a", "s"), ("a__b", "s")),
+        (("run:" + "x" * 28 + "aaaaaaaa", "s"), ("run/" + "x" * 28 + "bbbbbbbb", "s")),
+        (("r__x", "y"), ("r", "x__y")),
+    ],
+    ids=["run-prefix", "shared-32-sanitized", "sanitizer-pair"],
+)
+def test_keyed_lookup_is_exact_for_shared_name_prefixes(tmp_path, first, second):
+    reg = Registrar(str(tmp_path / "ck"))
+    reg.commit(*first, [LineageRow(0, 1, 10)])
+    reg.commit(*second, [LineageRow(0, 2, 20)])
+    for _ in ("live", "compacted"):
+        for (run_id, sink), rows in ((first, 1), (second, 2)):
+            assert reg.committed_sinks(run_id) == {sink}
+            assert reg.lineage(run_id)["row_count"].to_pylist() == [rows]
+        reg.compact()

@@ -9,37 +9,37 @@ import pytest
 
 from logstash_forwarder_spark.datagen import gen_sequences, gen_source_dim
 from logstash_forwarder_spark.pipeline import PipelineSpec, run_pipeline
-from logstash_forwarder_spark.plans.registrar import Registrar, SnapshotLog
+from logstash_forwarder_spark.plans.registrar import Registrar
 
 
 def _run(spark, tmp_out, run_id="snaprun"):
     seqs = gen_sequences(spark, 3000, num_partitions=4)
     dim = gen_source_dim(spark)
     run_pipeline(spark, seqs, dim, PipelineSpec(out_dir=tmp_out, run_id=run_id))
-    return SnapshotLog(Registrar(os.path.join(tmp_out, "_checkpoint")))
+    return Registrar(os.path.join(tmp_out, "_checkpoint"))
 
 
 def test_snapshot_ordering_and_current(spark, tmp_out):
-    log = _run(spark, tmp_out)
-    snaps = log.snapshots()
+    reg = _run(spark, tmp_out)
+    snaps = reg.snapshots()
     assert len(snaps) >= 2  # one per committed sink
     assert [s.sequence_number for s in snaps] == list(range(len(snaps)))
     assert all(
         a.committed_at <= b.committed_at for a, b in zip(snaps, snaps[1:])
     )
-    assert log.current().snapshot_id == snaps[-1].snapshot_id
+    assert reg.current().snapshot_id == snaps[-1].snapshot_id
     # stable across re-listing
-    assert [s.snapshot_id for s in log.snapshots()] == [
+    assert [s.snapshot_id for s in reg.snapshots()] == [
         s.snapshot_id for s in snaps
     ]
 
 
 def test_version_as_of_sees_prefix_of_commits(spark, tmp_out):
-    log = _run(spark, tmp_out)
-    snaps = log.snapshots()
+    reg = _run(spark, tmp_out)
+    snaps = reg.snapshots()
     first, last = snaps[0], snaps[-1]
-    df_first = log.read_as_of(spark, tmp_out, "snaprun", snapshot_id=first.snapshot_id)
-    df_full = log.read_as_of(spark, tmp_out, "snaprun", snapshot_id=last.snapshot_id)
+    df_first = reg.read_as_of(spark, tmp_out, "snaprun", snapshot_id=first.snapshot_id)
+    df_full = reg.read_as_of(spark, tmp_out, "snaprun", snapshot_id=last.snapshot_id)
     sinks_first = {r.sink for r in df_first.select("sink").distinct().collect()}
     sinks_full = {r.sink for r in df_full.select("sink").distinct().collect()}
     assert sinks_first == {first.sink}
@@ -48,28 +48,28 @@ def test_version_as_of_sees_prefix_of_commits(spark, tmp_out):
 
 
 def test_timestamp_as_of_and_errors(spark, tmp_out):
-    log = _run(spark, tmp_out)
-    snaps = log.snapshots()
+    reg = _run(spark, tmp_out)
+    snaps = reg.snapshots()
     # TIMESTAMP AS OF includes every commit whose instant ties <= the
     # requested time — one pipeline run publishes with a shared lineage
     # write instant, so the whole run is one timestamp-travel transaction
-    df = log.read_as_of(spark, tmp_out, "snaprun", as_of=snaps[0].committed_at)
+    df = reg.read_as_of(spark, tmp_out, "snaprun", as_of=snaps[0].committed_at)
     expect = {s.sink for s in snaps if s.committed_at <= snaps[0].committed_at}
     assert {r.sink for r in df.select("sink").distinct().collect()} == expect
     # a timestamp strictly before the first commit sees nothing
     import datetime
 
     with pytest.raises(ValueError, match="no committed sink"):
-        log.read_as_of(
+        reg.read_as_of(
             spark,
             tmp_out,
             "snaprun",
             as_of=snaps[0].committed_at - datetime.timedelta(seconds=1),
         )
     with pytest.raises(ValueError, match="unknown snapshot_id"):
-        log.read_as_of(spark, tmp_out, "snaprun", snapshot_id="nope")
+        reg.read_as_of(spark, tmp_out, "snaprun", snapshot_id="nope")
     with pytest.raises(ValueError, match="no committed sink"):
-        log.read_as_of(spark, tmp_out, "otherrun")
+        reg.read_as_of(spark, tmp_out, "otherrun")
 
 
 def test_mixed_writer_commits_sort_and_compare(tmp_path):
@@ -81,11 +81,7 @@ def test_mixed_writer_commits_sort_and_compare(tmp_path):
     import pyarrow as pa
     import pyarrow.parquet as pq
 
-    from logstash_forwarder_spark.plans.registrar import (
-        LineageRow,
-        Registrar,
-        SnapshotLog,
-    )
+    from logstash_forwarder_spark.plans.registrar import LineageRow, Registrar
 
     reg = Registrar(str(tmp_path / "_checkpoint"))
     reg.commit("m1", "sink_a", [LineageRow(0, 10, 100)])  # tz-aware path
@@ -106,7 +102,7 @@ def test_mixed_writer_commits_sort_and_compare(tmp_path):
     pq.write_table(naive, src)
     reg.commit_file("m1", "sink_b", src)
 
-    snaps = SnapshotLog(reg).snapshots()
+    snaps = reg.snapshots()
     assert [s.sink for s in snaps] == ["sink_a", "sink_b"]  # 2030 sorts last
     assert all(s.committed_at.tzinfo is not None for s in snaps)
 
@@ -138,44 +134,40 @@ def test_compaction_preserves_everything(spark, tmp_out):
 
     from logstash_forwarder_spark.datagen import gen_sequences, gen_source_dim
 
-    log = _run(spark, tmp_out)  # run 1
+    reg = _run(spark, tmp_out)  # run 1
     seqs = gen_sequences(spark, 1000, num_partitions=2)
     run_pipeline(
         spark, seqs, gen_source_dim(spark),
         PipelineSpec(out_dir=tmp_out, run_id="snaprun2"),
     )
-    reg = Registrar(os.path.join(tmp_out, "_checkpoint"))
-    log = SnapshotLog(reg)
 
-    before_snaps = [(s.snapshot_id, s.run_id, s.sink, s.committed_at, s.sequence_number) for s in log.snapshots()]
+    before_snaps = [(s.snapshot_id, s.run_id, s.sink, s.committed_at, s.sequence_number) for s in reg.snapshots()]
     before_sinks1 = reg.committed_sinks("snaprun")
     before_sinks2 = reg.committed_sinks("snaprun2")
     before_lineage = sorted(map(tuple, reg.lineage().to_pylist()))
-    before_load = sorted(map(tuple, reg.load(spark).collect()))
-    old_snap = log.snapshots()[0]
+    old_snap = reg.snapshots()[0]
     before_travel = sorted(
-        map(tuple, log.read_as_of(spark, tmp_out, "snaprun",
+        map(tuple, reg.read_as_of(spark, tmp_out, "snaprun",
                                   snapshot_id=old_snap.snapshot_id).collect())
     )
 
-    n = reg.compact(delete_covered=True)
+    n = reg.compact()
     assert n == len(before_snaps)
     files = os.listdir(reg.path)
     assert files == [Registrar.INDEX_NAME]  # many files -> one
 
-    assert [(s.snapshot_id, s.run_id, s.sink, s.committed_at, s.sequence_number) for s in log.snapshots()] == before_snaps
+    assert [(s.snapshot_id, s.run_id, s.sink, s.committed_at, s.sequence_number) for s in reg.snapshots()] == before_snaps
     assert reg.committed_sinks("snaprun") == before_sinks1
     assert reg.committed_sinks("snaprun2") == before_sinks2
     assert sorted(map(tuple, reg.lineage().to_pylist())) == before_lineage
-    assert sorted(map(tuple, reg.load(spark).collect())) == before_load
     after_travel = sorted(
-        map(tuple, log.read_as_of(spark, tmp_out, "snaprun",
+        map(tuple, reg.read_as_of(spark, tmp_out, "snaprun",
                                   snapshot_id=old_snap.snapshot_id).collect())
     )
     assert after_travel == before_travel
 
     # compact is idempotent on an already-compacted dir
-    assert reg.compact(delete_covered=True) == 0
+    assert reg.compact() == 0
     assert sorted(map(tuple, reg.lineage().to_pylist())) == before_lineage
 
 
@@ -188,13 +180,13 @@ def test_commits_after_compaction_and_override(spark, tmp_out):
     reg = Registrar(os.path.join(tmp_out, "_checkpoint"))
     reg.commit("r1", "sinkA", [LineageRow(0, 10, 100)])
     reg.commit("r1", "sinkB", [LineageRow(0, 20, 200)])
-    reg.compact(delete_covered=True)
+    reg.compact()
 
     # new commit post-compaction
     reg.commit("r2", "sinkA", [LineageRow(0, 5, 50)])
     assert reg.committed_sinks("r1") == {"sinkA", "sinkB"}
     assert reg.committed_sinks("r2") == {"sinkA"}
-    snaps = SnapshotLog(reg).snapshots()
+    snaps = reg.snapshots()
     assert len(snaps) == 3
 
     # override: re-commit a compacted pair with different numbers
@@ -206,9 +198,9 @@ def test_commits_after_compaction_and_override(spark, tmp_out):
         )
     }
     assert rows == {("sinkA", 11), ("sinkB", 20)}  # 10 replaced by 11
-    assert len(SnapshotLog(reg).snapshots()) == 3  # same identity, no dup
+    assert len(reg.snapshots()) == 3  # same identity, no dup
     # second compaction folds the live files back in, prunes overridden rows
-    reg.compact(delete_covered=True)
+    reg.compact()
     t = reg.lineage("r1")
     rows = {
         (s, rc) for s, rc in zip(
@@ -222,9 +214,8 @@ def test_time_travel_across_compaction_boundary(spark, tmp_out):
     """A VERSION AS OF cut can land between compacted (index-sourced) and
     post-compaction (live-file) snapshots: the global order must interleave
     both sources correctly and the read must resolve each side's sinks."""
-    log = _run(spark, tmp_out)  # run 1 (several sink commits)
-    reg = Registrar(os.path.join(tmp_out, "_checkpoint"))
-    reg.compact(delete_covered=True)
+    reg = _run(spark, tmp_out)  # run 1 (several sink commits)
+    reg.compact()
 
     from logstash_forwarder_spark.datagen import gen_sequences, gen_source_dim
 
@@ -234,8 +225,7 @@ def test_time_travel_across_compaction_boundary(spark, tmp_out):
         gen_source_dim(spark),
         PipelineSpec(out_dir=tmp_out, run_id="snaprun2"),
     )
-    log = SnapshotLog(reg)
-    snaps = log.snapshots()
+    snaps = reg.snapshots()
     pre = [s for s in snaps if s.run_id == "snaprun"]
     post = [s for s in snaps if s.run_id == "snaprun2"]
     assert pre and post
@@ -245,12 +235,12 @@ def test_time_travel_across_compaction_boundary(spark, tmp_out):
     # cut at the last compacted snapshot: run-1 data fully visible,
     # run-2 invisible at that version
     cut = pre[-1].snapshot_id
-    df1 = log.read_as_of(spark, tmp_out, "snaprun", snapshot_id=cut)
+    df1 = reg.read_as_of(spark, tmp_out, "snaprun", snapshot_id=cut)
     assert df1.count() > 0
     with pytest.raises(ValueError, match="no committed sink"):
-        log.read_as_of(spark, tmp_out, "snaprun2", snapshot_id=cut)
+        reg.read_as_of(spark, tmp_out, "snaprun2", snapshot_id=cut)
     # at the newest snapshot run-2 is fully visible
-    df2 = log.read_as_of(
+    df2 = reg.read_as_of(
         spark, tmp_out, "snaprun2", snapshot_id=snaps[-1].snapshot_id
     )
     assert df2.count() == 1000

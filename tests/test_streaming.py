@@ -7,18 +7,9 @@ from __future__ import annotations
 import os
 
 from logstash_forwarder_spark.datagen import gen_sequences, gen_source_dim
-from logstash_forwarder_spark.pipeline import PipelineSpec
+from logstash_forwarder_spark.pipeline import PipelineSpec, read_table
 from logstash_forwarder_spark.plans.registrar import Registrar
 from logstash_forwarder_spark.streaming.stream_pipeline import stream_pipeline
-
-
-def _published_rows(spark, out_dir):
-    import glob
-
-    dirs = glob.glob(os.path.join(out_dir, "run_id=*", "sink=*"))
-    if not dirs:
-        return 0
-    return spark.read.parquet(*dirs).count()
 
 
 def test_stream_drain_and_idempotent_restart(spark, tmp_path):
@@ -34,7 +25,7 @@ def test_stream_drain_and_idempotent_restart(spark, tmp_path):
         spark, in_dir, dim, spec, checkpoint_dir=ck_dir, available_now=True
     )
     q.awaitTermination(120)
-    assert _published_rows(spark, out_dir) == 2_000
+    assert read_table(spark, out_dir).count() == 2_000
 
     # epoch-scoped lineage exists
     reg = Registrar(os.path.join(out_dir, "_checkpoint"))
@@ -47,7 +38,7 @@ def test_stream_drain_and_idempotent_restart(spark, tmp_path):
         spark, in_dir, dim, spec, checkpoint_dir=ck_dir, available_now=True
     )
     q2.awaitTermination(120)
-    assert _published_rows(spark, out_dir) == 2_000
+    assert read_table(spark, out_dir).count() == 2_000
 
     # new files arrive → only they are processed (per-file FIFO, the
     # prospector loop reborn)
@@ -58,4 +49,4 @@ def test_stream_drain_and_idempotent_restart(spark, tmp_path):
     q3.awaitTermination(120)
     # 500 re-generated rows overlap doc_ids with the first 2000 but are new
     # FILES — the stream processes them as new data (identity = file+offset)
-    assert _published_rows(spark, out_dir) == 2_500
+    assert read_table(spark, out_dir).count() == 2_500
