@@ -5,15 +5,16 @@ JSON specs (DiscoverConfigs, config.go:45-63), ``#`` comment stripping
 outside strings (StripComments, config.go:158-174), ``$VAR``/``${VAR}`` env
 expansion (config.go:128), a 10 MiB size cap (config.go:14,108-111), merge
 with conflict errors (MergeConfig, config.go:67-98), and defaulting
-(FinalizeConfig, config.go:150-156). The payload differs: instead of watched
-paths + servers, a spec carries the enrich dim, route rules, and job knobs.
+(FinalizeConfig, config.go:150-156). The payload is the reference's own
+format too (:func:`load_forwarder_config`): files[] groups of paths, static
+fields and dead time, which ``run.py --conf`` harvests or tails.
 """
 
 from __future__ import annotations
 
 import json
 import os
-from dataclasses import dataclass, field
+from dataclasses import dataclass
 
 MAX_CONFIG_BYTES = 10 << 20  # config.go:14
 DEFAULT_TIMEOUT_SEC = 15  # config.go:150-156
@@ -22,16 +23,6 @@ DEFAULT_DEAD_TIME = "24h"  # config.go:16-22
 
 class ConfigError(ValueError):
     pass
-
-
-@dataclass
-class EngineConfig:
-    sinks: list[str] = field(default_factory=list)
-    routes: list[tuple[int, str, str]] = field(default_factory=list)
-    source_fields: dict[str, dict[str, str]] = field(default_factory=dict)
-    timeout_sec: int = DEFAULT_TIMEOUT_SEC
-    dead_time: str = DEFAULT_DEAD_TIME
-    salt_buckets: int = 64
 
 
 def discover_configs(path: str) -> list[str]:
@@ -104,27 +95,6 @@ def merge_configs(specs: list[dict]) -> dict:
             elif merged[key] != val:
                 raise ConfigError(f"conflicting values for {key!r}")
     return merged
-
-
-def finalize_config(merged: dict) -> EngineConfig:
-    """Apply defaults (config.go:150-156) and validate the route table."""
-    routes = [tuple(r) for r in merged.get("routes", [])]
-    cfg = EngineConfig(
-        sinks=sorted({r[2] for r in routes}),
-        routes=[(int(p), str(pred), str(sink)) for p, pred, sink in routes],
-        source_fields={
-            k: {str(a): str(b) for a, b in v.items()}
-            for k, v in merged.get("source_fields", {}).items()
-        },
-        timeout_sec=int(merged.get("timeout_sec", DEFAULT_TIMEOUT_SEC)),
-        dead_time=str(merged.get("dead_time", DEFAULT_DEAD_TIME)),
-        salt_buckets=int(merged.get("salt_buckets", 64)),
-    )
-    return cfg
-
-
-def load_engine_config(path: str) -> EngineConfig:
-    return finalize_config(merge_configs([load_config(f) for f in discover_configs(path)]))
 
 
 # --------------------------------------------------------------------------

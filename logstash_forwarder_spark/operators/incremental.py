@@ -201,20 +201,13 @@ class BucketedSignatureStore(SignatureStore):
     def _write_sidecar(self, batches: list[str]) -> None:
         import json
 
-        tmp = self._sidecar + ".tmp"
-        with open(tmp, "w") as fh:
-            json.dump(
-                {
-                    "geom": {
-                        "n_buckets": self.n_buckets,
-                        "k": self.k,
-                        "bands": self.bands,
-                    },
-                    "batches": sorted(batches),
-                },
-                fh,
-            )
-        os.replace(tmp, self._sidecar)  # single-file atomic swap
+        from ..plans.manifest import publish_file
+
+        doc = {
+            "geom": {"n_buckets": self.n_buckets, "k": self.k, "bands": self.bands},
+            "batches": sorted(batches),
+        }
+        publish_file(self._sidecar, json.dumps(doc).encode())
 
     # -- index maintenance ---------------------------------------------------
     def _index_batch(self, batch_id: str, sigs: DataFrame | None = None) -> None:

@@ -34,6 +34,8 @@ from collections.abc import Iterator
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from ..sources.textlog import SOURCE_STEM_RE
+
 VERSION = b"1"
 COMPRESS_LEVEL = 3  # publisher1.go:46 zlib.NewWriterLevel(&buffer, 3)
 
@@ -271,7 +273,5 @@ def lumberjack_to_sequences(decoded: DataFrame, *, vocab: int = 2_147_483_647) -
         F.concat_ws(":", "file", F.col("offset").cast("string")).alias("doc_id"),
         tokens.alias("tokens"),
         F.size(tokens).cast("int").alias("n_tok"),
-        F.regexp_extract("file", r"([^/]+?)(?:\.[^./]*)?(?:\.gz)?$", 1).alias(
-            "source"
-        ),
+        F.regexp_extract("file", SOURCE_STEM_RE, 1).alias("source"),
     )

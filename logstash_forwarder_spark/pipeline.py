@@ -15,9 +15,12 @@ One logical run = one envelope/ack cycle of the reference
 * **One commit protocol, checkpoint-after-data.** Data files land once in
   their final ``sink=S/`` directory; each sink is then published by
   atomically swapping ONE small manifest file that names them
-  (plans/manifest.py), and its lineage rows are committed to the registrar
-  second. Readers resolve through the manifest, so files no manifest names
-  are invisible. A crash between publish and checkpoint leaves a manifest
+  (plans/manifest.py), and its lineage rows are committed second through
+  ``Registrar.commit`` — every sink, empty or not, the same way. The
+  lineage is one per-(sink, input partition) aggregate over the staged
+  files, collected to the driver: sinks × input partitions rows. Readers
+  resolve through the manifest, so files no manifest names are
+  invisible. A crash between publish and checkpoint leaves a manifest
   the registrar never adopted, which resume deletes and redoes →
   exactly-once routed rows (strictly stronger than the reference's
   at-least-once, SURVEY §3.4). No directory is ever renamed, so the same
@@ -50,16 +53,11 @@ from .plans.manifest import (
 from .plans.registrar import LineageRow, Registrar
 
 
-class InjectedFailure(RuntimeError):
-    """Raised by the test-only fault injector to simulate a mid-run crash."""
-
-
 @dataclass
 class PipelineSpec:
     out_dir: str
     run_id: str = field(default_factory=lambda: uuid.uuid4().hex[:12])
     routes: list[tuple[int, str, str]] = field(default_factory=default_routes)
-    salt_buckets: int = 64
     # write-time sorted layout (plans/layout.py at the ship surface):
     # range-partition each sink's rows by this column and sort within
     # partitions before staging, so parquet row-group/file min-max
@@ -72,8 +70,6 @@ class PipelineSpec:
     # but AQE coalescing small runs into few large files WEAKENS zone-map
     # pruning; set explicitly when file granularity is the point.
     sort_partitions: int | None = None
-    # test-only fault injection: raise after N successful sink commits
-    fail_after_sinks: int | None = None
 
 
 @dataclass
@@ -95,23 +91,6 @@ def build_plan(
     return route_stage(enriched, spec.routes)
 
 
-def _phase_logger():
-    """Optional stderr phase timing (``SPARK_GRAFT_PHASE_LOG=1``) — the
-    bench-decomposition instrument; a no-op unless explicitly enabled."""
-    if not os.environ.get("SPARK_GRAFT_PHASE_LOG"):
-        return lambda name: None
-    import sys
-
-    state = {"t": time.monotonic()}
-
-    def mark(name: str) -> None:
-        now = time.monotonic()
-        print(f"# phase {name}: {now - state['t']:.2f}s", file=sys.stderr)
-        state["t"] = now
-
-    return mark
-
-
 def run_pipeline(
     spark: SparkSession,
     sequences: DataFrame,
@@ -119,7 +98,6 @@ def run_pipeline(
     spec: PipelineSpec,
 ) -> RunResult:
     t0 = time.monotonic()
-    phase = _phase_logger()
     reg = Registrar(os.path.join(spec.out_dir, "_checkpoint"))
     all_sinks = sink_names(spec.routes)
     done = reg.committed_sinks(spec.run_id)
@@ -127,10 +105,6 @@ def run_pipeline(
 
     run_dir = os.path.join(spec.out_dir, f"run_id={spec.run_id}")
     os.makedirs(run_dir, exist_ok=True)
-    # a crashed attempt (or a fully-committed run killed before its
-    # cleanup) may have left lineage staging behind: garbage either way
-    lineage_staging = os.path.join(run_dir, "_lineage_staging")
-    shutil.rmtree(lineage_staging, ignore_errors=True)
 
     committed: list[str] = []
     rows_staged = 0
@@ -157,96 +131,40 @@ def run_pipeline(
             gc_sink(run_dir, sink)
         shutil.rmtree(os.path.join(run_dir, "_temporary"), ignore_errors=True)
         routed.write.mode("append").partitionBy("sink").parquet(run_dir)
-        phase("staging_write")
         files = {s: list_data_files(run_dir, s) for s in todo}
         staged_dirs = [os.path.join(run_dir, f"sink={s}") for s in todo if files[s]]
 
-        phase("staging_read_setup")
-        lineage_files: dict[str, str] = {}
-        sink_rows: dict[str, int] = {}
+        # per-(sink, input partition) lineage: one aggregate over the
+        # staged files, collected — sinks × input partitions rows, the
+        # size the registrar itself reads back on every lookup
+        lineage: dict[str, list[LineageRow]] = {s: [] for s in todo}
         if staged_dirs:
             staged = spark.read.option("basePath", run_dir).parquet(*staged_dirs)
-            # per-partition lineage, one columnar scan, WRITTEN BY EXECUTORS
-            # — the driver never materializes a row per input partition
-            # (a toPandas() here scales with partition count; VERDICT r1 #6).
-            # repartition(1) funnels the metadata-sized relation through one
-            # executor so partitionBy yields exactly one file per sink.
-            (
-                staged.groupBy("sink", "part_id")
-                .agg(
-                    F.count(F.lit(1)).alias("row_count"),
-                    F.coalesce(F.sum("n_tok"), F.lit(0)).alias("token_total"),
-                )
-                .select(
-                    F.lit(spec.run_id).alias("run_id"),
-                    F.col("sink"),
-                    F.col("part_id").cast("int").alias("partition_id"),
-                    F.col("row_count").cast("long"),
-                    F.col("token_total").cast("long"),
-                    F.current_timestamp().alias("committed_at"),
-                    F.col("sink").alias("sink_part"),
-                )
-                .repartition(1)
-                .write.partitionBy("sink_part")
-                .parquet(lineage_staging)
+            per_part = staged.groupBy("sink", "part_id").agg(
+                F.count(F.lit(1)), F.coalesce(F.sum("n_tok"), F.lit(0))
             )
-            for d in os.listdir(lineage_staging):
-                if not d.startswith("sink_part="):
-                    continue
-                sink = d.split("=", 1)[1]
-                parts = [
-                    f
-                    for f in os.listdir(os.path.join(lineage_staging, d))
-                    if f.endswith(".parquet")
-                ]
-                lineage_files[sink] = os.path.join(lineage_staging, d, parts[0])
-            # per-sink and staged row counts from the metadata-sized
-            # lineage files, each read ONCE DRIVER-SIDE with pyarrow (the
-            # per-sink file list is already in hand) — not a second
-            # staged-data scan, and not even a Spark job (the read-back +
-            # agg cost a whole job for a handful of rows)
-            sink_rows = {
-                sink: pq_read_column_sum(f, "row_count")
-                for sink, f in lineage_files.items()
-            }
-            rows_staged = sum(sink_rows.values())
-            phase("lineage")
+            for sink, part, n, tokens in sorted(per_part.collect()):
+                lineage[sink].append(LineageRow(part, n, tokens))
 
-        n_committed = 0
         for sink in todo:
-            if not files[sink]:
-                # no rows routed to this sink: empty manifest + lineage
-                publish_manifest(run_dir, sink, [], 0)
-                reg.commit(spec.run_id, sink, [LineageRow(-1, 0, 0)])
-                committed.append(sink)
-                continue
             # publish = the ack (O-R5: one atomic FILE swap names the data
-            # files); checkpoint second = adopting the executor-written
-            # lineage file. A crash between the two leaves a manifest the
-            # registrar never adopted, which resume's gc_sink deletes and
-            # redoes (idempotent re-commit).
-            publish_manifest(run_dir, sink, files[sink], sink_rows[sink])
-            reg.commit_file(spec.run_id, sink, lineage_files[sink])
+            # files); checkpoint second. A crash between the two leaves a
+            # manifest the registrar never adopted, which resume's gc_sink
+            # deletes and redoes (idempotent re-commit). A sink no row was
+            # routed to commits an empty manifest and the sentinel row.
+            rows = lineage[sink] or [LineageRow(-1, 0, 0)]
+            n = sum(r.row_count for r in rows)
+            publish_manifest(run_dir, sink, files[sink], n)
+            reg.commit(spec.run_id, sink, rows)
             committed.append(sink)
-            n_committed += 1
-            if (
-                spec.fail_after_sinks is not None
-                and n_committed >= spec.fail_after_sinks
-            ):
-                raise InjectedFailure(
-                    f"injected crash after {n_committed} sink commits"
-                )
-        shutil.rmtree(lineage_staging, ignore_errors=True)
+            rows_staged += n
 
-    phase("commits")
     # north-rule metrics: per-sink/per-source counts + token totals (salted)
     published = resolve_sink_paths(run_dir, all_sinks)
     metrics_path = os.path.join(run_dir, "_metrics")
     if published:
         routed_back = spark.read.option("basePath", run_dir).parquet(*published)
-        metrics = sink_source_counts(routed_back, salt_buckets=spec.salt_buckets)
-        metrics.write.mode("overwrite").parquet(metrics_path)
-        phase("metrics")
+        sink_source_counts(routed_back).write.mode("overwrite").parquet(metrics_path)
 
     return RunResult(
         run_id=spec.run_id,
@@ -256,15 +174,6 @@ def run_pipeline(
         metrics_path=metrics_path,
         elapsed_sec=time.monotonic() - t0,
     )
-
-
-def pq_read_column_sum(path: str, column: str) -> int:
-    """Sum one int64 column of a single (metadata-sized) parquet file."""
-    import pyarrow.compute as pc
-    import pyarrow.parquet as pq
-
-    t = pq.read_table(path, columns=[column])
-    return int(pc.sum(t.column(column)).as_py() or 0)
 
 
 def read_sink(spark: SparkSession, out_dir: str, run_id: str, sink: str) -> DataFrame:

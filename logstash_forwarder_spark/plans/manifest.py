@@ -18,7 +18,7 @@ the same way:
   them because no manifest named them.
 
 Scope of the rename-free claim: the PUBLISH/COMMIT layer. At this layer
-only single-FILE atomic swaps remain (`_publish_file`), which object-store
+only single-FILE atomic swaps remain (`publish_file`), which object-store
 catalogs provide (S3 conditional PUT, GCS preconditions); directory renames
 are gone — enforced in tests by a shim that makes `os.replace` raise on
 directories (the ``no_dir_rename`` fixture, tests/conftest.py). The
@@ -40,10 +40,26 @@ import uuid
 MANIFEST_DIR = "_manifests"
 
 
-def _publish_file(tmp: str, final: str) -> None:
+def publish_file(final: str, data) -> str:
     """The one primitive a store must provide: atomically swap one small
-    file into place."""
-    os.replace(tmp, final)
+    file into place — the package's only write-temp-then-rename, behind
+    manifests, registrar commits, the registrar index and the tail state.
+
+    ``data`` (bytes-like) goes to a temp file in ``final``'s directory
+    named ``.<basename>.<uuid>.tmp``: no ``*.parquet`` or ``*.json`` glob
+    (DuckDB's matches dot-files) can see one a crash leaves behind. A
+    write or swap that raises removes its temp file."""
+    d, base = os.path.split(final)
+    tmp = os.path.join(d, f".{base}.{uuid.uuid4().hex}.tmp")
+    try:
+        with open(tmp, "wb") as fh:
+            fh.write(data)
+        os.replace(tmp, final)
+    except BaseException:
+        if os.path.exists(tmp):
+            os.remove(tmp)
+        raise
+    return final
 
 
 def _manifest_path(run_dir: str, sink: str) -> str:
@@ -54,12 +70,8 @@ def publish_manifest(run_dir: str, sink: str, files: list[str], row_count: int) 
     """Atomically publish sink's manifest: the commit point for its data.
     `files` are paths relative to run_dir (portable across store mounts)."""
     os.makedirs(os.path.join(run_dir, MANIFEST_DIR), exist_ok=True)
-    final = _manifest_path(run_dir, sink)
-    tmp = os.path.join(run_dir, MANIFEST_DIR, f".tmp-{uuid.uuid4().hex}.json")
-    with open(tmp, "w") as fh:
-        json.dump({"sink": sink, "files": sorted(files), "row_count": row_count}, fh)
-    _publish_file(tmp, final)
-    return final
+    doc = {"sink": sink, "files": sorted(files), "row_count": row_count}
+    return publish_file(_manifest_path(run_dir, sink), json.dumps(doc).encode())
 
 
 def read_manifest(run_dir: str, sink: str) -> dict | None:

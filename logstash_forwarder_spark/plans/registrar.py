@@ -4,11 +4,12 @@ The reference persists ``map[source]FileState`` as JSON via
 write-temp-then-atomic-rename (/root/reference/registrar.go:38-51,
 registrar_other.go:9-15) and, only after the ack, folds acked events into it
 (/root/reference/publisher1.go:126). Here the same trick backs a parquet
-metadata table: each sink commit writes one immutable parquet file of
-per-partition lineage rows, published with a single-FILE ``os.replace``
-(atomic on POSIX). Iceberg's metadata swap would give this for free; the
-parquet fallback keeps the identical interface without the runtime jar
-(SURVEY §7.3 hard part 5).
+metadata table: each sink commit (:meth:`Registrar.commit`, the only
+writer of commit files) writes one immutable parquet file of
+per-partition lineage rows through the package's one single-file swap,
+``manifest.publish_file`` (atomic on POSIX). Iceberg's metadata swap would
+give this for free; the parquet fallback keeps the identical interface
+without the runtime jar (SURVEY §7.3 hard part 5).
 
 The map stays keyed: a commit file's name is derived from its (run_id,
 sink) key (``Registrar._commit_name``), so the resume lookup lists only
@@ -29,7 +30,6 @@ from __future__ import annotations
 import hashlib
 import os
 import re
-import uuid
 from dataclasses import dataclass
 from datetime import datetime, timezone
 
@@ -38,7 +38,7 @@ import pyarrow.compute as pc
 import pyarrow.parquet as pq
 from pyspark.sql import DataFrame, SparkSession
 
-from .manifest import gc_sink, resolve_sink_paths
+from .manifest import gc_sink, publish_file, resolve_sink_paths
 
 _ARROW_SCHEMA = pa.schema(
     [
@@ -92,23 +92,12 @@ class Registrar:
         )
         return self._write(table, self._commit_name(run_id, sink))
 
-    def commit_file(self, run_id: str, sink: str, src_path: str) -> str:
-        """Atomically adopt an executor-written lineage parquet file as this
-        (run_id, sink)'s commit — the zero-driver-materialization path: the
-        lineage rows never exist driver-side, only the rename does.
-        Idempotent like commit(): re-adoption overwrites."""
-        final = os.path.join(self.path, self._commit_name(run_id, sink))
-        os.replace(src_path, final)
-        return final
-
     def _write(self, table: pa.Table, name: str) -> str:
-        """Write-temp-then-atomic-rename of one file (registrar_other.go:9-15,
+        """One parquet file swapped into place (registrar_other.go:9-15,
         reborn): the commit writer and the index writer."""
-        final = os.path.join(self.path, name)
-        tmp = os.path.join(self.path, f".tmp-{uuid.uuid4().hex}.parquet")
-        pq.write_table(table, tmp)
-        os.replace(tmp, final)
-        return final
+        buf = pa.BufferOutputStream()
+        pq.write_table(table, buf)
+        return publish_file(os.path.join(self.path, name), buf.getvalue())
 
     @staticmethod
     def _commit_name(run_id: str, sink: str) -> str:
@@ -126,11 +115,10 @@ class Registrar:
 
     @classmethod
     def _read_commit(cls, f: str) -> pa.Table:
-        """Read one commit file as index rows — commit files come from two
-        writers (driver pyarrow for empty sinks, executor Spark for data
-        sinks) whose physical types differ slightly (e.g. timestamp
-        unit/tz), so cast on read; the snapshot_id is the name's hash."""
-        t = pq.read_table(f).select(_ARROW_SCHEMA.names).cast(_ARROW_SCHEMA)
+        """Read one commit file (written by :meth:`commit` in
+        ``_ARROW_SCHEMA``) as index rows; the snapshot_id is the name's
+        hash."""
+        t = pq.read_table(f)
         return t.append_column(
             _INDEX_SCHEMA.field("snapshot_id"),
             pa.array([cls._sid_of(f)] * t.num_rows, pa.string()),
@@ -160,13 +148,12 @@ class Registrar:
                 for f in sorted(os.listdir(self.path))
                 if f.startswith(prefix)
                 and f.endswith(".parquet")
-                and not f.startswith(".tmp-")
                 and f != self.INDEX_NAME
             ]
             try:
                 live = [self._read_commit(f) for f in files]
                 index = (
-                    pq.read_table(index_path).cast(_INDEX_SCHEMA)
+                    pq.read_table(index_path)
                     if os.path.exists(index_path)
                     else _INDEX_SCHEMA.empty_table()
                 )
@@ -230,12 +217,10 @@ class Registrar:
         the GLOBAL commit order (so an id from any run — e.g. one listed
         by --snapshots — defines the cut), then the run filter selects
         which run's data to read at that point. `as_of` filters on
-        committed_at, which is the lineage WRITE instant: sinks published
-        by one run share it (executors write all lineage in a single
-        job), so timestamp travel treats a run's publish as one
-        transaction — ties are all included, exactly like Iceberg reading
-        at a timestamp between two commits sees the whole earlier
-        commit."""
+        committed_at, each sink commit's own instant (as in Iceberg,
+        every snapshot carries the time it was committed), so a cut can
+        fall between two sinks of one run; a commit at exactly `as_of`
+        is included."""
         all_snaps = self.snapshots()
         snaps = [s for s in all_snaps if s.run_id == run_id]
         if snapshot_id is not None:
@@ -273,7 +258,7 @@ class Registrar:
         removed afterwards: thousands of metadata-sized files become one,
         and a full registrar read stops growing with commit count.
 
-        Crash-safe: the index swap is a single `os.replace`; a crash
+        Crash-safe: the index swap is one `publish_file`; a crash
         before any deletion leaves covered files in place, which readers
         ignore via the live-overrides-index rule (same snapshot_id).
         Idempotent: a re-commit AFTER compaction writes the same
@@ -314,9 +299,9 @@ class Registrar:
         the expired set still enumerable from metadata, so a re-run
         completes the job (idempotent — per-key deletes of already-gone
         files are no-ops). The surviving rows are then written as the
-        compaction index (the same single-file ``os.replace`` every other
-        commit uses) and the live commit files read are removed, so after
-        an expiry every survivor lives in ``_index.parquet``. Data GC
+        compaction index (the same single-file ``publish_file`` every
+        other commit uses) and the live commit files read are removed, so
+        after an expiry every survivor lives in ``_index.parquet``. Data GC
         (with ``out_dir``) deletes per-key and removes only EMPTY dirs —
         no directory renames anywhere (object-store-safe, enforced under
         the no-dir-rename shim in tests). Time travel to surviving

@@ -462,33 +462,24 @@ def _harvest_from_conf(spark, conf_path: str):
     (registrar-sized work — a file LIST, never data), dead-time-idle
     files are skipped at discovery (harvester.go dead-time contract),
     '-' reads stdin into a spooled file (S4), and the group's static
-    fields become rows of the broadcast-enrich dim keyed by the file
-    stem — FileConfig.Fields (config.go:40) riding the same join every
-    other enrich uses. Conflicting fields for one stem across groups
-    raise (one dim row per source; the reference's per-harvester
-    attachment cannot express two field-sets for one source name
-    either once events merge downstream).
+    fields ride the enrich dim (:func:`_conf_source_dim`).
 
     Returns (sequences, source_dim) or (None, None) when nothing
     matched."""
     import glob as globmod
     import os
-    import re
     import sys
     import tempfile
     import time as timemod
 
     from .config import load_forwarder_config, parse_duration
-    from .schema import SOURCE_DIM_SCHEMA
     from .sources.textlog import harvest_text_files, lines_to_sequences
 
     cfg = load_forwarder_config(conf_path)
-    # must mirror lines_to_sequences' JVM stem regexp exactly
-    stem_re = re.compile(r"([^/]+?)(?:\.[^./]*)?(?:\.gz)?$")
     now = timemod.time()
     all_paths: list[str] = []
     seen_paths: set[str] = set()
-    dim_fields: dict[str, dict[str, str]] = {}
+    groups: list[tuple[dict[str, str], list[str]]] = []
     for g in cfg.files:
         cutoff = now - parse_duration(g.dead_time)
         matched: list[str] = []
@@ -508,23 +499,40 @@ def _harvest_from_conf(spark, conf_path: str):
         # fields) must not ship a file twice — mirror discover_tails' set
         # dedup, order-preserving (ADVICE r5)
         matched = list(dict.fromkeys(matched))
-        for mfile in matched:
-            src = stem_re.search(mfile).group(1)
-            if src in dim_fields and dim_fields[src] != g.fields:
-                raise SystemExit(
-                    f"--conf: source {src!r} gets conflicting fields from "
-                    "two files[] groups"
-                )
-            dim_fields[src] = g.fields
+        groups.append((g.fields, matched))
         all_paths.extend(m for m in matched if m not in seen_paths)
         seen_paths.update(matched)
     if not all_paths:
         return None, None
     seqs = lines_to_sequences(harvest_text_files(spark, all_paths))
-    dim = spark.createDataFrame(
-        sorted(dim_fields.items()), SOURCE_DIM_SCHEMA
-    )
-    return seqs, dim
+    return seqs, _conf_source_dim(spark, groups)
+
+
+def _conf_source_dim(spark, groups):
+    """The ``--conf`` enrich dim: ``groups`` is ``[(fields, paths)]``, one
+    per files[] group; every path's source stem (textlog.SOURCE_STEM_RE,
+    the rule the ingest applies) keys a dim row carrying its group's
+    static fields — FileConfig.Fields (config.go:40) riding the same join
+    every other enrich uses. Conflicting fields for one stem across groups
+    raise (one dim row per source; the reference's per-harvester
+    attachment cannot express two field-sets for one source name either
+    once events merge downstream)."""
+    import re
+
+    from .schema import SOURCE_DIM_SCHEMA
+    from .sources.textlog import SOURCE_STEM_RE
+
+    stem_re = re.compile(SOURCE_STEM_RE)
+    dim_fields: dict[str, dict[str, str]] = {}
+    for fields, paths in groups:
+        for path in paths:
+            src = stem_re.search(path).group(1)
+            if dim_fields.setdefault(src, fields) != fields:
+                raise SystemExit(
+                    f"--conf: source {src!r} gets conflicting fields from "
+                    "two files[] groups"
+                )
+    return spark.createDataFrame(sorted(dim_fields.items()), SOURCE_DIM_SCHEMA)
 
 
 def _tail_loop(spark, args) -> int:
@@ -556,6 +564,7 @@ def _tail_loop(spark, args) -> int:
     import time
     import uuid
 
+    from .plans.manifest import publish_file
     from .sources.textlog import (
         lines_to_sequences,
         poll_tail_once,
@@ -623,26 +632,15 @@ def _tail_loop(spark, args) -> int:
 
         def dim_per_poll():
             import glob as globmod
-            import re
 
-            from .schema import SOURCE_DIM_SCHEMA
-
-            stem_re = re.compile(r"([^/]+?)(?:\.[^./]*)?(?:\.gz)?$")
-            fields: dict[str, dict[str, str]] = {}
-            for g in fcfg.files:
-                for pat in g.paths:
-                    if pat == "-":
-                        continue
-                    for m in globmod.glob(pat):
-                        src = stem_re.search(m).group(1)
-                        if src in fields and fields[src] != g.fields:
-                            raise SystemExit(
-                                f"--conf: source {src!r} gets conflicting "
-                                "fields from two files[] groups"
-                            )
-                        fields[src] = g.fields
-            return spark.createDataFrame(
-                sorted(fields.items()), SOURCE_DIM_SCHEMA
+            return _conf_source_dim(
+                spark,
+                [
+                    (g.fields, globmod.glob(pat))
+                    for g in fcfg.files
+                    for pat in g.paths
+                    if pat != "-"
+                ],
             )
 
         dim = dim_per_poll()
@@ -781,10 +779,7 @@ def _tail_loop(spark, args) -> int:
             doc = {k2: list(v) for k2, v in state.items()}
             doc["_polls"] = poll_no + 1
             os.makedirs(args.out, exist_ok=True)
-            tmp = f"{state_path}.tmp.{uuid.uuid4().hex[:8]}"
-            with open(tmp, "w") as fh:
-                json.dump(doc, fh)
-            os.replace(tmp, state_path)
+            publish_file(state_path, json.dumps(doc).encode())
         # this poll's eager checkpoint is superseded once its lines are
         # committed (or there were none): free the storage, or a long
         # --polls daemon grows executor block storage without bound

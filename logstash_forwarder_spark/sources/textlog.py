@@ -42,6 +42,12 @@ HARVEST_SCHEMA = (
     "line string, is_complete boolean"
 )
 
+# a log file's source name: its basename minus one extension and a
+# trailing .gz (app.log, app.log.gz -> app). Read the same by the JVM
+# (regexp_extract) and by Python's re, so driver-side code (the --conf
+# enrich dim) and the ingest agree on every source.
+SOURCE_STEM_RE = r"([^/]+?)(?:\.[^./]*)?(?:\.gz)?$"
+
 
 def _split_file_arrays(buf: bytes):
     """Split one file's bytes into parallel per-line arrays
@@ -291,9 +297,7 @@ def lines_to_sequences(lines: DataFrame, *, vocab: int = 2_147_483_647) -> DataF
         F.concat_ws(":", "file", F.col("line_no").cast("string")).alias("doc_id"),
         tokens.alias("tokens"),
         F.size(tokens).cast("int").alias("n_tok"),
-        F.regexp_extract("file", r"([^/]+?)(?:\.[^./]*)?(?:\.gz)?$", 1).alias(
-            "source"
-        ),
+        F.regexp_extract("file", SOURCE_STEM_RE, 1).alias("source"),
     )
 
 

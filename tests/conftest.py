@@ -4,6 +4,7 @@ import os
 
 import pytest
 
+from logstash_forwarder_spark.plans.registrar import Registrar
 from logstash_forwarder_spark.session import get_spark
 
 
@@ -38,6 +39,33 @@ def no_dir_rename(monkeypatch):
         return real(src, dst, *a, **k)
 
     monkeypatch.setattr(os, "replace", guarded)
+
+
+class InjectedFailure(RuntimeError):
+    """A simulated crash, raised by ``crash_after_commits``."""
+
+
+@pytest.fixture
+def crash_after_commits(monkeypatch):
+    """``crash_after_commits(n)``: raise InjectedFailure right after the
+    n-th registrar commit from now — a run that dies mid-way through its
+    sink commits. Fires once; later commits (the resume) run normally."""
+
+    def arm(n: int) -> None:
+        real = Registrar.commit
+        left = [n]
+
+        def commit(self, *args, **kwargs):
+            path = real(self, *args, **kwargs)
+            left[0] -= 1
+            if left[0] == 0:
+                monkeypatch.setattr(Registrar, "commit", real)
+                raise InjectedFailure(f"injected crash after {n} commits")
+            return path
+
+        monkeypatch.setattr(Registrar, "commit", commit)
+
+    return arm
 
 
 # events table schema shared by the streaming/aggregate tests

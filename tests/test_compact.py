@@ -8,12 +8,7 @@ import pytest
 from pyspark.sql import functions as F
 
 from logstash_forwarder_spark.datagen import gen_sequences, gen_source_dim
-from logstash_forwarder_spark.pipeline import (
-    InjectedFailure,
-    PipelineSpec,
-    read_sink,
-    run_pipeline,
-)
+from logstash_forwarder_spark.pipeline import PipelineSpec, read_sink, run_pipeline
 from logstash_forwarder_spark.plans import compact as compact_mod
 from logstash_forwarder_spark.plans.compact import (
     compact_run,
@@ -22,6 +17,8 @@ from logstash_forwarder_spark.plans.compact import (
 )
 from logstash_forwarder_spark.plans.manifest import list_data_files, read_manifest
 from logstash_forwarder_spark.plans.registrar import Registrar
+
+from .conftest import InjectedFailure
 
 N = 2_000
 
@@ -129,16 +126,19 @@ def test_compact_refuses_row_count_mismatch(spark, tmp_out, no_dir_rename):
     assert not [f for f in os.listdir(run_dir) if f.startswith("_compact_tmp")]
 
 
-def test_compact_refuses_uncommitted_sink(spark, tmp_out, no_dir_rename):
+def test_compact_refuses_uncommitted_sink(
+    spark, tmp_out, no_dir_rename, crash_after_commits
+):
     """A sink whose data files are on disk but that has no manifest (the
     run crashed before committing it) has no commit pointer to swap:
     compaction refuses it rather than promoting orphans."""
+    crash_after_commits(1)
     with pytest.raises(InjectedFailure):
         run_pipeline(
             spark,
             gen_sequences(spark, N),
             gen_source_dim(spark),
-            PipelineSpec(out_dir=tmp_out, run_id="r1", fail_after_sinks=1),
+            PipelineSpec(out_dir=tmp_out, run_id="r1"),
         )
     run_dir = os.path.join(tmp_out, "run_id=r1")
     done = Registrar(os.path.join(tmp_out, "_checkpoint")).committed_sinks("r1")

@@ -9,10 +9,10 @@ import pytest
 from logstash_forwarder_spark.config import (
     ConfigError,
     discover_configs,
-    finalize_config,
     load_config,
-    load_engine_config,
+    load_forwarder_config,
     merge_configs,
+    parse_forwarder_config,
     strip_comments,
 )
 
@@ -36,11 +36,11 @@ def test_strip_comments_outside_strings():
 
 
 def test_env_expansion(tmp_path, monkeypatch):
-    monkeypatch.setenv("SINKNAME", "sink_env")
+    monkeypatch.setenv("LOGDIR", "/var/log/env")
     f = tmp_path / "c.json"
-    f.write_text('{"routes": [[0, "true", "$SINKNAME"]]}')
-    cfg = load_engine_config(str(f))
-    assert cfg.sinks == ["sink_env"]
+    f.write_text('{"files": [{"paths": ["$LOGDIR/*.log", "${LOGDIR}/x"]}]}')
+    cfg = load_forwarder_config(str(f))
+    assert cfg.files[0].paths == ["/var/log/env/*.log", "/var/log/env/x"]
 
 
 def test_merge_conflict_fatal():
@@ -53,9 +53,9 @@ def test_merge_conflict_fatal():
 
 def test_finalize_defaults():
     # config_test.go:145-159: FinalizeConfig defaults timeout to 15s
-    cfg = finalize_config({"routes": [[0, "true", "x"]]})
+    cfg = parse_forwarder_config({"files": [{"paths": ["/x.log"]}]})
     assert cfg.timeout_sec == 15
-    assert cfg.dead_time == "24h"
+    assert cfg.files[0].dead_time == "24h"
 
 
 def test_size_cap(tmp_path):

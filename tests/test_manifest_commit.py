@@ -15,18 +15,15 @@ import pytest
 from pyspark.sql import functions as F
 
 from logstash_forwarder_spark.datagen import gen_sequences, gen_source_dim
-from logstash_forwarder_spark.pipeline import (
-    InjectedFailure,
-    PipelineSpec,
-    read_sink,
-    run_pipeline,
-)
+from logstash_forwarder_spark.pipeline import PipelineSpec, read_sink, run_pipeline
 from logstash_forwarder_spark.plans.manifest import (
     publish_manifest,
     read_manifest,
     resolve_sink_paths,
 )
 from logstash_forwarder_spark.plans.registrar import Registrar
+
+from .conftest import InjectedFailure
 
 N = 2_000
 
@@ -112,11 +109,12 @@ def test_manifest_run_resume_exactly_once(spark, tmp_out, no_dir_rename):
         assert read_manifest(run_dir, sink)["row_count"] == want
 
 
-def test_manifest_kill_resume(spark, tmp_out, no_dir_rename):
+def test_manifest_kill_resume(spark, tmp_out, no_dir_rename, crash_after_commits):
     seqs = gen_sequences(spark, N)
     dim = gen_source_dim(spark)
+    crash_after_commits(2)
     with pytest.raises(InjectedFailure):
-        run_pipeline(spark, seqs, dim, _spec(tmp_out, "mk", fail_after_sinks=2))
+        run_pipeline(spark, seqs, dim, _spec(tmp_out, "mk"))
     reg = Registrar(os.path.join(tmp_out, "_checkpoint"))
     assert len(reg.committed_sinks("mk")) == 2
     res = run_pipeline(spark, seqs, dim, _spec(tmp_out, "mk"))
@@ -215,7 +213,9 @@ def test_manifest_empty_sinks(spark, tmp_out, no_dir_rename):
     assert res2.sinks_committed == [] and len(res2.sinks_skipped) == 4
 
 
-def test_read_table_skips_uncommitted_orphans(spark, tmp_out, no_dir_rename):
+def test_read_table_skips_uncommitted_orphans(
+    spark, tmp_out, no_dir_rename, crash_after_commits
+):
     """read_table: the cross-run consumer surface. A bare run_id=*/sink=*
     glob would see a crashed attempt's in-place data files;
     read_table resolves through manifests and must not."""
@@ -228,10 +228,9 @@ def test_read_table_skips_uncommitted_orphans(spark, tmp_out, no_dir_rename):
     run_pipeline(spark, seqs, dim, _spec(tmp_out, "t1"))
     # second run crashes after 2 of 4 sink commits: the remaining sinks
     # have in-place data files but no manifest
+    crash_after_commits(2)
     with pytest.raises(InjectedFailure):
-        run_pipeline(
-            spark, seqs, dim, _spec(tmp_out, "t2", fail_after_sinks=2)
-        )
+        run_pipeline(spark, seqs, dim, _spec(tmp_out, "t2"))
 
     df = read_table(spark, tmp_out).select("run_id", "sink", "doc_id")
     per_run = {

@@ -15,14 +15,11 @@ import pandas as pd
 import pytest
 
 from logstash_forwarder_spark.datagen import gen_sequences, gen_source_dim
-from logstash_forwarder_spark.pipeline import (
-    InjectedFailure,
-    PipelineSpec,
-    run_pipeline,
-)
+from logstash_forwarder_spark.pipeline import PipelineSpec, run_pipeline
 from logstash_forwarder_spark.plans.manifest import read_manifest
 from logstash_forwarder_spark.plans.registrar import LineageRow, Registrar
 
+from .conftest import InjectedFailure
 from .oracle import oracle_pipeline, oracle_sink_source_counts
 
 N_ROWS = 10_000
@@ -36,11 +33,14 @@ def _read_all_sinks(spark, out_dir, run_id):
     )
 
 
-def test_kill_after_first_sink_then_resume(spark, tmp_out, no_dir_rename):
+def test_kill_after_first_sink_then_resume(
+    spark, tmp_out, no_dir_rename, crash_after_commits
+):
     seqs = gen_sequences(spark, N_ROWS, num_partitions=8).cache()
     dim = gen_source_dim(spark)
-    spec = PipelineSpec(out_dir=tmp_out, run_id="killrun", fail_after_sinks=1)
+    spec = PipelineSpec(out_dir=tmp_out, run_id="killrun")
 
+    crash_after_commits(1)
     with pytest.raises(InjectedFailure):
         run_pipeline(spark, seqs, dim, spec)
 
@@ -209,3 +209,45 @@ def test_keyed_lookup_is_exact_for_shared_name_prefixes(tmp_path, first, second)
             assert reg.committed_sinks(run_id) == {sink}
             assert reg.lineage(run_id)["row_count"].to_pylist() == [rows]
         reg.compact()
+
+
+def test_failed_swap_leaves_no_file_a_glob_reader_counts(tmp_path, monkeypatch):
+    """A crash inside a single-file swap must not leave a temp file that an
+    external glob reader takes for data: DuckDB over ``_checkpoint/*.parquet``
+    (its glob matches dot-files) must return exactly ``lineage()``, and
+    ``_manifests/*.json`` must list only published manifests."""
+    import duckdb
+
+    from logstash_forwarder_spark.plans.manifest import publish_manifest
+
+    real = os.replace
+
+    def fail_next_replace() -> None:
+        def failing(src, dst, *a, **k):
+            monkeypatch.setattr(os, "replace", real)
+            raise OSError("injected failure inside the swap")
+
+        monkeypatch.setattr(os, "replace", failing)
+
+    reg = Registrar(str(tmp_path / "_checkpoint"))
+    run_dir = str(tmp_path / "run_id=r1")
+    reg.commit("r1", "sink_a", [LineageRow(0, 10, 100)])
+    publish_manifest(run_dir, "sink_a", [], 10)
+    for fail in (
+        lambda: reg.commit("r1", "sink_b", [LineageRow(0, 5, 50)]),
+        reg.compact,
+        lambda: publish_manifest(run_dir, "sink_b", [], 5),
+    ):
+        fail_next_replace()
+        with pytest.raises(OSError, match="injected"):
+            fail()
+
+    con = duckdb.connect()
+    ckpt = con.sql(
+        f"SELECT run_id, sink, row_count FROM read_parquet('{reg.path}/*.parquet')"
+    ).fetchall()
+    assert sorted(ckpt) == sorted(
+        zip(*(reg.lineage()[c].to_pylist() for c in ("run_id", "sink", "row_count")))
+    ) == [("r1", "sink_a", 10)]
+    manifests = con.sql(f"SELECT file FROM glob('{run_dir}/_manifests/*.json')")
+    assert [os.path.basename(f) for (f,) in manifests.fetchall()] == ["sink=sink_a.json"]

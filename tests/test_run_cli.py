@@ -323,6 +323,13 @@ def test_forwarder_conf_parsing_errors(tmp_path):
     bad.write_text('{"files": [{"paths": ["/x"], "dead time": "often"}]}')
     with pytest.raises(ConfigError):
         load_forwarder_config(str(bad))
+    # two groups give one source stem (app.log, app.log.gz -> app)
+    # different fields: fatal, not a silent pick
+    from logstash_forwarder_spark.run import _conf_source_dim
+
+    groups = [({"env": "a"}, ["/x/app.log"]), ({"env": "b"}, ["/y/app.log.gz"])]
+    with pytest.raises(SystemExit, match="'app' gets conflicting fields"):
+        _conf_source_dim(None, groups)
 
 
 def test_run_cli_conf_tail(spark, tmp_path, capsys):

@@ -27,6 +27,7 @@ def test_snapshot_ordering_and_current(spark, tmp_out):
     assert all(
         a.committed_at <= b.committed_at for a, b in zip(snaps, snaps[1:])
     )
+    assert all(s.committed_at.tzinfo is not None for s in snaps)
     assert reg.current().snapshot_id == snaps[-1].snapshot_id
     # stable across re-listing
     assert [s.snapshot_id for s in reg.snapshots()] == [
@@ -50,9 +51,9 @@ def test_version_as_of_sees_prefix_of_commits(spark, tmp_out):
 def test_timestamp_as_of_and_errors(spark, tmp_out):
     reg = _run(spark, tmp_out)
     snaps = reg.snapshots()
-    # TIMESTAMP AS OF includes every commit whose instant ties <= the
-    # requested time — one pipeline run publishes with a shared lineage
-    # write instant, so the whole run is one timestamp-travel transaction
+    # TIMESTAMP AS OF includes every commit whose instant is <= the
+    # requested time; each sink commit carries its own instant, so the
+    # first snapshot's instant can cut between sinks of one run
     df = reg.read_as_of(spark, tmp_out, "snaprun", as_of=snaps[0].committed_at)
     expect = {s.sink for s in snaps if s.committed_at <= snaps[0].committed_at}
     assert {r.sink for r in df.select("sink").distinct().collect()} == expect
@@ -70,41 +71,6 @@ def test_timestamp_as_of_and_errors(spark, tmp_out):
         reg.read_as_of(spark, tmp_out, "snaprun", snapshot_id="nope")
     with pytest.raises(ValueError, match="no committed sink"):
         reg.read_as_of(spark, tmp_out, "otherrun")
-
-
-def test_mixed_writer_commits_sort_and_compare(tmp_path):
-    """Driver-written (pyarrow, tz-aware) and adopted executor-style
-    (tz-naive) commit files must coexist: snapshots() sorts the mixed log
-    and read_as_of's timestamp filter compares across both."""
-    import datetime
-
-    import pyarrow as pa
-    import pyarrow.parquet as pq
-
-    from logstash_forwarder_spark.plans.registrar import LineageRow, Registrar
-
-    reg = Registrar(str(tmp_path / "_checkpoint"))
-    reg.commit("m1", "sink_a", [LineageRow(0, 10, 100)])  # tz-aware path
-
-    naive = pa.Table.from_pydict(
-        {
-            "run_id": ["m1"],
-            "sink": ["sink_b"],
-            "partition_id": pa.array([0], pa.int32()),
-            "row_count": pa.array([5], pa.int64()),
-            "token_total": pa.array([50], pa.int64()),
-            "committed_at": pa.array(
-                [datetime.datetime(2030, 1, 1)], pa.timestamp("us")  # tz-NAIVE
-            ),
-        }
-    )
-    src = str(tmp_path / "naive.parquet")
-    pq.write_table(naive, src)
-    reg.commit_file("m1", "sink_b", src)
-
-    snaps = reg.snapshots()
-    assert [s.sink for s in snaps] == ["sink_a", "sink_b"]  # 2030 sorts last
-    assert all(s.committed_at.tzinfo is not None for s in snaps)
 
 
 def test_cross_run_snapshot_cut(spark, tmp_path):
