@@ -47,12 +47,12 @@ def _sequences_dim(spark: SparkSession) -> DataFrame:
 
 def flagship(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Full pipeline: vectorized parse UDF → broadcast enrich → route →
-    salted per-(sink, source) aggregate."""
+    per-(sink, source) aggregate."""
     seqs = documents_as_sequences(spark, sf_dir)
     parsed = parse_stage(seqs)
     enriched = enrich_stage(parsed, _sequences_dim(spark), run_id="entry")
     routed = route_stage(enriched, default_routes())
-    return sink_source_counts(routed, salt_buckets=16)
+    return sink_source_counts(routed)
 
 
 def entry(spark: SparkSession) -> DataFrame:

@@ -7,7 +7,7 @@ honest. (Spark's ``rand(seed)`` is only reproducible per-partition-layout;
 counter-based hashing is reproducible, period.)
 
 Shapes follow FIXTURES.md: a hot ``source`` key (~60% of rows) exercises
-skew salting; edge rows (empty and single-token arrays) exercise the parse
+key skew; edge rows (empty and single-token arrays) exercise the parse
 stage's boundary behavior, mirroring the reference e2e's unicode/edge
 payloads (/root/reference/spec/lumberjack_spec.rb:70).
 """

@@ -1,15 +1,14 @@
-"""O-A1/O-A2 — aggregates with explicit skew salting.
+"""O-A1/O-A2 — the pipeline's aggregates.
 
 The reference's two aggregates — last-offset-per-source
 (/root/reference/registrar.go:12-29) and batch count
 (/root/reference/publisher1.go:82) — generalize to per-(sink, source) row
-counts and token totals. A hot ``source`` (60% of rows in the fixture) makes
-the final groupBy shuffle skewed; AQE rebalances join skew but NOT groupBy
-skew, so we salt explicitly: pre-aggregate by (keys..., salt) — which also
-maximizes map-side partial aggregation — then re-aggregate without the salt.
-
-For algebraic aggregates (count/sum/max/min) salted == unsalted exactly;
-the property test asserts it.
+counts and token totals. A hot ``source`` (60% of rows in the fixture)
+needs no salting here: count/sum/max are algebraic, so Spark runs a
+partial HashAggregate in every map task BEFORE the one
+``Exchange hashpartitioning``, and the hot key's reducer reads one partial
+row per map task, never the key's raw rows (tests/test_aggregate.py
+checks that plan shape).
 """
 
 from __future__ import annotations
@@ -17,61 +16,33 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-DEFAULT_SALT_BUCKETS = 64
+
+def _stats() -> list:
+    """The three statistics lineage, manifests and ``_metrics`` carry."""
+    return [
+        F.count(F.lit(1)).alias("row_count"),
+        F.sum("n_tok").alias("token_total"),
+        F.max("n_tok").alias("max_tokens"),
+    ]
 
 
-def salted_agg(
-    df: DataFrame,
-    keys: list[str],
-    aggs: dict[str, tuple[str, str]],
-    *,
-    salt_buckets: int = DEFAULT_SALT_BUCKETS,
-    salt_on: str = "doc_id",
-) -> DataFrame:
-    """Two-phase skew-safe aggregate.
-
-    ``aggs`` maps output column → (fn, input) with fn in
-    {count, sum, max, min}. Phase 1 groups by keys+salt (salt =
-    hash(salt_on) % buckets, uniform even when keys are hot); phase 2
-    merges partials: count→sum, sum→sum, max→max, min→min.
-    """
-    _merge = {"count": "sum", "sum": "sum", "max": "max", "min": "min"}
-    for fn, _ in aggs.values():
-        if fn not in _merge:
-            raise ValueError(f"non-algebraic agg {fn!r} cannot be salted")
-
-    salted = df.withColumn(
-        "_salt", F.pmod(F.xxhash64(F.col(salt_on)), F.lit(salt_buckets))
-    )
-    phase1 = salted.groupBy(*keys, "_salt").agg(
-        *(
-            (F.count(inp) if fn == "count" else getattr(F, fn)(inp)).alias(out)
-            for out, (fn, inp) in aggs.items()
-        )
-    )
-    phase2 = phase1.groupBy(*keys).agg(
-        *(
-            getattr(F, _merge[fn])(out).alias(out)
-            for out, (fn, _) in aggs.items()
-        )
-    )
-    return phase2
-
-
-def sink_source_counts(
-    routed: DataFrame, *, salt_buckets: int = DEFAULT_SALT_BUCKETS
-) -> DataFrame:
+def sink_source_counts(routed: DataFrame) -> DataFrame:
     """The north_rule's per-sink/per-source row counts + token totals."""
-    return salted_agg(
-        routed,
-        keys=["sink", "source"],
-        aggs={
-            "row_count": ("count", "doc_id"),
-            "token_total": ("sum", "n_tok"),
-            "max_tokens": ("max", "n_tok"),
-        },
-        salt_buckets=salt_buckets,
-    )
+    return routed.groupBy("sink", "source").agg(*_stats())
+
+
+def commit_stats(staged: DataFrame) -> DataFrame:
+    """Everything a run's commit needs from its staged rows, in ONE
+    aggregate: grouping sets (sink, part_id) — the lineage — and (sink,
+    source) — the manifests' ``sources`` and so ``_metrics`` — with the
+    statistics of :func:`sink_source_counts`. ``gid`` is
+    ``grouping_id()``: 1 on a (sink, part_id) row (``source`` is null),
+    2 on a (sink, source) row (``part_id`` is null). One Expand, one
+    partial aggregate, one exchange; sinks × (partitions + sources) rows,
+    metadata-sized, meant to be collected."""
+    return staged.groupingSets(
+        [["sink", "part_id"], ["sink", "source"]], "sink", "part_id", "source"
+    ).agg(*_stats(), F.grouping_id().alias("gid"))
 
 
 def last_offset_per_source(df: DataFrame, offset_col: str = "doc_id") -> DataFrame:
@@ -89,9 +60,10 @@ def skew_report(
     """Key-skew diagnostic — the measurement half of "skew handled
     explicitly": per hottest key, its row count, corpus share (ppm,
     integer-exact) and the SALT BUCKET COUNT that bounds any single
-    (key, salt) group to ≤ ``target_rows`` rows — i.e. exactly the
-    ``salt_buckets`` argument :func:`salted_agg` needs for that key's
-    aggregation to never overload one reducer.
+    (key, salt) group to ≤ ``target_rows`` rows — what a hash salt on
+    that key needs where Spark cannot combine rows map-side (a
+    non-algebraic aggregate, a skewed join side); count/sum/max need
+    none (module docstring).
 
     Scale shape: ONE map-side-combinable hash-agg to the key domain;
     the grand total comes from a second 1-row agg broadcast back onto

@@ -5,9 +5,10 @@ One logical run = one envelope/ack cycle of the reference
 
 * **Single input pass.** The routed stream is written ONCE with
   ``partitionBy("sink")`` straight into the run directory — K sinks do not
-  mean K scans of a 100 TB input. Lineage and the north-rule aggregates are
-  then computed from the written columnar data, reading only the few
-  columns they need.
+  mean K scans of a 100 TB input. Lineage and the north-rule aggregates
+  are then ONE grouping-sets aggregate over the written columnar data
+  (operators/aggregate.py ``commit_stats``), reading only the few columns
+  it needs, collected to the driver.
 * **Checkpoint anti-filter.** On resume, sinks already committed for this
   ``run_id`` are excluded *before* the write (O-X3's left-anti join,
   degenerated to an ``isin`` filter because the commit key is the sink) —
@@ -17,14 +18,20 @@ One logical run = one envelope/ack cycle of the reference
   atomically swapping ONE small manifest file that names them
   (plans/manifest.py), and its lineage rows are committed second through
   ``Registrar.commit`` — every sink, empty or not, the same way. The
-  lineage is one per-(sink, input partition) aggregate over the staged
-  files, collected to the driver: sinks × input partitions rows. Readers
-  resolve through the manifest, so files no manifest names are
+  lineage is the aggregate's per-(sink, input partition) rows; its
+  per-(sink, source) rows ride in the sink's manifest (``sources``).
+  Readers resolve through the manifest, so files no manifest names are
   invisible. A crash between publish and checkpoint leaves a manifest
   the registrar never adopted, which resume deletes and redoes →
   exactly-once routed rows (strictly stronger than the reference's
   at-least-once, SURVEY §3.4). No directory is ever renamed, so the same
   protocol is correct on object stores (S3/GCS).
+* **Metrics from manifests.** ``_metrics`` (per-(sink, source) row count,
+  token total, max tokens) is built on the driver from the manifests of
+  ALL the run's sinks — a sink skipped on resume contributes its stored
+  statistics, no data is re-read — and written as one parquet file
+  through the same single-file swap. No Spark job runs after the commit
+  loop.
 """
 
 from __future__ import annotations
@@ -35,22 +42,39 @@ import time
 import uuid
 from dataclasses import dataclass, field
 
+import pyarrow as pa
+import pyarrow.parquet as pq
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from .datagen import default_routes
-from .operators.aggregate import sink_source_counts
+from .operators.aggregate import commit_stats
 from .operators.enrich import enrich_stage
 from .operators.parse import parse_stage
 from .operators.route import route_stage, sink_names
 from .plans.manifest import (
     gc_sink,
     list_data_files,
+    publish_file,
     publish_manifest,
     published_sinks,
+    read_manifest,
     resolve_sink_paths,
 )
 from .plans.registrar import LineageRow, Registrar
+
+
+# _metrics: one row per (sink, source); a manifest's ``sources`` entries
+# carry the same fields but ``sink``
+METRICS_SCHEMA = pa.schema(
+    [
+        ("sink", pa.string()),
+        ("source", pa.string()),
+        ("row_count", pa.int64()),
+        ("token_total", pa.int64()),
+        ("max_tokens", pa.int32()),
+    ]
+)
 
 
 @dataclass
@@ -134,17 +158,22 @@ def run_pipeline(
         files = {s: list_data_files(run_dir, s) for s in todo}
         staged_dirs = [os.path.join(run_dir, f"sink={s}") for s in todo if files[s]]
 
-        # per-(sink, input partition) lineage: one aggregate over the
-        # staged files, collected — sinks × input partitions rows, the
-        # size the registrar itself reads back on every lookup
+        # the run's one aggregate over the staged files, collected:
+        # per-(sink, input partition) lineage and per-(sink, source)
+        # statistics — metadata-sized, as the registrar reads back
         lineage: dict[str, list[LineageRow]] = {s: [] for s in todo}
+        sources: dict[str, list[dict]] = {s: [] for s in todo}
         if staged_dirs:
             staged = spark.read.option("basePath", run_dir).parquet(*staged_dirs)
-            per_part = staged.groupBy("sink", "part_id").agg(
-                F.count(F.lit(1)), F.coalesce(F.sum("n_tok"), F.lit(0))
-            )
-            for sink, part, n, tokens in sorted(per_part.collect()):
-                lineage[sink].append(LineageRow(part, n, tokens))
+            for r in commit_stats(staged).collect():
+                if r.gid == 1:
+                    lineage[r.sink].append(
+                        LineageRow(r.part_id, r.row_count, r.token_total or 0)
+                    )
+                else:
+                    sources[r.sink].append(
+                        {k: r[k] for k in METRICS_SCHEMA.names[1:]}
+                    )
 
         for sink in todo:
             # publish = the ack (O-R5: one atomic FILE swap names the data
@@ -152,28 +181,41 @@ def run_pipeline(
             # manifest the registrar never adopted, which resume's gc_sink
             # deletes and redoes (idempotent re-commit). A sink no row was
             # routed to commits an empty manifest and the sentinel row.
-            rows = lineage[sink] or [LineageRow(-1, 0, 0)]
-            n = sum(r.row_count for r in rows)
-            publish_manifest(run_dir, sink, files[sink], n)
+            rows = sorted(lineage[sink], key=lambda r: r.partition_id)
+            rows = rows or [LineageRow(-1, 0, 0)]
+            srcs = sorted(sources[sink], key=lambda d: d["source"] or "")
+            publish_manifest(run_dir, sink, files[sink], srcs)
             reg.commit(spec.run_id, sink, rows)
             committed.append(sink)
-            rows_staged += n
-
-    # north-rule metrics: per-sink/per-source counts + token totals (salted)
-    published = resolve_sink_paths(run_dir, all_sinks)
-    metrics_path = os.path.join(run_dir, "_metrics")
-    if published:
-        routed_back = spark.read.option("basePath", run_dir).parquet(*published)
-        sink_source_counts(routed_back).write.mode("overwrite").parquet(metrics_path)
+            rows_staged += sum(r.row_count for r in rows)
 
     return RunResult(
         run_id=spec.run_id,
         sinks_committed=committed,
         sinks_skipped=sorted(done),
         rows_staged=rows_staged,
-        metrics_path=metrics_path,
+        metrics_path=_publish_metrics(run_dir, all_sinks),
         elapsed_sec=time.monotonic() - t0,
     )
+
+
+def _publish_metrics(run_dir: str, sinks: list[str]) -> str:
+    """The north-rule metrics — per-(sink, source) row count, token total
+    and max tokens over every committed sink of the run — from the sinks'
+    manifests, as ONE parquet file ``_metrics/part-00000.parquet``
+    (zero rows when no sink got any). Returns the ``_metrics`` directory,
+    which both ``pq.read_table`` and ``spark.read.parquet`` read."""
+    rows = [
+        {"sink": s, **src}
+        for s in sinks
+        for src in read_manifest(run_dir, s)["sources"]
+    ]
+    buf = pa.BufferOutputStream()
+    pq.write_table(pa.Table.from_pylist(rows, schema=METRICS_SCHEMA), buf)
+    metrics_dir = os.path.join(run_dir, "_metrics")
+    os.makedirs(metrics_dir, exist_ok=True)
+    publish_file(os.path.join(metrics_dir, "part-00000.parquet"), buf.getvalue())
+    return metrics_dir
 
 
 def read_sink(spark: SparkSession, out_dir: str, run_id: str, sink: str) -> DataFrame:

@@ -25,7 +25,8 @@ Protocol (each step object-store-safe — no directory ever moves):
 4. verify the rewrite's parquet-footer row total equals the manifest's
    ``row_count`` (refuse and clean up otherwise — compaction must be
    content-preserving by proof, not by hope);
-5. atomically swap the manifest to the new file list;
+5. atomically swap the manifest to the new file list (its per-source
+   statistics carried over — the rows are the same);
 6. delete the now-unreferenced old files (per-key deletes).
 
 Crash anywhere before step 5 leaves only UNREFERENCED new files —
@@ -164,7 +165,7 @@ def compact_sink(
         )
 
     # 5. the commit point; 6. old files are unreferenced from here on
-    publish_manifest(run_dir, sink, new_rel, m["row_count"])
+    publish_manifest(run_dir, sink, new_rel, m["sources"])
     for f in old_abs:
         os.remove(f)
     _rm_tmp(tmp)

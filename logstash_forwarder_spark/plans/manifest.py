@@ -66,11 +66,22 @@ def _manifest_path(run_dir: str, sink: str) -> str:
     return os.path.join(run_dir, MANIFEST_DIR, f"sink={sink}.json")
 
 
-def publish_manifest(run_dir: str, sink: str, files: list[str], row_count: int) -> str:
+def publish_manifest(
+    run_dir: str, sink: str, files: list[str], sources: list[dict]
+) -> str:
     """Atomically publish sink's manifest: the commit point for its data.
-    `files` are paths relative to run_dir (portable across store mounts)."""
+    `files` are paths relative to run_dir (portable across store mounts);
+    `sources` are the sink's per-source statistics (``source``,
+    ``row_count``, ``token_total``, ``max_tokens``), from which the run's
+    ``_metrics`` is built without re-reading data. ``row_count`` is their
+    sum."""
     os.makedirs(os.path.join(run_dir, MANIFEST_DIR), exist_ok=True)
-    doc = {"sink": sink, "files": sorted(files), "row_count": row_count}
+    doc = {
+        "sink": sink,
+        "files": sorted(files),
+        "row_count": sum(s["row_count"] for s in sources),
+        "sources": sources,
+    }
     return publish_file(_manifest_path(run_dir, sink), json.dumps(doc).encode())
 
 

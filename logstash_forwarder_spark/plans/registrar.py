@@ -385,8 +385,8 @@ class Registrar:
         with SURVIVING sibling snapshots gets sink-level GC only (its
         manifest and data files; the run dir stays). A FULLY expired run
         is walked bottom-up — every file deleted per key, every emptied
-        dir rmdir'd — so Spark write residue (`_SUCCESS`, `.crc`,
-        `_metrics/`) goes with it. No directory is ever renamed.
+        dir rmdir'd — so Spark write residue (`_SUCCESS`, `.crc`) and the
+        run's `_metrics/` go with it. No directory is ever renamed.
         Returns files removed."""
         n = 0
         dead_runs = set()

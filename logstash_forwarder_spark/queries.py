@@ -20,7 +20,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import Window as W
 
-from .operators.aggregate import last_offset_per_source, salted_agg
+from .operators.aggregate import last_offset_per_source
 from .operators.route import route_stage
 
 # ---------------------------------------------------------------------------
@@ -192,24 +192,12 @@ SQL_ROUTE_FANOUT = f"SELECT doc_id, {_routes_case_sql()} AS sink FROM documents"
 
 
 def q_sink_source_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """O-A2 + skew salting — per-(sink, source) row counts and char totals."""
+    """O-A2 — per-(sink, source) row counts and char totals."""
     routed = route_stage(_docs(spark, sf_dir), DOC_ROUTES)
-    out = salted_agg(
-        routed,
-        keys=["sink", "source"],
-        aggs={
-            "row_count": ("count", "doc_id"),
-            "chars_total": ("sum", "n_chars"),
-            "max_chars": ("max", "n_chars"),
-        },
-        salt_buckets=16,
-    )
-    return out.select(
-        "sink",
-        "source",
-        F.col("row_count").cast("long").alias("row_count"),
-        F.col("chars_total").cast("long").alias("chars_total"),
-        F.col("max_chars").cast("long").alias("max_chars"),
+    return routed.groupBy("sink", "source").agg(
+        F.count(F.lit(1)).alias("row_count"),
+        F.sum("n_chars").alias("chars_total"),
+        F.max("n_chars").alias("max_chars"),
     )
 
 
@@ -4381,7 +4369,8 @@ def q_skew_report(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Key-skew diagnostic (operators/aggregate.py skew_report): per
     hottest event_type, row count, integer-ppm corpus share, and the
     salt bucket count that bounds any (key, salt) group to the target —
-    the measurement that feeds salted_agg's bucket choice. One hash-agg
+    what a hash salt on that key needs where Spark cannot combine rows
+    map-side (a non-algebraic aggregate, a skewed join side). One hash-agg
     to the key domain + a broadcast 1-row total; TakeOrdered top-k."""
     from .operators.aggregate import skew_report
 

@@ -364,40 +364,13 @@ def main(argv: list[str] | None = None) -> int:
         # one-shot wire-ship: harvest → lumberjack socket, no parquet
         # sinks. (With --tail-glob the SAME flag turns the tail loop into
         # the reference's literal daemon — see _tail_loop.)
-        import socket as _socket
-
-        from .operators.lumberjack_net import publish_lumberjack
         from .sources.textlog import harvest_text_files
 
         if not args.text_glob:
             p.error("--ship-lumberjack requires --text-glob or --tail-glob")
         host, _, port_s = args.ship_lumberjack.rpartition(":")
-        events = (
-            harvest_text_files(spark, args.text_glob)
-            .filter("is_complete")
-            .select(
-                "file",
-                F.lit(_socket.gethostname()).alias("host"),
-                F.col("byte_offset").cast("string").alias("offset"),
-                "line",
-            )
-        )
-        stats = publish_lumberjack(
-            events,
-            host,
-            int(port_s),
-            pair_cols=["file", "host", "offset", "line"],
-            order_col="offset",
-        )
-        print(
-            json.dumps(
-                {
-                    "shipped": sum(s["n_events"] for s in stats),
-                    "acked": sum(s["acked"] for s in stats),
-                    "connections": len(stats),
-                }
-            )
-        )
+        lines = harvest_text_files(spark, args.text_glob).filter("is_complete")
+        print(json.dumps(_ship_lumberjack(lines, host, int(port_s))))
         return 0
 
     if args.tail and not args.conf:
@@ -454,6 +427,34 @@ def main(argv: list[str] | None = None) -> int:
         )
     )
     return 0
+
+
+def _ship_lumberjack(lines, host: str, port: int) -> dict:
+    """Ship complete harvested lines to a lumberjack receiver as (file,
+    host, offset, line) events with blocking acks: the one-shot
+    ``--ship-lumberjack`` path and the tail daemon's per-poll ship."""
+    import socket
+
+    from .operators.lumberjack_net import publish_lumberjack
+
+    events = lines.select(
+        "file",
+        F.lit(socket.gethostname()).alias("host"),
+        F.col("byte_offset").cast("string").alias("offset"),
+        "line",
+    )
+    stats = publish_lumberjack(
+        events,
+        host,
+        port,
+        pair_cols=["file", "host", "offset", "line"],
+        order_col="offset",
+    )
+    return {
+        "shipped": sum(s["n_events"] for s in stats),
+        "acked": sum(s["acked"] for s in stats),
+        "connections": len(stats),
+    }
 
 
 def _harvest_from_conf(spark, conf_path: str):
@@ -655,27 +656,7 @@ def _tail_loop(spark, args) -> int:
         n_lines = harvested.count()
         rec = {"poll": poll_no, "new_lines": n_lines}
         if n_lines and ship_to is not None:
-            import socket as _socket
-
-            from .operators.lumberjack_net import publish_lumberjack
-
-            events = harvested.filter("is_complete").select(
-                "file",
-                F.lit(_socket.gethostname()).alias("host"),
-                F.col("byte_offset").cast("string").alias("offset"),
-                "line",
-            )
-            stats = publish_lumberjack(
-                events,
-                ship_to[0],
-                ship_to[1],
-                pair_cols=["file", "host", "offset", "line"],
-                order_col="offset",
-            )
-            rec.update(
-                shipped=sum(s["n_events"] for s in stats),
-                acked=sum(s["acked"] for s in stats),
-            )
+            rec.update(_ship_lumberjack(harvested, *ship_to))
         elif n_lines:
             # poll identity = counter + CONTENT fingerprint of the poll's
             # resulting offsets: a pure crash-replay reproduces the same id
@@ -704,7 +685,7 @@ def _tail_loop(spark, args) -> int:
                 line_ids = F.concat_ws(
                     ":", "file", F.col("line_no").cast("string")
                 )
-                lines_df = harvested.filter("is_complete").select(
+                lines_df = harvested.select(
                     line_ids.alias("line_id"), F.col("line").alias("text")
                 )
                 kept_sigs = incremental_dedup_batch(
@@ -725,10 +706,7 @@ def _tail_loop(spark, args) -> int:
                     "left_semi",
                 )
                 n_kept = kept_sigs.count()
-                # count the dedup INPUT (complete lines only) — n_lines
-                # includes held-back partial lines, which are not
-                # duplicates (ADVICE r5)
-                rec["dup_lines"] = lines_df.count() - n_kept
+                rec["dup_lines"] = n_lines - n_kept
             if kept_sigs is None or n_kept:
                 # (an all-duplicates poll skips the publish but still
                 # commits its empty signature batch and advances offsets)

@@ -1,45 +1,15 @@
-"""Salted == unsalted property (SURVEY §7.3 hard part 3) + registrar fold."""
+"""The per-(sink, source) aggregate, its skew bound (SURVEY §7.3 hard
+part 3) + registrar fold."""
 
 from __future__ import annotations
 
-import pytest
 from pyspark.sql import functions as F
 
 from logstash_forwarder_spark.datagen import gen_sequences
 from logstash_forwarder_spark.operators.aggregate import (
     last_offset_per_source,
-    salted_agg,
     sink_source_counts,
 )
-
-
-@pytest.mark.parametrize("buckets", [1, 8, 64])
-def test_salted_equals_unsalted(spark, buckets):
-    df = gen_sequences(spark, 5_000).withColumn("sink", F.lit("s"))
-    salted = salted_agg(
-        df,
-        keys=["source"],
-        aggs={
-            "row_count": ("count", "doc_id"),
-            "token_total": ("sum", "n_tok"),
-            "max_tokens": ("max", "n_tok"),
-            "min_tokens": ("min", "n_tok"),
-        },
-        salt_buckets=buckets,
-    )
-    plain = df.groupBy("source").agg(
-        F.count("doc_id").alias("row_count"),
-        F.sum("n_tok").alias("token_total"),
-        F.max("n_tok").alias("max_tokens"),
-        F.min("n_tok").alias("min_tokens"),
-    )
-    assert sorted(map(tuple, salted.collect())) == sorted(map(tuple, plain.collect()))
-
-
-def test_non_algebraic_agg_rejected(spark):
-    df = gen_sequences(spark, 10)
-    with pytest.raises(ValueError):
-        salted_agg(df, ["source"], {"x": ("avg", "n_tok")})
 
 
 def test_sink_source_counts_shape(spark):
@@ -50,6 +20,25 @@ def test_sink_source_counts_shape(spark):
     assert set(out.columns) == {"sink", "source", "row_count", "token_total", "max_tokens"}
     total = out.agg(F.sum("row_count")).first()[0]
     assert total == 1_000
+
+
+def test_sink_source_counts_combines_before_its_one_exchange(spark):
+    """The skew bound: count/sum/max combine map-side, so a hot source's
+    reducer reads one partial row per map task, not the key's raw rows.
+    The executed plan has exactly one Exchange, with a ``partial_``
+    HashAggregate beneath it."""
+    df = gen_sequences(spark, 5_000).withColumn(
+        "sink", F.when(F.col("n_tok") > 100, "big").otherwise("small")
+    )
+    out = sink_source_counts(df)
+    out.collect()  # settle AQE on the final plan
+    plan = out._jdf.queryExecution().executedPlan().toString()
+    # AQE prints Final + Initial plan sections; count only the final one
+    final = plan.split("== Initial Plan ==")[0]
+    assert final.count("Exchange") == 1, final
+    above, below = final.split("Exchange")
+    assert "partial_count(1)" in below and "partial_max" in below, final
+    assert "HashAggregate" in above and "partial_" not in above, final
 
 
 def test_last_offset_per_source(spark):

@@ -11,11 +11,14 @@ from __future__ import annotations
 import os
 import shutil
 
+import pandas as pd
+import pyarrow.parquet as pq
 import pytest
 from pyspark.sql import functions as F
 
 from logstash_forwarder_spark.datagen import gen_sequences, gen_source_dim
 from logstash_forwarder_spark.pipeline import PipelineSpec, read_sink, run_pipeline
+from logstash_forwarder_spark.plans.compact import compact_run
 from logstash_forwarder_spark.plans.manifest import (
     publish_manifest,
     read_manifest,
@@ -24,6 +27,7 @@ from logstash_forwarder_spark.plans.manifest import (
 from logstash_forwarder_spark.plans.registrar import Registrar
 
 from .conftest import InjectedFailure
+from .oracle import oracle_pipeline, oracle_sink_source_counts
 
 N = 2_000
 
@@ -59,7 +63,7 @@ def test_resolve_clean_sink_to_its_directory(tmp_path):
     run_dir = str(tmp_path / "run_id=r")
     files = _touch_sink_files(run_dir, "a", ["part-0.parquet", "part-1.parquet"])
     _touch_sink_files(run_dir, "a", [".part-0.parquet.crc"])
-    publish_manifest(run_dir, "a", files, 2)
+    publish_manifest(run_dir, "a", files, [])
     assert resolve_sink_paths(run_dir, ["a"]) == [os.path.join(run_dir, "sink=a")]
 
 
@@ -68,7 +72,7 @@ def test_resolve_sink_with_orphan_to_manifest_files(tmp_path):
     the manifest's files, so the orphan stays invisible."""
     run_dir = str(tmp_path / "run_id=r")
     files = _touch_sink_files(run_dir, "a", ["part-0.parquet", "part-1.parquet"])
-    publish_manifest(run_dir, "a", files, 2)
+    publish_manifest(run_dir, "a", files, [])
     _touch_sink_files(run_dir, "a", ["part-orphan.parquet"])
     assert sorted(resolve_sink_paths(run_dir, ["a"])) == sorted(
         os.path.join(run_dir, f) for f in files
@@ -79,7 +83,7 @@ def test_resolve_empty_or_uncommitted_sink_to_nothing(tmp_path):
     """An empty manifest, a sink with files but no manifest, and an unknown
     sink all resolve to no path."""
     run_dir = str(tmp_path / "run_id=r")
-    publish_manifest(run_dir, "empty", [], 0)
+    publish_manifest(run_dir, "empty", [], [])
     _touch_sink_files(run_dir, "uncommitted", ["part-0.parquet"])
     assert resolve_sink_paths(run_dir, ["empty", "uncommitted", "missing"]) == []
 
@@ -211,6 +215,46 @@ def test_manifest_empty_sinks(spark, tmp_out, no_dir_rename):
             read_sink(spark, tmp_out, "me", s)
     res2 = run_pipeline(spark, seqs, dim, _spec(tmp_out, "me"))
     assert res2.sinks_committed == [] and len(res2.sinks_skipped) == 4
+
+
+def test_metrics_from_manifests_match_oracle(
+    spark, tmp_out, no_dir_rename, crash_after_commits
+):
+    """``_metrics`` equals the oracle's per-(sink, source) counts of the
+    input (a) after a clean run, (b) after a crash and a resume, where the
+    skipped sink's statistics come from its manifest, and (c) after
+    compacting the run and re-running it, which skips every sink — the
+    manifest swap carries the statistics. A run with no rows writes a
+    zero-row ``_metrics`` both readers accept."""
+    seqs = gen_sequences(spark, N)
+    dim = gen_source_dim(spark)
+    dim_map = {r.source: dict(r.fields) for r in dim.collect()}
+    want = oracle_sink_source_counts(oracle_pipeline(seqs.toPandas(), dim_map))
+
+    def check(res):
+        got = pq.read_table(res.metrics_path).to_pandas()
+        got = got.sort_values(["sink", "source"]).reset_index(drop=True)
+        pd.testing.assert_frame_equal(got, want, check_dtype=False)
+
+    res = run_pipeline(spark, seqs, dim, _spec(tmp_out, "clean"))  # (a)
+    check(res)
+
+    crash_after_commits(1)  # (b)
+    with pytest.raises(InjectedFailure):
+        run_pipeline(spark, seqs, dim, _spec(tmp_out, "resumed"))
+    res = run_pipeline(spark, seqs, dim, _spec(tmp_out, "resumed"))
+    assert len(res.sinks_skipped) == 1
+    check(res)
+
+    assert any(r["rewritten"] for r in compact_run(spark, tmp_out, "clean"))  # (c)
+    shutil.rmtree(os.path.join(tmp_out, "run_id=clean", "_metrics"))
+    res = run_pipeline(spark, seqs, dim, _spec(tmp_out, "clean"))
+    assert res.sinks_committed == [] and len(res.sinks_skipped) == 4
+    check(res)
+
+    res = run_pipeline(spark, seqs.limit(0), dim, _spec(tmp_out, "no-rows"))
+    assert pq.read_table(res.metrics_path).num_rows == 0
+    assert spark.read.parquet(res.metrics_path).columns == list(want.columns)
 
 
 def test_read_table_skips_uncommitted_orphans(

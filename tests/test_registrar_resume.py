@@ -232,11 +232,11 @@ def test_failed_swap_leaves_no_file_a_glob_reader_counts(tmp_path, monkeypatch):
     reg = Registrar(str(tmp_path / "_checkpoint"))
     run_dir = str(tmp_path / "run_id=r1")
     reg.commit("r1", "sink_a", [LineageRow(0, 10, 100)])
-    publish_manifest(run_dir, "sink_a", [], 10)
+    publish_manifest(run_dir, "sink_a", [], [])
     for fail in (
         lambda: reg.commit("r1", "sink_b", [LineageRow(0, 5, 50)]),
         reg.compact,
-        lambda: publish_manifest(run_dir, "sink_b", [], 5),
+        lambda: publish_manifest(run_dir, "sink_b", [], []),
     ):
         fail_next_replace()
         with pytest.raises(OSError, match="injected"):

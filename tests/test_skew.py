@@ -1,5 +1,6 @@
 """Join-skew handling: AQE must split a hot join key's partition at
-runtime (the join-side complement of the salted groupBy aggregate)."""
+runtime (the join-side complement of the map-side-combined groupBy
+aggregate, tests/test_aggregate.py)."""
 
 from __future__ import annotations
 
@@ -43,7 +44,7 @@ def test_aqe_splits_skewed_join_partition(spark):
 
 def test_skew_report_recommends_bounding_buckets(spark):
     """The report's salt_buckets actually bounds (key, salt) group sizes
-    when fed to the same hash-salting salted_agg uses."""
+    when fed to a hash salt on the row id."""
     from pyspark.sql import functions as F
 
     from logstash_forwarder_spark.operators.aggregate import skew_report
@@ -60,7 +61,7 @@ def test_skew_report_recommends_bounding_buckets(spark):
     assert rep["hot"].share_ppm == 9_000 * 1_000_000 // 11_000
     assert all(r.salt_buckets == 1 for k, r in rep.items() if k.startswith("cold"))
 
-    # apply the recommendation with salted_agg's exact salt expression:
+    # apply the recommendation with a hash salt on doc_id:
     # every (key, salt) group lands near/below the target (hash slack)
     buckets = rep["hot"].salt_buckets
     sizes = [

@@ -66,11 +66,11 @@ def main() -> None:
     agg = sink_source_counts(routed)
     sections.append(
         (
-            "Salted per-(sink, source) aggregate (O-A2 + skew)",
-            "Two HashAggregate pairs (partial+final for each phase); the "
-            "first keyed (sink, source, _salt) — the hot source spreads over "
-            "salt buckets before the final merge. No Sort, no Exchange "
-            "beyond the two aggregate shuffles.",
+            "Per-(sink, source) aggregate (O-A2 + skew)",
+            "One HashAggregate pair: partial count/sum/max in every map "
+            "task, one Exchange hashpartitioning(sink, source), the final "
+            "merge — the hot source's reducer reads one partial row per map "
+            "task. No Sort, no other Exchange.",
             plan_of(agg),
         )
     )
@@ -415,8 +415,8 @@ def main() -> None:
             "must show SortMergeJoin(skew=true) fed by an 'AQEShuffleRead "
             "coalesced and skewed' — the hot partition is split into "
             "advisory-sized reads at runtime, no salting needed on the join "
-            "path (salting remains the groupBy-side tool, see the salted "
-            "aggregate section). Thresholds are lowered here to reproduce "
+            "path (the groupBy side needs none either: partial aggregation, "
+            "see the per-(sink, source) aggregate section). Thresholds are lowered here to reproduce "
             "at demo scale; production defaults (256MB) trigger at real "
             "skew sizes.",
             sk_join._jdf.queryExecution().executedPlan().toString(),
