@@ -18,7 +18,9 @@ from pyspark.sql import functions as F
 
 
 def _stats() -> list:
-    """The three statistics lineage, manifests and ``_metrics`` carry."""
+    """Per-group row count, token total and max tokens — the statistics
+    ``_metrics`` carries (pipeline.py's writer computes the same three
+    per file, in pyarrow)."""
     return [
         F.count(F.lit(1)).alias("row_count"),
         F.sum("n_tok").alias("token_total"),
@@ -29,20 +31,6 @@ def _stats() -> list:
 def sink_source_counts(routed: DataFrame) -> DataFrame:
     """The north_rule's per-sink/per-source row counts + token totals."""
     return routed.groupBy("sink", "source").agg(*_stats())
-
-
-def commit_stats(staged: DataFrame) -> DataFrame:
-    """Everything a run's commit needs from its staged rows, in ONE
-    aggregate: grouping sets (sink, part_id) — the lineage — and (sink,
-    source) — the manifests' ``sources`` and so ``_metrics`` — with the
-    statistics of :func:`sink_source_counts`. ``gid`` is
-    ``grouping_id()``: 1 on a (sink, part_id) row (``source`` is null),
-    2 on a (sink, source) row (``part_id`` is null). One Expand, one
-    partial aggregate, one exchange; sinks × (partitions + sources) rows,
-    metadata-sized, meant to be collected."""
-    return staged.groupingSets(
-        [["sink", "part_id"], ["sink", "source"]], "sink", "part_id", "source"
-    ).agg(*_stats(), F.grouping_id().alias("gid"))
 
 
 def last_offset_per_source(df: DataFrame, offset_col: str = "doc_id") -> DataFrame:

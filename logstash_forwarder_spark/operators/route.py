@@ -29,11 +29,13 @@ def compile_routes(rules: list[tuple[int, str, str]]) -> Column:
     if not rules:
         raise RouteError("empty route table")
     for _, _, sink in rules:
-        # sink names become `sink=<name>` partition directories; characters
-        # Hive path-escapes (':', '=', '/', '%', …) would make the on-disk
-        # dir differ from the raw name the commit loop keys by — staged
-        # rows would be committed as empty and swept, a silent
-        # exactly-once violation. Reject at plan-construction time.
+        # sink names become `sink=<name>` partition directories, named
+        # verbatim by the pipeline's writer; Spark's partition discovery
+        # unescapes them on read ('%3A' → ':') and splits on '/' and '=',
+        # so any character Hive path-escapes (':', '=', '/', '%', …)
+        # would read back as a different sink than the raw name the
+        # commit loop keys by — a silent exactly-once violation. Reject
+        # at plan-construction time.
         if not re.fullmatch(r"[A-Za-z0-9_.\-]+", sink):
             raise RouteError(
                 f"sink name {sink!r} must match [A-Za-z0-9_.-]+ "

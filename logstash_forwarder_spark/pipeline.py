@@ -3,29 +3,35 @@
 One logical run = one envelope/ack cycle of the reference
 (/root/reference/publisher1.go:44-127), restructured for scale:
 
-* **Single input pass.** The routed stream is written ONCE with
-  ``partitionBy("sink")`` straight into the run directory — K sinks do not
-  mean K scans of a 100 TB input. Lineage and the north-rule aggregates
-  are then ONE grouping-sets aggregate over the written columnar data
-  (operators/aggregate.py ``commit_stats``), reading only the few columns
-  it needs, collected to the driver.
+* **Single input pass, one job.** The routed stream ends in ONE
+  ``mapInArrow`` writer kernel (``_sink_writer``): each task writes its
+  rows for each sink with pyarrow straight to a final, unique name in
+  ``sink=S/`` and, once its writers are closed, returns one row per
+  (sink, file, input partition, source) with the row count, token total
+  and max tokens. The driver's one ``collect`` of those rows gives every
+  manifest's file list, the lineage and the manifests' ``sources`` — K
+  sinks do not mean K scans of a 100 TB input, and nothing is listed or
+  re-read after the write.
 * **Checkpoint anti-filter.** On resume, sinks already committed for this
   ``run_id`` are excluded *before* the write (O-X3's left-anti join,
   degenerated to an ``isin`` filter because the commit key is the sink) —
   re-running a half-failed run re-does only uncommitted work.
 * **One commit protocol, checkpoint-after-data.** Data files land once in
-  their final ``sink=S/`` directory; each sink is then published by
+  their final ``sink=S/`` directory and are never renamed — there is no
+  task-commit protocol under the writer; each sink is then published by
   atomically swapping ONE small manifest file that names them
   (plans/manifest.py), and its lineage rows are committed second through
   ``Registrar.commit`` — every sink, empty or not, the same way. The
-  lineage is the aggregate's per-(sink, input partition) rows; its
-  per-(sink, source) rows ride in the sink's manifest (``sources``).
-  Readers resolve through the manifest, so files no manifest names are
+  lineage is the writer's per-(sink, input partition) statistics; its
+  per-(sink, source) statistics ride in the sink's manifest
+  (``sources``). Readers resolve through the manifest, so files no
+  manifest names — a failed task attempt's partial file among them — are
   invisible. A crash between publish and checkpoint leaves a manifest
   the registrar never adopted, which resume deletes and redoes →
   exactly-once routed rows (strictly stronger than the reference's
-  at-least-once, SURVEY §3.4). No directory is ever renamed, so the same
-  protocol is correct on object stores (S3/GCS).
+  at-least-once, SURVEY §3.4). No file or directory is ever renamed
+  but the one-file manifest swap, so the same protocol is correct on
+  object stores (S3/GCS).
 * **Metrics from manifests.** ``_metrics`` (per-(sink, source) row count,
   token total, max tokens) is built on the driver from the manifests of
   ALL the run's sinks — a sink skipped on resume contributes its stored
@@ -37,24 +43,23 @@ One logical run = one envelope/ack cycle of the reference
 from __future__ import annotations
 
 import os
-import shutil
 import time
 import uuid
+from collections.abc import Iterator
 from dataclasses import dataclass, field
 
 import pyarrow as pa
+import pyarrow.compute as pc
 import pyarrow.parquet as pq
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from .datagen import default_routes
-from .operators.aggregate import commit_stats
 from .operators.enrich import enrich_stage
 from .operators.parse import parse_stage
 from .operators.route import route_stage, sink_names
 from .plans.manifest import (
     gc_sink,
-    list_data_files,
     publish_file,
     publish_manifest,
     published_sinks,
@@ -76,6 +81,13 @@ METRICS_SCHEMA = pa.schema(
     ]
 )
 
+# what the writer kernel returns: one row per (sink, file, part_id, source)
+FILE_STATS_SCHEMA = (
+    "sink string, file string, part_id int, source string, "
+    "row_count long, token_total long, max_tokens int"
+)
+_STATS_KEYS = ["sink", "part_id", "source"]
+
 
 @dataclass
 class PipelineSpec:
@@ -84,7 +96,7 @@ class PipelineSpec:
     routes: list[tuple[int, str, str]] = field(default_factory=default_routes)
     # write-time sorted layout (plans/layout.py at the ship surface):
     # range-partition each sink's rows by this column and sort within
-    # partitions before staging, so parquet row-group/file min-max
+    # partitions before the write, so parquet row-group/file min-max
     # envelopes prune selective range scans downstream. Costs ONE range
     # exchange at publish (the documented layout tradeoff); lineage is
     # unaffected (part_id rides the rows).
@@ -148,32 +160,16 @@ def run_pipeline(
             routed = routed.sortWithinPartitions(*range_args)
 
         # GC unreferenced leftovers of crashed attempts, then write data
-        # files ONCE in their final partition dirs. fields is
-        # map<string,string>: fine for parquet; keep the full row for
-        # routed-row equality checks downstream.
+        # files ONCE, under final names, in ONE job that also returns each
+        # file's per-(input partition, source) statistics — metadata-sized
         for sink in todo:
             gc_sink(run_dir, sink)
-        shutil.rmtree(os.path.join(run_dir, "_temporary"), ignore_errors=True)
-        routed.write.mode("append").partitionBy("sink").parquet(run_dir)
-        files = {s: list_data_files(run_dir, s) for s in todo}
-        staged_dirs = [os.path.join(run_dir, f"sink={s}") for s in todo if files[s]]
-
-        # the run's one aggregate over the staged files, collected:
-        # per-(sink, input partition) lineage and per-(sink, source)
-        # statistics — metadata-sized, as the registrar reads back
-        lineage: dict[str, list[LineageRow]] = {s: [] for s in todo}
-        sources: dict[str, list[dict]] = {s: [] for s in todo}
-        if staged_dirs:
-            staged = spark.read.option("basePath", run_dir).parquet(*staged_dirs)
-            for r in commit_stats(staged).collect():
-                if r.gid == 1:
-                    lineage[r.sink].append(
-                        LineageRow(r.part_id, r.row_count, r.token_total or 0)
-                    )
-                else:
-                    sources[r.sink].append(
-                        {k: r[k] for k in METRICS_SCHEMA.names[1:]}
-                    )
+        kernel = _sink_writer(os.path.abspath(run_dir), uuid.uuid4().hex[:12])
+        stats = routed.mapInArrow(kernel, FILE_STATS_SCHEMA).toArrow()
+        files = _fold(stats, ["sink", "file"], [])
+        # with sort_col one part_id spans several tasks' files
+        lineage = _fold(stats, ["sink", "part_id"], ["row_count", "token_total"])
+        sources = _fold(stats, ["sink", "source"], METRICS_SCHEMA.names[2:])
 
         for sink in todo:
             # publish = the ack (O-R5: one atomic FILE swap names the data
@@ -181,10 +177,16 @@ def run_pipeline(
             # manifest the registrar never adopted, which resume's gc_sink
             # deletes and redoes (idempotent re-commit). A sink no row was
             # routed to commits an empty manifest and the sentinel row.
-            rows = sorted(lineage[sink], key=lambda r: r.partition_id)
-            rows = rows or [LineageRow(-1, 0, 0)]
-            srcs = sorted(sources[sink], key=lambda d: d["source"] or "")
-            publish_manifest(run_dir, sink, files[sink], srcs)
+            rows = [
+                LineageRow(r["part_id"], r["row_count"], r["token_total"] or 0)
+                for r in lineage.get(sink, [])
+            ] or [LineageRow(-1, 0, 0)]
+            srcs = [
+                {k: r[k] for k in METRICS_SCHEMA.names[1:]}
+                for r in sources.get(sink, [])
+            ]
+            paths = [r["file"] for r in files.get(sink, [])]
+            publish_manifest(run_dir, sink, paths, srcs)
             reg.commit(spec.run_id, sink, rows)
             committed.append(sink)
             rows_staged += sum(r.row_count for r in rows)
@@ -197,6 +199,80 @@ def run_pipeline(
         metrics_path=_publish_metrics(run_dir, all_sinks),
         elapsed_sec=time.monotonic() - t0,
     )
+
+
+def _sink_writer(run_dir: str, token: str):
+    """The publish kernel for ``mapInArrow`` over the routed rows. Each
+    task writes its rows for each sink with pyarrow straight to their
+    final name ``sink=S/part-<token>-<partition>-<task attempt id>.parquet``
+    (relative to ``run_dir``; the attempt id is unique in the application,
+    so no two attempts — retried, speculative or from a re-run stage —
+    share a file), one row group per Arrow batch, in the routed schema
+    minus ``sink``. Only after every writer is closed does it yield its
+    files' statistics (:data:`FILE_STATS_SCHEMA`): a task that raises
+    yields nothing, so its partial file is an orphan no manifest names."""
+
+    def write(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
+        from pyspark import TaskContext
+
+        ctx = TaskContext.get()
+        name = f"part-{token}-{ctx.partitionId():05d}-{ctx.taskAttemptId()}.parquet"
+        writers: dict[str, pq.ParquetWriter] = {}
+        stats: list[pa.Table] = []
+        try:
+            for b in batches:
+                sinks = b.column("sink")
+                data = b.select([c for c in b.schema.names if c != "sink"])
+                for sink in pc.unique(sinks).to_pylist():
+                    if sink not in writers:
+                        d = os.path.join(run_dir, f"sink={sink}")
+                        os.makedirs(d, exist_ok=True)
+                        writers[sink] = pq.ParquetWriter(
+                            os.path.join(d, name), data.schema
+                        )
+                    writers[sink].write_batch(data.filter(pc.equal(sinks, sink)))
+                stats.append(
+                    pa.Table.from_batches([b.select([*_STATS_KEYS, "n_tok"])])
+                    .group_by(_STATS_KEYS)
+                    .aggregate([([], "count_all"), ("n_tok", "sum"), ("n_tok", "max")])
+                )
+        finally:
+            for w in writers.values():
+                w.close()
+        if not stats:
+            return
+        t = pa.concat_tables(stats).group_by(_STATS_KEYS).aggregate(
+            [("count_all", "sum"), ("n_tok_sum", "sum"), ("n_tok_max", "max")]
+        )
+        yield from pa.table(
+            {
+                "sink": t["sink"],
+                "file": [os.path.join(f"sink={s}", name) for s in t["sink"].to_pylist()],
+                "part_id": t["part_id"],
+                "source": t["source"],
+                "row_count": t["count_all_sum"],
+                "token_total": t["n_tok_sum_sum"],
+                "max_tokens": t["n_tok_max_max"],
+            }
+        ).to_batches()
+
+    return write
+
+
+def _fold(
+    stats: pa.Table, keys: list[str], cols: list[str]
+) -> dict[str, list[dict]]:
+    """The writer's statistics summed per ``keys`` (``max_tokens``: max;
+    nulls skipped, as in SQL), each under its own name, sorted, as rows
+    per sink."""
+    aggs = [(c, "max" if c == "max_tokens" else "sum") for c in cols]
+    g = stats.group_by(keys).aggregate(aggs).sort_by([(k, "ascending") for k in keys])
+    names = {f"{c}_{f}": c for c, f in aggs}
+    g = g.rename_columns([names.get(n, n) for n in g.column_names])
+    out: dict[str, list[dict]] = {}
+    for r in g.to_pylist():
+        out.setdefault(r["sink"], []).append(r)
+    return out
 
 
 def _publish_metrics(run_dir: str, sinks: list[str]) -> str:

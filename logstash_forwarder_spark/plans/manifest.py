@@ -17,18 +17,13 @@ the same way:
 * crash recovery = delete unreferenced files and redo — readers never saw
   them because no manifest named them.
 
-Scope of the rename-free claim: the PUBLISH/COMMIT layer. At this layer
-only single-FILE atomic swaps remain (`publish_file`), which object-store
-catalogs provide (S3 conditional PUT, GCS preconditions); directory renames
-are gone — enforced in tests by a shim that makes `os.replace` raise on
-directories (the ``no_dir_rename`` fixture, tests/conftest.py). The
-DATA-WRITE path underneath (`df.write...parquet()`) still commits tasks
-through Hadoop's FileOutputCommitter, which renames `_temporary` task
-directories JVM-side; manifest gating keeps READS correct on an object
-store regardless (a file is visible only once a manifest names it), but a
-real object-store deployment should additionally configure a
-store-appropriate output committer (e.g. the S3A magic committer) so the
-data writes themselves avoid copy-and-delete renames.
+A publish renames nothing but the one-file swap: data files are written
+by the pipeline's task-side writer straight to their final names
+(pipeline.py), so the only atomic operation a publish needs is the
+single-FILE swap (`publish_file`), which object-store catalogs provide
+(S3 conditional PUT, GCS preconditions). Tests enforce it with a shim
+that makes `os.replace` raise on directories (the ``no_dir_rename``
+fixture, tests/conftest.py).
 """
 
 from __future__ import annotations
@@ -131,20 +126,6 @@ def published_sinks(run_dir: str) -> list[str]:
         f[len("sink=") : -len(".json")]
         for f in os.listdir(mdir)
         if f.startswith("sink=") and f.endswith(".json")
-    )
-
-
-def list_data_files(run_dir: str, sink: str) -> list[str]:
-    """All parquet files currently in a sink's partition dir, relative to
-    run_dir. After `gc_sink` + one staging write these are exactly the new
-    attempt's files."""
-    d = os.path.join(run_dir, f"sink={sink}")
-    if not os.path.isdir(d):
-        return []
-    return sorted(
-        os.path.join(f"sink={sink}", f)
-        for f in os.listdir(d)
-        if f.endswith(".parquet")
     )
 
 

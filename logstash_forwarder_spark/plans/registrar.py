@@ -385,8 +385,9 @@ class Registrar:
         with SURVIVING sibling snapshots gets sink-level GC only (its
         manifest and data files; the run dir stays). A FULLY expired run
         is walked bottom-up — every file deleted per key, every emptied
-        dir rmdir'd — so Spark write residue (`_SUCCESS`, `.crc`) and the
-        run's `_metrics/` go with it. No directory is ever renamed.
+        dir rmdir'd — so the run's `_manifests/`, `_metrics/` and any
+        failed attempt's orphan data files go with it (run_pipeline leaves
+        no `_SUCCESS` or `.crc` files). No directory is ever renamed.
         Returns files removed."""
         n = 0
         dead_runs = set()

@@ -1318,112 +1318,108 @@ FROM reach GROUP BY node
 """
 
 
+def _materialize_fixture(
+    sf_dir: str, tag: str, render: Callable[[str, str], None]
+) -> str:
+    """Fixture materialization, NOT part of any measured operator: build
+    the fixture ``tag`` derived deterministically from ``sf_dir``'s
+    documents.parquet ONCE, into ``/tmp/lfs_<tag>_<hash>``, and return
+    that directory.
+
+    The hash covers ``tag``, the path and a content fingerprint (size,
+    mtime_ns) of documents.parquet: a regenerated file at the same path
+    must NOT reuse stale fixtures (they would silently diverge from their
+    oracle). ``render(stage, documents_path)`` writes the files into a
+    per-builder-unique stage dir — two concurrent builders never
+    interleave writes into one stage — published by ONE atomic rename
+    with a ``_SUCCESS`` marker inside. A builder whose render fails, or
+    that loses the rename race, removes its stage; the loser then uses
+    the winner's directory."""
+    import hashlib
+    import os
+    import shutil
+    import tempfile
+    import uuid
+
+    docs = os.path.join(sf_dir, "documents.parquet")
+    st = os.stat(docs)
+    key = f"{tag}\x00{os.path.abspath(sf_dir)}\x00{st.st_size}\x00{st.st_mtime_ns}"
+    digest = hashlib.md5(key.encode()).hexdigest()[:12]
+    out = os.path.join("/tmp", f"lfs_{tag}_{digest}")
+    done = os.path.join(out, "_SUCCESS")
+    if os.path.exists(done):
+        return out
+    # NEVER rmtree(out): a concurrent builder may have published between
+    # the _SUCCESS check and here, and deleting a complete dir another
+    # driver is already globbing is the worse failure. An out dir without
+    # _SUCCESS can only be foreign debris — move it aside.
+    if os.path.exists(out):
+        try:
+            os.rename(out, f"{out}.broken.{uuid.uuid4().hex[:8]}")
+        except OSError:
+            if os.path.exists(done):
+                return out  # a concurrent builder published meanwhile
+    stage = tempfile.mkdtemp(prefix=os.path.basename(out) + ".stage.", dir="/tmp")
+    try:
+        render(stage, docs)
+        open(os.path.join(stage, "_SUCCESS"), "w").close()
+        os.rename(stage, out)
+    except OSError:
+        if not os.path.exists(done):
+            raise
+    finally:  # a no-op once the rename has published the stage
+        shutil.rmtree(stage, ignore_errors=True)
+    return out
+
+
 def _materialize_log_files(sf_dir: str) -> str:
     """One ``<source>.log`` per source (lines = texts in doc_id order,
     '\\n'-terminated), derived deterministically from documents.parquet so
-    the harvest below is oracle-checkable. Fixture materialization — built
-    once per sf_dir into a content-addressed tmp dir (atomic rename), NOT
-    part of the measured operator."""
-    import hashlib
-    import os
+    the harvest below is oracle-checkable (:func:`_materialize_fixture`)."""
 
-    # cache key = path + content fingerprint (size, mtime_ns) of the source
-    # parquet: a regenerated documents.parquet at the same path must NOT
-    # reuse stale .log fixtures (it would silently diverge from its oracle)
-    st = os.stat(os.path.join(sf_dir, "documents.parquet"))
-    key = f"{os.path.abspath(sf_dir)}\x00{st.st_size}\x00{st.st_mtime_ns}"
-    out = os.path.join(
-        "/tmp", f"lfs_harvest_{hashlib.md5(key.encode()).hexdigest()[:12]}"
-    )
-    if os.path.exists(os.path.join(out, "_SUCCESS")):
-        return out
-    import shutil
-    import uuid as _uuid
+    def render(stage: str, docs: str) -> None:
+        import os
 
-    # NEVER rmtree(out): a concurrent builder may have published between
-    # the _SUCCESS check and here, and deleting a complete dir another
-    # driver is already globbing is the worse failure. Publication is an
-    # atomic rename of a complete stage (always contains _SUCCESS), so an
-    # out dir without _SUCCESS can only be foreign debris — move it aside.
-    if os.path.exists(out):
-        try:
-            os.rename(out, f"{out}.broken.{_uuid.uuid4().hex[:8]}")
-        except OSError:
-            if os.path.exists(os.path.join(out, "_SUCCESS")):
-                return out  # a concurrent builder published meanwhile
-    import pyarrow.compute as pc
-    import pyarrow.parquet as pq
+        import pyarrow.compute as pc
+        import pyarrow.parquet as pq
 
-    tbl = pq.read_table(
-        os.path.join(sf_dir, "documents.parquet"), columns=["doc_id", "source", "text"]
-    ).sort_by([("source", "ascending"), ("doc_id", "ascending")])
-    # per-builder-unique stage dir: two concurrent builders must never
-    # interleave writes into one stage (the rename race below only
-    # resolves WHO publishes, not shared-stage corruption)
-    import tempfile
+        tbl = pq.read_table(docs, columns=["doc_id", "source", "text"]).sort_by(
+            [("source", "ascending"), ("doc_id", "ascending")]
+        )
+        for src in pc.unique(tbl["source"]).to_pylist():
+            texts = tbl.filter(pc.equal(tbl["source"], src))["text"].to_pylist()
+            with open(os.path.join(stage, f"{src}.log"), "wb") as fh:
+                fh.write(("".join(t + "\n" for t in texts)).encode())
 
-    stage = tempfile.mkdtemp(prefix=os.path.basename(out) + ".stage.", dir="/tmp")
-    for src in pc.unique(tbl["source"]).to_pylist():
-        texts = tbl.filter(pc.equal(tbl["source"], src))["text"].to_pylist()
-        with open(os.path.join(stage, f"{src}.log"), "wb") as fh:
-            fh.write(("".join(t + "\n" for t in texts)).encode())
-    open(os.path.join(stage, "_SUCCESS"), "w").close()
-    try:
-        os.rename(stage, out)
-    except OSError:  # concurrent builder won the rename — use theirs
-        shutil.rmtree(stage, ignore_errors=True)
-    return out
+    return _materialize_fixture(sf_dir, "harvest", render)
 
 
 def _materialize_jsonl_files(sf_dir: str) -> str:
     """One ``<source>.jsonl`` per source (one JSON object per line with
     doc_id/text/lang, doc_id order), derived deterministically from
-    documents.parquet — same content-fingerprinted cache + atomic-publish
-    mechanics as _materialize_log_files."""
-    import hashlib
-    import json as _json
-    import os
+    documents.parquet (:func:`_materialize_fixture`)."""
 
-    st = os.stat(os.path.join(sf_dir, "documents.parquet"))
-    key = f"jsonl\x00{os.path.abspath(sf_dir)}\x00{st.st_size}\x00{st.st_mtime_ns}"
-    out = os.path.join(
-        "/tmp", f"lfs_jsonl_{hashlib.md5(key.encode()).hexdigest()[:12]}"
-    )
-    if os.path.exists(os.path.join(out, "_SUCCESS")):
-        return out
-    import shutil
-    import tempfile
-    import uuid as _uuid
+    def render(stage: str, docs: str) -> None:
+        import json
+        import os
 
-    if os.path.exists(out):
-        try:
-            os.rename(out, f"{out}.broken.{_uuid.uuid4().hex[:8]}")
-        except OSError:
-            if os.path.exists(os.path.join(out, "_SUCCESS")):
-                return out
-    import pyarrow.compute as pc
-    import pyarrow.parquet as pq
+        import pyarrow.compute as pc
+        import pyarrow.parquet as pq
 
-    tbl = pq.read_table(
-        os.path.join(sf_dir, "documents.parquet"),
-        columns=["doc_id", "source", "text", "lang"],
-    ).sort_by([("source", "ascending"), ("doc_id", "ascending")])
-    stage = tempfile.mkdtemp(prefix=os.path.basename(out) + ".stage.", dir="/tmp")
-    for src in pc.unique(tbl["source"]).to_pylist():
-        part = tbl.filter(pc.equal(tbl["source"], src))
-        with open(os.path.join(stage, f"{src}.jsonl"), "w") as fh:
-            for d, t, lg in zip(
-                part["doc_id"].to_pylist(),
-                part["text"].to_pylist(),
-                part["lang"].to_pylist(),
-            ):
-                fh.write(_json.dumps({"doc_id": d, "text": t, "lang": lg}) + "\n")
-    open(os.path.join(stage, "_SUCCESS"), "w").close()
-    try:
-        os.rename(stage, out)
-    except OSError:  # concurrent builder won the rename — use theirs
-        shutil.rmtree(stage, ignore_errors=True)
-    return out
+        tbl = pq.read_table(
+            docs, columns=["doc_id", "source", "text", "lang"]
+        ).sort_by([("source", "ascending"), ("doc_id", "ascending")])
+        for src in pc.unique(tbl["source"]).to_pylist():
+            part = tbl.filter(pc.equal(tbl["source"], src))
+            with open(os.path.join(stage, f"{src}.jsonl"), "w") as fh:
+                for d, t, lg in zip(
+                    part["doc_id"].to_pylist(),
+                    part["text"].to_pylist(),
+                    part["lang"].to_pylist(),
+                ):
+                    fh.write(json.dumps({"doc_id": d, "text": t, "lang": lg}) + "\n")
+
+    return _materialize_fixture(sf_dir, "jsonl", render)
 
 
 def q_json_harvest(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1982,53 +1978,34 @@ def _materialize_access_logs(sf_dir: str) -> str:
     documents.parquet (ip/ts/method/path/status/bytes are pure functions
     of doc_id and n_chars), so a grok parse of the rendered lines is
     oracle-checkable without the oracle ever parsing a line — the same
-    trick as media_decode's BMP gate. Same content-addressed atomic
-    fixture mechanics as _materialize_log_files."""
-    import hashlib
-    import os
+    trick as media_decode's BMP gate (:func:`_materialize_fixture`)."""
 
-    st = os.stat(os.path.join(sf_dir, "documents.parquet"))
-    key = f"access\x00{os.path.abspath(sf_dir)}\x00{st.st_size}\x00{st.st_mtime_ns}"
-    out = os.path.join(
-        "/tmp", f"lfs_access_{hashlib.md5(key.encode()).hexdigest()[:12]}"
-    )
-    if os.path.exists(os.path.join(out, "_SUCCESS")):
-        return out
-    import datetime as _dt
-    import tempfile
-    import uuid as _uuid
+    def render(stage: str, docs: str) -> None:
+        import datetime as _dt
+        import os
 
-    if os.path.exists(out):
-        try:
-            os.rename(out, f"{out}.broken.{_uuid.uuid4().hex[:8]}")
-        except OSError:
-            if os.path.exists(os.path.join(out, "_SUCCESS")):
-                return out
-    import pyarrow.parquet as pq
+        import pyarrow.parquet as pq
 
-    tbl = pq.read_table(
-        os.path.join(sf_dir, "documents.parquet"), columns=["doc_id", "n_chars"]
-    ).sort_by([("doc_id", "ascending")])
-    base = _dt.datetime(2024, 1, 1)
-    methods = ("GET", "POST", "PUT")
-    statuses = (200, 301, 404, 500)
-    lines = []
-    for d, n in zip(tbl.column("doc_id").to_pylist(), tbl.column("n_chars").to_pylist()):
-        ip = f"10.{(d >> 16) % 256}.{(d >> 8) % 256}.{d % 256}"
-        iso = (base + _dt.timedelta(seconds=d)).strftime("%Y-%m-%dT%H:%M:%S")
-        lines.append(
-            f'{ip} - - [{iso}] "{methods[d % 3]} /d/{d} HTTP/1.1" '
-            f"{statuses[n % 4]} {n}\n"
+        tbl = pq.read_table(docs, columns=["doc_id", "n_chars"]).sort_by(
+            [("doc_id", "ascending")]
         )
-    stage = tempfile.mkdtemp(prefix=os.path.basename(out) + ".stage.", dir="/tmp")
-    with open(os.path.join(stage, "access.log"), "w") as fh:
-        fh.writelines(lines)
-    open(os.path.join(stage, "_SUCCESS"), "w").close()
-    try:
-        os.rename(stage, out)
-    except OSError:
-        pass  # concurrent builder won — its dir is complete
-    return out
+        base = _dt.datetime(2024, 1, 1)
+        methods = ("GET", "POST", "PUT")
+        statuses = (200, 301, 404, 500)
+        lines = []
+        for d, n in zip(
+            tbl.column("doc_id").to_pylist(), tbl.column("n_chars").to_pylist()
+        ):
+            ip = f"10.{(d >> 16) % 256}.{(d >> 8) % 256}.{d % 256}"
+            iso = (base + _dt.timedelta(seconds=d)).strftime("%Y-%m-%dT%H:%M:%S")
+            lines.append(
+                f'{ip} - - [{iso}] "{methods[d % 3]} /d/{d} HTTP/1.1" '
+                f"{statuses[n % 4]} {n}\n"
+            )
+        with open(os.path.join(stage, "access.log"), "w") as fh:
+            fh.writelines(lines)
+
+    return _materialize_fixture(sf_dir, "access", render)
 
 
 def q_grok_parse(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -2070,59 +2047,41 @@ _MONTH_ABBR = (
 def _materialize_combined_logs(sf_dir: str) -> str:
     """Combined-Apache-format access log (clf timestamp, quoted
     referrer/agent) derived ARITHMETICALLY from documents.parquet — same
-    oracle trick and content-addressed atomic fixture mechanics as
-    _materialize_access_logs. Month names are rendered from an explicit
-    table (locale-proof), matching DuckDB's C-locale strftime %b."""
-    import hashlib
-    import os
+    oracle trick as _materialize_access_logs. Month names are rendered
+    from an explicit table (locale-proof), matching DuckDB's C-locale
+    strftime %b."""
 
-    st = os.stat(os.path.join(sf_dir, "documents.parquet"))
-    key = f"combined\x00{os.path.abspath(sf_dir)}\x00{st.st_size}\x00{st.st_mtime_ns}"
-    out = os.path.join(
-        "/tmp", f"lfs_combined_{hashlib.md5(key.encode()).hexdigest()[:12]}"
-    )
-    if os.path.exists(os.path.join(out, "_SUCCESS")):
-        return out
-    import datetime as _dt
-    import tempfile
-    import uuid as _uuid
+    def render(stage: str, docs: str) -> None:
+        import datetime as _dt
+        import os
 
-    if os.path.exists(out):
-        try:
-            os.rename(out, f"{out}.broken.{_uuid.uuid4().hex[:8]}")
-        except OSError:
-            if os.path.exists(os.path.join(out, "_SUCCESS")):
-                return out
-    import pyarrow.parquet as pq
+        import pyarrow.parquet as pq
 
-    tbl = pq.read_table(
-        os.path.join(sf_dir, "documents.parquet"), columns=["doc_id", "n_chars"]
-    ).sort_by([("doc_id", "ascending")])
-    base = _dt.datetime(2024, 1, 1)
-    methods = ("GET", "POST", "PUT")
-    statuses = (200, 301, 404, 500)
-    lines = []
-    for d, n in zip(tbl.column("doc_id").to_pylist(), tbl.column("n_chars").to_pylist()):
-        ip = f"10.{(d >> 16) % 256}.{(d >> 8) % 256}.{d % 256}"
-        t = base + _dt.timedelta(seconds=d)
-        clf = (
-            f"{t.day:02d}/{_MONTH_ABBR[t.month - 1]}/{t.year:04d}"
-            f":{t.hour:02d}:{t.minute:02d}:{t.second:02d} +0000"
+        tbl = pq.read_table(docs, columns=["doc_id", "n_chars"]).sort_by(
+            [("doc_id", "ascending")]
         )
-        lines.append(
-            f'{ip} - u{d % 97} [{clf}] "{methods[d % 3]} /d/{d} HTTP/1.1" '
-            f'{statuses[n % 4]} {n} "http://r.example/{d % 10}" '
-            f'"Mozilla/5.0 (X11; rv:{n % 7}) Engine/{n % 5}"\n'
-        )
-    stage = tempfile.mkdtemp(prefix=os.path.basename(out) + ".stage.", dir="/tmp")
-    with open(os.path.join(stage, "combined.log"), "w") as fh:
-        fh.writelines(lines)
-    open(os.path.join(stage, "_SUCCESS"), "w").close()
-    try:
-        os.rename(stage, out)
-    except OSError:
-        pass  # concurrent builder won — its dir is complete
-    return out
+        base = _dt.datetime(2024, 1, 1)
+        methods = ("GET", "POST", "PUT")
+        statuses = (200, 301, 404, 500)
+        lines = []
+        for d, n in zip(
+            tbl.column("doc_id").to_pylist(), tbl.column("n_chars").to_pylist()
+        ):
+            ip = f"10.{(d >> 16) % 256}.{(d >> 8) % 256}.{d % 256}"
+            t = base + _dt.timedelta(seconds=d)
+            clf = (
+                f"{t.day:02d}/{_MONTH_ABBR[t.month - 1]}/{t.year:04d}"
+                f":{t.hour:02d}:{t.minute:02d}:{t.second:02d} +0000"
+            )
+            lines.append(
+                f'{ip} - u{d % 97} [{clf}] "{methods[d % 3]} /d/{d} HTTP/1.1" '
+                f'{statuses[n % 4]} {n} "http://r.example/{d % 10}" '
+                f'"Mozilla/5.0 (X11; rv:{n % 7}) Engine/{n % 5}"\n'
+            )
+        with open(os.path.join(stage, "combined.log"), "w") as fh:
+            fh.writelines(lines)
+
+    return _materialize_fixture(sf_dir, "combined", render)
 
 
 def q_grok_combined(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -2224,50 +2183,27 @@ def _materialize_multiline_logs(sf_dir: str) -> str:
     lines (an `EV doc_id=<id> n=<L>` head + indented `    at frame
     <id>.<j>` continuations), sharded into 8 files by doc_id % 8 in
     doc_id order — so the assembled events are pure functions of doc_id
-    and the oracle reconstructs every message without parsing a line.
-    Same content-addressed atomic fixture mechanics as
-    _materialize_access_logs."""
-    import hashlib
-    import os
+    and the oracle reconstructs every message without parsing a line
+    (:func:`_materialize_fixture`)."""
 
-    st = os.stat(os.path.join(sf_dir, "documents.parquet"))
-    key = f"multiline\x00{os.path.abspath(sf_dir)}\x00{st.st_size}\x00{st.st_mtime_ns}"
-    out = os.path.join(
-        "/tmp", f"lfs_multiline_{hashlib.md5(key.encode()).hexdigest()[:12]}"
-    )
-    if os.path.exists(os.path.join(out, "_SUCCESS")):
-        return out
-    import tempfile
-    import uuid as _uuid
+    def render(stage: str, docs: str) -> None:
+        import os
 
-    if os.path.exists(out):
-        try:
-            os.rename(out, f"{out}.broken.{_uuid.uuid4().hex[:8]}")
-        except OSError:
-            if os.path.exists(os.path.join(out, "_SUCCESS")):
-                return out
-    import pyarrow.parquet as pq
+        import pyarrow.parquet as pq
 
-    tbl = pq.read_table(
-        os.path.join(sf_dir, "documents.parquet"), columns=["doc_id"]
-    ).sort_by([("doc_id", "ascending")])
-    shards: list[list[str]] = [[] for _ in range(8)]
-    for d in tbl.column("doc_id").to_pylist():
-        n = 1 + d % 4
-        sh = shards[d % 8]
-        sh.append(f"EV doc_id={d} n={n}\n")
-        for j in range(1, n):
-            sh.append(f"    at frame {d}.{j}\n")
-    stage = tempfile.mkdtemp(prefix=os.path.basename(out) + ".stage.", dir="/tmp")
-    for s, sh in enumerate(shards):
-        with open(os.path.join(stage, f"ml_{s}.log"), "w") as fh:
-            fh.writelines(sh)
-    open(os.path.join(stage, "_SUCCESS"), "w").close()
-    try:
-        os.rename(stage, out)
-    except OSError:
-        pass  # concurrent builder won — its dir is complete
-    return out
+        tbl = pq.read_table(docs, columns=["doc_id"]).sort_by([("doc_id", "ascending")])
+        shards: list[list[str]] = [[] for _ in range(8)]
+        for d in tbl.column("doc_id").to_pylist():
+            n = 1 + d % 4
+            sh = shards[d % 8]
+            sh.append(f"EV doc_id={d} n={n}\n")
+            for j in range(1, n):
+                sh.append(f"    at frame {d}.{j}\n")
+        for s, sh in enumerate(shards):
+            with open(os.path.join(stage, f"ml_{s}.log"), "w") as fh:
+                fh.writelines(sh)
+
+    return _materialize_fixture(sf_dir, "multiline", render)
 
 
 def q_multiline_assemble(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -2528,62 +2464,39 @@ def _materialize_ts_logs(sf_dir: str) -> str:
     whose stamp format cycles by doc_id % 5 (ISO8601+offset, CLF,
     month-name, epoch seconds, corrupt) but whose INSTANT is always
     2024-01-01 + doc_id seconds — so the oracle recomputes every parsed
-    epoch without parsing a line. Same content-addressed atomic fixture
-    mechanics as _materialize_access_logs."""
-    import hashlib
-    import os
+    epoch without parsing a line (:func:`_materialize_fixture`)."""
 
-    st = os.stat(os.path.join(sf_dir, "documents.parquet"))
-    key = f"tslog\x00{os.path.abspath(sf_dir)}\x00{st.st_size}\x00{st.st_mtime_ns}"
-    out = os.path.join(
-        "/tmp", f"lfs_tslog_{hashlib.md5(key.encode()).hexdigest()[:12]}"
-    )
-    if os.path.exists(os.path.join(out, "_SUCCESS")):
-        return out
-    import datetime as _dt
-    import tempfile
-    import uuid as _uuid
+    def render(stage: str, docs: str) -> None:
+        import datetime as _dt
+        import os
 
-    if os.path.exists(out):
-        try:
-            os.rename(out, f"{out}.broken.{_uuid.uuid4().hex[:8]}")
-        except OSError:
-            if os.path.exists(os.path.join(out, "_SUCCESS")):
-                return out
-    import pyarrow.parquet as pq
+        import pyarrow.parquet as pq
 
-    tbl = pq.read_table(
-        os.path.join(sf_dir, "documents.parquet"), columns=["doc_id"]
-    ).sort_by([("doc_id", "ascending")])
-    base = _dt.datetime(2024, 1, 1)
-    base_epoch = 1704067200  # 2024-01-01T00:00:00Z
-    lines = []
-    for d in tbl.column("doc_id").to_pylist():
-        t = base + _dt.timedelta(seconds=d)
-        hms = f"{t.hour:02d}:{t.minute:02d}:{t.second:02d}"
-        ymd = f"{t.year:04d}-{t.month:02d}-{t.day:02d}"
-        mon = _MONTH_ABBR[t.month - 1]
-        fmt = d % 5
-        if fmt == 0:
-            stamp = f"{ymd}T{hms}+0000"
-        elif fmt == 1:
-            stamp = f"{t.day:02d}/{mon}/{t.year:04d}:{hms} +0000"
-        elif fmt == 2:
-            stamp = f"{mon} {t.day:02d} {t.year:04d} {hms}"
-        elif fmt == 3:
-            stamp = str(base_epoch + d)
-        else:
-            stamp = f"corrupt~{d}"
-        lines.append(f"{d} {stamp}\n")
-    stage = tempfile.mkdtemp(prefix=os.path.basename(out) + ".stage.", dir="/tmp")
-    with open(os.path.join(stage, "stamps.log"), "w") as fh:
-        fh.writelines(lines)
-    open(os.path.join(stage, "_SUCCESS"), "w").close()
-    try:
-        os.rename(stage, out)
-    except OSError:
-        pass  # concurrent builder won — its dir is complete
-    return out
+        tbl = pq.read_table(docs, columns=["doc_id"]).sort_by([("doc_id", "ascending")])
+        base = _dt.datetime(2024, 1, 1)
+        base_epoch = 1704067200  # 2024-01-01T00:00:00Z
+        lines = []
+        for d in tbl.column("doc_id").to_pylist():
+            t = base + _dt.timedelta(seconds=d)
+            hms = f"{t.hour:02d}:{t.minute:02d}:{t.second:02d}"
+            ymd = f"{t.year:04d}-{t.month:02d}-{t.day:02d}"
+            mon = _MONTH_ABBR[t.month - 1]
+            fmt = d % 5
+            if fmt == 0:
+                stamp = f"{ymd}T{hms}+0000"
+            elif fmt == 1:
+                stamp = f"{t.day:02d}/{mon}/{t.year:04d}:{hms} +0000"
+            elif fmt == 2:
+                stamp = f"{mon} {t.day:02d} {t.year:04d} {hms}"
+            elif fmt == 3:
+                stamp = str(base_epoch + d)
+            else:
+                stamp = f"corrupt~{d}"
+            lines.append(f"{d} {stamp}\n")
+        with open(os.path.join(stage, "stamps.log"), "w") as fh:
+            fh.writelines(lines)
+
+    return _materialize_fixture(sf_dir, "tslog", render)
 
 
 def q_date_parse(spark: SparkSession, sf_dir: str) -> DataFrame:

@@ -199,7 +199,7 @@ def main(argv: list[str] | None = None) -> int:
         "--sort-by",
         metavar="COL",
         help="write-time sorted layout: range-partition + sort each sink's "
-        "rows by COL before staging so parquet min-max envelopes prune "
+        "rows by COL before the write so parquet min-max envelopes prune "
         "selective scans (plans/layout.py at the ship surface; one range "
         "exchange at publish)",
     )

@@ -2,6 +2,7 @@
 
 from __future__ import annotations
 
+import glob
 import os
 
 import pytest
@@ -15,7 +16,7 @@ from logstash_forwarder_spark.plans.compact import (
     compact_sink,
     gc_unreferenced,
 )
-from logstash_forwarder_spark.plans.manifest import list_data_files, read_manifest
+from logstash_forwarder_spark.plans.manifest import read_manifest
 from logstash_forwarder_spark.plans.registrar import Registrar
 
 from .conftest import InjectedFailure
@@ -145,7 +146,7 @@ def test_compact_refuses_uncommitted_sink(
     orphaned = [
         s
         for s in ("sink_apache", "sink_default", "sink_dev", "sink_syslog")
-        if s not in done and list_data_files(run_dir, s)
+        if s not in done and glob.glob(os.path.join(run_dir, f"sink={s}", "*.parquet"))
     ]
     assert orphaned
     for s in orphaned:

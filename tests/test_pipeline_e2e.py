@@ -8,11 +8,27 @@ unicode source, empty array, single token.
 
 from __future__ import annotations
 
+import os
+
 import pandas as pd
+from pyspark.sql import types as T
 
 from logstash_forwarder_spark.datagen import gen_sequences, gen_source_dim
-from logstash_forwarder_spark.pipeline import PipelineSpec, read_sink, run_pipeline
-from logstash_forwarder_spark.schema import SEQUENCES_SCHEMA, SOURCE_DIM_SCHEMA
+from logstash_forwarder_spark.operators.parse import PARSED_COLS
+from logstash_forwarder_spark.pipeline import (
+    PipelineSpec,
+    build_plan,
+    read_sink,
+    read_table,
+    run_pipeline,
+)
+from logstash_forwarder_spark.plans.manifest import read_manifest
+from logstash_forwarder_spark.plans.registrar import Registrar
+from logstash_forwarder_spark.schema import (
+    PARSED_FIELDS_SCHEMA,
+    SEQUENCES_SCHEMA,
+    SOURCE_DIM_SCHEMA,
+)
 
 from .oracle import oracle_pipeline, oracle_sink_source_counts
 
@@ -111,3 +127,74 @@ def test_e2e_scaled_against_oracle(spark, tmp_out, no_dir_rename):
     # skew fixture sanity: src_hot really is hot
     frac = (got.source == "src_hot").mean()
     assert 0.5 < frac < 0.7
+
+
+def test_publish_runs_at_most_two_jobs(spark, tmp_out):
+    """One job per publish: a run without sort_col starts the dim
+    broadcast and the write — the writer returns every file's statistics,
+    so nothing is listed, re-read or aggregated after it."""
+    seqs = gen_sequences(spark, 500)
+    dim = gen_source_dim(spark)
+    sc = spark.sparkContext
+    sc.setJobGroup("publish-jobs", "run_pipeline job count")
+    try:
+        res = run_pipeline(spark, seqs, dim, PipelineSpec(out_dir=tmp_out, run_id="jobs"))
+        jobs = sc.statusTracker().getJobIdsForGroup("publish-jobs")
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert res.rows_staged == 500
+    assert len(jobs) <= 2, jobs
+
+
+def _nullable(j):
+    """A schema's JSON with every nullability flag set: Spark reads every
+    column of a file source as nullable."""
+    if isinstance(j, dict):
+        return {
+            k: True
+            if k in ("nullable", "containsNull", "valueContainsNull")
+            else _nullable(v)
+            for k, v in j.items()
+        }
+    if isinstance(j, list):
+        return [_nullable(v) for v in j]
+    return j
+
+
+def test_read_table_schema_is_the_plan_schema(spark, tmp_out):
+    """The data files hold the routed rows' exact types: ``read_table``
+    over a finished run has ``build_plan``'s schema (names, order, the
+    ``fields`` map, the parse columns), nullable as every file read is."""
+    seqs = gen_sequences(spark, 500)
+    dim = gen_source_dim(spark)
+    spec = PipelineSpec(out_dir=tmp_out, run_id="types")
+    run_pipeline(spark, seqs, dim, spec)
+    got = read_table(spark, tmp_out).schema
+    want = build_plan(seqs, dim, spec).schema
+    assert got == T.StructType.fromJson(_nullable(want.jsonValue()))
+    assert got["fields"].dataType == T.MapType(T.StringType(), T.StringType())
+    assert [got[c].dataType for c in PARSED_COLS] == [
+        f.dataType for f in PARSED_FIELDS_SCHEMA
+    ]
+
+
+def test_sorted_publish_folds_lineage_per_input_partition(spark, tmp_out):
+    """With sort_col the range exchange spreads one input partition's rows
+    over several writer tasks: the lineage still has ONE row per (sink,
+    part_id), and its sums match each manifest and the input."""
+    seqs = gen_sequences(spark, 2_000)
+    dim = gen_source_dim(spark)
+    spec = PipelineSpec(
+        out_dir=tmp_out, run_id="sorted", sort_col="n_tok", sort_partitions=8
+    )
+    res = run_pipeline(spark, seqs, dim, spec)
+    lin = Registrar(os.path.join(tmp_out, "_checkpoint")).lineage("sorted").to_pylist()
+    keys = [(r["sink"], r["partition_id"]) for r in lin]
+    assert len(keys) == len(set(keys))
+    run_dir = os.path.join(tmp_out, "run_id=sorted")
+    manifests = {s: read_manifest(run_dir, s) for s in res.sinks_committed}
+    for s, m in manifests.items():
+        assert sum(r["row_count"] for r in lin if r["sink"] == s) == m["row_count"]
+    # some sink spans several writer tasks, so the fold is exercised
+    assert any(len(m["files"]) > 1 for m in manifests.values())
+    assert res.rows_staged == 2_000

@@ -6,10 +6,12 @@ from __future__ import annotations
 
 import os
 import sys
+from pathlib import Path
 
 import duckdb
 
-sys.path.insert(0, "/root/repo")
+REPO = Path(__file__).resolve().parents[1]
+sys.path.insert(0, str(REPO))
 
 from __spark_entry__ import entry, oracle_sql, queries  # noqa: E402
 

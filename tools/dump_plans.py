@@ -1,5 +1,5 @@
 """Write PLANS.md: physical plans of the key operators with the properties
-each plan must exhibit (pushdown, broadcast, single-pass staging, partial
+each plan must exhibit (pushdown, broadcast, single-pass routing, partial
 aggregation). Run: python tools/dump_plans.py"""
 
 from __future__ import annotations
@@ -7,8 +7,10 @@ from __future__ import annotations
 import io
 import sys
 from contextlib import redirect_stdout
+from pathlib import Path
 
-sys.path.insert(0, "/root/repo")
+REPO = Path(__file__).resolve().parents[1]
+sys.path.insert(0, str(REPO))
 
 from pyspark.sql import functions as F  # noqa: E402
 
@@ -439,7 +441,7 @@ def main() -> None:
     )
     for title, want, plan in sections:
         out.append(f"\n## {title}\n\n**Must hold:** {want}\n\n```\n{plan}```\n")
-    with open("/root/repo/PLANS.md", "w") as fh:
+    with open(REPO / "PLANS.md", "w") as fh:
         fh.write("".join(out))
     print("PLANS.md written")
 

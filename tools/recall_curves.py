@@ -14,8 +14,10 @@ from __future__ import annotations
 
 import json
 import sys
+from pathlib import Path
 
-sys.path.insert(0, "/root/repo")
+REPO = Path(__file__).resolve().parents[1]
+sys.path.insert(0, str(REPO))
 
 from pyspark.sql import functions as F  # noqa: E402
 
@@ -233,7 +235,7 @@ def main() -> int:
         "  operators/similarity.py.",
         "",
     ]
-    with open("/root/repo/BENCH/RECALL.md", "w") as f:
+    with open(REPO / "BENCH" / "RECALL.md", "w") as f:
         f.write("\n".join(lines))
     print(json.dumps(results))
     return 0
