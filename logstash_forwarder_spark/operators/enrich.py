@@ -25,7 +25,7 @@ def enrich_stage(
 ) -> DataFrame:
     """Left broadcast-join the dim; unmatched sources keep NULL fields.
 
-    The broadcast is pinned explicitly (SURVEY §4.5): after the pandas-UDF
+    The broadcast is pinned explicitly (SURVEY §4.5): after the mapInArrow
     parse stage Catalyst has no reliable stats, so don't trust
     autoBroadcastJoinThreshold to pick it.
     """

@@ -3,22 +3,21 @@ payloads, Arrow-vectorized (no per-row Python in the hot path).
 
 The reference builds one FileEvent per harvested line
 (/root/reference/harvester.go:76-89). Here payloads are parsed in whole
-Arrow batches. Three implementations with identical semantics:
+Arrow batches. Two implementations with identical semantics:
 
-* ``parse_stage``          — ``mapInArrow`` (the pipeline default): computes
+* ``parse_stage``          — ``mapInArrow`` (the pipeline's): computes
                              directly on the Arrow ListArray's values/offsets
                              buffers, zero-copy, zero per-row objects. The
-                             memory-leanest path — on this box the kernel is
-                             bandwidth-bound at high worker concurrency, so
+                             memory-leanest path — at high worker
+                             concurrency the kernel is bandwidth-bound, so
                              bytes touched ≈ wall time.
-* ``parse_stage_pandas``   — ``pandas_udf`` over a Series of per-row numpy
-                             arrays (the classic shape; cross-checked).
 * ``parse_stage_builtin``  — pure JVM built-ins (higher-order functions);
                              slow (interpreted, not codegen) but a fully
                              independent semantics witness for tests.
 
-The shared kernel (``parse_flat``) is a pure (values, offsets) → columns
-function, unit-testable without Spark.
+The kernel (``parse_flat``, a pure (values, offsets) → columns function)
+and its per-batch wrapper (``parse_batch``, what ``parse_stage`` runs on
+each Arrow batch) are unit-testable without Spark.
 """
 
 from __future__ import annotations
@@ -26,7 +25,6 @@ from __future__ import annotations
 from collections.abc import Iterator
 
 import numpy as np
-import pandas as pd
 import pyarrow as pa
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
@@ -117,55 +115,32 @@ def parse_flat(flat: np.ndarray, offsets: np.ndarray) -> dict[str, np.ndarray]:
     }
 
 
-def _series_to_flat(tokens: pd.Series) -> tuple[np.ndarray, np.ndarray]:
-    n = len(tokens)
-    arrays = [np.asarray(a, dtype=np.int32) for a in tokens]
-    lengths = np.fromiter((a.size for a in arrays), dtype=np.int64, count=n)
-    offsets = np.zeros(n + 1, dtype=np.int64)
-    np.cumsum(lengths, out=offsets[1:])
-    flat = np.concatenate(arrays) if offsets[-1] else np.empty(0, np.int32)
-    return flat, offsets
-
-
-def parse_token_batch(tokens: pd.Series) -> pd.DataFrame:
-    """pandas wrapper of the kernel (unit tests + the pandas_udf path)."""
-    n = len(tokens)
-    if n == 0:
-        return pd.DataFrame(
-            {f.name: pd.Series(dtype=object) for f in PARSED_FIELDS_SCHEMA}
-        )
-    flat, offsets = _series_to_flat(tokens)
+def parse_batch(b: pa.RecordBatch, tokens_col: str = "tokens") -> pa.RecordBatch:
+    """``b`` with the parsed columns appended: zero-copy on the tokens
+    column's Arrow buffers, no per-row ndarray objects, the nullable ints
+    masked null for empty rows at the Arrow level."""
+    col = b.column(b.schema.get_field_index(tokens_col))
+    if isinstance(col, pa.ChunkedArray):  # pragma: no cover
+        col = col.combine_chunks()
+    flat = col.values.to_numpy(zero_copy_only=True)
+    offsets = col.offsets.to_numpy(zero_copy_only=True).astype(np.int64)
     k = parse_flat(flat, offsets)
-    empty = k.pop("_empty_mask")
-    out = pd.DataFrame(
-        {
-            "head_token": pd.array(k["head_token"], dtype="Int32"),
-            "tail_token": pd.array(k["tail_token"], dtype="Int32"),
-            "tok_sum": k["tok_sum"],
-            "tok_max": pd.array(k["tok_max"], dtype="Int32"),
-            "n_distinct": pd.array(k["n_distinct"], dtype="Int32"),
-            "payload_class": k["payload_class"],
-        }
-    )
-    for c in ("head_token", "tail_token", "tok_max", "n_distinct"):
-        out.loc[empty, c] = pd.NA
-    return out
-
-
-@F.pandas_udf(PARSED_FIELDS_SCHEMA)
-def parse_tokens_udf(tokens: pd.Series) -> pd.DataFrame:
-    return parse_token_batch(tokens)
-
-
-def parse_stage_pandas(df: DataFrame, tokens_col: str = "tokens") -> DataFrame:
-    """pandas_udf path: only the tokens column crosses into Python."""
-    parsed = df.withColumn("_parsed", parse_tokens_udf(F.col(tokens_col)))
-    return parsed.select("*", "_parsed.*").drop("_parsed")
+    mask = np.ascontiguousarray(k.pop("_empty_mask"))  # True = null
+    arrays = list(b.columns) + [
+        pa.array(k["head_token"], pa.int32(), mask=mask),
+        pa.array(k["tail_token"], pa.int32(), mask=mask),
+        pa.array(k["tok_sum"], pa.int64()),
+        pa.array(k["tok_max"], pa.int32(), mask=mask),
+        pa.array(k["n_distinct"], pa.int32(), mask=mask),
+        pa.array(k["payload_class"].astype(object), pa.string()),
+    ]
+    names = [f.name for f in b.schema] + PARSED_COLS
+    return pa.RecordBatch.from_arrays(arrays, names=names)
 
 
 def parse_stage(df: DataFrame, tokens_col: str = "tokens") -> DataFrame:
-    """mapInArrow path (default): zero-copy on Arrow buffers, no per-row
-    ndarray objects, nullable ints masked at the Arrow level."""
+    """The pipeline's parse: :func:`parse_batch` over every Arrow batch
+    (``mapInArrow``)."""
     in_fields = df.schema.fields
     out_schema = ", ".join(
         [f"{f.name} {f.dataType.simpleString()}" for f in in_fields]
@@ -178,27 +153,10 @@ def parse_stage(df: DataFrame, tokens_col: str = "tokens") -> DataFrame:
             "payload_class string",
         ]
     )
-    tok_name = tokens_col
 
     def op(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
         for b in batches:
-            col = b.column(b.schema.get_field_index(tok_name))
-            if isinstance(col, pa.ChunkedArray):  # pragma: no cover
-                col = col.combine_chunks()
-            flat = col.values.to_numpy(zero_copy_only=True)
-            offsets = col.offsets.to_numpy(zero_copy_only=True).astype(np.int64)
-            k = parse_flat(flat, offsets)
-            mask = np.ascontiguousarray(k.pop("_empty_mask"))  # True = null
-            arrays = list(b.columns) + [
-                pa.array(k["head_token"], pa.int32(), mask=mask),
-                pa.array(k["tail_token"], pa.int32(), mask=mask),
-                pa.array(k["tok_sum"], pa.int64()),
-                pa.array(k["tok_max"], pa.int32(), mask=mask),
-                pa.array(k["n_distinct"], pa.int32(), mask=mask),
-                pa.array(k["payload_class"].astype(object), pa.string()),
-            ]
-            names = [f.name for f in b.schema] + PARSED_COLS
-            yield pa.RecordBatch.from_arrays(arrays, names=names)
+            yield parse_batch(b, tokens_col)
 
     return df.mapInArrow(op, schema=out_schema)
 
@@ -215,7 +173,7 @@ def _sig_builtin(tokens: Column) -> Column:
 def parse_stage_builtin(df: DataFrame, tokens_col: str = "tokens") -> DataFrame:
     """Same semantics, pure JVM built-ins — the independent witness used by
     tests (higher-order functions are interpreted, so this is NOT the fast
-    path; it exists to prove the Arrow kernels right)."""
+    path; it exists to prove the Arrow kernel right)."""
     t = F.col(tokens_col)
     sig = _sig_builtin(t)
     empty = F.size(t) == 0

@@ -3,15 +3,16 @@
 One logical run = one envelope/ack cycle of the reference
 (/root/reference/publisher1.go:44-127), restructured for scale:
 
-* **Single input pass, one job.** The routed stream ends in ONE
-  ``mapInArrow`` writer kernel (``_sink_writer``): each task writes its
-  rows for each sink with pyarrow straight to a final, unique name in
-  ``sink=S/`` and, once its writers are closed, returns one row per
-  (sink, file, input partition, source) with the row count, token total
-  and max tokens. The driver's one ``collect`` of those rows gives every
-  manifest's file list, the lineage and the manifests' ``sources`` — K
-  sinks do not mean K scans of a 100 TB input, and nothing is listed or
-  re-read after the write.
+* **Single input pass, one job.** The routed stream ends in the
+  package's one data-file writer, ``manifest.write_sink_files`` (the
+  module that owns the write-once rule; compaction rewrites through it
+  too): each task writes its rows for each sink with pyarrow straight to
+  a final, unique name in ``sink=S/`` and, once its writers are closed,
+  returns one row per (sink, file, input partition, source) with the row
+  count, token total and max tokens. The driver's one ``collect`` of
+  those rows gives every manifest's file list, the lineage and the
+  manifests' ``sources`` — K sinks do not mean K scans of a 100 TB
+  input, and nothing is listed or re-read after the write.
 * **Checkpoint anti-filter.** On resume, sinks already committed for this
   ``run_id`` are excluded *before* the write (O-X3's left-anti join,
   degenerated to an ``isin`` filter because the commit key is the sink) —
@@ -45,11 +46,9 @@ from __future__ import annotations
 import os
 import time
 import uuid
-from collections.abc import Iterator
 from dataclasses import dataclass, field
 
 import pyarrow as pa
-import pyarrow.compute as pc
 import pyarrow.parquet as pq
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -59,12 +58,15 @@ from .operators.enrich import enrich_stage
 from .operators.parse import parse_stage
 from .operators.route import route_stage, sink_names
 from .plans.manifest import (
+    fold_stats,
     gc_sink,
     publish_file,
     publish_manifest,
     published_sinks,
     read_manifest,
     resolve_sink_paths,
+    sink_sources,
+    write_sink_files,
 )
 from .plans.registrar import LineageRow, Registrar
 
@@ -80,14 +82,6 @@ METRICS_SCHEMA = pa.schema(
         ("max_tokens", pa.int32()),
     ]
 )
-
-# what the writer kernel returns: one row per (sink, file, part_id, source)
-FILE_STATS_SCHEMA = (
-    "sink string, file string, part_id int, source string, "
-    "row_count long, token_total long, max_tokens int"
-)
-_STATS_KEYS = ["sink", "part_id", "source"]
-
 
 @dataclass
 class PipelineSpec:
@@ -164,12 +158,11 @@ def run_pipeline(
         # file's per-(input partition, source) statistics — metadata-sized
         for sink in todo:
             gc_sink(run_dir, sink)
-        kernel = _sink_writer(os.path.abspath(run_dir), uuid.uuid4().hex[:12])
-        stats = routed.mapInArrow(kernel, FILE_STATS_SCHEMA).toArrow()
-        files = _fold(stats, ["sink", "file"], [])
+        stats = write_sink_files(routed, run_dir)
+        files = fold_stats(stats, ["sink", "file"], [])
         # with sort_col one part_id spans several tasks' files
-        lineage = _fold(stats, ["sink", "part_id"], ["row_count", "token_total"])
-        sources = _fold(stats, ["sink", "source"], METRICS_SCHEMA.names[2:])
+        lineage = fold_stats(stats, ["sink", "part_id"], ["row_count", "token_total"])
+        sources = sink_sources(stats)
 
         for sink in todo:
             # publish = the ack (O-R5: one atomic FILE swap names the data
@@ -181,12 +174,8 @@ def run_pipeline(
                 LineageRow(r["part_id"], r["row_count"], r["token_total"] or 0)
                 for r in lineage.get(sink, [])
             ] or [LineageRow(-1, 0, 0)]
-            srcs = [
-                {k: r[k] for k in METRICS_SCHEMA.names[1:]}
-                for r in sources.get(sink, [])
-            ]
             paths = [r["file"] for r in files.get(sink, [])]
-            publish_manifest(run_dir, sink, paths, srcs)
+            publish_manifest(run_dir, sink, paths, sources.get(sink, []))
             reg.commit(spec.run_id, sink, rows)
             committed.append(sink)
             rows_staged += sum(r.row_count for r in rows)
@@ -199,80 +188,6 @@ def run_pipeline(
         metrics_path=_publish_metrics(run_dir, all_sinks),
         elapsed_sec=time.monotonic() - t0,
     )
-
-
-def _sink_writer(run_dir: str, token: str):
-    """The publish kernel for ``mapInArrow`` over the routed rows. Each
-    task writes its rows for each sink with pyarrow straight to their
-    final name ``sink=S/part-<token>-<partition>-<task attempt id>.parquet``
-    (relative to ``run_dir``; the attempt id is unique in the application,
-    so no two attempts — retried, speculative or from a re-run stage —
-    share a file), one row group per Arrow batch, in the routed schema
-    minus ``sink``. Only after every writer is closed does it yield its
-    files' statistics (:data:`FILE_STATS_SCHEMA`): a task that raises
-    yields nothing, so its partial file is an orphan no manifest names."""
-
-    def write(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
-        from pyspark import TaskContext
-
-        ctx = TaskContext.get()
-        name = f"part-{token}-{ctx.partitionId():05d}-{ctx.taskAttemptId()}.parquet"
-        writers: dict[str, pq.ParquetWriter] = {}
-        stats: list[pa.Table] = []
-        try:
-            for b in batches:
-                sinks = b.column("sink")
-                data = b.select([c for c in b.schema.names if c != "sink"])
-                for sink in pc.unique(sinks).to_pylist():
-                    if sink not in writers:
-                        d = os.path.join(run_dir, f"sink={sink}")
-                        os.makedirs(d, exist_ok=True)
-                        writers[sink] = pq.ParquetWriter(
-                            os.path.join(d, name), data.schema
-                        )
-                    writers[sink].write_batch(data.filter(pc.equal(sinks, sink)))
-                stats.append(
-                    pa.Table.from_batches([b.select([*_STATS_KEYS, "n_tok"])])
-                    .group_by(_STATS_KEYS)
-                    .aggregate([([], "count_all"), ("n_tok", "sum"), ("n_tok", "max")])
-                )
-        finally:
-            for w in writers.values():
-                w.close()
-        if not stats:
-            return
-        t = pa.concat_tables(stats).group_by(_STATS_KEYS).aggregate(
-            [("count_all", "sum"), ("n_tok_sum", "sum"), ("n_tok_max", "max")]
-        )
-        yield from pa.table(
-            {
-                "sink": t["sink"],
-                "file": [os.path.join(f"sink={s}", name) for s in t["sink"].to_pylist()],
-                "part_id": t["part_id"],
-                "source": t["source"],
-                "row_count": t["count_all_sum"],
-                "token_total": t["n_tok_sum_sum"],
-                "max_tokens": t["n_tok_max_max"],
-            }
-        ).to_batches()
-
-    return write
-
-
-def _fold(
-    stats: pa.Table, keys: list[str], cols: list[str]
-) -> dict[str, list[dict]]:
-    """The writer's statistics summed per ``keys`` (``max_tokens``: max;
-    nulls skipped, as in SQL), each under its own name, sorted, as rows
-    per sink."""
-    aggs = [(c, "max" if c == "max_tokens" else "sum") for c in cols]
-    g = stats.group_by(keys).aggregate(aggs).sort_by([(k, "ascending") for k in keys])
-    names = {f"{c}_{f}": c for c, f in aggs}
-    g = g.rename_columns([names.get(n, n) for n in g.column_names])
-    out: dict[str, list[dict]] = {}
-    for r in g.to_pylist():
-        out.setdefault(r["sink"], []).append(r)
-    return out
 
 
 def _publish_metrics(run_dir: str, sinks: list[str]) -> str:

@@ -12,31 +12,37 @@ single-file manifest swap the pipeline commits through
 see the old file set or the new one, never a mix, with zero read
 downtime.
 
-Protocol (each step object-store-safe — no directory ever moves):
+Protocol (each step object-store-safe — the one rename is the manifest
+swap):
 
 1. resolve the sink's CURRENT manifest (a sink with none is uncommitted
-   — there is no commit pointer to swap — and fails loudly);
-2. read exactly the manifest-listed files and ``coalesce`` them down to
-   ``ceil(bytes / target_bytes)`` outputs — a narrow dependency, NO
-   shuffle: each output task just concatenates input files;
-3. move the rewritten parts into the sink directory under fresh unique
-   names (single-FILE ``os.replace`` — the one primitive the publish
-   layer uses);
-4. verify the rewrite's parquet-footer row total equals the manifest's
-   ``row_count`` (refuse and clean up otherwise — compaction must be
-   content-preserving by proof, not by hope);
-5. atomically swap the manifest to the new file list (its per-source
-   statistics carried over — the rows are the same);
-6. delete the now-unreferenced old files (per-key deletes).
+   — there is no commit pointer to swap — and fails loudly), and delete
+   the data files its directory holds besides the manifest's (a crashed
+   compaction's leftovers, :func:`gc_unreferenced`);
+2. read exactly the manifest-listed files, ``coalesce`` them down to
+   ``ceil(bytes / target_bytes)`` partitions — a narrow dependency, NO
+   shuffle: each output task just concatenates input files — and write
+   them through the publish's own writer
+   (:func:`~.manifest.write_sink_files`): each task writes its file
+   straight to a final, unique name in the sink directory and returns
+   its statistics;
+3. prove the rewrite content-preserving from those statistics, with no
+   footer re-read: their per-source fold — the same fold that built the
+   manifest — must equal the manifest's ``sources`` and their row total
+   its ``row_count`` (otherwise the new files are deleted and the swap
+   refused — compaction must be content-preserving by proof, not by
+   hope);
+4. atomically swap the manifest to the new file list;
+5. delete the now-unreferenced old files (per-key deletes).
 
-Crash anywhere before step 5 leaves only UNREFERENCED new files —
-invisible to every reader; a crash after 5 leaves unreferenced OLD
-files. Both are garbage, not corruption: :func:`gc_unreferenced`
-removes anything the manifest doesn't name, and re-running compaction
-is idempotent. Lineage, row counts, and registrar snapshots are all
-content-addressed to what the manifest serves, so time-travel reads
-(`--read-as-of`) remain valid across a compaction — the bytes served
-are identical.
+Crash anywhere before step 4 leaves only UNREFERENCED new files —
+invisible to every reader; a crash after 4 leaves unreferenced OLD
+files. Both are garbage, not corruption: the next compaction of the sink
+removes anything the manifest doesn't name before it does anything else,
+and re-running compaction is idempotent. Lineage, row counts, and
+registrar snapshots are all content-addressed to what the manifest
+serves, so time-travel reads (`--read-as-of`) remain valid across a
+compaction — the bytes served are identical.
 
 Reference analog: the spooler's "flush small batches, let downstream
 consolidate" contract (spooler.go's size/timeout flush); this is the
@@ -54,17 +60,21 @@ from __future__ import annotations
 
 import math
 import os
-import uuid
 
 from pyspark.sql import SparkSession
+from pyspark.sql import functions as F
 
-from .manifest import publish_manifest, published_sinks, read_manifest
+from .manifest import (
+    fold_stats,
+    publish_manifest,
+    published_sinks,
+    read_manifest,
+    resolve_sink_paths,
+    sink_sources,
+    write_sink_files,
+)
 
 DEFAULT_TARGET_BYTES = 128 * 1024 * 1024
-
-
-def _sink_dir(run_dir: str, sink: str) -> str:
-    return os.path.join(run_dir, f"sink={sink}")
 
 
 def gc_unreferenced(run_dir: str, sink: str) -> int:
@@ -79,7 +89,7 @@ def gc_unreferenced(run_dir: str, sink: str) -> int:
             "sinks is plans/manifest.gc_sink)"
         )
     referenced = {os.path.join(run_dir, f) for f in m["files"]}
-    d = _sink_dir(run_dir, sink)
+    d = os.path.join(run_dir, f"sink={sink}")
     n = 0
     if os.path.isdir(d):
         for f in os.listdir(d):
@@ -101,75 +111,64 @@ def compact_sink(
     """Rewrite one committed sink to ≈``target_bytes`` files (module
     docstring has the full protocol). Returns an action report; a no-op
     (already at or below the target file count) rewrites nothing."""
-    import pyarrow.parquet as pq
-
     m = read_manifest(run_dir, sink)
     if m is None:
         raise ValueError(
             f"sink {sink!r} has no manifest in {run_dir}: it is uncommitted, "
             "so there is nothing to compact"
         )
-    old_rel = m["files"]
-    old_abs = [os.path.join(run_dir, f) for f in old_rel]
-    total_bytes = sum(os.path.getsize(f) for f in old_abs)
+    gc_unreferenced(run_dir, sink)
+    total_bytes = sum(os.path.getsize(os.path.join(run_dir, f)) for f in m["files"])
     n_out = max(1, math.ceil(total_bytes / target_bytes))
     report = {
         "sink": sink,
-        "files_before": len(old_abs),
+        "files_before": len(m["files"]),
         "bytes": total_bytes,
         "row_count": m["row_count"],
     }
-    if len(old_abs) <= n_out:
-        report.update(files_after=len(old_abs), rewritten=False)
+    if len(m["files"]) <= n_out:
+        report.update(files_after=len(m["files"]), rewritten=False)
         return report
 
-    # 2. narrow rewrite — no shuffle; data-file schema excludes the
-    # `sink` partition column (it lives in the directory name), so the
-    # rewrite reads the bare files and writes the same schema back.
+    # 2. narrow rewrite — no shuffle. The data files lack the `sink`
+    # column (it is the directory name), which the writer routes on.
     # For a SORTED layout (PipelineSpec.sort_col), pass the same
     # sort_cols + a row_group_bytes cap: Spark bin-packs input splits by
     # SIZE (not name), so merged order is otherwise arbitrary — the
     # narrow sortWithinPartitions restores in-file order, and capped row
     # groups keep zone-map pruning working INSIDE the bigger files
-    # (file-level min-max alone coarsens to useless at n_out=1).
-    tmp = os.path.join(run_dir, f"_compact_tmp-{uuid.uuid4().hex}")
-    df = spark.read.parquet(*old_abs).coalesce(n_out)
+    # (file-level min-max alone coarsens to useless at n_out=1). The cap
+    # becomes rows per row group at the input's bytes per row.
+    df = (
+        spark.read.parquet(*resolve_sink_paths(run_dir, [sink]))
+        .select("*", F.lit(sink).alias("sink"))
+        .coalesce(n_out)
+    )
     if sort_cols:
         df = df.sortWithinPartitions(*sort_cols)
-    writer = df.write
+    rows_per_group = None
     if row_group_bytes is not None:
-        writer = writer.option("parquet.block.size", str(row_group_bytes))
-    writer.parquet(tmp)
+        rows_per_group = max(1, row_group_bytes * m["row_count"] // total_bytes)
+    stats = write_sink_files(df, run_dir, rows_per_group)
+    new_files = [r["file"] for r in fold_stats(stats, ["sink", "file"], []).get(sink, [])]
+    sources = sink_sources(stats).get(sink, [])
 
-    # 3. single-file moves into place under fresh unique names
-    token = uuid.uuid4().hex[:12]
-    new_rel: list[str] = []
-    rows = 0
-    for i, f in enumerate(sorted(os.listdir(tmp))):
-        if not f.endswith(".parquet"):
-            continue
-        src = os.path.join(tmp, f)
-        rows += pq.ParquetFile(src).metadata.num_rows
-        rel = os.path.join(f"sink={sink}", f"compact-{token}-{i:05d}.parquet")
-        os.replace(src, os.path.join(run_dir, rel))
-        new_rel.append(rel)
-
-    # 4. content-preservation proof before the swap
-    if rows != m["row_count"]:
-        for rel in new_rel:
-            os.remove(os.path.join(run_dir, rel))
-        _rm_tmp(tmp)
+    # 3. content-preservation proof before the swap (keyed by source:
+    # manifests of older writers order a null source differently)
+    rows = sum(s["row_count"] for s in sources)
+    same = {s["source"]: s for s in sources} == {s["source"]: s for s in m["sources"]}
+    if not same or rows != m["row_count"]:
+        gc_unreferenced(run_dir, sink)
         raise RuntimeError(
             f"compaction rewrite of sink {sink!r} produced {rows} rows, "
-            f"manifest says {m['row_count']} — refusing to swap"
+            f"manifest says {m['row_count']}; per-source statistics "
+            f"{'match' if same else 'differ'} — refusing to swap"
         )
 
-    # 5. the commit point; 6. old files are unreferenced from here on
-    publish_manifest(run_dir, sink, new_rel, m["sources"])
-    for f in old_abs:
-        os.remove(f)
-    _rm_tmp(tmp)
-    report.update(files_after=len(new_rel), rewritten=True)
+    # 4. the commit point; 5. old files are unreferenced from here on
+    publish_manifest(run_dir, sink, new_files, sources)
+    gc_unreferenced(run_dir, sink)
+    report.update(files_after=len(new_files), rewritten=True)
     return report
 
 
@@ -197,16 +196,3 @@ def compact_run(
         )
         for s in sinks
     ]
-
-
-def _rm_tmp(tmp: str) -> None:
-    if os.path.isdir(tmp):
-        for f in os.listdir(tmp):
-            try:
-                os.remove(os.path.join(tmp, f))
-            except OSError:
-                pass  # best-effort: leftovers are invisible to readers
-        try:
-            os.rmdir(tmp)
-        except OSError:
-            pass

@@ -17,12 +17,16 @@ the same way:
 * crash recovery = delete unreferenced files and redo — readers never saw
   them because no manifest named them.
 
-A publish renames nothing but the one-file swap: data files are written
-by the pipeline's task-side writer straight to their final names
-(pipeline.py), so the only atomic operation a publish needs is the
-single-FILE swap (`publish_file`), which object-store catalogs provide
-(S3 conditional PUT, GCS preconditions). Tests enforce it with a shim
-that makes `os.replace` raise on directories (the ``no_dir_rename``
+No commit in the package renames anything but the one-file swap. Every
+committed data file — a publish's and a compaction's — is written by ONE
+task-side writer (:func:`write_sink_files`) straight to its final,
+unique name and returned with its statistics, so the only atomic
+operation any commit needs is the single-FILE swap (`publish_file`),
+which object-store catalogs provide (S3 conditional PUT, GCS
+preconditions). No commit path runs a Spark ``DataFrameWriter`` (whose
+Hadoop committer moves task output out of ``_temporary``). Tests
+enforce the rule with a shim that lets a rename move only a
+``publish_file`` temp file onto its target (the ``no_dir_rename``
 fixture, tests/conftest.py).
 """
 
@@ -31,8 +35,23 @@ from __future__ import annotations
 import json
 import os
 import uuid
+from collections.abc import Iterator
+
+import pyarrow as pa
+import pyarrow.compute as pc
+import pyarrow.parquet as pq
+from pyspark.sql import DataFrame
 
 MANIFEST_DIR = "_manifests"
+
+# what the writer kernel returns: one row per (sink, file, part_id, source)
+FILE_STATS_SCHEMA = (
+    "sink string, file string, part_id int, source string, "
+    "row_count long, token_total long, max_tokens int"
+)
+_STATS_KEYS = ["sink", "part_id", "source"]
+# a manifest's per-source statistics, beside ``source``
+SOURCE_STATS = ["row_count", "token_total", "max_tokens"]
 
 
 def publish_file(final: str, data) -> str:
@@ -55,6 +74,109 @@ def publish_file(final: str, data) -> str:
             os.remove(tmp)
         raise
     return final
+
+
+def write_sink_files(
+    df: DataFrame, run_dir: str, row_group_size: int | None = None
+) -> pa.Table:
+    """Write ``df``'s rows — routed rows: ``sink``, ``part_id``,
+    ``source`` and ``n_tok`` among their columns — as data files in their
+    final ``sink=S/`` directories under ``run_dir``, in ONE Spark job, and
+    return the writers' statistics (:data:`FILE_STATS_SCHEMA`, one row per
+    (sink, file, part_id, source)). Nothing is renamed, listed or re-read;
+    the files stay invisible until a manifest names them.
+    ``row_group_size`` caps the rows per parquet row group; None writes
+    one row group per Arrow batch."""
+    kernel = _sink_writer(
+        os.path.abspath(run_dir), uuid.uuid4().hex[:12], row_group_size
+    )
+    return df.mapInArrow(kernel, FILE_STATS_SCHEMA).toArrow()
+
+
+def _sink_writer(run_dir: str, token: str, row_group_size: int | None):
+    """The writer kernel for ``mapInArrow``. Each task writes its rows for
+    each sink with pyarrow straight to their final name
+    ``sink=S/part-<token>-<partition>-<task attempt id>.parquet`` (relative
+    to ``run_dir``; the attempt id is unique in the application, so no two
+    attempts — retried, speculative or from a re-run stage — share a
+    file), in the input schema minus ``sink``. Only after every writer is
+    closed does it yield its files' statistics: a task that raises yields
+    nothing, so its partial file is an orphan no manifest names."""
+
+    def write(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
+        from pyspark import TaskContext
+
+        ctx = TaskContext.get()
+        name = f"part-{token}-{ctx.partitionId():05d}-{ctx.taskAttemptId()}.parquet"
+        writers: dict[str, pq.ParquetWriter] = {}
+        stats: list[pa.Table] = []
+        try:
+            for b in batches:
+                sinks = b.column("sink")
+                data = b.select([c for c in b.schema.names if c != "sink"])
+                for sink in pc.unique(sinks).to_pylist():
+                    if sink not in writers:
+                        d = os.path.join(run_dir, f"sink={sink}")
+                        os.makedirs(d, exist_ok=True)
+                        writers[sink] = pq.ParquetWriter(
+                            os.path.join(d, name), data.schema
+                        )
+                    writers[sink].write_batch(
+                        data.filter(pc.equal(sinks, sink)),
+                        row_group_size=row_group_size,
+                    )
+                stats.append(
+                    pa.Table.from_batches([b.select([*_STATS_KEYS, "n_tok"])])
+                    .group_by(_STATS_KEYS)
+                    .aggregate([([], "count_all"), ("n_tok", "sum"), ("n_tok", "max")])
+                )
+        finally:
+            for w in writers.values():
+                w.close()
+        if not stats:
+            return
+        t = pa.concat_tables(stats).group_by(_STATS_KEYS).aggregate(
+            [("count_all", "sum"), ("n_tok_sum", "sum"), ("n_tok_max", "max")]
+        )
+        yield from pa.table(
+            {
+                "sink": t["sink"],
+                "file": [os.path.join(f"sink={s}", name) for s in t["sink"].to_pylist()],
+                "part_id": t["part_id"],
+                "source": t["source"],
+                "row_count": t["count_all_sum"],
+                "token_total": t["n_tok_sum_sum"],
+                "max_tokens": t["n_tok_max_max"],
+            }
+        ).to_batches()
+
+    return write
+
+
+def fold_stats(
+    stats: pa.Table, keys: list[str], cols: list[str]
+) -> dict[str, list[dict]]:
+    """The writer's statistics summed per ``keys`` (``max_tokens``: max;
+    nulls skipped, as in SQL), each under its own name, sorted, as rows
+    per sink."""
+    aggs = [(c, "max" if c == "max_tokens" else "sum") for c in cols]
+    g = stats.group_by(keys).aggregate(aggs).sort_by([(k, "ascending") for k in keys])
+    names = {f"{c}_{f}": c for c, f in aggs}
+    g = g.rename_columns([names.get(n, n) for n in g.column_names])
+    out: dict[str, list[dict]] = {}
+    for r in g.to_pylist():
+        out.setdefault(r["sink"], []).append(r)
+    return out
+
+
+def sink_sources(stats: pa.Table) -> dict[str, list[dict]]:
+    """Each sink's manifest ``sources`` (per-source statistics, sorted by
+    source) from the writer's statistics — the one fold a publish builds
+    its manifests with and a compaction proves its rewrite with."""
+    return {
+        sink: [{k: r[k] for k in ["source", *SOURCE_STATS]} for r in rows]
+        for sink, rows in fold_stats(stats, ["sink", "source"], SOURCE_STATS).items()
+    }
 
 
 def _manifest_path(run_dir: str, sink: str) -> str:

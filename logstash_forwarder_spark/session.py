@@ -13,7 +13,7 @@ import os
 
 from pyspark.sql import SparkSession
 
-# One Arrow batch per ~10k rows keeps the pandas-UDF parse stage memory-flat
+# One Arrow batch per ~10k rows keeps the mapInArrow parse stage memory-flat
 # even with 512-token rows (10k rows * 512 tok * 4 B ≈ 20 MiB per batch).
 ARROW_BATCH_ROWS = 10_000
 

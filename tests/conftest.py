@@ -1,6 +1,7 @@
 from __future__ import annotations
 
 import os
+import re
 
 import pytest
 
@@ -28,17 +29,29 @@ def tmp_out(tmp_path):
 
 @pytest.fixture
 def no_dir_rename(monkeypatch):
-    """Make ``os.replace`` raise on directories: a test using it proves its
-    publish/resume/maintenance path needs only single-FILE atomic swaps,
-    the primitive object stores provide (plans/manifest.py)."""
-    real = os.replace
+    """Forbid every rename but ``publish_file``'s one-file swap:
+    ``os.replace`` and ``os.rename`` raise unless the source is a temp file
+    named ``.<basename(dst)>.<hex>.tmp`` in ``dst``'s own directory. A test
+    using it proves its publish/resume/maintenance path moves no directory
+    and no data file — only single small files are swapped into place, the
+    primitive object stores provide (plans/manifest.py). It patches this
+    Python process only: it cannot see a rename inside the JVM (such as
+    Hadoop's output committer moving task output out of ``_temporary``)
+    or in a Python worker process."""
 
-    def guarded(src, dst, *a, **k):
-        if os.path.isdir(src):
-            raise AssertionError(f"directory rename attempted: {src} -> {dst}")
-        return real(src, dst, *a, **k)
+    def guard(real):
+        def rename(src, dst, *a, **k):
+            d, base = os.path.split(os.fspath(dst))
+            src_dir, src_base = os.path.split(os.fspath(src))
+            pattern = rf"\.{re.escape(base)}\.[0-9a-f]+\.tmp"
+            if src_dir != d or not re.fullmatch(pattern, src_base):
+                raise AssertionError(f"rename other than a one-file swap: {src} -> {dst}")
+            return real(src, dst, *a, **k)
 
-    monkeypatch.setattr(os, "replace", guarded)
+        return rename
+
+    monkeypatch.setattr(os, "replace", guard(os.replace))
+    monkeypatch.setattr(os, "rename", guard(os.rename))
 
 
 class InjectedFailure(RuntimeError):

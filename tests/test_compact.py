@@ -11,11 +11,7 @@ from pyspark.sql import functions as F
 from logstash_forwarder_spark.datagen import gen_sequences, gen_source_dim
 from logstash_forwarder_spark.pipeline import PipelineSpec, read_sink, run_pipeline
 from logstash_forwarder_spark.plans import compact as compact_mod
-from logstash_forwarder_spark.plans.compact import (
-    compact_run,
-    compact_sink,
-    gc_unreferenced,
-)
+from logstash_forwarder_spark.plans.compact import compact_run, compact_sink
 from logstash_forwarder_spark.plans.manifest import read_manifest
 from logstash_forwarder_spark.plans.registrar import Registrar
 
@@ -38,16 +34,28 @@ def _publish(spark, tmp_out, run_id="c1"):
 
 
 def _snapshot(spark, tmp_out, run_id, sinks):
-    rows = []
+    """Each sink's read schema and every column of every row, through the
+    reader path (the ``sink`` partition column included), in (sink,
+    doc_id) order."""
+    schemas, rows = {}, []
     for s in sinks:
         try:
             df = read_sink(spark, tmp_out, run_id, s)
         except ValueError:
             continue
-        rows.extend(
-            (r.sink, r.doc_id) for r in df.select("sink", "doc_id").collect()
-        )
-    return sorted(rows)
+        schemas[s] = df.schema
+        rows.extend(df.collect())
+    return schemas, sorted(rows, key=lambda r: (r.sink, r.doc_id))
+
+
+def _files_on_disk(run_dir, sink):
+    """Every entry of the sink directory, as manifest-relative paths."""
+    d = os.path.join(run_dir, f"sink={sink}")
+    return {os.path.join(f"sink={sink}", f) for f in os.listdir(d)}
+
+
+def _multi_file_sink(run_dir, sinks):
+    return next(s for s in sinks if len(read_manifest(run_dir, s)["files"]) > 1)
 
 
 def test_compact_preserves_content_and_shrinks_files(
@@ -55,7 +63,7 @@ def test_compact_preserves_content_and_shrinks_files(
 ):
     run_dir, sinks = _publish(spark, tmp_out)
     before = _snapshot(spark, tmp_out, "c1", sinks)
-    assert len(before) == N
+    assert len(before[1]) == N
     manifests = {s: read_manifest(run_dir, s) for s in sinks}
     assert any(len(m["files"]) > 1 for m in manifests.values())
 
@@ -67,12 +75,19 @@ def test_compact_preserves_content_and_shrinks_files(
         m = read_manifest(run_dir, r["sink"])
         assert len(m["files"]) == r["files_after"]
         assert m["row_count"] == r["row_count"]  # row_count untouched
-        # old files are gone; only manifest-listed files remain
-        d = os.path.join(run_dir, f"sink={r['sink']}")
-        on_disk = {f for f in os.listdir(d) if f.endswith(".parquet")}
-        assert on_disk == {os.path.basename(f) for f in m["files"]}
-    # byte-identical table contents through the reader path (incl. the
-    # sink partition column surviving the rewrite)
+        assert m["sources"] == manifests[r["sink"]]["sources"]
+    # no Hadoop-committer or staging residue anywhere in the run, and
+    # every sink directory holds exactly its manifest's files
+    for root, dirs, files in os.walk(run_dir):
+        for f in dirs + files:
+            assert f != "_SUCCESS" and f != "_temporary", os.path.join(root, f)
+            assert not f.endswith(".crc"), os.path.join(root, f)
+            assert not f.startswith("_compact_tmp"), os.path.join(root, f)
+    for s in sinks:
+        assert _files_on_disk(run_dir, s) == set(read_manifest(run_dir, s)["files"])
+    # the same table through the reader path: the same schema and every
+    # column of every row (incl. the sink partition column surviving the
+    # rewrite)
     assert _snapshot(spark, tmp_out, "c1", sinks) == before
     # idempotent: a second pass is a no-op
     assert all(not r["rewritten"] for r in compact_run(spark, tmp_out, "c1"))
@@ -80,9 +95,7 @@ def test_compact_preserves_content_and_shrinks_files(
 
 def test_compact_crash_before_swap_is_invisible(spark, tmp_out, no_dir_rename):
     run_dir, sinks = _publish(spark, tmp_out)
-    sink = next(
-        s for s in sinks if len(read_manifest(run_dir, s)["files"]) > 1
-    )
+    sink = _multi_file_sink(run_dir, sinks)
     before = _snapshot(spark, tmp_out, "c1", [sink])
     old_manifest = read_manifest(run_dir, sink)
 
@@ -97,34 +110,71 @@ def test_compact_crash_before_swap_is_invisible(spark, tmp_out, no_dir_rename):
     finally:
         compact_mod.publish_manifest = orig
 
-    # reader sees the OLD committed state, untouched
+    # reader sees the OLD committed state, untouched; the crash left
+    # unreferenced new files beside it
     assert read_manifest(run_dir, sink) == old_manifest
+    assert _files_on_disk(run_dir, sink) > set(old_manifest["files"])
     assert _snapshot(spark, tmp_out, "c1", [sink]) == before
-    # crash leftovers are unreferenced garbage; gc removes them
-    assert gc_unreferenced(run_dir, sink) > 0
-    assert gc_unreferenced(run_dir, sink) == 0
-    # retry completes the job
+    # the retry removes the leftovers itself and completes the job
     assert compact_sink(spark, run_dir, sink)["rewritten"]
+    assert _files_on_disk(run_dir, sink) == set(read_manifest(run_dir, sink)["files"])
+    assert _snapshot(spark, tmp_out, "c1", [sink]) == before
+
+
+def test_compact_crash_after_swap_is_cleaned_by_next_compaction(
+    spark, tmp_out, no_dir_rename, monkeypatch
+):
+    """A crash after the manifest swap, before the old files are deleted,
+    leaves them unreferenced; the next compaction of the sink, which has
+    nothing to rewrite, removes them."""
+    run_dir, sinks = _publish(spark, tmp_out)
+    sink = _multi_file_sink(run_dir, sinks)
+    before = _snapshot(spark, tmp_out, "c1", [sink])
+    old = set(read_manifest(run_dir, sink)["files"])
+    old_abs = {os.path.join(run_dir, f) for f in old}
+    real_remove = os.remove
+
+    def remove(path, *a, **k):
+        if path in old_abs:
+            raise OSError("injected: crash after the swap")
+        return real_remove(path, *a, **k)
+
+    monkeypatch.setattr(os, "remove", remove)
+    with pytest.raises(OSError, match="injected"):
+        compact_sink(spark, run_dir, sink)
+    monkeypatch.setattr(os, "remove", real_remove)
+
+    swapped = read_manifest(run_dir, sink)
+    assert not old & set(swapped["files"])
+    assert _files_on_disk(run_dir, sink) == old | set(swapped["files"])
+    assert _snapshot(spark, tmp_out, "c1", [sink]) == before
+
+    assert not compact_sink(spark, run_dir, sink)["rewritten"]
+    assert read_manifest(run_dir, sink) == swapped
+    assert _files_on_disk(run_dir, sink) == set(swapped["files"])
     assert _snapshot(spark, tmp_out, "c1", [sink]) == before
 
 
 def test_compact_refuses_row_count_mismatch(spark, tmp_out, no_dir_rename):
+    """A rewrite whose statistics disagree with the manifest — its row
+    total, or one source's statistics — is refused, and the refusal
+    leaves the manifest as it was and no file outside it."""
     import json
 
     run_dir, sinks = _publish(spark, tmp_out)
-    sink = next(
-        s for s in sinks if len(read_manifest(run_dir, s)["files"]) > 1
-    )
+    sink = _multi_file_sink(run_dir, sinks)
     mp = os.path.join(run_dir, "_manifests", f"sink={sink}.json")
-    m = json.load(open(mp))
-    m["row_count"] += 1  # simulate a corrupted commit pointer
-    json.dump(m, open(mp, "w"))
-    with pytest.raises(RuntimeError, match="refusing to swap"):
-        compact_sink(spark, run_dir, sink)
-    # the refusal left no new data files behind
-    d = os.path.join(run_dir, f"sink={sink}")
-    assert not [f for f in os.listdir(d) if f.startswith("compact-")]
-    assert not [f for f in os.listdir(run_dir) if f.startswith("_compact_tmp")]
+    good = json.load(open(mp))
+    row_count_off = dict(good, row_count=good["row_count"] + 1)
+    token_total_off = json.loads(json.dumps(good))
+    token_total_off["sources"][0]["token_total"] += 1
+    # simulate corrupted commit pointers
+    for m in (row_count_off, token_total_off):
+        json.dump(m, open(mp, "w"))
+        with pytest.raises(RuntimeError, match="refusing to swap"):
+            compact_sink(spark, run_dir, sink)
+        assert read_manifest(run_dir, sink) == m
+        assert _files_on_disk(run_dir, sink) == set(m["files"])
 
 
 def test_compact_refuses_uncommitted_sink(
@@ -159,8 +209,9 @@ def test_compact_refuses_uncommitted_sink(
 
 def test_compact_composes_with_sorted_layout(spark, tmp_out, no_dir_rename):
     """Compacting a sorted publish down to ONE file keeps zone-map
-    pruning working when the rewrite re-sorts and caps row groups —
-    and the test shows the knobs are necessary, not decorative."""
+    pruning working when the rewrite re-sorts (``sort_cols``) and caps
+    row groups (``row_group_bytes``): a narrow n_tok band still scans at
+    most a third of the sink's rows."""
     from pyspark.sql import functions as F
 
     from logstash_forwarder_spark.plans.layout import scan_output_rows

@@ -8,33 +8,37 @@ Mirrors the reference's per-event construction checks
 from __future__ import annotations
 
 import numpy as np
-import pandas as pd
+import pyarrow as pa
 import pytest
 
 from logstash_forwarder_spark.datagen import gen_sequences
 from logstash_forwarder_spark.operators.parse import (
+    parse_batch,
     parse_stage,
     parse_stage_builtin,
-    parse_stage_pandas,
-    parse_token_batch,
 )
 
 COLS = ["head_token", "tail_token", "tok_sum", "tok_max", "n_distinct", "payload_class"]
 
 
+def _parse(rows: list[list[int]]) -> dict[str, list]:
+    """parse_batch over one Arrow batch of token lists, as Python columns."""
+    tokens = pa.array(rows, pa.list_(pa.int32()))
+    return parse_batch(pa.record_batch({"tokens": tokens})).to_pydict()
+
+
 def test_parse_batch_known_values():
-    s = pd.Series(
+    out = _parse(
         [
-            np.array([3, 1, 4, 1, 5], dtype=np.int32),  # sig "31415" → odd_head
-            np.array([2, 2, 7], dtype=np.int32),  # "227" → doubled
-            np.array([14, 2], dtype=np.int32),  # "42" → answer
-            np.array([8, 9], dtype=np.int32),  # "89" → even_head
-            np.array([], dtype=np.int32),  # empty
-            np.array([7], dtype=np.int32),  # single token
+            [3, 1, 4, 1, 5],  # sig "31415" → odd_head
+            [2, 2, 7],  # "227" → doubled
+            [14, 2],  # "42" → answer
+            [8, 9],  # "89" → even_head
+            [],  # empty
+            [7],  # single token
         ]
     )
-    out = parse_token_batch(s)
-    assert list(out["payload_class"]) == [
+    assert out["payload_class"] == [
         "odd_head",
         "doubled",
         "answer",
@@ -42,10 +46,11 @@ def test_parse_batch_known_values():
         "empty",
         "odd_head",
     ]
-    assert list(out["tok_sum"]) == [14, 11, 16, 17, 0, 7]
+    assert out["tok_sum"] == [14, 11, 16, 17, 0, 7]
     assert out["head_token"][0] == 3 and out["tail_token"][0] == 5
     assert out["n_distinct"][0] == 4
-    assert pd.isna(out["head_token"][4]) and pd.isna(out["tok_max"][4])
+    # empty rows are null, not the kernel's -1 sentinel
+    assert out["head_token"][4] is None and out["tok_max"][4] is None
     assert out["head_token"][5] == 7 and out["tail_token"][5] == 7
 
 
@@ -76,28 +81,24 @@ def test_parse_flat_int64_path_handles_negatives_and_wide_vocab():
 
 
 def test_parse_batch_empty_input():
-    out = parse_token_batch(pd.Series([], dtype=object))
-    assert len(out) == 0
-    assert list(out.columns) == COLS
+    out = _parse([])
+    assert list(out) == ["tokens", *COLS]
+    assert all(len(v) == 0 for v in out.values())
 
 
 def test_sig_only_first_8_tokens():
-    long = np.arange(20, dtype=np.int32) + 10  # sig from first 8 only
-    out = parse_token_batch(pd.Series([long]))
+    long = list(range(10, 30))  # sig from first 8 only
+    out = _parse([long])
     # first 8 tokens are 10..17 → sig "01234567" → even_head (no doubles, no 42)
     assert out["payload_class"][0] == "even_head"
 
 
 @pytest.mark.usefixtures("spark")
-def test_all_three_parse_paths_agree(spark):
-    """mapInArrow, pandas_udf, and pure-JVM built-ins agree row-for-row."""
+def test_arrow_and_builtin_parse_paths_agree(spark):
+    """mapInArrow and pure-JVM built-ins agree row-for-row."""
     seqs = gen_sequences(spark, 3_000)
     sel = lambda df: df.orderBy("doc_id").select("doc_id", *COLS).collect()  # noqa: E731
-    a = sel(parse_stage(seqs))
-    b = sel(parse_stage_builtin(seqs))
-    c = sel(parse_stage_pandas(seqs))
-    assert a == b
-    assert a == c
+    assert sel(parse_stage(seqs)) == sel(parse_stage_builtin(seqs))
 
 
 def test_parse_stage_schema(spark):
