@@ -14,6 +14,7 @@ payloads (/root/reference/spec/lumberjack_spec.rb:70).
 
 from __future__ import annotations
 
+import pyarrow as pa
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -75,22 +76,41 @@ def gen_source_dim(spark: SparkSession) -> DataFrame:
     Per FIXTURES.md §2: ``src_6`` appears in the data but NOT here (left-join
     null path), and ``src_ghost`` matches no data rows.
     """
-    rows = []
-    for name, typ, env in [
-        ("src_hot", "syslog", "prod"),
-        ("src_0", "syslog", "prod"),
-        ("src_1", "apache", "prod"),
-        ("src_2", "apache", "staging"),
-        ("src_3", "app", "prod"),
-        ("src_4", "app", "dev"),
-        ("src_5", "metrics", "prod"),
-        # src_6 intentionally missing → left-join null path
-        ("src_ghost", "ghost", "none"),  # matches no data
-    ]:
-        rows.append((name, {"type": typ, "env": env}))
+    return source_dim_frame(
+        spark,
+        [
+            (name, {"type": typ, "env": env})
+            for name, typ, env in [
+                ("src_hot", "syslog", "prod"),
+                ("src_0", "syslog", "prod"),
+                ("src_1", "apache", "prod"),
+                ("src_2", "apache", "staging"),
+                ("src_3", "app", "prod"),
+                ("src_4", "app", "dev"),
+                ("src_5", "metrics", "prod"),
+                # src_6 intentionally missing → left-join null path
+                ("src_ghost", "ghost", "none"),  # matches no data
+            ]
+        ],
+    )
+
+
+def source_dim_frame(
+    spark: SparkSession, rows: list[tuple[str, dict[str, str]]]
+) -> DataFrame:
+    """An enrich dim of (source, fields) rows, built from Arrow so that it
+    is a ``LocalRelation``: reading it — the enrich broadcast, the local
+    backend's collect — starts no Spark job and no Python worker, where a
+    frame of pickled rows starts both on every read."""
+    from pyspark.sql.pandas.types import to_arrow_schema
+
     from .schema import SOURCE_DIM_SCHEMA
 
-    return spark.createDataFrame(rows, SOURCE_DIM_SCHEMA)
+    table = pa.Table.from_pylist(
+        [{"source": s, "fields": f} for s, f in rows],
+        schema=to_arrow_schema(SOURCE_DIM_SCHEMA),
+    )
+    return spark.createDataFrame(table, SOURCE_DIM_SCHEMA)
 
 
 def default_routes() -> list[tuple[int, str, str]]:

@@ -11,7 +11,7 @@ from __future__ import annotations
 
 import socket
 
-from pyspark.sql import DataFrame
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 
@@ -30,9 +30,24 @@ def enrich_stage(
     autoBroadcastJoinThreshold to pick it.
     """
     out = df.join(F.broadcast(source_dim), on=on, how="left")
+    return annotate(out, run_id=run_id, with_host=with_host)
+
+
+def annotate(
+    df: DataFrame,
+    *,
+    run_id: str | None = None,
+    with_host: bool = True,
+    part_id: Column | None = None,
+) -> DataFrame:
+    """The per-event metadata :func:`enrich_stage` adds after its join:
+    ``host``, ``run_id`` and ``part_id`` (the lineage key; by default the
+    input partition, ``spark_partition_id()``)."""
     if with_host:
         # host annotation, publisher1.go:25-30 — constant per driver
-        out = out.withColumn("host", F.lit(socket.gethostname()))
+        df = df.withColumn("host", F.lit(socket.gethostname()))
     if run_id is not None:
-        out = out.withColumn("run_id", F.lit(run_id))
-    return out.withColumn("part_id", F.spark_partition_id())
+        df = df.withColumn("run_id", F.lit(run_id))
+    return df.withColumn(
+        "part_id", F.spark_partition_id() if part_id is None else part_id
+    )

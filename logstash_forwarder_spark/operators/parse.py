@@ -28,6 +28,7 @@ import numpy as np
 import pyarrow as pa
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
 from ..schema import PARSED_FIELDS_SCHEMA
 
@@ -141,24 +142,21 @@ def parse_batch(b: pa.RecordBatch, tokens_col: str = "tokens") -> pa.RecordBatch
 def parse_stage(df: DataFrame, tokens_col: str = "tokens") -> DataFrame:
     """The pipeline's parse: :func:`parse_batch` over every Arrow batch
     (``mapInArrow``)."""
-    in_fields = df.schema.fields
-    out_schema = ", ".join(
-        [f"{f.name} {f.dataType.simpleString()}" for f in in_fields]
-        + [
-            "head_token int",
-            "tail_token int",
-            "tok_sum long",
-            "tok_max int",
-            "n_distinct int",
-            "payload_class string",
-        ]
-    )
 
     def op(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
         for b in batches:
             yield parse_batch(b, tokens_col)
 
-    return df.mapInArrow(op, schema=out_schema)
+    return df.mapInArrow(op, schema=parsed_schema(df.schema))
+
+
+def parsed_schema(schema: T.StructType) -> str:
+    """The schema :func:`parse_batch` gives rows of ``schema``: its
+    columns, then the parsed ones (DDL, every column nullable)."""
+    return ", ".join(
+        [f"{f.name} {f.dataType.simpleString()}" for f in schema.fields]
+        + [f"{f.name} {f.dataType.simpleString()}" for f in PARSED_FIELDS_SCHEMA]
+    )
 
 
 def _sig_builtin(tokens: Column) -> Column:

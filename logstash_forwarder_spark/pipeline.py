@@ -33,6 +33,18 @@ One logical run = one envelope/ack cycle of the reference
   at-least-once, SURVEY §3.4). No file or directory is ever renamed
   but the one-file manifest swap, so the same protocol is correct on
   object stores (S3/GCS).
+* **Two backends, one structural rule.** When ``sequences`` is already in
+  the driver — its optimized plan is a ``LocalRelation``, as for a tail
+  poll harvested in the driver (sources/textlog.py) — the same kernels
+  run there: the rows are fetched, ``parse_batch`` parses them, pyarrow
+  joins the dim's rows, Catalyst adds the metadata and route columns
+  over one LocalRelation (the one predicate compiler), and the writer
+  body the Spark kernel runs writes one file per sink — two Spark jobs,
+  no Python worker, the same file schema. Anything else (a parquet
+  scan, a streaming micro-batch, a checkpointed poll) runs the Spark
+  backend. There is no size threshold here: the input's plan decides,
+  and ``RunResult.backend`` records which ran. Both commit through the
+  same loop below.
 * **Metrics from manifests.** ``_metrics`` (per-(sink, source) row count,
   token total, max tokens) is built on the driver from the manifests of
   ALL the run's sinks — a sink skipped on resume contributes its stored
@@ -48,14 +60,17 @@ import time
 import uuid
 from dataclasses import dataclass, field
 
+import numpy as np
 import pyarrow as pa
 import pyarrow.parquet as pq
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
+from pyspark.sql.pandas.types import to_arrow_schema
 
 from .datagen import default_routes
-from .operators.enrich import enrich_stage
-from .operators.parse import parse_stage
+from .operators.enrich import annotate, enrich_stage
+from .operators.parse import parse_batch, parse_stage, parsed_schema
 from .operators.route import route_stage, sink_names
 from .plans.manifest import (
     fold_stats,
@@ -66,6 +81,7 @@ from .plans.manifest import (
     read_manifest,
     resolve_sink_paths,
     sink_sources,
+    write_sink_batches,
     write_sink_files,
 )
 from .plans.registrar import LineageRow, Registrar
@@ -110,6 +126,9 @@ class RunResult:
     rows_staged: int
     metrics_path: str
     elapsed_sec: float
+    # "local": the rows were already in the driver and ran there;
+    # "spark": the distributed path
+    backend: str
 
 
 def build_plan(
@@ -119,6 +138,16 @@ def build_plan(
     parsed = parse_stage(sequences)
     enriched = enrich_stage(parsed, source_dim, run_id=spec.run_id)
     return route_stage(enriched, spec.routes)
+
+
+def is_driver_local(df: DataFrame) -> bool:
+    """The backend rule: ``df``'s rows are already in the driver — its
+    optimized plan is a ``LocalRelation``, as is every frame built from
+    Arrow or Python data in the driver and every filter or projection
+    Catalyst folds into one (a driver-harvested tail poll's
+    ``lines_to_sequences``, for one)."""
+    plan = df._jdf.queryExecution().optimizedPlan()
+    return plan.getClass().getSimpleName() == "LocalRelation"
 
 
 def run_pipeline(
@@ -132,6 +161,7 @@ def run_pipeline(
     all_sinks = sink_names(spec.routes)
     done = reg.committed_sinks(spec.run_id)
     todo = [s for s in all_sinks if s not in done]
+    backend = "local" if is_driver_local(sequences) else "spark"
 
     run_dir = os.path.join(spec.out_dir, f"run_id={spec.run_id}")
     os.makedirs(run_dir, exist_ok=True)
@@ -139,26 +169,15 @@ def run_pipeline(
     committed: list[str] = []
     rows_staged = 0
     if todo:
-        routed = build_plan(sequences, source_dim, spec)
-        # exclude already-committed sinks before the (expensive) write
-        if done:
-            routed = routed.filter(~F.col("sink").isin(sorted(done)))
-        if spec.sort_col:
-            range_args = ("sink", spec.sort_col)
-            if spec.sort_partitions:
-                routed = routed.repartitionByRange(
-                    spec.sort_partitions, *range_args
-                )
-            else:
-                routed = routed.repartitionByRange(*range_args)
-            routed = routed.sortWithinPartitions(*range_args)
-
         # GC unreferenced leftovers of crashed attempts, then write data
-        # files ONCE, under final names, in ONE job that also returns each
-        # file's per-(input partition, source) statistics — metadata-sized
+        # files ONCE, under final names, returning each file's
+        # per-(input partition, source) statistics — metadata-sized
         for sink in todo:
             gc_sink(run_dir, sink)
-        stats = write_sink_files(routed, run_dir)
+        if backend == "local":
+            stats = _write_local(spark, sequences, source_dim, spec, done, run_dir)
+        else:
+            stats = write_sink_files(_routed(sequences, source_dim, spec, done), run_dir)
         files = fold_stats(stats, ["sink", "file"], [])
         # with sort_col one part_id spans several tasks' files
         lineage = fold_stats(stats, ["sink", "part_id"], ["row_count", "token_total"])
@@ -187,7 +206,93 @@ def run_pipeline(
         rows_staged=rows_staged,
         metrics_path=_publish_metrics(run_dir, all_sinks),
         elapsed_sec=time.monotonic() - t0,
+        backend=backend,
     )
+
+
+def _routed(
+    sequences: DataFrame, source_dim: DataFrame, spec: PipelineSpec, done
+) -> DataFrame:
+    """The Spark backend's routed rows: the plan, minus the sinks already
+    committed (excluded before the expensive write), range-sorted when
+    ``spec.sort_col`` asks for it."""
+    routed = build_plan(sequences, source_dim, spec)
+    if done:
+        routed = routed.filter(~F.col("sink").isin(sorted(done)))
+    if spec.sort_col:
+        range_args = ("sink", spec.sort_col)
+        if spec.sort_partitions:
+            routed = routed.repartitionByRange(spec.sort_partitions, *range_args)
+        else:
+            routed = routed.repartitionByRange(*range_args)
+        routed = routed.sortWithinPartitions(*range_args)
+    return routed
+
+
+def _write_local(
+    spark: SparkSession,
+    sequences: DataFrame,
+    source_dim: DataFrame,
+    spec: PipelineSpec,
+    done,
+    run_dir: str,
+) -> pa.Table:
+    """The driver-local backend: ``build_plan`` over rows in the driver,
+    in two Spark jobs and no Python worker. Fetch the rows (one job),
+    ``parse_batch`` them, left-join the dim's rows in pyarrow (collecting
+    a LocalRelation dim starts no job, where a broadcast starts one),
+    add the metadata and route columns with the Spark backend's own
+    Catalyst expressions over one LocalRelation (one job), and write one
+    file per sink through the shared writer body. Columns keep
+    ``build_plan``'s names, order and types, so both backends write the
+    same file schema. ``part_id`` is 0: the driver is one partition."""
+    rows = sequences.toArrow()
+    batches = rows.to_batches() or [pa.RecordBatch.from_pylist([], rows.schema)]
+    parsed = pa.Table.from_batches([parse_batch(b) for b in batches])
+
+    dim = pa.Table.from_pylist(
+        [r.asDict() for r in source_dim.collect()],
+        schema=to_arrow_schema(source_dim.schema),
+    )
+    hits = (
+        pa.table({"source": parsed["source"], "_row": np.arange(len(parsed))})
+        .join(
+            pa.table({"source": dim["source"], "_dim": np.arange(len(dim))}),
+            "source",
+            join_type="left outer",
+        )
+        .sort_by("_row")
+    )
+    # enrich_stage's USING-join layout: the key, the rest of the parsed
+    # columns, then the dim's, nullable
+    extra = [f for f in source_dim.schema.fields if f.name != "source"]
+    enriched = parsed.take(hits["_row"])
+    for f in extra:
+        enriched = enriched.append_column(f.name, dim[f.name].take(hits["_dim"]))
+    left = T.StructType.fromDDL(parsed_schema(sequences.schema))
+    schema = T.StructType(
+        [left["source"]]
+        + [f for f in left.fields if f.name != "source"]
+        + [T.StructField(f.name, f.dataType, True) for f in extra]
+    )
+    routed = route_stage(
+        annotate(
+            spark.createDataFrame(enriched.select(schema.names), schema),
+            run_id=spec.run_id,
+            part_id=F.lit(0),
+        ),
+        spec.routes,
+    )
+    if done:
+        routed = routed.filter(~F.col("sink").isin(sorted(done)))
+    table = routed.toArrow()
+    if spec.sort_col:
+        table = table.sort_by(
+            [("sink", "ascending"), (spec.sort_col, "ascending")],
+            null_placement="at_start",
+        )
+    name = f"part-{uuid.uuid4().hex[:12]}-00000-driver.parquet"
+    return write_sink_batches(table.to_batches(), run_dir, name)
 
 
 def _publish_metrics(run_dir: str, sinks: list[str]) -> str:

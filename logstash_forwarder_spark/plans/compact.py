@@ -61,6 +61,7 @@ from __future__ import annotations
 import math
 import os
 
+import pyarrow.parquet as pq
 from pyspark.sql import SparkSession
 from pyspark.sql import functions as F
 
@@ -149,7 +150,10 @@ def compact_sink(
     rows_per_group = None
     if row_group_bytes is not None:
         rows_per_group = max(1, row_group_bytes * m["row_count"] // total_bytes)
-    stats = write_sink_files(df, run_dir, rows_per_group)
+    # the rewrite keeps the replaced files' schema: a Spark read of parquet
+    # makes every column nullable, which would drop the NOT NULL flags
+    schema = pq.read_schema(os.path.join(run_dir, m["files"][0]))
+    stats = write_sink_files(df, run_dir, rows_per_group, schema)
     new_files = [r["file"] for r in fold_stats(stats, ["sink", "file"], []).get(sink, [])]
     sources = sink_sources(stats).get(sink, [])
 

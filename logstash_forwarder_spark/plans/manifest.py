@@ -19,8 +19,10 @@ the same way:
 
 No commit in the package renames anything but the one-file swap. Every
 committed data file — a publish's and a compaction's — is written by ONE
-task-side writer (:func:`write_sink_files`) straight to its final,
-unique name and returned with its statistics, so the only atomic
+writer body (:func:`write_sink_batches`; task-side through
+:func:`write_sink_files`, or in the driver for driver-sized input)
+straight to its final, unique name and returned with its statistics,
+so the only atomic
 operation any commit needs is the single-FILE swap (`publish_file`),
 which object-store catalogs provide (S3 conditional PUT, GCS
 preconditions). No commit path runs a Spark ``DataFrameWriter`` (whose
@@ -41,13 +43,21 @@ import pyarrow as pa
 import pyarrow.compute as pc
 import pyarrow.parquet as pq
 from pyspark.sql import DataFrame
+from pyspark.sql.pandas.types import from_arrow_schema
 
 MANIFEST_DIR = "_manifests"
 
-# what the writer kernel returns: one row per (sink, file, part_id, source)
-FILE_STATS_SCHEMA = (
-    "sink string, file string, part_id int, source string, "
-    "row_count long, token_total long, max_tokens int"
+# what the writer returns: one row per (sink, file, part_id, source)
+FILE_STATS = pa.schema(
+    [
+        ("sink", pa.string()),
+        ("file", pa.string()),
+        ("part_id", pa.int32()),
+        ("source", pa.string()),
+        ("row_count", pa.int64()),
+        ("token_total", pa.int64()),
+        ("max_tokens", pa.int32()),
+    ]
 )
 _STATS_KEYS = ["sink", "part_id", "source"]
 # a manifest's per-source statistics, beside ``source``
@@ -77,80 +87,97 @@ def publish_file(final: str, data) -> str:
 
 
 def write_sink_files(
-    df: DataFrame, run_dir: str, row_group_size: int | None = None
+    df: DataFrame,
+    run_dir: str,
+    row_group_size: int | None = None,
+    schema: pa.Schema | None = None,
 ) -> pa.Table:
     """Write ``df``'s rows — routed rows: ``sink``, ``part_id``,
     ``source`` and ``n_tok`` among their columns — as data files in their
     final ``sink=S/`` directories under ``run_dir``, in ONE Spark job, and
-    return the writers' statistics (:data:`FILE_STATS_SCHEMA`, one row per
+    return the writers' statistics (:data:`FILE_STATS`, one row per
     (sink, file, part_id, source)). Nothing is renamed, listed or re-read;
     the files stay invisible until a manifest names them.
     ``row_group_size`` caps the rows per parquet row group; None writes
-    one row group per Arrow batch."""
-    kernel = _sink_writer(
-        os.path.abspath(run_dir), uuid.uuid4().hex[:12], row_group_size
-    )
-    return df.mapInArrow(kernel, FILE_STATS_SCHEMA).toArrow()
+    one row group per Arrow batch. ``schema`` (the data files' schema,
+    without ``sink``) casts every batch to it — nullability flags
+    included, which a Spark read of parquet loses."""
+    token = uuid.uuid4().hex[:12]
+    run_dir = os.path.abspath(run_dir)
 
-
-def _sink_writer(run_dir: str, token: str, row_group_size: int | None):
-    """The writer kernel for ``mapInArrow``. Each task writes its rows for
-    each sink with pyarrow straight to their final name
-    ``sink=S/part-<token>-<partition>-<task attempt id>.parquet`` (relative
-    to ``run_dir``; the attempt id is unique in the application, so no two
-    attempts — retried, speculative or from a re-run stage — share a
-    file), in the input schema minus ``sink``. Only after every writer is
-    closed does it yield its files' statistics: a task that raises yields
-    nothing, so its partial file is an orphan no manifest names."""
-
-    def write(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
+    def kernel(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
         from pyspark import TaskContext
 
         ctx = TaskContext.get()
         name = f"part-{token}-{ctx.partitionId():05d}-{ctx.taskAttemptId()}.parquet"
-        writers: dict[str, pq.ParquetWriter] = {}
-        stats: list[pa.Table] = []
-        try:
-            for b in batches:
-                sinks = b.column("sink")
-                data = b.select([c for c in b.schema.names if c != "sink"])
-                for sink in pc.unique(sinks).to_pylist():
-                    if sink not in writers:
-                        d = os.path.join(run_dir, f"sink={sink}")
-                        os.makedirs(d, exist_ok=True)
-                        writers[sink] = pq.ParquetWriter(
-                            os.path.join(d, name), data.schema
-                        )
-                    writers[sink].write_batch(
-                        data.filter(pc.equal(sinks, sink)),
-                        row_group_size=row_group_size,
-                    )
-                stats.append(
-                    pa.Table.from_batches([b.select([*_STATS_KEYS, "n_tok"])])
-                    .group_by(_STATS_KEYS)
-                    .aggregate([([], "count_all"), ("n_tok", "sum"), ("n_tok", "max")])
-                )
-        finally:
-            for w in writers.values():
-                w.close()
-        if not stats:
-            return
-        t = pa.concat_tables(stats).group_by(_STATS_KEYS).aggregate(
-            [("count_all", "sum"), ("n_tok_sum", "sum"), ("n_tok_max", "max")]
-        )
-        yield from pa.table(
-            {
-                "sink": t["sink"],
-                "file": [os.path.join(f"sink={s}", name) for s in t["sink"].to_pylist()],
-                "part_id": t["part_id"],
-                "source": t["source"],
-                "row_count": t["count_all_sum"],
-                "token_total": t["n_tok_sum_sum"],
-                "max_tokens": t["n_tok_max_max"],
-            }
+        yield from write_sink_batches(
+            batches, run_dir, name, row_group_size, schema
         ).to_batches()
 
-    return write
+    return df.mapInArrow(kernel, from_arrow_schema(FILE_STATS)).toArrow()
+
+
+def write_sink_batches(
+    batches,
+    run_dir: str,
+    name: str,
+    row_group_size: int | None = None,
+    schema: pa.Schema | None = None,
+) -> pa.Table:
+    """The package's one data-file writer body, run by the Spark task
+    kernel of :func:`write_sink_files` and, for driver-sized input, by the
+    driver itself (``pipeline.run_pipeline``'s local backend). Writes the
+    routed ``batches`` for each sink with pyarrow straight to their final
+    name ``sink=S/<name>`` under ``run_dir``, in the batches' schema (or
+    ``schema``) minus ``sink``. Only after every writer is closed does it
+    return the files' statistics (:data:`FILE_STATS`): a writer that
+    raises returns nothing, so its partial file is an orphan no manifest
+    names. Task-side, ``name`` carries the task attempt id, unique in the
+    application, so no two attempts — retried, speculative or from a
+    re-run stage — share a file."""
+    writers: dict[str, pq.ParquetWriter] = {}
+    stats: list[pa.Table] = []
+    try:
+        for b in batches:
+            sinks = b.column("sink")
+            data = b.select([c for c in b.schema.names if c != "sink"])
+            if schema is not None:
+                data = data.cast(schema)
+            for sink in pc.unique(sinks).to_pylist():
+                if sink not in writers:
+                    d = os.path.join(run_dir, f"sink={sink}")
+                    os.makedirs(d, exist_ok=True)
+                    writers[sink] = pq.ParquetWriter(
+                        os.path.join(d, name), data.schema
+                    )
+                writers[sink].write_batch(
+                    data.filter(pc.equal(sinks, sink)),
+                    row_group_size=row_group_size,
+                )
+            stats.append(
+                pa.Table.from_batches([b.select([*_STATS_KEYS, "n_tok"])])
+                .group_by(_STATS_KEYS)
+                .aggregate([([], "count_all"), ("n_tok", "sum"), ("n_tok", "max")])
+            )
+    finally:
+        for w in writers.values():
+            w.close()
+    if not stats:
+        return FILE_STATS.empty_table()
+    t = pa.concat_tables(stats).group_by(_STATS_KEYS).aggregate(
+        [("count_all", "sum"), ("n_tok_sum", "sum"), ("n_tok_max", "max")]
+    )
+    return pa.table(
+        {
+            "sink": t["sink"],
+            "file": [os.path.join(f"sink={s}", name) for s in t["sink"].to_pylist()],
+            "part_id": t["part_id"],
+            "source": t["source"],
+            "row_count": t["count_all_sum"],
+            "token_total": t["n_tok_sum_sum"],
+            "max_tokens": t["n_tok_max_max"],
+        }
+    ).cast(FILE_STATS)
 
 
 def fold_stats(

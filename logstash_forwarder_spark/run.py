@@ -16,8 +16,8 @@ import sys
 from pyspark.sql import SparkSession
 from pyspark.sql import functions as F
 
-from .datagen import gen_sequences, gen_source_dim
-from .pipeline import PipelineSpec, run_pipeline
+from .datagen import gen_sequences, gen_source_dim, source_dim_frame
+from .pipeline import PipelineSpec, is_driver_local, run_pipeline
 from .schema import SEQUENCES_SCHEMA
 
 
@@ -423,6 +423,7 @@ def main(argv: list[str] | None = None) -> int:
                 "sinks_skipped": res.sinks_skipped,
                 "rows_staged": res.rows_staged,
                 "elapsed_sec": round(res.elapsed_sec, 3),
+                "backend": res.backend,
             }
         )
     )
@@ -442,13 +443,22 @@ def _ship_lumberjack(lines, host: str, port: int) -> dict:
         F.lit(socket.gethostname()).alias("host"),
         F.col("byte_offset").cast("string").alias("offset"),
         "line",
+        # frames go out in byte order; the string offset would sort 12
+        # before 6
+        F.col("byte_offset").alias("_order"),
     )
+    if is_driver_local(events):
+        # a driver-harvested poll ships through one connection, as the
+        # reference's one publisher does: a LocalRelation's scan slices
+        # rows into partitions regardless of files, which would spread
+        # one file's lines over connections and lose their order
+        events = events.coalesce(1)
     stats = publish_lumberjack(
         events,
         host,
         port,
         pair_cols=["file", "host", "offset", "line"],
-        order_col="offset",
+        order_col="_order",
     )
     return {
         "shipped": sum(s["n_events"] for s in stats),
@@ -520,7 +530,6 @@ def _conf_source_dim(spark, groups):
     once events merge downstream)."""
     import re
 
-    from .schema import SOURCE_DIM_SCHEMA
     from .sources.textlog import SOURCE_STEM_RE
 
     stem_re = re.compile(SOURCE_STEM_RE)
@@ -533,7 +542,7 @@ def _conf_source_dim(spark, groups):
                     f"--conf: source {src!r} gets conflicting fields from "
                     "two files[] groups"
                 )
-    return spark.createDataFrame(sorted(dim_fields.items()), SOURCE_DIM_SCHEMA)
+    return source_dim_frame(spark, sorted(dim_fields.items()))
 
 
 def _tail_loop(spark, args) -> int:
@@ -724,6 +733,7 @@ def _tail_loop(spark, args) -> int:
                     run_id=res.run_id,
                     sinks_committed=res.sinks_committed,
                     rows_staged=res.rows_staged,
+                    backend=res.backend,
                 )
             if kept_sigs is not None:
                 # store append AFTER the publish (publish-first ordering);

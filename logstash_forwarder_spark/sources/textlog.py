@@ -22,6 +22,15 @@ for files). The Spark-native form:
   retry until the newline arrives (harvester.go:141-160), which has no
   batch equivalent, so the flag lets the caller choose.
 
+``poll_tail_once`` is the live tail: it seek-reads only each file's
+growth. A poll whose pending growth is at most ``DRIVER_HARVEST_BYTES``
+(the measured break-even of a full poll cycle) reads the bytes in the
+driver with the same function the Spark kernel runs
+(``harvest_tail_batch``) and returns a ``LocalRelation`` — no job, no
+``localCheckpoint``; ``lines_to_sequences`` over it folds into another
+LocalRelation, so ``run_pipeline`` runs the poll on its driver-local
+backend. A larger poll is a Spark job pinned by ``localCheckpoint``.
+
 ``resume_harvest`` applies registrar state ((file, resume_offset) pairs —
 metadata-sized, broadcast) so a restarted run re-reads only the tail of
 each file: the reference's seek-on-resume (registrar state loaded at
@@ -327,6 +336,17 @@ def harvest_text_stream(
 
 TAIL_STATE_SCHEMA = "file string, resume_offset long, base_line long"
 
+# A poll whose pending growth (the bytes past every file's saved offset,
+# known from the stat census before any byte is read) is at most this
+# many bytes is harvested in the driver, not by a Spark job. The value
+# is the measured break-even of a full poll cycle on a 4-core host with
+# a 1 GB driver heap (CHANGES.md has the table). It stays far inside that
+# heap — the lines are held in the driver twice, as Arrow and as a
+# LocalRelation — and far below the Arrow size above which
+# createDataFrame returns an RDD-backed frame instead of a LocalRelation
+# (spark.sql.execution.arrow.localRelationThreshold, 48 MB by default).
+DRIVER_HARVEST_BYTES = 3 << 20
+
 # head-fingerprint length: enough bytes that two different log streams
 # collide only by hash collision, small enough that the per-tick identity
 # read is one page-cached block per file
@@ -344,10 +364,10 @@ def discover_tails(
     state: dict[str, tuple],
     *,
     tail_on_rotate: bool = False,
-) -> list[tuple[str, int, int, tuple[int, str]]]:
+) -> list[tuple[str, int, int, tuple[int, str], int]]:
     """One prospector tick (prospector.go:24-78): glob the pattern(s) and
-    return (file, resume_offset, base_line, head_fp) for every file that
-    needs harvesting. New files start at (0, 0). Driver-side by design:
+    return (file, resume_offset, base_line, head_fp, size) for every file
+    that needs harvesting. New files start at (0, 0). Driver-side by design:
     the file census is registrar-sized (one entry per file), exactly the
     state the reference's prospector holds in memory.
 
@@ -397,13 +417,50 @@ def discover_tails(
                 rec_fp != (fp if n == len(head) else (n, _digest(head[:n])))
             )
         if not known and tail_on_rotate:
-            out.append((p, size, 0, fp))  # attach at EOF, skip history
+            out.append((p, size, 0, fp, size))  # attach at EOF, skip history
         elif rotated:
             # line numbering restarts with the new content
-            out.append((p, size if tail_on_rotate else 0, 0, fp))
+            out.append((p, size if tail_on_rotate else 0, 0, fp, size))
         elif size > off:
-            out.append((p, off, base, fp))
+            out.append((p, off, base, fp, size))
     return out
+
+
+def harvest_tail_batch(b: pa.RecordBatch) -> Iterator[pa.RecordBatch]:
+    """Seek-read the grown bytes of ``b``'s files — rows of (file,
+    resume_offset, base_line) — as :data:`HARVEST_SCHEMA` batches, at
+    least one: the body of :func:`tail_harvest`'s kernel, which the
+    driver also runs itself for a driver-sized poll
+    (:func:`poll_tail_once`). Gzip files and files that vanished are
+    skipped."""
+    paths = b.column("file").to_pylist()
+    offs = b.column("resume_offset").to_pylist()
+    bases = b.column("base_line").to_pylist()
+    file_col = b.column("file")
+    pending: list = []
+    pending_bytes = 0
+    for row, (p, off, base) in enumerate(zip(paths, offs, bases)):
+        try:
+            with open(p, "rb") as f:
+                if f.read(2) == b"\x1f\x8b":
+                    continue  # live gzip: not seekable, skip
+                f.seek(int(off))
+                buf = f.read()
+        except OSError:
+            continue  # rotated away mid-poll; next tick re-globs
+        # same bounded-flush discipline as _harvest_kernel: a poll that
+        # catches up on >2 GiB of growth must not overflow the
+        # assemble-time concat
+        for ln, so, nx, lines, comp in _split_file_segments(buf):
+            seg_bytes = lines.nbytes
+            if pending and pending_bytes + seg_bytes > _FLUSH_BYTES:
+                yield _assemble_harvest_batch(file_col, pending)
+                pending, pending_bytes = [], 0
+            pending.append(
+                (row, ln + int(base), so + int(off), nx + int(off), lines, comp)
+            )
+            pending_bytes += seg_bytes
+    yield _assemble_harvest_batch(file_col, pending)
 
 
 def tail_harvest(spark, tails: DataFrame) -> DataFrame:
@@ -432,35 +489,7 @@ def tail_harvest(spark, tails: DataFrame) -> DataFrame:
     """
     def kernel(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
         for b in batches:
-            paths = b.column("file").to_pylist()
-            offs = b.column("resume_offset").to_pylist()
-            bases = b.column("base_line").to_pylist()
-            file_col = b.column("file")
-            pending: list = []
-            pending_bytes = 0
-            for row, (p, off, base) in enumerate(zip(paths, offs, bases)):
-                try:
-                    with open(p, "rb") as f:
-                        if f.read(2) == b"\x1f\x8b":
-                            continue  # live gzip: not seekable, skip
-                        f.seek(int(off))
-                        buf = f.read()
-                except OSError:
-                    continue  # rotated away mid-poll; next tick re-globs
-                # same bounded-flush discipline as _harvest_kernel: a poll
-                # that catches up on >2 GiB of growth must not overflow the
-                # assemble-time concat
-                for ln, so, nx, lines, comp in _split_file_segments(buf):
-                    seg_bytes = lines.nbytes
-                    if pending and pending_bytes + seg_bytes > _FLUSH_BYTES:
-                        yield _assemble_harvest_batch(file_col, pending)
-                        pending, pending_bytes = [], 0
-                    pending.append(
-                        (row, ln + int(base), so + int(off),
-                         nx + int(off), lines, comp)
-                    )
-                    pending_bytes += seg_bytes
-            yield _assemble_harvest_batch(file_col, pending)
+            yield from harvest_tail_batch(b)
 
     return tails.select("file", "resume_offset", "base_line").mapInArrow(
         kernel, HARVEST_SCHEMA
@@ -507,6 +536,13 @@ def poll_tail_once(
     at poll granularity. Partial tails stay out of both the emitted rows
     and the state, so every line is emitted exactly once, whole.
 
+    The pending growth, Σ(size − resume_offset) over the discovered
+    files, picks where the bytes are read: at most
+    ``DRIVER_HARVEST_BYTES`` in the driver (no Spark job; the lines come
+    back as a ``LocalRelation``), more by a ``tail_harvest`` job pinned
+    with an eager ``localCheckpoint``. Both return the same rows and
+    state.
+
     ``tail_on_rotate``: the reference's ``-tail`` flag (see
     ``discover_tails``). Every discovered entry's attach point is
     pre-seeded into the returned state BEFORE harvest advances overwrite
@@ -515,32 +551,49 @@ def poll_tail_once(
     (a later tick must resume from the recorded attach point, not re-seek
     to a newer EOF and drop the interim growth)."""
     tails = discover_tails(path_glob, state, tail_on_rotate=tail_on_rotate)
-    if not tails:
-        return (
-            spark.createDataFrame([], HARVEST_SCHEMA),
-            dict(state),
-        )
     # head fingerprints are taken at DISCOVERY (pre-harvest), so a
     # rotation racing the harvest is caught by the NEXT tick's check
-    fps = {p: fp for p, _, _, fp in tails}
-    tdf = spark.createDataFrame(
-        [(p, o, b) for p, o, b, _ in tails], TAIL_STATE_SCHEMA
+    fps = {p: fp for p, _, _, fp, _ in tails}
+    todo = pa.RecordBatch.from_arrays(
+        [
+            pa.array([t[0] for t in tails], pa.string()),
+            pa.array([t[1] for t in tails], pa.int64()),
+            pa.array([t[2] for t in tails], pa.int64()),
+        ],
+        names=["file", "resume_offset", "base_line"],
     )
-    # eager checkpoint pins THIS tick's bytes: the kernel re-running
-    # lazily after the file grew again would emit lines the advanced
-    # state has not consumed (and re-emit them next poll)
-    harvested = (
-        tail_harvest(spark, tdf).filter("is_complete").localCheckpoint(eager=True)
-    )
+    if sum(size - o for _, o, _, _, size in tails) <= DRIVER_HARVEST_BYTES:
+        # driver-sized: read the bytes here. The lines become a
+        # LocalRelation, which pins this tick's snapshot by construction
+        # and which run_pipeline runs on its driver-local backend.
+        lines = pa.Table.from_batches(list(harvest_tail_batch(todo)))
+        lines = lines.filter(lines["is_complete"])
+        adv = lines.group_by("file").aggregate(
+            [("next_offset", "max"), ("line_no", "max")]
+        )
+        advanced = zip(
+            adv["file"].to_pylist(),
+            adv["next_offset_max"].to_pylist(),
+            [n + 1 for n in adv["line_no_max"].to_pylist()],
+        )
+        harvested = spark.createDataFrame(lines, HARVEST_SCHEMA)
+    else:
+        # eager checkpoint pins THIS tick's bytes: the kernel re-running
+        # lazily after the file grew again would emit lines the advanced
+        # state has not consumed (and re-emit them next poll)
+        tdf = spark.createDataFrame(pa.Table.from_batches([todo]), TAIL_STATE_SCHEMA)
+        harvested = (
+            tail_harvest(spark, tdf).filter("is_complete").localCheckpoint(eager=True)
+        )
+        advanced = advance_tail_state(harvested).collect()
     new_state = dict(state)
     if tail_on_rotate:
         # record attach points (resume_offset == size ⇒ no harvest rows
         # ⇒ no advance row) so the next tick resumes from here
-        for p, o, b, (fp_len, fp_hex) in tails:
+        for p, o, b, (fp_len, fp_hex), _ in tails:
             new_state[p] = (o, b, fp_len, fp_hex)
-    for r in advance_tail_state(harvested).collect():
-        fp_len, fp_hex = fps[r.file]
-        new_state[r.file] = (r.resume_offset, r.base_line, fp_len, fp_hex)
+    for file, resume_offset, base_line in advanced:
+        new_state[file] = (resume_offset, base_line, *fps[file])
     return harvested, new_state
 
 

@@ -5,6 +5,7 @@ from __future__ import annotations
 import glob
 import os
 
+import pyarrow.parquet as pq
 import pytest
 from pyspark.sql import functions as F
 
@@ -91,6 +92,29 @@ def test_compact_preserves_content_and_shrinks_files(
     assert _snapshot(spark, tmp_out, "c1", sinks) == before
     # idempotent: a second pass is a no-op
     assert all(not r["rewritten"] for r in compact_run(spark, tmp_out, "c1"))
+
+
+def _file_schemas(run_dir, sinks):
+    """Each sink's parquet schemas, nullability flags included."""
+    return {
+        s: {
+            pq.read_schema(os.path.join(run_dir, f)).remove_metadata()
+            for f in read_manifest(run_dir, s)["files"]
+        }
+        for s in sinks
+    }
+
+
+def test_compact_keeps_the_file_schema(spark, tmp_out, no_dir_rename):
+    """A rewrite reads through Spark, which makes every column nullable;
+    the rewritten files must still carry the publish's NOT NULL flags
+    (``host``, ``run_id``, ``part_id``, the ``fields`` map values)."""
+    run_dir, sinks = _publish(spark, tmp_out)
+    before = _file_schemas(run_dir, sinks)
+    assert all(len(v) == 1 for v in before.values())
+    assert not next(iter(before[sinks[0]])).field("host").nullable
+    assert any(r["rewritten"] for r in compact_run(spark, tmp_out, "c1"))
+    assert _file_schemas(run_dir, sinks) == before
 
 
 def test_compact_crash_before_swap_is_invisible(spark, tmp_out, no_dir_rename):

@@ -138,3 +138,95 @@ def test_sigkill_manifest_mode_then_resume(tmp_path):
     # kill at the first manifest swap: a sink published but not yet
     # checkpointed, so resume must recognise it from the manifest alone
     _kill_then_resume(str(tmp_path / "outm"), "mkill", os.path.join("_manifests", "*.json"))
+
+
+def _tail_cli(logs: str, out_dir: str) -> list[str]:
+    return [
+        sys.executable,
+        "-m",
+        "logstash_forwarder_spark.run",
+        "--tail-glob",
+        os.path.join(logs, "*.log"),
+        "--polls",
+        "1",
+        "--out",
+        out_dir,
+        "--run-id",
+        "tk",
+        "--master",
+        "local[2]",
+        "--shuffle-partitions",
+        "4",
+    ]
+
+
+def test_sigkill_mid_tail_poll_then_resume(tmp_path):
+    """The tail daemon's driver-local backend (a poll below
+    textlog.DRIVER_HARVEST_BYTES): SIGKILL the CLI at its first data
+    file or commit, restart it, and every complete line must be
+    published exactly once. The killed poll wrote no state, so the
+    restart re-harvests the same bytes under the same poll run_id and
+    the registrar skips the sinks that committed."""
+    logs = tmp_path / "logs"
+    logs.mkdir()
+    n_lines = 0
+    for i in range(4):
+        with open(logs / f"src_{i}.log", "w") as fh:
+            for j in range(5_000):
+                fh.write(f"line {j} of src_{i} " + "tok " * (j % 13) + "\n")
+                n_lines += 1
+            fh.write("partial, never shipped")
+    out = str(tmp_path / "out")
+    ckpt_glob = os.path.join(out, "_checkpoint", "*.parquet")
+    env = {**os.environ, "PYTHONPATH": os.path.dirname(os.path.dirname(__file__))}
+
+    proc = subprocess.Popen(
+        _tail_cli(str(logs), out),
+        stdout=subprocess.DEVNULL,
+        stderr=subprocess.DEVNULL,
+        start_new_session=True,
+        env=env,
+    )
+    progress = [os.path.join(out, "run_id=*", "sink=*", "*"), ckpt_glob]
+    killed = False
+    deadline = time.monotonic() + 300
+    while time.monotonic() < deadline and proc.poll() is None:
+        if any(glob.glob(g) for g in progress):
+            os.killpg(proc.pid, signal.SIGKILL)
+            killed = True
+            break
+        time.sleep(0.002)
+    proc.wait(timeout=60)
+    assert killed or proc.returncode == 0, "run neither progressed nor finished"
+
+    res = subprocess.run(
+        _tail_cli(str(logs), out), capture_output=True, text=True, timeout=300, env=env
+    )
+    assert res.returncode == 0, res.stderr[-2000:]
+    with open(os.path.join(out, "_tailstate.json")) as fh:
+        state = json.load(fh)
+    for i in range(4):
+        p = str(logs / f"src_{i}.log")
+        assert state[p][0] == os.path.getsize(p) - len("partial, never shipped")
+
+    run_dirs = glob.glob(os.path.join(out, "run_id=tk-p*"))
+    assert len(run_dirs) == 1  # the restart replayed the killed poll's id
+    files, per_sink = [], {}
+    for s in SINKS:
+        with open(os.path.join(run_dirs[0], "_manifests", f"sink={s}.json")) as fh:
+            m = json.load(fh)
+        per_sink[s] = m["row_count"]
+        files += [os.path.join(run_dirs[0], f) for f in m["files"]]
+    con = duckdb.connect()
+    n, n_distinct = con.sql(
+        f"SELECT count(*), count(DISTINCT doc_id) FROM read_parquet({files!r})"
+    ).fetchone()
+    assert n == n_lines and n_distinct == n_lines
+    lineage = dict(
+        con.sql(
+            f"SELECT sink, sum(row_count) FROM read_parquet('{ckpt_glob}') GROUP BY sink"
+        ).fetchall()
+    )
+    assert lineage == per_sink
+    (n_commit_files,) = con.sql(f"SELECT count(*) FROM glob('{ckpt_glob}')").fetchone()
+    assert n_commit_files == len(SINKS)

@@ -253,7 +253,7 @@ def test_cli_tail_ship_lumberjack(spark, tmp_path, capsys):
     d = tmp_path / "live"
     d.mkdir()
     log = d / "app.log"
-    log.write_bytes(b"one 1\ntwo 2\npartial")
+    log.write_bytes(b"one 1\ntwo 2\nsix 66\npartial")
     out = str(tmp_path / "out")
     server = LumberjackServer()
     try:
@@ -263,7 +263,8 @@ def test_cli_tail_ship_lumberjack(spark, tmp_path, capsys):
         ]
         assert main(argv) == 0
         rec = [_json.loads(x) for x in capsys.readouterr().out.strip().splitlines()]
-        assert rec[0]["shipped"] == 2 and rec[0]["acked"] == rec[0]["shipped"]
+        assert rec[0]["shipped"] == 3 and rec[0]["acked"] == rec[0]["shipped"]
+        assert rec[0]["connections"] == 1  # one file's lines, in order
         # grow the file; a NEW invocation resumes from offsets and ships
         # ONLY the growth (the completed partial + one new line)
         with open(log, "ab") as fh:
@@ -272,10 +273,11 @@ def test_cli_tail_ship_lumberjack(spark, tmp_path, capsys):
         rec2 = [_json.loads(x) for x in capsys.readouterr().out.strip().splitlines()]
         assert rec2[0]["shipped"] == 2
         lines = [e["line"] for e in server.events]
-        assert lines == ["one 1", "two 2", "partial three", "four 4"]
-        # frame identity is the replay-stable (file, offset) pair
-        offs = sorted(int(e["offset"]) for e in server.events)
-        assert offs == [0, 6, 12, 26]
+        assert lines == ["one 1", "two 2", "six 66", "partial three", "four 4"]
+        # frame identity is the replay-stable (file, offset) pair, and
+        # frames arrive in byte order (6 before 12)
+        offs = [int(e["offset"]) for e in server.events]
+        assert offs == [0, 6, 12, 19, 33]
     finally:
         server.close()
 

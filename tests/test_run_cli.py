@@ -132,6 +132,7 @@ def test_cli_tail_glob_polls(spark, tmp_path, capsys):
     assert rc == 0
     lines = [_json.loads(x) for x in capsys.readouterr().out.strip().splitlines()]
     assert lines[0]["new_lines"] == 2 and lines[0]["run_id"].startswith("tail1-p0-")
+    assert lines[0]["backend"] == "local"  # a driver-sized poll
     assert lines[-1]["total_lines"] == 2
 
     # grow the file (completing the partial), then a NEW invocation
