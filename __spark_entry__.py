@@ -14,12 +14,9 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from logstash_forwarder_spark import queries as Q
-from logstash_forwarder_spark.datagen import default_routes
+from logstash_forwarder_spark.datagen import source_dim_frame
 from logstash_forwarder_spark.operators.aggregate import sink_source_counts
-from logstash_forwarder_spark.operators.enrich import enrich_stage
-from logstash_forwarder_spark.operators.parse import parse_stage
-from logstash_forwarder_spark.operators.route import route_stage
-from logstash_forwarder_spark.schema import SOURCE_DIM_SCHEMA
+from logstash_forwarder_spark.pipeline import PipelineSpec, build_plan
 
 SF0001 = "/root/testdata/sf0.001"
 
@@ -41,18 +38,17 @@ def documents_as_sequences(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _sequences_dim(spark: SparkSession) -> DataFrame:
-    rows = [(s, {"type": t, "env": e}) for s, t, e in Q.DOC_DIM]
-    return spark.createDataFrame(rows, SOURCE_DIM_SCHEMA)
+    return source_dim_frame(
+        spark, [(s, {"type": t, "env": e}) for s, t, e in Q.DOC_DIM]
+    )
 
 
 def flagship(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Full pipeline: vectorized parse UDF → broadcast enrich → route →
-    per-(sink, source) aggregate."""
+    """Full pipeline: the publish plan (one parse + enrich kernel → route)
+    → per-(sink, source) aggregate."""
     seqs = documents_as_sequences(spark, sf_dir)
-    parsed = parse_stage(seqs)
-    enriched = enrich_stage(parsed, _sequences_dim(spark), run_id="entry")
-    routed = route_stage(enriched, default_routes())
-    return sink_source_counts(routed)
+    spec = PipelineSpec(out_dir="", run_id="entry")  # build_plan writes nothing
+    return sink_source_counts(build_plan(seqs, _sequences_dim(spark), spec))
 
 
 def entry(spark: SparkSession) -> DataFrame:

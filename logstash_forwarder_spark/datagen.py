@@ -99,9 +99,9 @@ def source_dim_frame(
     spark: SparkSession, rows: list[tuple[str, dict[str, str]]]
 ) -> DataFrame:
     """An enrich dim of (source, fields) rows, built from Arrow so that it
-    is a ``LocalRelation``: reading it — the enrich broadcast, the local
-    backend's collect — starts no Spark job and no Python worker, where a
-    frame of pickled rows starts both on every read."""
+    is a ``LocalRelation``: the enrich's collect of its rows starts no
+    Spark job and no Python worker, where a frame of pickled rows starts
+    both on every read."""
     from pyspark.sql.pandas.types import to_arrow_schema
 
     from .schema import SOURCE_DIM_SCHEMA

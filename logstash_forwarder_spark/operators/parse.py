@@ -116,12 +116,13 @@ def parse_flat(flat: np.ndarray, offsets: np.ndarray) -> dict[str, np.ndarray]:
     }
 
 
-def parse_batch(b: pa.RecordBatch, tokens_col: str = "tokens") -> pa.RecordBatch:
-    """``b`` with the parsed columns appended: zero-copy on the tokens
-    column's Arrow buffers, no per-row ndarray objects, the nullable ints
-    masked null for empty rows at the Arrow level."""
+def parse_batch(b: pa.RecordBatch | pa.Table, tokens_col: str = "tokens"):
+    """``b`` (a batch, or a table as the driver fetches it) with the
+    parsed columns appended: zero-copy on the tokens column's Arrow
+    buffers, no per-row ndarray objects, the nullable ints masked null
+    for empty rows at the Arrow level."""
     col = b.column(b.schema.get_field_index(tokens_col))
-    if isinstance(col, pa.ChunkedArray):  # pragma: no cover
+    if isinstance(col, pa.ChunkedArray):
         col = col.combine_chunks()
     flat = col.values.to_numpy(zero_copy_only=True)
     offsets = col.offsets.to_numpy(zero_copy_only=True).astype(np.int64)
@@ -136,7 +137,7 @@ def parse_batch(b: pa.RecordBatch, tokens_col: str = "tokens") -> pa.RecordBatch
         pa.array(k["payload_class"].astype(object), pa.string()),
     ]
     names = [f.name for f in b.schema] + PARSED_COLS
-    return pa.RecordBatch.from_arrays(arrays, names=names)
+    return type(b).from_arrays(arrays, names=names)
 
 
 def parse_stage(df: DataFrame, tokens_col: str = "tokens") -> DataFrame:

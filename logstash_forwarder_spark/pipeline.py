@@ -33,16 +33,20 @@ One logical run = one envelope/ack cycle of the reference
   at-least-once, SURVEY §3.4). No file or directory is ever renamed
   but the one-file manifest swap, so the same protocol is correct on
   object stores (S3/GCS).
-* **Two backends, one structural rule.** When ``sequences`` is already in
-  the driver — its optimized plan is a ``LocalRelation``, as for a tail
-  poll harvested in the driver (sources/textlog.py) — the same kernels
-  run there: the rows are fetched, ``parse_batch`` parses them, pyarrow
-  joins the dim's rows, Catalyst adds the metadata and route columns
-  over one LocalRelation (the one predicate compiler), and the writer
-  body the Spark kernel runs writes one file per sink — two Spark jobs,
-  no Python worker, the same file schema. Anything else (a parquet
-  scan, a streaming micro-batch, a checkpointed poll) runs the Spark
-  backend. There is no size threshold here: the input's plan decides,
+* **One kernel, two backends.** Parse and enrich are one Arrow kernel,
+  ``parse_enrich`` (operators/enrich.py): ``parse_batch``, then a pyarrow
+  left join of the dim's rows, collected once in the driver. When
+  ``sequences`` is already in the driver — its optimized plan is a
+  ``LocalRelation``, as for a tail poll harvested in the driver
+  (sources/textlog.py) — the rows are fetched and the kernel runs there,
+  and the writer body the Spark kernel runs writes one file per sink:
+  two Spark jobs (the fetch and the route), no Python worker. Anything
+  else (a parquet scan, a streaming micro-batch, a checkpointed poll)
+  runs the kernel in one ``mapInArrow`` and the writer in the same job:
+  one Spark job per publish. Both backends then share the route tail
+  (``_route``: the metadata columns, the Catalyst route predicates — the
+  one predicate compiler — and the filter of committed sinks) and the
+  file schema. There is no size threshold here: the input's plan decides,
   and ``RunResult.backend`` records which ran. Both commit through the
   same loop below.
 * **Metrics from manifests.** ``_metrics`` (per-(sink, source) row count,
@@ -60,17 +64,19 @@ import time
 import uuid
 from dataclasses import dataclass, field
 
-import numpy as np
 import pyarrow as pa
 import pyarrow.parquet as pq
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
-from pyspark.sql import types as T
-from pyspark.sql.pandas.types import to_arrow_schema
 
 from .datagen import default_routes
-from .operators.enrich import annotate, enrich_stage
-from .operators.parse import parse_batch, parse_stage, parsed_schema
+from .operators.enrich import (
+    annotate,
+    dim_rows,
+    enriched_schema,
+    parse_enrich,
+    parse_enrich_stage,
+)
 from .operators.route import route_stage, sink_names
 from .plans.manifest import (
     fold_stats,
@@ -134,10 +140,25 @@ class RunResult:
 def build_plan(
     sequences: DataFrame, source_dim: DataFrame, spec: PipelineSpec
 ) -> DataFrame:
-    """The logical plan: parse → enrich → route. Pure, lazily evaluated."""
-    parsed = parse_stage(sequences)
-    enriched = enrich_stage(parsed, source_dim, run_id=spec.run_id)
-    return route_stage(enriched, spec.routes)
+    """The logical plan: parse → enrich (one ``mapInArrow``) → route.
+    Pure, lazily evaluated, but for collecting the dim's rows."""
+    return _route(parse_enrich_stage(sequences, source_dim), spec)
+
+
+def _route(
+    enriched: DataFrame, spec: PipelineSpec, done=(), part_id=None
+) -> DataFrame:
+    """The route tail both backends share: the metadata columns, the
+    sink, minus the sinks already committed (excluded before the write)."""
+    routed = route_stage(annotate(enriched, spec.run_id, part_id), spec.routes)
+    if done:
+        routed = routed.filter(~F.col("sink").isin(sorted(done)))
+    return routed
+
+
+def _local_relation(df: DataFrame):
+    plan = df._jdf.queryExecution().optimizedPlan()
+    return plan if plan.getClass().getSimpleName() == "LocalRelation" else None
 
 
 def is_driver_local(df: DataFrame) -> bool:
@@ -146,8 +167,14 @@ def is_driver_local(df: DataFrame) -> bool:
     Arrow or Python data in the driver and every filter or projection
     Catalyst folds into one (a driver-harvested tail poll's
     ``lines_to_sequences``, for one)."""
-    plan = df._jdf.queryExecution().optimizedPlan()
-    return plan.getClass().getSimpleName() == "LocalRelation"
+    return _local_relation(df) is not None
+
+
+def row_count(df: DataFrame) -> int:
+    """``df.count()``, but a driver-local ``df``'s rows are counted where
+    they are, with no Spark job."""
+    local = _local_relation(df)
+    return df.count() if local is None else local.data().size()
 
 
 def run_pipeline(
@@ -175,7 +202,7 @@ def run_pipeline(
         for sink in todo:
             gc_sink(run_dir, sink)
         if backend == "local":
-            stats = _write_local(spark, sequences, source_dim, spec, done, run_dir)
+            stats = _write_local(sequences, source_dim, spec, done, run_dir)
         else:
             stats = write_sink_files(_routed(sequences, source_dim, spec, done), run_dir)
         files = fold_stats(stats, ["sink", "file"], [])
@@ -213,12 +240,9 @@ def run_pipeline(
 def _routed(
     sequences: DataFrame, source_dim: DataFrame, spec: PipelineSpec, done
 ) -> DataFrame:
-    """The Spark backend's routed rows: the plan, minus the sinks already
-    committed (excluded before the expensive write), range-sorted when
+    """The Spark backend's routed rows, range-sorted when
     ``spec.sort_col`` asks for it."""
-    routed = build_plan(sequences, source_dim, spec)
-    if done:
-        routed = routed.filter(~F.col("sink").isin(sorted(done)))
+    routed = _route(parse_enrich_stage(sequences, source_dim), spec, done)
     if spec.sort_col:
         range_args = ("sink", spec.sort_col)
         if spec.sort_partitions:
@@ -230,62 +254,22 @@ def _routed(
 
 
 def _write_local(
-    spark: SparkSession,
     sequences: DataFrame,
     source_dim: DataFrame,
     spec: PipelineSpec,
     done,
     run_dir: str,
 ) -> pa.Table:
-    """The driver-local backend: ``build_plan`` over rows in the driver,
-    in two Spark jobs and no Python worker. Fetch the rows (one job),
-    ``parse_batch`` them, left-join the dim's rows in pyarrow (collecting
-    a LocalRelation dim starts no job, where a broadcast starts one),
-    add the metadata and route columns with the Spark backend's own
-    Catalyst expressions over one LocalRelation (one job), and write one
-    file per sink through the shared writer body. Columns keep
-    ``build_plan``'s names, order and types, so both backends write the
-    same file schema. ``part_id`` is 0: the driver is one partition."""
-    rows = sequences.toArrow()
-    batches = rows.to_batches() or [pa.RecordBatch.from_pylist([], rows.schema)]
-    parsed = pa.Table.from_batches([parse_batch(b) for b in batches])
-
-    dim = pa.Table.from_pylist(
-        [r.asDict() for r in source_dim.collect()],
-        schema=to_arrow_schema(source_dim.schema),
+    """The driver-local backend, in two Spark jobs and no Python worker:
+    fetch the rows (one job), run ``parse_enrich`` on the fetched table,
+    route it through the shared route tail over one LocalRelation (one
+    job), and write one file per sink through the shared writer body.
+    ``part_id`` is 0: the driver is one partition."""
+    enriched = sequences.sparkSession.createDataFrame(
+        parse_enrich(sequences.toArrow(), dim_rows(source_dim)),
+        enriched_schema(sequences.schema, source_dim.schema),
     )
-    hits = (
-        pa.table({"source": parsed["source"], "_row": np.arange(len(parsed))})
-        .join(
-            pa.table({"source": dim["source"], "_dim": np.arange(len(dim))}),
-            "source",
-            join_type="left outer",
-        )
-        .sort_by("_row")
-    )
-    # enrich_stage's USING-join layout: the key, the rest of the parsed
-    # columns, then the dim's, nullable
-    extra = [f for f in source_dim.schema.fields if f.name != "source"]
-    enriched = parsed.take(hits["_row"])
-    for f in extra:
-        enriched = enriched.append_column(f.name, dim[f.name].take(hits["_dim"]))
-    left = T.StructType.fromDDL(parsed_schema(sequences.schema))
-    schema = T.StructType(
-        [left["source"]]
-        + [f for f in left.fields if f.name != "source"]
-        + [T.StructField(f.name, f.dataType, True) for f in extra]
-    )
-    routed = route_stage(
-        annotate(
-            spark.createDataFrame(enriched.select(schema.names), schema),
-            run_id=spec.run_id,
-            part_id=F.lit(0),
-        ),
-        spec.routes,
-    )
-    if done:
-        routed = routed.filter(~F.col("sink").isin(sorted(done)))
-    table = routed.toArrow()
+    table = _route(enriched, spec, done, F.lit(0)).toArrow()
     if spec.sort_col:
         table = table.sort_by(
             [("sink", "ascending"), (spec.sort_col, "ascending")],

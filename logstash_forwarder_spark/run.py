@@ -17,7 +17,7 @@ from pyspark.sql import SparkSession
 from pyspark.sql import functions as F
 
 from .datagen import gen_sequences, gen_source_dim, source_dim_frame
-from .pipeline import PipelineSpec, is_driver_local, run_pipeline
+from .pipeline import PipelineSpec, is_driver_local, row_count, run_pipeline
 from .schema import SEQUENCES_SCHEMA
 
 
@@ -662,7 +662,7 @@ def _tail_loop(spark, args) -> int:
         harvested, new_state = poll_tail_once(
             spark, tail_globs, state, tail_on_rotate=args.tail_from_end
         )
-        n_lines = harvested.count()
+        n_lines = row_count(harvested)
         rec = {"poll": poll_no, "new_lines": n_lines}
         if n_lines and ship_to is not None:
             rec.update(_ship_lumberjack(harvested, *ship_to))

@@ -129,10 +129,11 @@ def test_e2e_scaled_against_oracle(spark, tmp_out, no_dir_rename):
     assert 0.5 < frac < 0.7
 
 
-def test_publish_runs_at_most_two_jobs(spark, tmp_out):
-    """One job per publish: a run without sort_col starts the dim
-    broadcast and the write — the writer returns every file's statistics,
-    so nothing is listed, re-read or aggregated after it."""
+def test_publish_runs_one_job(spark, tmp_out):
+    """One job per publish: a Spark-backend run without sort_col parses,
+    enriches (the dim rides the kernel, no broadcast job) and writes in
+    one job — the writer returns every file's statistics, so nothing is
+    listed, re-read or aggregated after it."""
     seqs = gen_sequences(spark, 500)
     dim = gen_source_dim(spark)
     sc = spark.sparkContext
@@ -142,8 +143,8 @@ def test_publish_runs_at_most_two_jobs(spark, tmp_out):
         jobs = sc.statusTracker().getJobIdsForGroup("publish-jobs")
     finally:
         sc.setLocalProperty("spark.jobGroup.id", None)
-    assert res.rows_staged == 500
-    assert len(jobs) <= 2, jobs
+    assert res.backend == "spark" and res.rows_staged == 500
+    assert len(jobs) == 1, jobs
 
 
 def _nullable(j):

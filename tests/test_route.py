@@ -4,7 +4,7 @@ import pytest
 from pyspark.sql import functions as F
 
 from logstash_forwarder_spark.datagen import default_routes, gen_sequences, gen_source_dim
-from logstash_forwarder_spark.operators.enrich import enrich_stage
+from logstash_forwarder_spark.pipeline import PipelineSpec, build_plan
 from logstash_forwarder_spark.operators.route import (
     RouteError,
     compile_routes,
@@ -20,10 +20,10 @@ def test_route_requires_catchall():
         compile_routes([])
 
 
-def test_route_every_row_exactly_one_sink(spark):
+def test_route_every_row_exactly_one_sink(spark, tmp_out):
     seqs = gen_sequences(spark, 2_000)
-    enriched = enrich_stage(seqs, gen_source_dim(spark))
-    routed = route_stage(enriched, default_routes())
+    spec = PipelineSpec(out_dir=tmp_out, routes=default_routes())
+    routed = build_plan(seqs, gen_source_dim(spark), spec)
     assert routed.filter(F.col("sink").isNull()).count() == 0
     assert routed.count() == 2_000
     found = {r.sink for r in routed.select("sink").distinct().collect()}

@@ -169,6 +169,46 @@ def test_cli_tail_glob_polls(spark, tmp_path, capsys):
     assert n == 4 and distinct == 4
 
 
+def test_cli_driver_sized_poll_starts_no_job_of_its_own(
+    spark, tmp_path, capsys, monkeypatch
+):
+    """A driver-harvested poll is counted in the driver: the tail loop
+    starts no Spark job beyond the ones run_pipeline starts."""
+    import logstash_forwarder_spark.run as run_mod
+
+    d = tmp_path / "live"
+    d.mkdir()
+    (d / "app.log").write_bytes(b"alpha one\nbeta two\ngamma three\n")
+    sc = spark.sparkContext
+    group = "tail-poll-jobs"
+    in_pipeline: list[int] = []
+    real = run_mod.run_pipeline
+
+    def counted(*args, **kwargs):
+        before = set(sc.statusTracker().getJobIdsForGroup(group))
+        try:
+            return real(*args, **kwargs)
+        finally:
+            after = set(sc.statusTracker().getJobIdsForGroup(group))
+            in_pipeline.extend(after - before)
+
+    monkeypatch.setattr(run_mod, "run_pipeline", counted)
+    sc.setJobGroup(group, "one tail poll")
+    try:
+        rc = main([
+            "--tail-glob", f"{d}/*.log", "--polls", "1",
+            "--out", str(tmp_path / "out"), "--run-id", "jobs",
+        ])
+        jobs = sc.statusTracker().getJobIdsForGroup(group)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert rc == 0
+    lines = [json.loads(x) for x in capsys.readouterr().out.strip().splitlines()]
+    assert lines[0]["new_lines"] == 3 and lines[0]["backend"] == "local"
+    assert lines[-1]["total_lines"] == 3
+    assert in_pipeline and sorted(jobs) == sorted(in_pipeline)
+
+
 def test_cli_compact_checkpoint(spark, tmp_path, capsys):
     import json as _json
 

@@ -14,15 +14,9 @@ sys.path.insert(0, str(REPO))
 
 from pyspark.sql import functions as F  # noqa: E402
 
-from logstash_forwarder_spark.datagen import (  # noqa: E402
-    default_routes,
-    gen_sequences,
-    gen_source_dim,
-)
+from logstash_forwarder_spark.datagen import gen_sequences, gen_source_dim  # noqa: E402
 from logstash_forwarder_spark.operators.aggregate import sink_source_counts  # noqa: E402
-from logstash_forwarder_spark.operators.enrich import enrich_stage  # noqa: E402
-from logstash_forwarder_spark.operators.parse import parse_stage  # noqa: E402
-from logstash_forwarder_spark.operators.route import route_stage  # noqa: E402
+from logstash_forwarder_spark.pipeline import PipelineSpec, build_plan  # noqa: E402
 from logstash_forwarder_spark.session import get_spark  # noqa: E402
 
 SF_DIR = "/root/testdata/sf0.01"
@@ -53,18 +47,18 @@ def main() -> None:
 
     seqs = gen_sequences(spark, 1000)
     dim = gen_source_dim(spark)
-    enriched = enrich_stage(parse_stage(seqs), dim, run_id="plan")
+    routed = build_plan(seqs, dim, PipelineSpec(out_dir="", run_id="plan"))
     sections.append(
         (
-            "Parse + enrich (O-P1 + O-J1)",
-            "Exactly ONE Python boundary (MapInArrow — the parse kernel runs once, "
-            "zero-copy on Arrow buffers) and a BroadcastHashJoin with the dim "
-            "on the build side — never SortMergeJoin.",
-            plan_of(enriched),
+            "Parse + enrich + route (O-P1 + O-J1 + O-R1, the publish plan)",
+            "Exactly ONE MapInArrow before the writer — the parse + enrich "
+            "kernel, zero-copy on Arrow buffers, the dim's rows in its "
+            "closure — then the route Project. No BroadcastExchange, no join "
+            "and no Exchange (without sort_col): the publish is one job.",
+            plan_of(routed),
         )
     )
 
-    routed = route_stage(enriched, default_routes())
     agg = sink_source_counts(routed)
     sections.append(
         (
