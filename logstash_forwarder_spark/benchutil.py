@@ -95,12 +95,6 @@ def best(trials: list[dict]) -> dict:
     return min(trials, key=lambda t: t["sec"])
 
 
-def consensus_reached(trials: list[dict]) -> bool:
-    """False iff timed_trials exhausted its attempt cap without satisfying
-    the quiet-sample quota / agreement tolerance."""
-    return all(t.get("consensus", True) for t in trials)
-
-
 def consensus_over(
     trials: list[dict], n_trials: int = 2, agree: float = 0.2
 ) -> bool:

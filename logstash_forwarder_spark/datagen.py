@@ -128,12 +128,6 @@ def default_routes() -> list[tuple[int, str, str]]:
     ]
 
 
-def gen_routes(spark: SparkSession) -> DataFrame:
-    from .schema import ROUTES_SCHEMA
-
-    return spark.createDataFrame(default_routes(), ROUTES_SCHEMA)
-
-
 def gen_media(spark: SparkSession, n_rows: int, *, seed: int = SEED) -> DataFrame:
     """Multimodal fixture: opaque binary payloads + typed metadata.
 

@@ -229,9 +229,3 @@ def connected_components_star(
         for df in live:
             _release_checkpoint(df)
         raise
-
-
-def dedup_keepers(components: DataFrame) -> DataFrame:
-    """One representative per cluster: the cluster label itself (= min
-    node id, matching dedup_exact's min-id keeper convention)."""
-    return components.select(F.col("cluster").alias("keeper")).distinct()

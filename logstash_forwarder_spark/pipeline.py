@@ -14,22 +14,22 @@ One logical run = one envelope/ack cycle of the reference
   manifests' ``sources`` — K sinks do not mean K scans of a 100 TB
   input, and nothing is listed or re-read after the write.
 * **Checkpoint anti-filter.** On resume, sinks already committed for this
-  ``run_id`` are excluded *before* the write (O-X3's left-anti join,
-  degenerated to an ``isin`` filter because the commit key is the sink) —
-  re-running a half-failed run re-does only uncommitted work.
-* **One commit protocol, checkpoint-after-data.** Data files land once in
+  ``run_id`` (those with a manifest) are excluded *before* the write
+  (O-X3's left-anti join, degenerated to an ``isin`` filter because the
+  commit key is the sink) — re-running a half-failed run re-does only
+  uncommitted work.
+* **One commit record per sink, after the data.** Data files land once in
   their final ``sink=S/`` directory and are never renamed — there is no
-  task-commit protocol under the writer; each sink is then published by
-  atomically swapping ONE small manifest file that names them
-  (plans/manifest.py), and its lineage rows are committed second through
-  ``Registrar.commit`` — every sink, empty or not, the same way. The
-  lineage is the writer's per-(sink, input partition) statistics; its
-  per-(sink, source) statistics ride in the sink's manifest
-  (``sources``). Readers resolve through the manifest, so files no
-  manifest names — a failed task attempt's partial file among them — are
-  invisible. A crash between publish and checkpoint leaves a manifest
-  the registrar never adopted, which resume deletes and redoes →
-  exactly-once routed rows (strictly stronger than the reference's
+  task-commit protocol under the writer; each sink is then committed by
+  ``Registrar.commit``: ONE atomic swap of a small manifest file
+  (plans/manifest.py) that names the files and carries the sink's
+  per-(sink, source) statistics (``sources``), its lineage (the writer's
+  per-(sink, input partition) statistics) and its ``committed_at`` —
+  every sink, empty or not, the same way. Readers resolve through the
+  manifest, so files no manifest names — a failed task attempt's partial
+  file, or a sink whose commit a crash pre-empted — are invisible, and
+  resume deletes them (``compact.gc_unreferenced``) and redoes the sink
+  → exactly-once routed rows (strictly stronger than the reference's
   at-least-once, SURVEY §3.4). No file or directory is ever renamed
   but the one-file manifest swap, so the same protocol is correct on
   object stores (S3/GCS).
@@ -78,12 +78,11 @@ from .operators.enrich import (
     parse_enrich_stage,
 )
 from .operators.route import route_stage, sink_names
+from .plans.compact import gc_unreferenced
 from .plans.manifest import (
+    committed,
     fold_stats,
-    gc_sink,
     publish_file,
-    publish_manifest,
-    published_sinks,
     read_manifest,
     resolve_sink_paths,
     sink_sources,
@@ -193,14 +192,14 @@ def run_pipeline(
     run_dir = os.path.join(spec.out_dir, f"run_id={spec.run_id}")
     os.makedirs(run_dir, exist_ok=True)
 
-    committed: list[str] = []
+    new_commits: list[str] = []
     rows_staged = 0
     if todo:
         # GC unreferenced leftovers of crashed attempts, then write data
         # files ONCE, under final names, returning each file's
         # per-(input partition, source) statistics — metadata-sized
         for sink in todo:
-            gc_sink(run_dir, sink)
+            gc_unreferenced(run_dir, sink)
         if backend == "local":
             stats = _write_local(sequences, source_dim, spec, done, run_dir)
         else:
@@ -211,24 +210,26 @@ def run_pipeline(
         sources = sink_sources(stats)
 
         for sink in todo:
-            # publish = the ack (O-R5: one atomic FILE swap names the data
-            # files); checkpoint second. A crash between the two leaves a
-            # manifest the registrar never adopted, which resume's gc_sink
-            # deletes and redoes (idempotent re-commit). A sink no row was
-            # routed to commits an empty manifest and the sentinel row.
+            # the commit = the ack (O-R5): one atomic FILE swap names the
+            # data files and records the lineage. A sink no row was routed
+            # to commits an empty manifest.
             rows = [
                 LineageRow(r["part_id"], r["row_count"], r["token_total"] or 0)
                 for r in lineage.get(sink, [])
-            ] or [LineageRow(-1, 0, 0)]
-            paths = [r["file"] for r in files.get(sink, [])]
-            publish_manifest(run_dir, sink, paths, sources.get(sink, []))
-            reg.commit(spec.run_id, sink, rows)
-            committed.append(sink)
+            ]
+            reg.commit(
+                spec.run_id,
+                sink,
+                rows,
+                files=[r["file"] for r in files.get(sink, [])],
+                sources=sources.get(sink, []),
+            )
+            new_commits.append(sink)
             rows_staged += sum(r.row_count for r in rows)
 
     return RunResult(
         run_id=spec.run_id,
-        sinks_committed=committed,
+        sinks_committed=new_commits,
         sinks_skipped=sorted(done),
         rows_staged=rows_staged,
         metrics_path=_publish_metrics(run_dir, all_sinks),
@@ -319,7 +320,8 @@ def read_table(
     in place before the manifest commit, so the glob can see a crashed
     attempt's uncommitted orphans (and, after a compaction crash,
     superseded originals). This reader takes each run's committed sinks
-    from its ``_manifests/`` and resolves them the way read_sink does,
+    from its ``_manifests/`` (``manifest.committed``, the enumerator the
+    registrar reads through) and resolves them the way read_sink does,
     keeping both hive partition columns (``run_id``, ``sink``) via
     basePath. This is the consumer surface for the tail daemon's many
     per-poll runs.
@@ -334,17 +336,12 @@ def read_table(
     irrelevant, the payloads are identical by construction). Same
     single-shuffle ``min_by(struct(*), run_id)`` shape as dedup_exact —
     no join back."""
-    run_dirs = sorted(
-        d
-        for d in os.listdir(out_dir)
-        if d.startswith("run_id=")
-        and os.path.isdir(os.path.join(out_dir, d))
-    )
-    sources: list[str] = []
-    for rd in run_dirs:
-        run_dir = os.path.join(out_dir, rd)
-        run_sinks = published_sinks(run_dir) if sinks is None else sinks
-        sources.extend(resolve_sink_paths(run_dir, run_sinks))
+    sources = [
+        path
+        for _, run_dir, sink in committed(out_dir)
+        if sinks is None or sink in sinks
+        for path in resolve_sink_paths(run_dir, [sink])
+    ]
     if not sources:
         raise ValueError(f"no published data under {out_dir}")
     df = spark.read.option("basePath", out_dir).parquet(*sources)

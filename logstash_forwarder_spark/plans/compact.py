@@ -32,17 +32,25 @@ swap):
    its ``row_count`` (otherwise the new files are deleted and the swap
    refused — compaction must be content-preserving by proof, not by
    hope);
-4. atomically swap the manifest to the new file list;
+4. atomically swap the manifest to the new file list — the manifest is
+   the sink's one commit record, so the swap carries its ``lineage`` and
+   ``committed_at`` over unchanged;
 5. delete the now-unreferenced old files (per-key deletes).
 
 Crash anywhere before step 4 leaves only UNREFERENCED new files —
 invisible to every reader; a crash after 4 leaves unreferenced OLD
 files. Both are garbage, not corruption: the next compaction of the sink
 removes anything the manifest doesn't name before it does anything else,
-and re-running compaction is idempotent. Lineage, row counts, and
-registrar snapshots are all content-addressed to what the manifest
-serves, so time-travel reads (`--read-as-of`) remain valid across a
+and re-running compaction is idempotent. The registrar's snapshot of the
+sink (id, instant, lineage) is what the manifest records, unchanged by
+step 4, so time-travel reads (`--read-as-of`) remain valid across a
 compaction — the bytes served are identical.
+
+:func:`gc_unreferenced` is the package's one data GC: the same rule
+(delete what the manifest does not name) cleans a crashed compaction
+here, a crashed publish on resume (``pipeline.run_pipeline``, where the
+uncommitted sink has no manifest, so nothing is named) and an expired
+sink's files (``Registrar.expire_snapshots``).
 
 Reference analog: the spooler's "flush small batches, let downstream
 consolidate" contract (spooler.go's size/timeout flush); this is the
@@ -78,26 +86,30 @@ from .manifest import (
 DEFAULT_TARGET_BYTES = 128 * 1024 * 1024
 
 
-def gc_unreferenced(run_dir: str, sink: str) -> int:
-    """Delete every data file in a COMMITTED sink's directory that its
-    manifest does not name (compaction crash leftovers — referenced
-    bytes are never touched). Returns files removed."""
-    m = read_manifest(run_dir, sink)
-    if m is None:
-        raise ValueError(
-            f"sink {sink!r} has no manifest in {run_dir} — gc_unreferenced "
-            "is for committed sinks (resume-path cleanup of uncommitted "
-            "sinks is plans/manifest.gc_sink)"
-        )
-    referenced = {os.path.join(run_dir, f) for f in m["files"]}
+def gc_unreferenced(run_dir: str, sink: str, referenced=None) -> int:
+    """The package's one data GC: delete every file in ``sink``'s
+    directory that ``referenced`` (paths relative to ``run_dir``) does not
+    name — by default the files its manifest names, and none when it has
+    no manifest. One rule serves resume (an uncommitted sink's files are a
+    crashed attempt's orphans), compaction (a committed sink's unnamed
+    files are a crashed compaction's leftovers; referenced bytes are never
+    touched) and expiry (which passes no names, before it removes the
+    manifest). Per-key deletes only. Returns files removed."""
     d = os.path.join(run_dir, f"sink={sink}")
+    try:
+        names = os.listdir(d)
+    except FileNotFoundError:
+        return 0
+    if referenced is None:
+        m = read_manifest(run_dir, sink)
+        referenced = m["files"] if m else ()
+    keep = {os.path.join(run_dir, f) for f in referenced}
     n = 0
-    if os.path.isdir(d):
-        for f in os.listdir(d):
-            p = os.path.join(d, f)
-            if f.endswith(".parquet") and os.path.isfile(p) and p not in referenced:
-                os.remove(p)
-                n += 1
+    for f in names:
+        p = os.path.join(d, f)
+        if p not in keep and os.path.isfile(p):
+            os.remove(p)
+            n += 1
     return n
 
 
@@ -169,8 +181,12 @@ def compact_sink(
             f"{'match' if same else 'differ'} — refusing to swap"
         )
 
-    # 4. the commit point; 5. old files are unreferenced from here on
-    publish_manifest(run_dir, sink, new_files, sources)
+    # 4. the commit point, keeping the commit's lineage and instant (the
+    # snapshot the manifest records is unchanged); 5. old files are
+    # unreferenced from here on
+    publish_manifest(
+        run_dir, sink, new_files, sources, m["lineage"], m["committed_at"]
+    )
     gc_unreferenced(run_dir, sink)
     report.update(files_after=len(new_files), rewritten=True)
     return report

@@ -9,13 +9,20 @@ the same way:
 
 * data files are written ONCE, under unique names, directly in their final
   partition directory — never moved;
-* a commit atomically publishes ONE SMALL MANIFEST file listing exactly the
-  data files that belong to the table; readers resolve files through the
-  manifest (:func:`resolve_sink_paths`) and ignore everything else in the
-  directory — a sink with no manifest is uncommitted and has no readable
-  data;
+* a commit atomically publishes ONE SMALL MANIFEST file
+  (:func:`publish_manifest`, the package's only commit writer) listing
+  exactly the data files that belong to the sink, with the sink's
+  per-source statistics, its lineage rows and its commit instant; readers
+  resolve files through the manifest (:func:`resolve_sink_paths`) and
+  ignore everything else in the directory — a sink with no manifest is
+  uncommitted and has no readable data;
 * crash recovery = delete unreferenced files and redo — readers never saw
   them because no manifest named them.
+
+The manifest is the sink's one commit record: resume, lineage, the
+snapshot log and time travel (plans/registrar.py) and the whole-table
+read (``pipeline.read_table``) all enumerate the table's commits through
+:func:`committed`, one listing of each run's ``_manifests/``.
 
 No commit in the package renames anything but the one-file swap. Every
 committed data file — a publish's and a compaction's — is written by ONE
@@ -38,6 +45,7 @@ import json
 import os
 import uuid
 from collections.abc import Iterator
+from datetime import datetime, timezone
 
 import pyarrow as pa
 import pyarrow.compute as pc
@@ -67,7 +75,8 @@ SOURCE_STATS = ["row_count", "token_total", "max_tokens"]
 def publish_file(final: str, data) -> str:
     """The one primitive a store must provide: atomically swap one small
     file into place — the package's only write-temp-then-rename, behind
-    manifests, registrar commits, the registrar index and the tail state.
+    manifests, the run's ``_metrics``, the tail state and the signature
+    store's sidecar.
 
     ``data`` (bytes-like) goes to a temp file in ``final``'s directory
     named ``.<basename>.<uuid>.tmp``: no ``*.parquet`` or ``*.json`` glob
@@ -211,20 +220,32 @@ def _manifest_path(run_dir: str, sink: str) -> str:
 
 
 def publish_manifest(
-    run_dir: str, sink: str, files: list[str], sources: list[dict]
+    run_dir: str,
+    sink: str,
+    files: list[str],
+    sources: list[dict],
+    lineage: list[dict] = (),
+    committed_at: str | None = None,
 ) -> str:
-    """Atomically publish sink's manifest: the commit point for its data.
-    `files` are paths relative to run_dir (portable across store mounts);
-    `sources` are the sink's per-source statistics (``source``,
-    ``row_count``, ``token_total``, ``max_tokens``), from which the run's
-    ``_metrics`` is built without re-reading data. ``row_count`` is their
-    sum."""
+    """Atomically publish sink's manifest: the commit point for its data,
+    and its one commit record. `files` are paths relative to run_dir
+    (portable across store mounts); `sources` are the sink's per-source
+    statistics (``source``, ``row_count``, ``token_total``,
+    ``max_tokens``), from which the run's ``_metrics`` is built without
+    re-reading data. ``row_count`` is their sum. `lineage` rows
+    (``partition_id``, ``row_count``, ``token_total``) are the sink's
+    per-input-partition statistics; ``committed_at`` (ISO 8601, UTC) is
+    the commit instant — now, unless a re-publish (a compaction) keeps
+    the original."""
     os.makedirs(os.path.join(run_dir, MANIFEST_DIR), exist_ok=True)
     doc = {
         "sink": sink,
         "files": sorted(files),
         "row_count": sum(s["row_count"] for s in sources),
         "sources": sources,
+        "lineage": lineage,
+        "committed_at": committed_at
+        or datetime.now(timezone.utc).isoformat(timespec="microseconds"),
     }
     return publish_file(_manifest_path(run_dir, sink), json.dumps(doc).encode())
 
@@ -268,32 +289,33 @@ def resolve_sink_paths(run_dir: str, sinks) -> list[str]:
 
 def published_sinks(run_dir: str) -> list[str]:
     """Sinks of a run that have a manifest, sorted."""
-    mdir = os.path.join(run_dir, MANIFEST_DIR)
-    if not os.path.isdir(mdir):
+    try:
+        names = os.listdir(os.path.join(run_dir, MANIFEST_DIR))
+    except (FileNotFoundError, NotADirectoryError):
         return []
     return sorted(
         f[len("sink=") : -len(".json")]
-        for f in os.listdir(mdir)
+        for f in names
         if f.startswith("sink=") and f.endswith(".json")
     )
 
 
-def gc_sink(run_dir: str, sink: str) -> int:
-    """Resume-time garbage collection for an UNCOMMITTED sink: delete its
-    manifest (if a crash landed between manifest publish and checkpoint —
-    the registrar, not the manifest, is the source of truth for resume) and
-    every data file in its partition dir (none are referenced). Per-key
-    deletes only — object-store-safe. Returns files removed."""
-    n = 0
-    mp = _manifest_path(run_dir, sink)
-    if os.path.exists(mp):
-        os.remove(mp)
-        n += 1
-    d = os.path.join(run_dir, f"sink={sink}")
-    if os.path.isdir(d):
-        for f in os.listdir(d):
-            p = os.path.join(d, f)
-            if os.path.isfile(p):
-                os.remove(p)
-                n += 1
-    return n
+def committed(
+    out_dir: str, run_id: str | None = None
+) -> Iterator[tuple[str, str, str]]:
+    """The table's one commit enumerator: (run_id, run_dir, sink) of every
+    committed sink under ``out_dir`` — or of ``run_id``'s run only, which
+    lists that run's ``_manifests/`` and nothing else — in run, then sink
+    order. Nothing is read."""
+    if run_id is None:
+        try:
+            names = sorted(os.listdir(out_dir))
+        except FileNotFoundError:
+            names = []
+        runs = [d[len("run_id=") :] for d in names if d.startswith("run_id=")]
+    else:
+        runs = [run_id]
+    for r in runs:
+        run_dir = os.path.join(out_dir, f"run_id={r}")
+        for sink in published_sinks(run_dir):
+            yield r, run_dir, sink

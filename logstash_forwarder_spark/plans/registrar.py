@@ -1,44 +1,48 @@
-"""The registrar reborn — checkpoint/lineage metadata table (O-X1..O-X4).
+"""The registrar reborn — checkpoint/lineage metadata over the manifests
+(O-X1..O-X4).
 
-The reference persists ``map[source]FileState`` as JSON via
-write-temp-then-atomic-rename (/root/reference/registrar.go:38-51,
-registrar_other.go:9-15) and, only after the ack, folds acked events into it
-(/root/reference/publisher1.go:126). Here the same trick backs a parquet
-metadata table: each sink commit (:meth:`Registrar.commit`, the only
-writer of commit files) writes one immutable parquet file of
-per-partition lineage rows through the package's one single-file swap,
-``manifest.publish_file`` (atomic on POSIX). Iceberg's metadata swap would
-give this for free; the parquet fallback keeps the identical interface
-without the runtime jar (SURVEY §7.3 hard part 5).
+The reference keeps its shipped state in one record, written with one
+write-temp-then-atomic-rename per update (its registrar.go:38-51 and
+registrar_other.go:9-15), only after the ack (publisher1.go:126). Here each sink's manifest
+(plans/manifest.py) is that record: one atomically swapped file names the
+sink's data files and carries its per-source statistics, its lineage rows
+and its ``committed_at``. :meth:`Registrar.commit` publishes it
+(``manifest.publish_manifest``, the package's only commit writer) and
+everything else here reads it — Delta Lake and Iceberg also commit with
+one atomic metadata write.
 
-The map stays keyed: a commit file's name is derived from its (run_id,
-sink) key (``Registrar._commit_name``), so the resume lookup lists only
-names with the run's prefix and reads that run's files (plus the
-compaction index) — O(that run), not O(history). Every read goes through
-one reader, ``Registrar._commits``.
+The map stays keyed: a run's commits live in its own
+``run_id=R/_manifests/``, so the resume lookup lists that one directory —
+O(that run), not O(history) — and every read enumerates the table's
+commits through ``manifest.committed``, the enumerator
+``pipeline.read_table`` shares.
 
 Crucially the commit ordering is the *reverse* of the reference's bug
 surface: the reference acks then writes state (duplicate window on crash,
-SURVEY §3.4) — we publish each sink's manifest first (plans/manifest.py)
-and the checkpoint row second, and resume treats a manifest the registrar
-never adopted as garbage to delete-and-redo, so routed-row delivery is
-exactly-once.
+SURVEY §3.4); here the data files land first and the manifest swap is both
+the ack and the state write, so there is no window between them. Resume
+treats a sink with no manifest as uncommitted: its files are garbage to
+delete and redo, so routed-row delivery is exactly-once.
 """
 
 from __future__ import annotations
 
 import hashlib
 import os
-import re
-from dataclasses import dataclass
+from dataclasses import asdict, dataclass
 from datetime import datetime, timezone
 
 import pyarrow as pa
-import pyarrow.compute as pc
-import pyarrow.parquet as pq
 from pyspark.sql import DataFrame, SparkSession
 
-from .manifest import gc_sink, publish_file, resolve_sink_paths
+from .compact import gc_unreferenced
+from .manifest import (
+    MANIFEST_DIR,
+    committed,
+    publish_manifest,
+    read_manifest,
+    resolve_sink_paths,
+)
 
 _ARROW_SCHEMA = pa.schema(
     [
@@ -50,8 +54,6 @@ _ARROW_SCHEMA = pa.schema(
         pa.field("committed_at", pa.timestamp("us", tz="UTC"), nullable=False),
     ]
 )
-# the compaction index: every folded commit's rows plus its snapshot_id
-_INDEX_SCHEMA = _ARROW_SCHEMA.append(pa.field("snapshot_id", pa.string()))
 
 
 @dataclass(frozen=True)
@@ -61,138 +63,92 @@ class LineageRow:
     token_total: int
 
 
-def _safe(name: str) -> str:
-    return re.sub(r"[^A-Za-z0-9_.-]", "_", name)
-
-
 class Registrar:
-    """Parquet-dir-backed checkpoint table. One file per (run_id, sink) commit."""
-
-    INDEX_NAME = "_index.parquet"
+    """The checkpoint table of the output directory that holds ``path``
+    (``<out>/_checkpoint``, by convention): one manifest per (run_id, sink)
+    commit under ``<out>/run_id=*/_manifests/``. Nothing is written at
+    ``path`` itself."""
 
     def __init__(self, path: str):
         self.path = path
-        os.makedirs(path, exist_ok=True)
+        self.out_dir = os.path.dirname(os.path.abspath(path))
 
     # -- write side (driver-only, metadata-sized) ---------------------------
 
-    def commit(self, run_id: str, sink: str, lineage: list[LineageRow]) -> str:
-        """Atomically record a sink commit. Idempotent: re-commit overwrites."""
-        now = datetime.now(timezone.utc)
-        table = pa.Table.from_pydict(
-            {
-                "run_id": [run_id] * len(lineage),
-                "sink": [sink] * len(lineage),
-                "partition_id": [r.partition_id for r in lineage],
-                "row_count": [r.row_count for r in lineage],
-                "token_total": [r.token_total for r in lineage],
-                "committed_at": [now] * len(lineage),
-            },
-            schema=_ARROW_SCHEMA,
+    def commit(
+        self,
+        run_id: str,
+        sink: str,
+        lineage: list[LineageRow],
+        *,
+        files: list[str] = (),
+        sources: list[dict] = (),
+    ) -> str:
+        """Atomically record a sink commit: publish its manifest, naming
+        ``files`` (relative to the run dir) with their ``sources``
+        statistics and ``lineage``. Lists and reads nothing. Idempotent:
+        a re-commit overwrites."""
+        return publish_manifest(
+            os.path.join(self.out_dir, f"run_id={run_id}"),
+            sink,
+            files,
+            sources,
+            [asdict(r) for r in lineage],
         )
-        return self._write(table, self._commit_name(run_id, sink))
-
-    def _write(self, table: pa.Table, name: str) -> str:
-        """One parquet file swapped into place (registrar_other.go:9-15,
-        reborn): the commit writer and the index writer."""
-        buf = pa.BufferOutputStream()
-        pq.write_table(table, buf)
-        return publish_file(os.path.join(self.path, name), buf.getvalue())
-
-    @staticmethod
-    def _commit_name(run_id: str, sink: str) -> str:
-        """Collision-free commit filename: readable prefix + hash of the RAW
-        (run_id, sink) pair. Prefix-only naming collided for pairs differing
-        in characters the sanitizer mangles (e.g. 'r__x'/'y' vs 'r'/'x__y')."""
-        h = hashlib.sha256(f"{run_id}\x00{sink}".encode()).hexdigest()[:16]
-        return f"{_safe(run_id)[:32]}__{_safe(sink)[:32]}__{h}.parquet"
 
     # -- read side -----------------------------------------------------------
 
-    @staticmethod
-    def _sid_of(path: str) -> str:
-        return os.path.basename(path).rsplit("__", 1)[-1].removesuffix(".parquet")
-
-    @classmethod
-    def _read_commit(cls, f: str) -> pa.Table:
-        """Read one commit file (written by :meth:`commit` in
-        ``_ARROW_SCHEMA``) as index rows; the snapshot_id is the name's
-        hash."""
-        t = pq.read_table(f)
-        return t.append_column(
-            _INDEX_SCHEMA.field("snapshot_id"),
-            pa.array([cls._sid_of(f)] * t.num_rows, pa.string()),
+    def _commits(self, run_id: str | None = None) -> list[tuple[str, dict]]:
+        """The one commit reader: (run_id, manifest) of every committed
+        sink, or of ``run_id``'s only. A manifest removed between the
+        listing and its read (a concurrent expiry) is skipped."""
+        found = (
+            (r, read_manifest(run_dir, sink))
+            for r, run_dir, sink in committed(self.out_dir, run_id)
         )
-
-    def _commits(self, run_id: str | None = None) -> tuple[list[str], pa.Table]:
-        """The one commit reader: (live commit files read, their rows plus
-        the ``_index.parquet`` rows no live file overrides), as
-        ``_INDEX_SCHEMA`` rows — of every run, or of ``run_id`` only.
-
-        Keyed lookup: every commit file of a run starts with the run's
-        name prefix, so only those are read. Other runs can share the
-        prefix (it is sanitized and truncated), so rows are still
-        filtered on the raw ``run_id``. A live file overrides index rows
-        with its snapshot_id: an idempotent re-commit after compaction
-        writes the same deterministic filename, and the file is newer.
-
-        A listed file that vanishes mid-read was removed by a concurrent
-        ``compact()`` AFTER its rows moved into the index (deletion
-        strictly follows the atomic index swap), so the read restarts
-        from a fresh listing; the last attempt propagates."""
-        prefix = "" if run_id is None else _safe(run_id)[:32] + "__"
-        index_path = os.path.join(self.path, self.INDEX_NAME)
-        for attempt in range(4):
-            files = [
-                os.path.join(self.path, f)
-                for f in sorted(os.listdir(self.path))
-                if f.startswith(prefix)
-                and f.endswith(".parquet")
-                and f != self.INDEX_NAME
-            ]
-            try:
-                live = [self._read_commit(f) for f in files]
-                index = (
-                    pq.read_table(index_path)
-                    if os.path.exists(index_path)
-                    else _INDEX_SCHEMA.empty_table()
-                )
-                break
-            except FileNotFoundError:
-                if attempt == 3:
-                    raise
-        overridden = pa.array([self._sid_of(f) for f in files], pa.string())
-        index = index.filter(pc.invert(pc.is_in(index["snapshot_id"], overridden)))
-        rows = pa.concat_tables([*live, index])
-        if run_id is not None:
-            rows = rows.filter(pc.equal(rows["run_id"], run_id))
-        return files, rows
+        return [(r, m) for r, m in found if m is not None]
 
     def committed_sinks(self, run_id: str) -> set[str]:
-        """O-X3 resume input: which sinks of this run are already done."""
-        return set(self._commits(run_id)[1]["sink"].to_pylist())
+        """O-X3 resume input: which sinks of this run are already done —
+        one listing of the run's ``_manifests/``, no read."""
+        return {sink for _, _, sink in committed(self.out_dir, run_id)}
 
     def lineage(self, run_id: str | None = None) -> pa.Table:
-        return self._commits(run_id)[1].select(_ARROW_SCHEMA.names)
+        return pa.Table.from_pylist(
+            [
+                {"run_id": r, "sink": m["sink"], **row, "committed_at": _at(m)}
+                for r, m in self._commits(run_id)
+                for row in m["lineage"]
+            ],
+            schema=_ARROW_SCHEMA,
+        )
 
     # -- Iceberg-style snapshot surface ---------------------------------------
     #
-    # Every commit file IS a snapshot increment (Iceberg: each commit swaps
-    # in a new metadata.json listing the manifests of all live data files;
-    # here: each single-file swap adds one immutable lineage file for one
-    # sink, whose data files its manifest names). Snapshot listing and
-    # time-travel reads are therefore pure metadata operations — no data
-    # file is touched until the final scan, and the as-of filter selects
-    # WHOLE committed sinks (each resolved through its manifest), mirroring
-    # Iceberg's manifest pruning. Snapshot identity (the commit name's hash)
-    # survives compaction. On a real deployment the same interface binds to
+    # Every manifest IS a snapshot increment (Iceberg: each commit swaps in
+    # a new metadata.json listing the manifests of all live data files;
+    # here: each single-file swap commits one sink, whose data files the
+    # manifest names). Snapshot listing and time-travel reads are therefore
+    # pure metadata operations — no data file is touched until the final
+    # scan, and the as-of filter selects WHOLE committed sinks (each
+    # resolved through its manifest), mirroring Iceberg's manifest pruning.
+    # Snapshot identity (the hash of the raw (run_id, sink)) and instant
+    # (the manifest's committed_at) survive compaction, which re-publishes
+    # both unchanged. On a real deployment the same interface binds to
     # Iceberg's snapshot log; this keeps the semantics testable without the
     # jar.
 
     def snapshots(self) -> list[Snapshot]:
         """All commits in commit order (committed_at, then snapshot_id for
         same-microsecond ties — deterministic across re-listing)."""
-        return _snapshots_of(self._commits()[1])
+        keyed = sorted(
+            (_at(m), _snapshot_id(r, m["sink"]), r, m["sink"])
+            for r, m in self._commits()
+        )
+        return [
+            Snapshot(sid, r, sink, at, i)
+            for i, (at, sid, r, sink) in enumerate(keyed)
+        ]
 
     def current(self) -> Snapshot | None:
         snaps = self.snapshots()
@@ -246,32 +202,6 @@ class Registrar:
             )
         return spark.read.option("basePath", run_dir).parquet(*dirs)
 
-    # -- maintenance (Iceberg parity: manifest compaction) --------------------
-
-    def compact(self) -> int:
-        """Fold every commit file into ONE atomically-swapped index parquet
-        (`_index.parquet`) — Iceberg's manifest-list compaction for this
-        layout. All lineage rows AND snapshot identity (snapshot_id from
-        the commit filename, committed_at from the rows) are preserved, so
-        resume, lineage audits, `snapshots()` ordering and time travel are
-        unchanged — asserted equal in tests. The folded commit files are
-        removed afterwards: thousands of metadata-sized files become one,
-        and a full registrar read stops growing with commit count.
-
-        Crash-safe: the index swap is one `publish_file`; a crash
-        before any deletion leaves covered files in place, which readers
-        ignore via the live-overrides-index rule (same snapshot_id).
-        Idempotent: a re-commit AFTER compaction writes the same
-        deterministic filename and overrides its index rows.
-
-        Returns the number of commit files folded."""
-        files, rows = self._commits()
-        if not files:
-            return 0
-        self._write(rows, self.INDEX_NAME)
-        _remove(files)
-        return len(files)
-
     # -- maintenance (Iceberg parity: snapshot expiry + data GC) --------------
 
     def expire_snapshots(
@@ -280,14 +210,12 @@ class Registrar:
         keep_last: int | None = None,
         older_than: "datetime | None" = None,
         keep_last_runs: int | None = None,
-        out_dir: str | None = None,
     ) -> dict:
         """Iceberg ``expire_snapshots`` for this layout: at a poll-per-run
-        tail cadence the snapshot log grows without bound — the same
-        metadata-scaling argument that motivated :meth:`compact` — and a
-        retention policy is how a log pipeline ages data out (the
-        reference forwards to a receiver that owns retention; here the
-        registrar IS the receiver's catalog).
+        tail cadence the snapshot log grows without bound, and a retention
+        policy is how a log pipeline ages data out (the reference forwards
+        to a receiver that owns retention; here the registrar IS the
+        receiver's catalog).
 
         Selection (Iceberg ``expireOlderThan`` + ``retainLast``):
         candidates are snapshots with ``committed_at < older_than`` (all
@@ -295,18 +223,15 @@ class Registrar:
         snapshots are ALWAYS retained (default 1 — the current snapshot
         is never expired). At least one criterion is required.
 
-        Removal is data-first, metadata-second: a crash mid-way leaves
-        the expired set still enumerable from metadata, so a re-run
-        completes the job (idempotent — per-key deletes of already-gone
-        files are no-ops). The surviving rows are then written as the
-        compaction index (the same single-file ``publish_file`` every
-        other commit uses) and the live commit files read are removed, so
-        after an expiry every survivor lives in ``_index.parquet``. Data GC
-        (with ``out_dir``) deletes per-key and removes only EMPTY dirs —
-        no directory renames anywhere (object-store-safe, enforced under
-        the no-dir-rename shim in tests). Time travel to surviving
-        snapshots is unchanged; reads at an expired snapshot raise, as
-        in Iceberg.
+        Removal is data-first, metadata-second: an expired sink's data
+        files go before its manifest, and a fully expired run's
+        ``_manifests/`` goes after everything else in the run dir, so a
+        crash mid-way leaves the unfinished part still enumerable from
+        metadata and a re-run completes the job. Every delete is per key
+        and only emptied dirs are removed — no directory renames anywhere
+        (object-store-safe, enforced under the no-dir-rename shim in
+        tests). Time travel to surviving snapshots is unchanged; reads at
+        an expired snapshot raise, as in Iceberg.
 
         ``keep_last_runs`` is the RUN-aware selector (the tail daemon's
         retention unit: one poll == one run of up to |sinks| snapshots):
@@ -314,7 +239,7 @@ class Registrar:
         is retained, regardless of how many sinks each run committed.
 
         Replay horizon caveat: expiring a (run_id, sink) also forgets
-        its resume row, so replaying that exact run_id would re-publish.
+        its resume state, so replaying that exact run_id would re-publish.
         Retention must exceed the replay horizon — for the tail daemon
         the persisted poll counter in ``_tailstate.json`` already
         prevents poll run_id reuse, so this is only a concern for
@@ -328,8 +253,7 @@ class Registrar:
             raise ValueError("expire_snapshots: keep_last must be >= 1")
         if keep_last_runs is not None and keep_last_runs < 1:
             raise ValueError("expire_snapshots: keep_last_runs must be >= 1")
-        files, rows = self._commits()
-        snaps = _snapshots_of(rows)
+        snaps = self.snapshots()
         retain = 1 if keep_last is None else keep_last
         protected = {s.snapshot_id for s in snaps[-retain:]}
         if keep_last_runs is not None:
@@ -351,69 +275,34 @@ class Registrar:
             if s.snapshot_id not in protected
             and (cut is None or s.committed_at < cut)
         ]
-        report = {
+        expired_ids = {s.snapshot_id for s in expired}
+        surviving_runs = {s.run_id for s in snaps if s.snapshot_id not in expired_ids}
+        n = 0
+        dead_runs = set()
+        for s in expired:
+            run_dir = os.path.join(self.out_dir, f"run_id={s.run_id}")
+            if s.run_id not in surviving_runs:
+                dead_runs.add(run_dir)
+                continue
+            # a run with surviving siblings loses this sink only
+            n += gc_unreferenced(run_dir, s.sink, referenced=())
+            _rmdir(os.path.join(run_dir, f"sink={s.sink}"))
+            n += _remove(os.path.join(run_dir, MANIFEST_DIR, f"sink={s.sink}.json"))
+        for run_dir in sorted(dead_runs):
+            # everything else in the run (its sinks' data, `_metrics`, a
+            # failed attempt's orphans) before its `_manifests/`
+            for name in sorted(os.listdir(run_dir)):
+                if name != MANIFEST_DIR:
+                    n += _remove_tree(os.path.join(run_dir, name))
+            n += _remove_tree(run_dir)
+        return {
             "expired": [
                 {"snapshot_id": s.snapshot_id, "run_id": s.run_id, "sink": s.sink}
                 for s in expired
             ],
             "kept": len(snaps) - len(expired),
-            "data_files_removed": 0,
+            "data_files_removed": n,
         }
-        if not expired:
-            return report
-        expired_ids = {s.snapshot_id for s in expired}
-        if out_dir is not None:
-            surviving_runs = {
-                s.run_id for s in snaps if s.snapshot_id not in expired_ids
-            }
-            report["data_files_removed"] = self._gc_expired_data(
-                out_dir, expired, surviving_runs
-            )
-        gone = pa.array(sorted(expired_ids), pa.string())
-        self._write(
-            rows.filter(pc.invert(pc.is_in(rows["snapshot_id"], gone))),
-            self.INDEX_NAME,
-        )
-        _remove(files)
-        return report
-
-    @staticmethod
-    def _gc_expired_data(
-        out_dir: str, snaps: "list[Snapshot]", surviving_runs: set[str]
-    ) -> int:
-        """Per-key deletion of expired snapshots' published data. A run
-        with SURVIVING sibling snapshots gets sink-level GC only (its
-        manifest and data files; the run dir stays). A FULLY expired run
-        is walked bottom-up — every file deleted per key, every emptied
-        dir rmdir'd — so the run's `_manifests/`, `_metrics/` and any
-        failed attempt's orphan data files go with it (run_pipeline leaves
-        no `_SUCCESS` or `.crc` files). No directory is ever renamed.
-        Returns files removed."""
-        n = 0
-        dead_runs = set()
-        for s in snaps:
-            run_dir = os.path.join(out_dir, f"run_id={s.run_id}")
-            if s.run_id not in surviving_runs:
-                dead_runs.add(run_dir)
-                continue
-            n += gc_sink(run_dir, s.sink)
-            try:
-                os.rmdir(os.path.join(run_dir, f"sink={s.sink}"))
-            except OSError:
-                pass
-        for run_dir in sorted(dead_runs):
-            for root, dirs, files in os.walk(run_dir, topdown=False):
-                for f in files:
-                    try:
-                        os.remove(os.path.join(root, f))
-                        n += 1
-                    except OSError:
-                        pass
-                try:
-                    os.rmdir(root)
-                except OSError:
-                    pass
-        return n
 
 
 @dataclass(frozen=True)
@@ -425,28 +314,46 @@ class Snapshot:
     sequence_number: int  # position in commit order (parent = seq - 1)
 
 
+def _snapshot_id(run_id: str, sink: str) -> str:
+    """The hash of the RAW (run_id, sink) pair: one id per commit key."""
+    return hashlib.sha256(f"{run_id}\x00{sink}".encode()).hexdigest()[:16]
+
+
+def _at(manifest: dict) -> datetime:
+    return datetime.fromisoformat(manifest["committed_at"])
+
+
 def _as_utc(dt: datetime) -> datetime:
     """Normalize a caller's cut-off to tz-aware UTC so it compares with
     the registrar's (always UTC) commit instants."""
     return dt.replace(tzinfo=timezone.utc) if dt.tzinfo is None else dt
 
 
-def _snapshots_of(rows: pa.Table) -> list[Snapshot]:
-    """The first row per snapshot_id, in (committed_at, snapshot_id) order."""
-    first: dict[str, tuple] = {}
-    for sid, rid, sink, at in zip(
-        *(rows[c].to_pylist() for c in ("snapshot_id", "run_id", "sink", "committed_at"))
-    ):
-        first.setdefault(sid, (at, sid, rid, sink))
-    return [
-        Snapshot(sid, rid, sink, at, i)
-        for i, (at, sid, rid, sink) in enumerate(sorted(first.values()))
-    ]
+def _remove(path: str) -> int:
+    """Per-key delete; a file already gone (an earlier, crashed expiry
+    removed it) counts 0."""
+    try:
+        os.remove(path)
+        return 1
+    except FileNotFoundError:
+        return 0
 
 
-def _remove(files: list[str]) -> None:
-    for f in files:
-        try:
-            os.remove(f)
-        except OSError:
-            pass
+def _rmdir(path: str) -> None:
+    try:
+        os.rmdir(path)
+    except FileNotFoundError:
+        pass
+
+
+def _remove_tree(top: str) -> int:
+    """Per-key delete of every file under ``top``, bottom-up, each dir
+    removed once emptied — or ``top`` itself, if a file. Returns files
+    removed."""
+    if not os.path.isdir(top):
+        return _remove(top)
+    n = 0
+    for root, _, files in os.walk(top, topdown=False):
+        n += sum(_remove(os.path.join(root, f)) for f in files)
+        _rmdir(root)
+    return n

@@ -95,13 +95,6 @@ def main(argv: list[str] | None = None) -> int:
         help="list the registrar's snapshot log for --out and exit",
     )
     p.add_argument(
-        "--compact-checkpoint",
-        action="store_true",
-        help="maintenance: fold --out's per-commit checkpoint files into "
-        "one atomically-swapped index (Iceberg manifest-list compaction; "
-        "resume/lineage/snapshots/time-travel preserved), then exit",
-    )
-    p.add_argument(
         "--expire-keep-last",
         type=int,
         metavar="N",
@@ -243,15 +236,6 @@ def main(argv: list[str] | None = None) -> int:
     p.add_argument("--shuffle-partitions", type=int, default=None)
     args = p.parse_args(argv)
 
-    if args.compact_checkpoint:
-        import os
-
-        from .plans.registrar import Registrar
-
-        n = Registrar(os.path.join(args.out, "_checkpoint")).compact()
-        print(json.dumps({"compacted_commit_files": n}))
-        return 0
-
     if args.compact_sinks:
         from .plans.compact import compact_run
 
@@ -318,14 +302,13 @@ def main(argv: list[str] | None = None) -> int:
             keep_last=args.expire_keep_last,
             older_than=older,
             keep_last_runs=args.expire_keep_last_runs,
-            out_dir=args.out,
         )
         print(json.dumps(rep))
         return 0
 
     if args.snapshots or args.read_as_of:
         # pure-metadata modes first: --snapshots never needs a SparkSession
-        # (parquet footers via pyarrow), so don't pay JVM startup for it
+        # (manifest JSON files), so don't pay JVM startup for it
         import os
 
         from .plans.registrar import Registrar
@@ -751,9 +734,7 @@ def _tail_loop(spark, args) -> int:
 
                 exp = Registrar(
                     os.path.join(args.out, "_checkpoint")
-                ).expire_snapshots(
-                    keep_last_runs=args.tail_retain_polls, out_dir=args.out
-                )
+                ).expire_snapshots(keep_last_runs=args.tail_retain_polls)
                 if exp["expired"]:
                     rec["expired_runs"] = sorted(
                         {e["run_id"] for e in exp["expired"]}

@@ -33,16 +33,6 @@ SOURCE_DIM_SCHEMA = T.StructType(
     ]
 )
 
-# Routing rules: network.servers random-pick (publisher1.go:168-186) made
-# deterministic — ordered SQL predicates over enriched columns → sink.
-ROUTES_SCHEMA = T.StructType(
-    [
-        T.StructField("priority", T.IntegerType(), False),
-        T.StructField("predicate", T.StringType(), False),
-        T.StructField("sink", T.StringType(), False),
-    ]
-)
-
 # Output of the vectorized parse stage (O-P1): grok/regex-style field
 # extraction over the token payload.
 PARSED_FIELDS_SCHEMA = T.StructType(

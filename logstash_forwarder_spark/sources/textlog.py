@@ -254,27 +254,42 @@ def _assemble_harvest_batch(path_col, per_file) -> pa.RecordBatch:
 _FLUSH_BYTES = 1 << 30
 
 
+def _flush_bounded(path_col, segments) -> Iterator[pa.RecordBatch]:
+    """Assemble ``segments`` — (path_row_idx, line_no, byte_offset,
+    next_offset, lines, complete), as :func:`_assemble_harvest_batch`
+    takes them — into at least one RecordBatch, each holding at most
+    ``_FLUSH_BYTES`` of line bytes but for a single larger segment:
+    mapInArrow may yield many batches, so files (or segmented giant
+    files) beyond the budget roll into the next batch instead of
+    overflowing a concat."""
+    pending: list = []
+    pending_bytes = 0
+    for seg in segments:
+        seg_bytes = seg[4].nbytes
+        if pending and pending_bytes + seg_bytes > _FLUSH_BYTES:
+            yield _assemble_harvest_batch(path_col, pending)
+            pending, pending_bytes = [], 0
+        pending.append(seg)
+        pending_bytes += seg_bytes
+    yield _assemble_harvest_batch(path_col, pending)
+
+
 def _harvest_kernel(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
     """Per-batch: one vectorized split per file (Python touches each FILE
-    once, never each line), assembled into output RecordBatches whose line
-    bytes are bounded by ``_FLUSH_BYTES`` — mapInArrow may yield many
-    batches, so files (or segmented giant files) beyond the budget roll
-    into the next batch instead of overflowing a concat."""
+    once, never each line), in bounded batches (:func:`_flush_bounded`)."""
     for batch in batches:
         paths = batch.column("path")
         contents = batch.column("content")
-        pending: list = []
-        pending_bytes = 0
-        for row in range(len(paths)):
-            buf = _maybe_decompress(contents[row].as_py())
-            for seg in _split_file_segments(buf):
-                seg_bytes = seg[3].nbytes
-                if pending and pending_bytes + seg_bytes > _FLUSH_BYTES:
-                    yield _assemble_harvest_batch(paths, pending)
-                    pending, pending_bytes = [], 0
-                pending.append((row, *seg))
-                pending_bytes += seg_bytes
-        yield _assemble_harvest_batch(paths, pending)
+        yield from _flush_bounded(
+            paths,
+            (
+                (row, *seg)
+                for row in range(len(paths))
+                for seg in _split_file_segments(
+                    _maybe_decompress(contents[row].as_py())
+                )
+            ),
+        )
 
 
 def harvest_text_files(spark, path_glob: str | list[str]) -> DataFrame:
@@ -436,31 +451,23 @@ def harvest_tail_batch(b: pa.RecordBatch) -> Iterator[pa.RecordBatch]:
     paths = b.column("file").to_pylist()
     offs = b.column("resume_offset").to_pylist()
     bases = b.column("base_line").to_pylist()
-    file_col = b.column("file")
-    pending: list = []
-    pending_bytes = 0
-    for row, (p, off, base) in enumerate(zip(paths, offs, bases)):
-        try:
-            with open(p, "rb") as f:
-                if f.read(2) == b"\x1f\x8b":
-                    continue  # live gzip: not seekable, skip
-                f.seek(int(off))
-                buf = f.read()
-        except OSError:
-            continue  # rotated away mid-poll; next tick re-globs
-        # same bounded-flush discipline as _harvest_kernel: a poll that
-        # catches up on >2 GiB of growth must not overflow the
-        # assemble-time concat
-        for ln, so, nx, lines, comp in _split_file_segments(buf):
-            seg_bytes = lines.nbytes
-            if pending and pending_bytes + seg_bytes > _FLUSH_BYTES:
-                yield _assemble_harvest_batch(file_col, pending)
-                pending, pending_bytes = [], 0
-            pending.append(
-                (row, ln + int(base), so + int(off), nx + int(off), lines, comp)
-            )
-            pending_bytes += seg_bytes
-    yield _assemble_harvest_batch(file_col, pending)
+
+    def segments():
+        for row, (p, off, base) in enumerate(zip(paths, offs, bases)):
+            try:
+                with open(p, "rb") as f:
+                    if f.read(2) == b"\x1f\x8b":
+                        continue  # live gzip: not seekable, skip
+                    f.seek(int(off))
+                    buf = f.read()
+            except OSError:
+                continue  # rotated away mid-poll; next tick re-globs
+            for ln, so, nx, lines, comp in _split_file_segments(buf):
+                yield row, ln + int(base), so + int(off), nx + int(off), lines, comp
+
+    # a poll that catches up on >2 GiB of growth must not overflow the
+    # assemble-time concat either
+    return _flush_bounded(b.column("file"), segments())
 
 
 def tail_harvest(spark, tails: DataFrame) -> DataFrame:

@@ -7,7 +7,7 @@ publisher1.go:44-127) — maps onto micro-batches:
 * spool-size / idle-timeout  → ``maxFilesPerTrigger`` + trigger interval
   (or ``availableNow`` for drain-everything runs)
 * publish + ack              → one ``run_pipeline`` call per epoch; the
-  atomic per-sink publish + registrar commit IS the ack
+  atomic per-sink manifest commit IS the ack
 * sequence numbers           → ``epoch_id`` (monotone per checkpoint), used
   in each epoch's run_id so lineage rows are per-epoch
 * backpressure               → the micro-batch pull model itself

@@ -2,10 +2,9 @@
 ``retainLast`` parity; VERDICT r6 task 7).
 
 At a poll-per-run tail cadence the snapshot log grows without bound —
-expiry is the retention half of the maintenance pair next to
-``compact()``. Everything runs under the no-directory-rename shim: the
-metadata rewrite is a single-FILE swap, data GC is per-key deletes +
-empty-dir rmdir only."""
+expiry is the retention half of the maintenance pair next to compaction.
+Everything runs under the no-directory-rename shim: expiry is per-key
+deletes (data first, manifests last) + empty-dir rmdir only."""
 
 from __future__ import annotations
 
@@ -16,6 +15,8 @@ import pytest
 
 from logstash_forwarder_spark.datagen import gen_sequences, gen_source_dim
 from logstash_forwarder_spark.pipeline import PipelineSpec, run_pipeline
+from logstash_forwarder_spark.plans.compact import compact_run
+from logstash_forwarder_spark.plans.manifest import read_manifest
 from logstash_forwarder_spark.plans.registrar import Registrar
 
 N = 1_500
@@ -48,7 +49,7 @@ def test_expire_keep_last_drops_old_run_and_gcs_data(
     old_snaps = [s for s in snaps if s.run_id == "old"]
     assert old_snaps and new_count
 
-    rep = reg.expire_snapshots(keep_last=new_count, out_dir=tmp_out)
+    rep = reg.expire_snapshots(keep_last=new_count)
     assert {e["snapshot_id"] for e in rep["expired"]} == {
         s.snapshot_id for s in old_snaps
     }
@@ -83,7 +84,7 @@ def test_expire_keep_last_drops_old_run_and_gcs_data(
     assert res.rows_staged == 0
 
     # idempotent: nothing left to expire at the same cut
-    rep2 = reg.expire_snapshots(keep_last=new_count, out_dir=tmp_out)
+    rep2 = reg.expire_snapshots(keep_last=new_count)
     assert rep2["expired"] == [] and rep2["data_files_removed"] == 0
 
 
@@ -93,27 +94,28 @@ def test_expire_older_than_respects_retain_floor(spark, tmp_out, no_dir_rename):
     snaps = reg.snapshots()
     future = snaps[-1].committed_at + timedelta(days=1)
     # a cutoff in the future still retains the keep_last floor (default 1)
-    rep = reg.expire_snapshots(older_than=future, out_dir=tmp_out)
+    rep = reg.expire_snapshots(older_than=future)
     left = reg.snapshots()
     assert len(left) == 1
     assert left[0].snapshot_id == snaps[-1].snapshot_id
     assert len(rep["expired"]) == len(snaps) - 1
     # a cutoff before everything expires nothing
     past = snaps[0].committed_at - timedelta(days=1)
-    assert reg.expire_snapshots(older_than=past, out_dir=tmp_out)["expired"] == []
+    assert reg.expire_snapshots(older_than=past)["expired"] == []
 
 
 def test_expire_works_across_compaction_boundary(spark, tmp_out, no_dir_rename):
-    """Expired snapshots whose lineage rows live in the compaction INDEX
-    (not live commit files) must be removed from the index — and
-    surviving index rows must keep serving snapshots/lineage."""
+    """Expired snapshots whose manifests a compaction re-published are
+    removed like any other — and the compacted survivors keep serving
+    snapshots, lineage and resume."""
     _publish(spark, tmp_out, "old")
     _publish(spark, tmp_out, "new")
+    for run_id in ("old", "new"):
+        assert any(r["rewritten"] for r in compact_run(spark, tmp_out, run_id))
     reg = _reg(tmp_out)
-    assert reg.compact() > 0  # everything now lives in _index.parquet
     new_count = sum(1 for s in reg.snapshots() if s.run_id == "new")
 
-    rep = reg.expire_snapshots(keep_last=new_count, out_dir=tmp_out)
+    rep = reg.expire_snapshots(keep_last=new_count)
     assert rep["expired"]
     left = reg.snapshots()
     assert {s.run_id for s in left} == {"new"}
@@ -127,6 +129,70 @@ def test_expire_works_across_compaction_boundary(spark, tmp_out, no_dir_rename):
     assert reg.committed_sinks("new")
 
 
+def test_expire_crash_midway_is_finished_by_a_rerun(
+    spark, tmp_out, no_dir_rename, monkeypatch
+):
+    """Data first, metadata second: a crash after a few per-key deletes
+    leaves every unfinished expiry enumerable from its manifests, so a
+    second call removes every file and directory the first one left —
+    one sink of a surviving run and a whole expired run alike."""
+    for rid in ("p0", "p1"):
+        _publish(spark, tmp_out, rid)
+    reg = _reg(tmp_out)
+    snaps = reg.snapshots()
+    p1 = [s for s in snaps if s.run_id == "p1"]
+    before = {
+        os.path.join(root, f)
+        for root, _, files in os.walk(os.path.join(tmp_out, "run_id=p1"))
+        for f in files
+    }
+    real_remove = os.remove
+    calls = [0]
+    crash_at = [3]
+
+    def crashing_remove(path, *a, **k):
+        calls[0] += 1
+        if calls[0] == crash_at[0]:
+            raise OSError("injected crash inside expiry")
+        return real_remove(path, *a, **k)
+
+    monkeypatch.setattr(os, "remove", crashing_remove)
+    with pytest.raises(OSError, match="injected"):
+        reg.expire_snapshots(keep_last_runs=1)
+    monkeypatch.setattr(os, "remove", real_remove)
+    # the crash stopped before any manifest went: all p0 snapshots listed
+    assert [s.snapshot_id for s in reg.snapshots()] == [s.snapshot_id for s in snaps]
+
+    rep = reg.expire_snapshots(keep_last_runs=1)
+    assert {e["run_id"] for e in rep["expired"]} == {"p0"}
+    assert [s.snapshot_id for s in reg.snapshots()] == [s.snapshot_id for s in p1]
+    assert not os.path.exists(os.path.join(tmp_out, "run_id=p0"))
+    after = {
+        os.path.join(root, f)
+        for root, _, files in os.walk(tmp_out)
+        for f in files
+    }
+    assert after == before  # the survivor's files, and nothing else
+
+    # the same for one expired sink of a surviving run, crashing at its
+    # second delete (a data file, or its manifest if it has one file)
+    victim = p1[0]
+    run_dir = os.path.join(tmp_out, "run_id=p1")
+    assert read_manifest(run_dir, victim.sink)["files"]
+    calls[0], crash_at[0] = 0, 2
+    monkeypatch.setattr(os, "remove", crashing_remove)
+    with pytest.raises(OSError, match="injected"):
+        reg.expire_snapshots(keep_last=len(p1) - 1)
+    monkeypatch.setattr(os, "remove", real_remove)
+    assert victim.snapshot_id in {s.snapshot_id for s in reg.snapshots()}
+    reg.expire_snapshots(keep_last=len(p1) - 1)
+    assert [s.snapshot_id for s in reg.snapshots()] == [s.snapshot_id for s in p1[1:]]
+    assert not os.path.exists(os.path.join(run_dir, f"sink={victim.sink}"))
+    assert not os.path.exists(
+        os.path.join(run_dir, "_manifests", f"sink={victim.sink}.json")
+    )
+
+
 def test_expire_keep_last_runs_is_run_aware(spark, tmp_out, no_dir_rename):
     """keep_last_runs retains every snapshot of the K newest RUNS — the
     tail daemon's retention unit (one poll == one run of up to |sinks|
@@ -134,7 +200,7 @@ def test_expire_keep_last_runs_is_run_aware(spark, tmp_out, no_dir_rename):
     for rid in ("p0", "p1", "p2"):
         _publish(spark, tmp_out, rid)
     reg = _reg(tmp_out)
-    rep = reg.expire_snapshots(keep_last_runs=2, out_dir=tmp_out)
+    rep = reg.expire_snapshots(keep_last_runs=2)
     assert {e["run_id"] for e in rep["expired"]} == {"p0"}
     left = reg.snapshots()
     assert {s.run_id for s in left} == {"p1", "p2"}
@@ -145,7 +211,7 @@ def test_expire_keep_last_runs_is_run_aware(spark, tmp_out, no_dir_rename):
     assert per_run["p1"] == per_run["p2"] >= 2
     assert not os.path.exists(os.path.join(tmp_out, "run_id=p0"))
     # idempotent at the same cut
-    assert reg.expire_snapshots(keep_last_runs=2, out_dir=tmp_out)["expired"] == []
+    assert reg.expire_snapshots(keep_last_runs=2)["expired"] == []
 
 
 def test_expire_argument_validation(tmp_path):

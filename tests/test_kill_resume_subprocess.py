@@ -44,14 +44,28 @@ def _cli(out_dir: str, run_id: str) -> list[str]:
     ]
 
 
+def _lineage_per_sink(con, manifest_glob: str, run_id: str) -> dict[str, int]:
+    """Σ lineage row_count per sink of ``run_id``, read by DuckDB straight
+    from the commit records (hive partitioning off: a ``sink=S.json``
+    name would otherwise shadow the manifest's own ``sink``)."""
+    return dict(
+        con.sql(
+            "SELECT sink, sum(l.row_count) FROM (SELECT sink, unnest(lineage) AS l "
+            f"FROM read_json('{manifest_glob}', filename=true, "
+            "hive_partitioning=false) "
+            f"WHERE filename LIKE '%/run_id={run_id}/%') GROUP BY sink"
+        ).fetchall()
+    )
+
+
 def _kill_then_resume(out: str, run_id: str, kill_glob: str) -> None:
     """Run the CLI, SIGKILL its process group as soon as ``kill_glob``
-    (relative to the run directory) or the first checkpoint matches, resume
+    (relative to the run directory) or the first commit matches, resume
     with the same run_id in a fresh process, then verify exactly-once
     delivery through the manifests. If the run outraces both polls, the
     resume checks must still hold."""
     run_dir = os.path.join(out, f"run_id={run_id}")
-    ckpt_glob = os.path.join(out, "_checkpoint", "*.parquet")
+    manifest_glob = os.path.join(out, "run_id=*", "_manifests", "*.json")
     env = {**os.environ, "PYTHONPATH": os.path.dirname(os.path.dirname(__file__))}
 
     proc = subprocess.Popen(
@@ -61,7 +75,7 @@ def _kill_then_resume(out: str, run_id: str, kill_glob: str) -> None:
         start_new_session=True,  # so killpg takes the JVM down too
         env=env,
     )
-    progress_globs = [os.path.join(run_dir, kill_glob), ckpt_glob]
+    progress_globs = [os.path.join(run_dir, kill_glob), manifest_glob]
     killed = False
     deadline = time.monotonic() + 300
     while time.monotonic() < deadline and proc.poll() is None:
@@ -72,7 +86,7 @@ def _kill_then_resume(out: str, run_id: str, kill_glob: str) -> None:
         time.sleep(0.005)
     proc.wait(timeout=60)
     assert killed or proc.returncode == 0, "run neither progressed nor finished"
-    committed_after_kill = len(glob.glob(ckpt_glob))
+    committed_after_kill = len(glob.glob(manifest_glob))
 
     # resume with the SAME run_id in a fresh process
     res = subprocess.run(
@@ -114,17 +128,14 @@ def _kill_then_resume(out: str, run_id: str, kill_glob: str) -> None:
     ).fetchone()
     # exactly-once: no loss, no duplicates — regardless of where the kill hit
     assert n == N_ROWS and n_distinct == N_ROWS
-    lineage = dict(
-        con.sql(
-            f"SELECT sink, sum(row_count) FROM read_parquet('{ckpt_glob}') "
-            f"WHERE run_id = '{run_id}' GROUP BY sink"
-        ).fetchall()
-    )
+    lineage = _lineage_per_sink(con, manifest_glob, run_id)
     for s in SINKS:
         assert lineage.get(s, 0) == per_sink_manifest[s], (s, lineage, per_sink_manifest)
-    # whatever temp file the kill left behind, the checkpoint glob (DuckDB
-    # matches dot-files) sees exactly one commit file per sink of the run
-    (n_commit_files,) = con.sql(f"SELECT count(*) FROM glob('{ckpt_glob}')").fetchone()
+    # whatever temp file the kill left behind, the manifest glob (DuckDB
+    # matches dot-files) sees exactly one commit record per sink of the run
+    (n_commit_files,) = con.sql(
+        f"SELECT count(*) FROM glob('{manifest_glob}')"
+    ).fetchone()
     assert n_commit_files == len(SINKS)
 
 
@@ -135,8 +146,8 @@ def test_sigkill_mid_publish_then_resume(tmp_path):
 
 
 def test_sigkill_manifest_mode_then_resume(tmp_path):
-    # kill at the first manifest swap: a sink published but not yet
-    # checkpointed, so resume must recognise it from the manifest alone
+    # kill at the first manifest swap: some sinks committed, the rest not,
+    # so resume must skip exactly the ones whose manifest landed
     _kill_then_resume(str(tmp_path / "outm"), "mkill", os.path.join("_manifests", "*.json"))
 
 
@@ -177,7 +188,7 @@ def test_sigkill_mid_tail_poll_then_resume(tmp_path):
                 n_lines += 1
             fh.write("partial, never shipped")
     out = str(tmp_path / "out")
-    ckpt_glob = os.path.join(out, "_checkpoint", "*.parquet")
+    manifest_glob = os.path.join(out, "run_id=*", "_manifests", "*.json")
     env = {**os.environ, "PYTHONPATH": os.path.dirname(os.path.dirname(__file__))}
 
     proc = subprocess.Popen(
@@ -187,7 +198,7 @@ def test_sigkill_mid_tail_poll_then_resume(tmp_path):
         start_new_session=True,
         env=env,
     )
-    progress = [os.path.join(out, "run_id=*", "sink=*", "*"), ckpt_glob]
+    progress = [os.path.join(out, "run_id=*", "sink=*", "*"), manifest_glob]
     killed = False
     deadline = time.monotonic() + 300
     while time.monotonic() < deadline and proc.poll() is None:
@@ -222,11 +233,11 @@ def test_sigkill_mid_tail_poll_then_resume(tmp_path):
         f"SELECT count(*), count(DISTINCT doc_id) FROM read_parquet({files!r})"
     ).fetchone()
     assert n == n_lines and n_distinct == n_lines
-    lineage = dict(
-        con.sql(
-            f"SELECT sink, sum(row_count) FROM read_parquet('{ckpt_glob}') GROUP BY sink"
-        ).fetchall()
-    )
-    assert lineage == per_sink
-    (n_commit_files,) = con.sql(f"SELECT count(*) FROM glob('{ckpt_glob}')").fetchone()
+    run_id = os.path.basename(run_dirs[0])[len("run_id=") :]
+    lineage = _lineage_per_sink(con, manifest_glob, run_id)
+    # an empty sink's commit record carries no lineage row
+    assert lineage == {s: n for s, n in per_sink.items() if n}
+    (n_commit_files,) = con.sql(
+        f"SELECT count(*) FROM glob('{manifest_glob}')"
+    ).fetchone()
     assert n_commit_files == len(SINKS)

@@ -2,7 +2,7 @@
 
 Every pipeline test runs under the ``no_dir_rename`` shim (tests/conftest.py)
 that makes `os.replace` RAISE on directories — proving the whole
-publish/checkpoint/resume/time-travel cycle needs only single-file atomic
+publish/commit/resume/time-travel cycle needs only single-file atomic
 swaps, the primitive object stores can provide. The resolver tests need only
 the filesystem."""
 
@@ -129,24 +129,68 @@ def test_manifest_kill_resume(spark, tmp_out, no_dir_rename, crash_after_commits
     assert sum(reg.lineage("mk").column("row_count").to_pylist()) == N
 
 
-def test_manifest_crash_between_publish_and_checkpoint(
+def test_manifest_crash_before_commit_swap_is_redone(
     spark, tmp_out, no_dir_rename
 ):
-    """The exactly-once window: a manifest published but never adopted by
-    the registrar is garbage — resume deletes it and redoes the sink with
-    no duplicates."""
+    """A crash after the data write but before a sink's one commit swap
+    leaves data files no manifest names: the sink is uncommitted, no
+    reader sees its files, and resume deletes them and redoes the sink
+    with no duplicates."""
+    from logstash_forwarder_spark.pipeline import read_table
+
     seqs = gen_sequences(spark, N)
     dim = gen_source_dim(spark)
     res = run_pipeline(spark, seqs, dim, _spec(tmp_out, "mw"))
+    run_dir = os.path.join(tmp_out, "run_id=mw")
+    victim = sorted(
+        s for s in res.sinks_committed if read_manifest(run_dir, s)["files"]
+    )[0]
+    orphans = [
+        os.path.join(run_dir, f) for f in read_manifest(run_dir, victim)["files"]
+    ]
+    os.remove(os.path.join(run_dir, "_manifests", f"sink={victim}.json"))
     reg = Registrar(os.path.join(tmp_out, "_checkpoint"))
-    victim = sorted(res.sinks_committed)[0]
-    os.remove(os.path.join(reg.path, reg._commit_name("mw", victim)))
     assert victim not in reg.committed_sinks("mw")
+    assert read_table(spark, tmp_out).where(F.col("sink") == victim).count() == 0
     res2 = run_pipeline(spark, seqs, dim, _spec(tmp_out, "mw"))
     assert res2.sinks_committed == [victim]
+    assert not any(os.path.exists(f) for f in orphans)
     got = _all_rows(spark, tmp_out, "mw", res.sinks_committed)
     n, nd = got.agg(F.count(F.lit(1)), F.countDistinct("doc_id")).first()
     assert (n, nd) == (N, N)
+
+
+def test_one_commit_swap_per_sink(spark, tmp_out, no_dir_rename, monkeypatch):
+    """A run's metadata writes are one ``publish_file`` per committed sink
+    plus the run's one ``_metrics`` swap — the manifest is each sink's
+    only commit record — and nothing lands under ``_checkpoint/``."""
+    from logstash_forwarder_spark import pipeline
+    from logstash_forwarder_spark.plans import manifest
+
+    swaps: list[str] = []
+    real = manifest.publish_file
+
+    def counting(final, data):
+        swaps.append(os.path.relpath(final, tmp_out))
+        return real(final, data)
+
+    monkeypatch.setattr(manifest, "publish_file", counting)
+    monkeypatch.setattr(pipeline, "publish_file", counting)
+    seqs = gen_sequences(spark, N)
+    dim = gen_source_dim(spark)
+    res = run_pipeline(spark, seqs, dim, _spec(tmp_out, "one"))
+    metrics = os.path.join("run_id=one", "_metrics", "part-00000.parquet")
+    manifests = [
+        os.path.join("run_id=one", "_manifests", f"sink={s}.json")
+        for s in res.sinks_committed
+    ]
+    assert sorted(swaps) == sorted([*manifests, metrics])
+    assert len(res.sinks_committed) == 4
+    swaps.clear()
+    res = run_pipeline(spark, seqs, dim, _spec(tmp_out, "one"))  # all skipped
+    assert res.sinks_committed == [] and swaps == [metrics]
+    ckpt = os.path.join(tmp_out, "_checkpoint")
+    assert not os.path.exists(ckpt) or os.listdir(ckpt) == []
 
 
 def test_manifest_orphan_files_invisible(spark, tmp_out, no_dir_rename):

@@ -73,35 +73,6 @@ def test_kill_after_first_sink_then_resume(
     seqs.unpersist()
 
 
-def test_published_but_uncheckpointed_sink_is_redone(
-    spark, tmp_out, no_dir_rename
-):
-    """Crash in the gap between atomic publish and checkpoint write (the
-    reference's duplicate window, SURVEY §3.4): the resume must treat the
-    unreferenced published manifest and its files as garbage and redo the
-    sink exactly-once."""
-    import shutil
-
-    seqs = gen_sequences(spark, 2_000, num_partitions=4).cache()
-    dim = gen_source_dim(spark)
-    run_pipeline(spark, seqs, dim, PipelineSpec(out_dir=tmp_out, run_id="gap"))
-
-    reg = Registrar(os.path.join(tmp_out, "_checkpoint"))
-    # simulate the crash gap: data published, checkpoint row missing
-    victim = sorted(reg.committed_sinks("gap"))[0]
-    os.remove(
-        os.path.join(tmp_out, "_checkpoint", Registrar._commit_name("gap", victim))
-    )
-    assert victim not in reg.committed_sinks("gap")
-
-    res = run_pipeline(spark, seqs, dim, PipelineSpec(out_dir=tmp_out, run_id="gap"))
-    assert victim in res.sinks_committed
-
-    got = _read_all_sinks(spark, tmp_out, "gap").toPandas()
-    assert len(got) == 2_000 and got.doc_id.is_unique
-    seqs.unpersist()
-
-
 def test_partial_staging_dir_from_crashed_attempt(spark, tmp_out, no_dir_rename):
     """A crash DURING the in-place data write leaves a partial sink dir: a
     data file that no manifest names. The next attempt must delete it and
@@ -152,73 +123,105 @@ def test_registrar_atomic_and_idempotent(tmp_path):
 
 
 def test_resume_lookup_reads_only_the_runs_commit_files(tmp_path, monkeypatch):
-    """The registrar is a keyed map: committed_sinks/lineage of one run read
-    that run's commit files (plus the compaction index once one exists),
-    never the whole commit history."""
-    import pyarrow.parquet as pq
+    """The registrar is a keyed map: with 200 other runs committed,
+    committed_sinks of one run lists that run's ``_manifests/`` and reads
+    nothing, and lineage of one run lists it and reads that run's
+    manifests — never the whole commit history."""
+    import builtins
 
-    reg = Registrar(str(tmp_path / "ck"))
+    reg = Registrar(str(tmp_path / "_checkpoint"))
     for i in range(200):
         reg.commit(f"other-{i}", "sink_a", [LineageRow(0, 1, 1)])
     reg.commit("R", "sink_a", [LineageRow(0, 3, 30)])
     reg.commit("R", "sink_b", [LineageRow(0, 4, 40)])
 
-    reads: list[str] = []
-    real_read = pq.read_table
+    listed: list[str] = []
+    opened: list[str] = []
+    real_listdir, real_open = os.listdir, builtins.open
 
-    def counting_read(path, *args, **kwargs):
-        reads.append(os.path.basename(path))
-        return real_read(path, *args, **kwargs)
+    def listdir(path="."):
+        listed.append(os.path.relpath(path, tmp_path))
+        return real_listdir(path)
 
-    monkeypatch.setattr(pq, "read_table", counting_read)
+    def open_(path, *args, **kwargs):
+        opened.append(os.path.relpath(path, tmp_path))
+        return real_open(path, *args, **kwargs)
 
-    def reads_of(lookup) -> list[str]:
-        reads.clear()
-        lookup()
-        return sorted(reads)
+    monkeypatch.setattr(os, "listdir", listdir)
+    monkeypatch.setattr(builtins, "open", open_)
 
-    def assert_lookups_read(names: list[str]) -> None:
-        assert reads_of(lambda: reg.committed_sinks("R")) == sorted(names)
-        assert reads_of(lambda: reg.lineage("R")) == sorted(names)
-        assert reg.committed_sinks("R") == {"sink_a", "sink_b"}
-        assert sum(reg.lineage("R")["row_count"].to_pylist()) == 7
+    def access(lookup):
+        listed.clear()
+        opened.clear()
+        got = lookup()
+        return got, listed[:], sorted(opened)
 
-    assert_lookups_read([Registrar._commit_name("R", s) for s in ("sink_a", "sink_b")])
-    reg.compact()
-    assert_lookups_read([Registrar.INDEX_NAME])
-    # a re-commit after compaction is a live file read beside the index
-    reg.commit("R", "sink_b", [LineageRow(0, 4, 40)])
-    assert_lookups_read([Registrar.INDEX_NAME, Registrar._commit_name("R", "sink_b")])
+    run_manifests = os.path.join("run_id=R", "_manifests")
+    got, ls, reads = access(lambda: reg.committed_sinks("R"))
+    assert got == {"sink_a", "sink_b"}
+    assert ls == [run_manifests] and reads == []
+    got, ls, reads = access(lambda: reg.lineage("R"))
+    assert sum(got["row_count"].to_pylist()) == 7
+    assert ls == [run_manifests]
+    assert reads == [
+        os.path.join(run_manifests, f"sink={s}.json") for s in ("sink_a", "sink_b")
+    ]
+
+
+def test_commit_lists_and_reads_nothing(tmp_path, monkeypatch):
+    """Registrar.commit is one write: no directory listing and no file
+    opened for reading, however many commits the table already holds."""
+    import builtins
+
+    reg = Registrar(str(tmp_path / "_checkpoint"))
+    for i in range(20):
+        reg.commit(f"r{i}", "sink_a", [LineageRow(0, 1, 1)])
+    real_open = builtins.open
+
+    def no_listing(*a, **k):
+        raise AssertionError("commit listed a directory")
+
+    def write_only(path, mode="r", *args, **kwargs):
+        assert set(mode) & set("wxa"), f"commit opened {path} for reading"
+        return real_open(path, mode, *args, **kwargs)
+
+    monkeypatch.setattr(os, "listdir", no_listing)
+    monkeypatch.setattr(os, "scandir", no_listing)
+    monkeypatch.setattr(builtins, "open", write_only)
+    path = reg.commit("r-new", "sink_a", [LineageRow(0, 2, 20)], files=["f"])
+    monkeypatch.undo()
+    assert path == str(tmp_path / "run_id=r-new" / "_manifests" / "sink=sink_a.json")
+    assert reg.committed_sinks("r-new") == {"sink_a"}
+    assert reg.lineage("r-new")["row_count"].to_pylist() == [2]
 
 
 @pytest.mark.parametrize(
     "first, second",
     [
         (("a", "s"), ("a__b", "s")),
-        (("run:" + "x" * 28 + "aaaaaaaa", "s"), ("run/" + "x" * 28 + "bbbbbbbb", "s")),
+        (("run:" + "x" * 28 + "aaaaaaaa", "s"), ("run;" + "x" * 28 + "bbbbbbbb", "s")),
         (("r__x", "y"), ("r", "x__y")),
     ],
     ids=["run-prefix", "shared-32-sanitized", "sanitizer-pair"],
 )
 def test_keyed_lookup_is_exact_for_shared_name_prefixes(tmp_path, first, second):
+    """Run ids that share a prefix, or differ only in characters a file
+    name sanitizer would mangle, are distinct commit keys."""
     reg = Registrar(str(tmp_path / "ck"))
     reg.commit(*first, [LineageRow(0, 1, 10)])
     reg.commit(*second, [LineageRow(0, 2, 20)])
-    for _ in ("live", "compacted"):
-        for (run_id, sink), rows in ((first, 1), (second, 2)):
-            assert reg.committed_sinks(run_id) == {sink}
-            assert reg.lineage(run_id)["row_count"].to_pylist() == [rows]
-        reg.compact()
+    for (run_id, sink), rows in ((first, 1), (second, 2)):
+        assert reg.committed_sinks(run_id) == {sink}
+        assert reg.lineage(run_id)["row_count"].to_pylist() == [rows]
+    assert len({s.snapshot_id for s in reg.snapshots()}) == 2
 
 
 def test_failed_swap_leaves_no_file_a_glob_reader_counts(tmp_path, monkeypatch):
-    """A crash inside a single-file swap must not leave a temp file that an
-    external glob reader takes for data: DuckDB over ``_checkpoint/*.parquet``
-    (its glob matches dot-files) must return exactly ``lineage()``, and
-    ``_manifests/*.json`` must list only published manifests."""
+    """A crash inside a commit's single-file swap must not leave a temp
+    file that an external glob reader takes for a commit: DuckDB's
+    ``run_id=*/_manifests/*.json`` glob (it matches dot-files) must list
+    exactly the published manifests, and the failed commit is not one."""
     import duckdb
-
-    from logstash_forwarder_spark.plans.manifest import publish_manifest
 
     real = os.replace
 
@@ -230,24 +233,22 @@ def test_failed_swap_leaves_no_file_a_glob_reader_counts(tmp_path, monkeypatch):
         monkeypatch.setattr(os, "replace", failing)
 
     reg = Registrar(str(tmp_path / "_checkpoint"))
-    run_dir = str(tmp_path / "run_id=r1")
     reg.commit("r1", "sink_a", [LineageRow(0, 10, 100)])
-    publish_manifest(run_dir, "sink_a", [], [])
     for fail in (
         lambda: reg.commit("r1", "sink_b", [LineageRow(0, 5, 50)]),
-        reg.compact,
-        lambda: publish_manifest(run_dir, "sink_b", [], []),
+        lambda: reg.commit("r2", "sink_a", [LineageRow(0, 7, 70)]),
     ):
         fail_next_replace()
         with pytest.raises(OSError, match="injected"):
             fail()
 
     con = duckdb.connect()
-    ckpt = con.sql(
-        f"SELECT run_id, sink, row_count FROM read_parquet('{reg.path}/*.parquet')"
-    ).fetchall()
-    assert sorted(ckpt) == sorted(
-        zip(*(reg.lineage()[c].to_pylist() for c in ("run_id", "sink", "row_count")))
-    ) == [("r1", "sink_a", 10)]
-    manifests = con.sql(f"SELECT file FROM glob('{run_dir}/_manifests/*.json')")
-    assert [os.path.basename(f) for (f,) in manifests.fetchall()] == ["sink=sink_a.json"]
+    manifests = con.sql(
+        f"SELECT file FROM glob('{tmp_path}/run_id=*/_manifests/*.json')"
+    )
+    assert [os.path.relpath(f, tmp_path) for (f,) in manifests.fetchall()] == [
+        os.path.join("run_id=r1", "_manifests", "sink=sink_a.json")
+    ]
+    assert reg.committed_sinks("r1") == {"sink_a"}
+    assert reg.committed_sinks("r2") == set()
+    assert reg.lineage()["row_count"].to_pylist() == [10]

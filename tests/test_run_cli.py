@@ -209,23 +209,6 @@ def test_cli_driver_sized_poll_starts_no_job_of_its_own(
     assert in_pipeline and sorted(jobs) == sorted(in_pipeline)
 
 
-def test_cli_compact_checkpoint(spark, tmp_path, capsys):
-    import json as _json
-
-    from logstash_forwarder_spark.run import main
-
-    out = str(tmp_path / "out")
-    assert main(["--gen", "2000", "--out", out, "--run-id", "c1"]) == 0
-    capsys.readouterr()
-    assert main(["--compact-checkpoint", "--out", out]) == 0
-    rec = _json.loads(capsys.readouterr().out.strip().splitlines()[-1])
-    assert rec["compacted_commit_files"] >= 2
-    # resume (exactly-once) still works off the compacted index
-    assert main(["--gen", "2000", "--out", out, "--run-id", "c1"]) == 0
-    rec2 = _json.loads(capsys.readouterr().out.strip().splitlines()[-1])
-    assert rec2["rows_staged"] == 0 and rec2["sinks_committed"] == []
-
-
 def test_run_cli_forwarder_conf(spark, tmp_path, capsys):
     """The literal switch-over path: a logstash-forwarder.conf (the
     reference's own format — network block, files[].paths/fields,

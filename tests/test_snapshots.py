@@ -1,5 +1,6 @@
 """Iceberg-style snapshot log over the registrar: commit ordering,
-VERSION AS OF / TIMESTAMP AS OF reads at sink-commit granularity."""
+VERSION AS OF / TIMESTAMP AS OF reads at sink-commit granularity, and the
+log's survival of compaction, which swaps the manifests that record it."""
 
 from __future__ import annotations
 
@@ -9,6 +10,7 @@ import pytest
 
 from logstash_forwarder_spark.datagen import gen_sequences, gen_source_dim
 from logstash_forwarder_spark.pipeline import PipelineSpec, run_pipeline
+from logstash_forwarder_spark.plans.compact import compact_run
 from logstash_forwarder_spark.plans.registrar import Registrar
 
 
@@ -91,99 +93,83 @@ def test_cross_run_snapshot_cut(spark, tmp_path):
     assert log1.read_as_of(spark, out, "r1", snapshot_id=r2_last.snapshot_id).count() > 0
 
 
+def _snapshot_log(reg):
+    return [
+        (s.snapshot_id, s.run_id, s.sink, s.committed_at, s.sequence_number)
+        for s in reg.snapshots()
+    ]
+
+
 def test_compaction_preserves_everything(spark, tmp_out):
-    """Registrar.compact() (Iceberg manifest-list compaction): many commit
-    files fold into ONE atomically-swapped index; resume state, lineage,
-    the snapshot log (ids, order, timestamps), and time travel to a
-    pre-compaction snapshot are all identical before and after."""
-    import pyarrow.compute as pc
-
-    from logstash_forwarder_spark.datagen import gen_sequences, gen_source_dim
-
-    reg = _run(spark, tmp_out)  # run 1
+    """compact_sink swaps the manifest that records each snapshot, so it
+    must carry the record over: after every sink of a run is compacted,
+    the snapshot log (ids, order, instants), resume state, lineage and a
+    time-travel read at every snapshot of the run are all identical."""
+    reg = _run(spark, tmp_out)  # run 1: 4 input partitions, 4 files a sink
     seqs = gen_sequences(spark, 1000, num_partitions=2)
     run_pipeline(
         spark, seqs, gen_source_dim(spark),
         PipelineSpec(out_dir=tmp_out, run_id="snaprun2"),
     )
 
-    before_snaps = [(s.snapshot_id, s.run_id, s.sink, s.committed_at, s.sequence_number) for s in reg.snapshots()]
-    before_sinks1 = reg.committed_sinks("snaprun")
-    before_sinks2 = reg.committed_sinks("snaprun2")
-    before_lineage = sorted(map(tuple, reg.lineage().to_pylist()))
-    old_snap = reg.snapshots()[0]
-    before_travel = sorted(
-        map(tuple, reg.read_as_of(spark, tmp_out, "snaprun",
-                                  snapshot_id=old_snap.snapshot_id).collect())
-    )
+    def state():
+        return (
+            _snapshot_log(reg),
+            reg.committed_sinks("snaprun"),
+            reg.committed_sinks("snaprun2"),
+            sorted(map(tuple, reg.lineage().to_pylist())),
+            [
+                reg.read_as_of(
+                    spark, tmp_out, "snaprun", snapshot_id=s.snapshot_id
+                ).count()
+                for s in reg.snapshots()
+                if s.run_id == "snaprun"
+            ],
+        )
 
-    n = reg.compact()
-    assert n == len(before_snaps)
-    files = os.listdir(reg.path)
-    assert files == [Registrar.INDEX_NAME]  # many files -> one
-
-    assert [(s.snapshot_id, s.run_id, s.sink, s.committed_at, s.sequence_number) for s in reg.snapshots()] == before_snaps
-    assert reg.committed_sinks("snaprun") == before_sinks1
-    assert reg.committed_sinks("snaprun2") == before_sinks2
-    assert sorted(map(tuple, reg.lineage().to_pylist())) == before_lineage
-    after_travel = sorted(
-        map(tuple, reg.read_as_of(spark, tmp_out, "snaprun",
-                                  snapshot_id=old_snap.snapshot_id).collect())
-    )
-    assert after_travel == before_travel
-
-    # compact is idempotent on an already-compacted dir
-    assert reg.compact() == 0
-    assert sorted(map(tuple, reg.lineage().to_pylist())) == before_lineage
+    before = state()
+    reports = compact_run(spark, tmp_out, "snaprun")
+    assert all(r["rewritten"] and r["files_after"] < r["files_before"] for r in reports)
+    assert state() == before
+    # compacting again is a no-op that keeps the record too
+    assert not any(r["rewritten"] for r in compact_run(spark, tmp_out, "snaprun"))
+    assert state() == before
 
 
 def test_commits_after_compaction_and_override(spark, tmp_out):
-    """New commits after compaction appear alongside the index; a
-    re-commit of a compacted (run, sink) OVERRIDES its index rows (same
-    deterministic filename, live file wins); resume still skips."""
+    """New commits after a compaction appear beside the compacted ones; a
+    re-commit of a compacted (run, sink) OVERRIDES its record (same
+    snapshot identity, no duplicate); resume still skips."""
     from logstash_forwarder_spark.plans.registrar import LineageRow
 
-    reg = Registrar(os.path.join(tmp_out, "_checkpoint"))
-    reg.commit("r1", "sinkA", [LineageRow(0, 10, 100)])
-    reg.commit("r1", "sinkB", [LineageRow(0, 20, 200)])
-    reg.compact()
+    reg = _run(spark, tmp_out, run_id="r1")
+    compact_run(spark, tmp_out, "r1")
+    sinks = sorted(reg.committed_sinks("r1"))
+    n_snaps = len(reg.snapshots())
 
     # new commit post-compaction
     reg.commit("r2", "sinkA", [LineageRow(0, 5, 50)])
-    assert reg.committed_sinks("r1") == {"sinkA", "sinkB"}
+    assert reg.committed_sinks("r1") == set(sinks)
     assert reg.committed_sinks("r2") == {"sinkA"}
-    snaps = reg.snapshots()
-    assert len(snaps) == 3
+    assert len(reg.snapshots()) == n_snaps + 1
 
     # override: re-commit a compacted pair with different numbers
-    reg.commit("r1", "sinkA", [LineageRow(0, 11, 111)])
+    reg.commit("r1", sinks[0], [LineageRow(0, 11, 111)])
     t = reg.lineage("r1")
-    rows = {
-        (s, rc) for s, rc in zip(
-            t.column("sink").to_pylist(), t.column("row_count").to_pylist()
-        )
-    }
-    assert rows == {("sinkA", 11), ("sinkB", 20)}  # 10 replaced by 11
-    assert len(reg.snapshots()) == 3  # same identity, no dup
-    # second compaction folds the live files back in, prunes overridden rows
-    reg.compact()
-    t = reg.lineage("r1")
-    rows = {
-        (s, rc) for s, rc in zip(
-            t.column("sink").to_pylist(), t.column("row_count").to_pylist()
-        )
-    }
-    assert rows == {("sinkA", 11), ("sinkB", 20)}
+    assert [
+        rc for s, rc in zip(t["sink"].to_pylist(), t["row_count"].to_pylist())
+        if s == sinks[0]
+    ] == [11]
+    assert {s for s in t["sink"].to_pylist()} <= set(sinks)
+    assert len(reg.snapshots()) == n_snaps + 1  # same identity, no dup
 
 
 def test_time_travel_across_compaction_boundary(spark, tmp_out):
-    """A VERSION AS OF cut can land between compacted (index-sourced) and
-    post-compaction (live-file) snapshots: the global order must interleave
-    both sources correctly and the read must resolve each side's sinks."""
+    """A VERSION AS OF cut can land between compacted snapshots and later
+    ones: the global order must interleave both correctly and the read
+    must resolve each side's sinks."""
     reg = _run(spark, tmp_out)  # run 1 (several sink commits)
-    reg.compact()
-
-    from logstash_forwarder_spark.datagen import gen_sequences, gen_source_dim
+    compact_run(spark, tmp_out, "snaprun")
 
     run_pipeline(
         spark,
@@ -202,7 +188,7 @@ def test_time_travel_across_compaction_boundary(spark, tmp_out):
     # run-2 invisible at that version
     cut = pre[-1].snapshot_id
     df1 = reg.read_as_of(spark, tmp_out, "snaprun", snapshot_id=cut)
-    assert df1.count() > 0
+    assert df1.count() == 3000
     with pytest.raises(ValueError, match="no committed sink"):
         reg.read_as_of(spark, tmp_out, "snaprun2", snapshot_id=cut)
     # at the newest snapshot run-2 is fully visible

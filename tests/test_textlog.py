@@ -7,6 +7,8 @@ from __future__ import annotations
 
 import os
 
+import pytest
+
 from logstash_forwarder_spark.sources.textlog import (
     harvest_text_files,
     resume_harvest,
@@ -428,23 +430,43 @@ def test_split_chunked_property():
     check()
 
 
-def test_harvest_kernel_bounded_flush(monkeypatch):
+@pytest.mark.parametrize("body", ["files", "tail"])
+def test_harvest_kernel_bounded_flush(monkeypatch, tmp_path, body):
     """ADVICE r4: the harvest kernel must emit MULTIPLE RecordBatches when
     accumulated line bytes exceed the flush budget (mapInArrow allows it)
-    instead of concatenating everything into one >2 GiB batch. Driving the
-    kernel directly with a tiny budget: many batches out, same rows."""
+    instead of concatenating everything into one >2 GiB batch. Driving
+    each body directly — the whole-file kernel and the tail poll's
+    seek-read (two of its files resumed past their first line) — with a
+    tiny budget: many batches out, same rows."""
     import pyarrow as pa
 
     from logstash_forwarder_spark.sources import textlog
 
-    paths = pa.array([f"/x/f{i}.log" for i in range(4)])
-    contents = pa.array(
-        [f"a{i}\nbb{i}\nccc{i}\npartial".encode() for i in range(4)],
-        pa.binary(),
-    )
-    batch = pa.RecordBatch.from_arrays([paths, contents], names=["path", "content"])
-    base = pa.Table.from_batches(list(textlog._harvest_kernel(iter([batch]))))
+    contents = [f"a{i}\nbb{i}\nccc{i}\npartial".encode() for i in range(4)]
+    if body == "files":
+        batch = pa.RecordBatch.from_pydict(
+            {
+                "path": [f"/x/f{i}.log" for i in range(4)],
+                "content": pa.array(contents, pa.binary()),
+            }
+        )
+        harvest = lambda: list(textlog._harvest_kernel(iter([batch])))  # noqa: E731
+    else:
+        paths = [str(tmp_path / f"f{i}.log") for i in range(4)]
+        for p, c in zip(paths, contents):
+            _write(p, c)
+        batch = pa.RecordBatch.from_pydict(
+            {
+                "file": paths,
+                "resume_offset": pa.array([0, 3, 0, 3], pa.int64()),
+                "base_line": pa.array([0, 1, 0, 1], pa.int64()),
+            }
+        )
+        harvest = lambda: list(textlog.harvest_tail_batch(batch))  # noqa: E731
+    base = pa.Table.from_batches(harvest())
+    # 4 lines per file; a resumed file's first line was shipped
+    assert base.num_rows == (16 if body == "files" else 14)
     monkeypatch.setattr(textlog, "_FLUSH_BYTES", 1)
-    many = list(textlog._harvest_kernel(iter([batch])))
+    many = harvest()
     assert len(many) >= 4  # one flush per file at budget 1
     assert pa.Table.from_batches(many).to_pylist() == base.to_pylist()
