@@ -6,8 +6,9 @@ training sequences ``(doc_id, tokens, n_tok, source)``.
 Not a port: the reference's goroutine/channel topology
 (/root/reference/logstash-forwarder.go:143-158) becomes a declarative
 DataFrame DAG optimized by Catalyst; its registrar offset file
-(registrar.go:38-51) becomes one commit record per sink (its manifest),
-read as a checkpoint/lineage table; its per-server shipping
+(registrar.go:38-51) becomes one commit record per run (its manifest,
+which also carries a tail poll's offsets), read as a checkpoint/lineage
+table; its per-server shipping
 (publisher1.go:168-196) becomes rule-based multi-sink routing with
 exactly-once idempotent commits.
 """

@@ -34,7 +34,7 @@ from collections.abc import Iterator
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from ..sources.textlog import SOURCE_STEM_RE
+from ..sources.textlog import SOURCE_STEM_RE, hashed_tokens
 
 VERSION = b"1"
 COMPRESS_LEVEL = 3  # publisher1.go:46 zlib.NewWriterLevel(&buffer, 3)
@@ -76,46 +76,62 @@ def encode_payload(frames: list[bytes]) -> bytes:
     return encode_window_frame(len(frames)) + b"1C" + struct.pack(">I", len(comp)) + comp
 
 
-def decode_stream(buf: bytes) -> Iterator[tuple[str, object]]:
-    """Yield ('W', n) / ('A', seq) / ('D', (seq, pairs_dict)) in stream
-    order, transparently opening ``1C`` envelopes (PROTOCOL.md: the
-    uncompressed payload MUST be a valid frame stream by itself).
-    Raises ValueError on malformed framing — a truncated frame is a
-    protocol error, not EOF."""
-    i, n = 0, len(buf)
-    while i < n:
-        if i + 2 > n:
-            raise ValueError("lumberjack: truncated frame header")
-        version, ftype = buf[i : i + 1], buf[i + 1 : i + 2]
+def parse_frames(read) -> Iterator[tuple[str, object]]:
+    """The one frame parser: yield ('W', n) / ('A', seq) / ('D', (seq,
+    pairs_dict)) in stream order, transparently opening ``1C`` envelopes
+    (PROTOCOL.md: the uncompressed payload MUST be a valid frame stream by
+    itself). ``read(n)`` is an exact read: it returns n bytes, or b"" when
+    the stream ended before the first of them, and raises ValueError when
+    it ended inside them. The end of the stream is clean only between
+    frames; anywhere else it is a truncated frame, a ValueError."""
+
+    def exact(n: int) -> bytes:
+        got = read(n)
+        if len(got) != n:
+            raise ValueError("lumberjack: truncated frame")
+        return got
+
+    while hdr := read(2):
+        version, ftype = hdr[:1], hdr[1:2]
         if version != VERSION:
             raise ValueError(f"lumberjack: unknown version byte {version!r}")
-        i += 2
         if ftype == b"W" or ftype == b"A":
-            (val,) = struct.unpack_from(">I", buf, i)
-            i += 4
+            (val,) = struct.unpack(">I", exact(4))
             yield ("W" if ftype == b"W" else "A", val)
         elif ftype == b"C":
-            (clen,) = struct.unpack_from(">I", buf, i)
-            i += 4
-            inner = zlib.decompress(buf[i : i + clen])
-            i += clen
-            yield from decode_stream(inner)
+            (clen,) = struct.unpack(">I", exact(4))
+            yield from decode_stream(zlib.decompress(exact(clen)))
         elif ftype == b"D":
-            seq, n_pairs = struct.unpack_from(">II", buf, i)
-            i += 8
+            seq, n_pairs = struct.unpack(">II", exact(8))
             pairs = {}
             for _ in range(n_pairs):
-                (klen,) = struct.unpack_from(">I", buf, i)
-                i += 4
-                k = buf[i : i + klen].decode("utf-8")
-                i += klen
-                (vlen,) = struct.unpack_from(">I", buf, i)
-                i += 4
-                pairs[k] = buf[i : i + vlen].decode("utf-8")
-                i += vlen
+                (klen,) = struct.unpack(">I", exact(4))
+                k = exact(klen).decode("utf-8")
+                (vlen,) = struct.unpack(">I", exact(4))
+                pairs[k] = exact(vlen).decode("utf-8")
             yield ("D", (seq, pairs))
         else:
             raise ValueError(f"lumberjack: unknown frame type {ftype!r}")
+
+
+def decode_stream(buf: bytes) -> Iterator[tuple[str, object]]:
+    """:func:`parse_frames` over a buffer, through a bounds-checked slice.
+    Raises ValueError on malformed framing — a truncated frame is a
+    protocol error, not EOF."""
+    pos = 0
+
+    def read(n: int) -> bytes:
+        nonlocal pos
+        if pos + n > len(buf):
+            if pos == len(buf):
+                return b""
+            raise ValueError(
+                f"lumberjack: stream ends mid-frame ({len(buf) - pos}/{n} bytes)"
+            )
+        pos += n
+        return buf[pos - n : pos]
+
+    return parse_frames(read)
 
 
 def ack_for(frames: Iterator[tuple[str, object]]) -> bytes | None:
@@ -265,10 +281,7 @@ def lumberjack_to_sequences(decoded: DataFrame, *, vocab: int = 2_147_483_647) -
     shape — the same contract as ``textlog.lines_to_sequences``, with the
     reference's (path, offset) event identity taken from the FRAME's
     file/offset pairs (the shipper's identity, not the spool file's)."""
-    words = F.filter(F.split("line", r"\s+"), lambda w: w != F.lit(""))
-    tokens = F.transform(
-        words, lambda w: F.pmod(F.xxhash64(w), F.lit(vocab)).cast("int")
-    )
+    tokens = hashed_tokens(vocab=vocab)
     return decoded.filter(F.col("line").isNotNull()).select(
         F.concat_ws(":", "file", F.col("offset").cast("string")).alias("doc_id"),
         tokens.alias("tokens"),

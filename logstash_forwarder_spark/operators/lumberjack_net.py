@@ -42,33 +42,35 @@ this is the wire-compatibility path.
 from __future__ import annotations
 
 import socket
-import struct
 import threading
-import zlib
 from collections.abc import Iterator
 
 from pyspark.sql import DataFrame
 
 from .lumberjack import (
-    VERSION,
-    decode_stream,
     encode_ack_frame,
     encode_data_frame,
     encode_payload,
+    parse_frames,
 )
 
 
 # ---------------------------------------------------------------------------
 # incremental frame reader (the only socket-specific byte code: exact reads;
-# frame SEMANTICS are delegated to the codec's decode_stream for envelopes)
+# frame SEMANTICS are the codec's one parser, parse_frames)
 # ---------------------------------------------------------------------------
 
 
 def _read_exact(fp, n: int) -> bytes:
+    """Exact read for :func:`~.lumberjack.parse_frames`: n bytes, b"" when
+    the stream is closed before the first of them, ValueError when it is
+    closed inside them."""
     buf = bytearray()
     while len(buf) < n:
         chunk = fp.read(n - len(buf))
         if not chunk:
+            if not buf:
+                return b""
             raise ValueError(
                 f"lumberjack: connection closed mid-frame ({len(buf)}/{n} bytes)"
             )
@@ -78,36 +80,9 @@ def _read_exact(fp, n: int) -> bytes:
 
 def read_frames(fp) -> Iterator[tuple[str, object]]:
     """Stream ('W', n) / ('A', seq) / ('D', (seq, pairs)) from a file-like
-    socket stream until EOF. ``1C`` envelopes are decompressed and
-    re-parsed by the codec's decode_stream (PROTOCOL.md: the uncompressed
-    payload MUST be a valid frame stream by itself). EOF between frames
-    is a clean end; EOF inside a frame raises."""
-    while True:
-        hdr = fp.read(2)
-        if not hdr:
-            return
-        if len(hdr) < 2:
-            raise ValueError("lumberjack: truncated frame header")
-        version, ftype = hdr[:1], hdr[1:2]
-        if version != VERSION:
-            raise ValueError(f"lumberjack: unknown version byte {version!r}")
-        if ftype in (b"W", b"A"):
-            (val,) = struct.unpack(">I", _read_exact(fp, 4))
-            yield ("W" if ftype == b"W" else "A", val)
-        elif ftype == b"C":
-            (clen,) = struct.unpack(">I", _read_exact(fp, 4))
-            yield from decode_stream(zlib.decompress(_read_exact(fp, clen)))
-        elif ftype == b"D":
-            seq, n_pairs = struct.unpack(">II", _read_exact(fp, 8))
-            pairs = {}
-            for _ in range(n_pairs):
-                (klen,) = struct.unpack(">I", _read_exact(fp, 4))
-                k = _read_exact(fp, klen).decode("utf-8")
-                (vlen,) = struct.unpack(">I", _read_exact(fp, 4))
-                pairs[k] = _read_exact(fp, vlen).decode("utf-8")
-            yield ("D", (seq, pairs))
-        else:
-            raise ValueError(f"lumberjack: unknown frame type {ftype!r}")
+    socket stream until EOF, through the codec's one parser. EOF between
+    frames is a clean end; EOF inside a frame raises ValueError."""
+    return parse_frames(lambda n: _read_exact(fp, n))
 
 
 # ---------------------------------------------------------------------------

@@ -1,4 +1,4 @@
-"""The orchestrator: parse → enrich → route → fan-out commit → aggregate.
+"""The orchestrator: parse → enrich → route → write → one run commit.
 
 One logical run = one envelope/ack cycle of the reference
 (/root/reference/publisher1.go:44-127), restructured for scale:
@@ -13,26 +13,24 @@ One logical run = one envelope/ack cycle of the reference
   those rows gives every manifest's file list, the lineage and the
   manifests' ``sources`` — K sinks do not mean K scans of a 100 TB
   input, and nothing is listed or re-read after the write.
-* **Checkpoint anti-filter.** On resume, sinks already committed for this
-  ``run_id`` (those with a manifest) are excluded *before* the write
-  (O-X3's left-anti join, degenerated to an ``isin`` filter because the
-  commit key is the sink) — re-running a half-failed run re-does only
-  uncommitted work.
-* **One commit record per sink, after the data.** Data files land once in
-  their final ``sink=S/`` directory and are never renamed — there is no
-  task-commit protocol under the writer; each sink is then committed by
-  ``Registrar.commit``: ONE atomic swap of a small manifest file
-  (plans/manifest.py) that names the files and carries the sink's
-  per-(sink, source) statistics (``sources``), its lineage (the writer's
-  per-(sink, input partition) statistics) and its ``committed_at`` —
-  every sink, empty or not, the same way. Readers resolve through the
-  manifest, so files no manifest names — a failed task attempt's partial
-  file, or a sink whose commit a crash pre-empted — are invisible, and
-  resume deletes them (``compact.gc_unreferenced``) and redoes the sink
-  → exactly-once routed rows (strictly stronger than the reference's
-  at-least-once, SURVEY §3.4). No file or directory is ever renamed
-  but the one-file manifest swap, so the same protocol is correct on
-  object stores (S3/GCS).
+* **One commit per run, after the data.** Data files land once in their
+  final ``sink=S/`` directory and are never renamed — there is no
+  task-commit protocol under the writer; the run is then committed by
+  ONE atomic swap of a small manifest file, ``run_id=R/_manifest.json``
+  (plans/manifest.py ``publish_run``), that lists every non-empty sink's
+  files, its per-(sink, source) statistics (``sources``), its lineage
+  (the writer's per-(sink, input partition) statistics), the run's
+  ``committed_at`` and — for a tail poll, passed in as ``tail`` — the
+  source offsets after the poll. Readers resolve through the manifest,
+  so files no manifest names — a failed task attempt's partial file, or
+  a run whose commit a crash pre-empted — are invisible. A run whose
+  manifest exists is done and is never rewritten; an uncommitted run's
+  files are all orphans, which resume deletes
+  (``compact.gc_unreferenced``) before it redoes the whole run →
+  exactly-once routed rows (strictly stronger than the reference's
+  at-least-once, SURVEY §3.4). No file or directory is ever renamed but
+  the one-file manifest swap, so the same protocol is correct on object
+  stores (S3/GCS).
 * **One kernel, two backends.** Parse and enrich are one Arrow kernel,
   ``parse_enrich`` (operators/enrich.py): ``parse_batch``, then a pyarrow
   left join of the dim's rows, collected once in the driver. When
@@ -44,17 +42,16 @@ One logical run = one envelope/ack cycle of the reference
   else (a parquet scan, a streaming micro-batch, a checkpointed poll)
   runs the kernel in one ``mapInArrow`` and the writer in the same job:
   one Spark job per publish. Both backends then share the route tail
-  (``_route``: the metadata columns, the Catalyst route predicates — the
-  one predicate compiler — and the filter of committed sinks) and the
-  file schema. There is no size threshold here: the input's plan decides,
-  and ``RunResult.backend`` records which ran. Both commit through the
-  same loop below.
-* **Metrics from manifests.** ``_metrics`` (per-(sink, source) row count,
-  token total, max tokens) is built on the driver from the manifests of
-  ALL the run's sinks — a sink skipped on resume contributes its stored
-  statistics, no data is re-read — and written as one parquet file
-  through the same single-file swap. No Spark job runs after the commit
-  loop.
+  (``_route``: the metadata columns and the Catalyst route predicates
+  — the one predicate compiler) and the file schema. There is no size
+  threshold here: the input's plan decides, and ``RunResult.backend``
+  records which ran. Both commit through the same manifest swap.
+* **Metrics from the writer's statistics.** ``_metrics`` (per-(sink,
+  source) row count, token total, max tokens) is built on the driver from
+  the sink entries the manifest was just built from — no data or
+  manifest is re-read — and written as one parquet file through the same
+  single-file swap, after the manifest. A run is thus two swaps. No Spark
+  job runs after the write.
 """
 
 from __future__ import annotations
@@ -77,19 +74,21 @@ from .operators.enrich import (
     parse_enrich,
     parse_enrich_stage,
 )
-from .operators.route import route_stage, sink_names
+from .operators.route import route_stage
 from .plans.compact import gc_unreferenced
 from .plans.manifest import (
     committed,
+    find_sink,
     fold_stats,
     publish_file,
-    read_manifest,
+    publish_run,
+    read_run,
     resolve_sink_paths,
+    sink_entry,
     sink_sources,
     write_sink_batches,
     write_sink_files,
 )
-from .plans.registrar import LineageRow, Registrar
 
 
 # _metrics: one row per (sink, source); a manifest's ``sources`` entries
@@ -103,6 +102,8 @@ METRICS_SCHEMA = pa.schema(
         ("max_tokens", pa.int32()),
     ]
 )
+METRICS_FILE = "part-00000.parquet"
+
 
 @dataclass
 class PipelineSpec:
@@ -126,8 +127,8 @@ class PipelineSpec:
 @dataclass
 class RunResult:
     run_id: str
+    # the non-empty sinks this call committed; [] for a committed run
     sinks_committed: list[str]
-    sinks_skipped: list[str]
     rows_staged: int
     metrics_path: str
     elapsed_sec: float
@@ -144,15 +145,10 @@ def build_plan(
     return _route(parse_enrich_stage(sequences, source_dim), spec)
 
 
-def _route(
-    enriched: DataFrame, spec: PipelineSpec, done=(), part_id=None
-) -> DataFrame:
-    """The route tail both backends share: the metadata columns, the
-    sink, minus the sinks already committed (excluded before the write)."""
-    routed = route_stage(annotate(enriched, spec.run_id, part_id), spec.routes)
-    if done:
-        routed = routed.filter(~F.col("sink").isin(sorted(done)))
-    return routed
+def _route(enriched: DataFrame, spec: PipelineSpec, part_id=None) -> DataFrame:
+    """The route tail both backends share: the metadata columns and the
+    sink."""
+    return route_stage(annotate(enriched, spec.run_id, part_id), spec.routes)
 
 
 def _local_relation(df: DataFrame):
@@ -181,69 +177,72 @@ def run_pipeline(
     sequences: DataFrame,
     source_dim: DataFrame,
     spec: PipelineSpec,
+    *,
+    tail: dict | None = None,
 ) -> RunResult:
+    """Publish ``sequences`` as run ``spec.run_id`` and commit it with one
+    manifest swap, ``tail`` (a tail poll's offsets, stored as given)
+    included. A run whose manifest exists is already committed: nothing
+    is written for it but a ``_metrics`` a crash left missing."""
     t0 = time.monotonic()
-    reg = Registrar(os.path.join(spec.out_dir, "_checkpoint"))
-    all_sinks = sink_names(spec.routes)
-    done = reg.committed_sinks(spec.run_id)
-    todo = [s for s in all_sinks if s not in done]
     backend = "local" if is_driver_local(sequences) else "spark"
-
     run_dir = os.path.join(spec.out_dir, f"run_id={spec.run_id}")
-    os.makedirs(run_dir, exist_ok=True)
+    run = read_run(run_dir)
+    if run is not None:
+        metrics = os.path.join(run_dir, "_metrics")
+        if not os.path.exists(os.path.join(metrics, METRICS_FILE)):
+            _publish_metrics(run_dir, run["sinks"])
+        return RunResult(spec.run_id, [], 0, metrics, time.monotonic() - t0, backend)
 
-    new_commits: list[str] = []
-    rows_staged = 0
-    if todo:
-        # GC unreferenced leftovers of crashed attempts, then write data
-        # files ONCE, under final names, returning each file's
-        # per-(input partition, source) statistics — metadata-sized
-        for sink in todo:
-            gc_unreferenced(run_dir, sink)
-        if backend == "local":
-            stats = _write_local(sequences, source_dim, spec, done, run_dir)
-        else:
-            stats = write_sink_files(_routed(sequences, source_dim, spec, done), run_dir)
-        files = fold_stats(stats, ["sink", "file"], [])
-        # with sort_col one part_id spans several tasks' files
-        lineage = fold_stats(stats, ["sink", "part_id"], ["row_count", "token_total"])
-        sources = sink_sources(stats)
-
-        for sink in todo:
-            # the commit = the ack (O-R5): one atomic FILE swap names the
-            # data files and records the lineage. A sink no row was routed
-            # to commits an empty manifest.
-            rows = [
-                LineageRow(r["part_id"], r["row_count"], r["token_total"] or 0)
-                for r in lineage.get(sink, [])
-            ]
-            reg.commit(
-                spec.run_id,
-                sink,
-                rows,
-                files=[r["file"] for r in files.get(sink, [])],
-                sources=sources.get(sink, []),
-            )
-            new_commits.append(sink)
-            rows_staged += sum(r.row_count for r in rows)
-
+    # an uncommitted run's files are a crashed attempt's orphans: GC them,
+    # then write data files ONCE, under final names, returning each file's
+    # per-(input partition, source) statistics — metadata-sized
+    if os.path.isdir(run_dir):
+        for name in os.listdir(run_dir):
+            if name.startswith("sink="):
+                gc_unreferenced(run_dir, name[len("sink=") :], ())
+    if backend == "local":
+        stats = _write_local(sequences, source_dim, spec, run_dir)
+    else:
+        stats = write_sink_files(_routed(sequences, source_dim, spec), run_dir)
+    files = fold_stats(stats, ["sink", "file"], [])
+    # with sort_col one part_id spans several tasks' files
+    lineage = fold_stats(stats, ["sink", "part_id"], ["row_count", "token_total"])
+    entries = [
+        sink_entry(
+            sink,
+            [r["file"] for r in files[sink]],
+            sources,
+            [
+                {
+                    "partition_id": r["part_id"],
+                    "row_count": r["row_count"],
+                    "token_total": r["token_total"] or 0,
+                }
+                for r in lineage[sink]
+            ],
+        )
+        for sink, sources in sink_sources(stats).items()
+    ]
+    # the commit = the ack (O-R5): one atomic FILE swap names every
+    # sink's data files, records the lineage and, for a poll, the offsets
+    publish_run(run_dir, entries, tail)
     return RunResult(
         run_id=spec.run_id,
-        sinks_committed=new_commits,
-        sinks_skipped=sorted(done),
-        rows_staged=rows_staged,
-        metrics_path=_publish_metrics(run_dir, all_sinks),
+        sinks_committed=[e["sink"] for e in entries],
+        rows_staged=sum(e["row_count"] for e in entries),
+        metrics_path=_publish_metrics(run_dir, entries),
         elapsed_sec=time.monotonic() - t0,
         backend=backend,
     )
 
 
 def _routed(
-    sequences: DataFrame, source_dim: DataFrame, spec: PipelineSpec, done
+    sequences: DataFrame, source_dim: DataFrame, spec: PipelineSpec
 ) -> DataFrame:
     """The Spark backend's routed rows, range-sorted when
     ``spec.sort_col`` asks for it."""
-    routed = _route(parse_enrich_stage(sequences, source_dim), spec, done)
+    routed = _route(parse_enrich_stage(sequences, source_dim), spec)
     if spec.sort_col:
         range_args = ("sink", spec.sort_col)
         if spec.sort_partitions:
@@ -258,7 +257,6 @@ def _write_local(
     sequences: DataFrame,
     source_dim: DataFrame,
     spec: PipelineSpec,
-    done,
     run_dir: str,
 ) -> pa.Table:
     """The driver-local backend, in two Spark jobs and no Python worker:
@@ -270,7 +268,7 @@ def _write_local(
         parse_enrich(sequences.toArrow(), dim_rows(source_dim)),
         enriched_schema(sequences.schema, source_dim.schema),
     )
-    table = _route(enriched, spec, done, F.lit(0)).toArrow()
+    table = _route(enriched, spec, F.lit(0)).toArrow()
     if spec.sort_col:
         table = table.sort_by(
             [("sink", "ascending"), (spec.sort_col, "ascending")],
@@ -280,76 +278,51 @@ def _write_local(
     return write_sink_batches(table.to_batches(), run_dir, name)
 
 
-def _publish_metrics(run_dir: str, sinks: list[str]) -> str:
+def _publish_metrics(run_dir: str, entries: list[dict]) -> str:
     """The north-rule metrics — per-(sink, source) row count, token total
-    and max tokens over every committed sink of the run — from the sinks'
-    manifests, as ONE parquet file ``_metrics/part-00000.parquet``
-    (zero rows when no sink got any). Returns the ``_metrics`` directory,
-    which both ``pq.read_table`` and ``spark.read.parquet`` read."""
-    rows = [
-        {"sink": s, **src}
-        for s in sinks
-        for src in read_manifest(run_dir, s)["sources"]
-    ]
+    and max tokens over the run's sink ``entries`` (the manifest's) — as
+    ONE parquet file ``_metrics/part-00000.parquet`` (zero rows when no
+    sink got any). Returns the ``_metrics`` directory, which both
+    ``pq.read_table`` and ``spark.read.parquet`` read."""
+    rows = [{"sink": e["sink"], **src} for e in entries for src in e["sources"]]
     buf = pa.BufferOutputStream()
     pq.write_table(pa.Table.from_pylist(rows, schema=METRICS_SCHEMA), buf)
     metrics_dir = os.path.join(run_dir, "_metrics")
-    os.makedirs(metrics_dir, exist_ok=True)
-    publish_file(os.path.join(metrics_dir, "part-00000.parquet"), buf.getvalue())
+    publish_file(os.path.join(metrics_dir, METRICS_FILE), buf.getvalue())
     return metrics_dir
 
 
 def read_sink(spark: SparkSession, out_dir: str, run_id: str, sink: str) -> DataFrame:
     run_dir = os.path.join(out_dir, f"run_id={run_id}")
-    sources = resolve_sink_paths(run_dir, [sink])
+    e = find_sink(read_run(run_dir), sink)
+    sources = resolve_sink_paths(run_dir, [e] if e else [])
     if not sources:
         raise ValueError(f"sink {sink!r} has no published data in {run_dir}")
     return spark.read.option("basePath", run_dir).parquet(*sources)
 
 
 def read_table(
-    spark: SparkSession,
-    out_dir: str,
-    sinks: list[str] | None = None,
-    *,
-    dedup_on: str | None = None,
+    spark: SparkSession, out_dir: str, sinks: list[str] | None = None
 ) -> DataFrame:
-    """The whole output table — every run's committed sinks.
+    """The whole output table — every committed run's sinks.
 
     A bare ``run_id=*/sink=*`` glob is WRONG here: data files are written
     in place before the manifest commit, so the glob can see a crashed
     attempt's uncommitted orphans (and, after a compaction crash,
-    superseded originals). This reader takes each run's committed sinks
-    from its ``_manifests/`` (``manifest.committed``, the enumerator the
-    registrar reads through) and resolves them the way read_sink does,
-    keeping both hive partition columns (``run_id``, ``sink``) via
-    basePath. This is the consumer surface for the tail daemon's many
-    per-poll runs.
-
-    ``dedup_on``: the consumer half of the tail loop's documented
-    at-least-once recovery window (a crash between commit and state
-    write, PLUS growth before restart, re-commits the old lines bundled
-    with the growth under a fresh run_id). Passing the replay-stable
-    identity column (``doc_id`` — file:line_no for harvested text)
-    collapses such replays to ONE row each, keeping the row from the
-    minimum run_id (deterministic; which replica survives is
-    irrelevant, the payloads are identical by construction). Same
-    single-shuffle ``min_by(struct(*), run_id)`` shape as dedup_exact —
-    no join back."""
+    superseded originals). This reader takes each run's sinks from its
+    manifest (``manifest.committed``, the enumerator the registrar reads
+    through) and resolves them the way read_sink does, keeping both hive
+    partition columns (``run_id``, ``sink``) via basePath. This is the
+    consumer surface for the tail daemon's many per-poll runs; every poll
+    commits its lines and its offsets in one swap, so no line appears in
+    two runs and no read-side dedup is needed."""
     sources = [
         path
-        for _, run_dir, sink in committed(out_dir)
-        if sinks is None or sink in sinks
-        for path in resolve_sink_paths(run_dir, [sink])
+        for _, run_dir, m in committed(out_dir)
+        for path in resolve_sink_paths(
+            run_dir, [e for e in m["sinks"] if sinks is None or e["sink"] in sinks]
+        )
     ]
     if not sources:
         raise ValueError(f"no published data under {out_dir}")
-    df = spark.read.option("basePath", out_dir).parquet(*sources)
-    if dedup_on is not None:
-        cols = df.columns
-        df = (
-            df.groupBy(dedup_on)
-            .agg(F.min_by(F.struct(*cols), F.col("run_id")).alias("_keep"))
-            .select("_keep.*")
-        )
-    return df
+    return spark.read.option("basePath", out_dir).parquet(*sources)

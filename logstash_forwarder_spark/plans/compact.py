@@ -15,10 +15,10 @@ downtime.
 Protocol (each step object-store-safe — the one rename is the manifest
 swap):
 
-1. resolve the sink's CURRENT manifest (a sink with none is uncommitted
-   — there is no commit pointer to swap — and fails loudly), and delete
-   the data files its directory holds besides the manifest's (a crashed
-   compaction's leftovers, :func:`gc_unreferenced`);
+1. resolve the sink's entry in the run's CURRENT manifest (a sink with
+   none is uncommitted — there is no commit pointer to swap — and fails
+   loudly), and delete the data files its directory holds besides the
+   entry's (a crashed compaction's leftovers, :func:`gc_unreferenced`);
 2. read exactly the manifest-listed files, ``coalesce`` them down to
    ``ceil(bytes / target_bytes)`` partitions — a narrow dependency, NO
    shuffle: each output task just concatenates input files — and write
@@ -28,13 +28,14 @@ swap):
    its statistics;
 3. prove the rewrite content-preserving from those statistics, with no
    footer re-read: their per-source fold — the same fold that built the
-   manifest — must equal the manifest's ``sources`` and their row total
-   its ``row_count`` (otherwise the new files are deleted and the swap
+   manifest — must equal the sink's ``sources`` and their row total its
+   ``row_count`` (otherwise the new files are deleted and the swap
    refused — compaction must be content-preserving by proof, not by
    hope);
-4. atomically swap the manifest to the new file list — the manifest is
-   the sink's one commit record, so the swap carries its ``lineage`` and
-   ``committed_at`` over unchanged;
+4. atomically re-publish the run manifest with this sink's files
+   replaced — the manifest is the run's one commit record, so the swap
+   carries the sink's ``lineage``, the other sinks, the tail offsets and
+   the run's ``committed_at`` over unchanged;
 5. delete the now-unreferenced old files (per-key deletes).
 
 Crash anywhere before step 4 leaves only UNREFERENCED new files —
@@ -42,15 +43,14 @@ invisible to every reader; a crash after 4 leaves unreferenced OLD
 files. Both are garbage, not corruption: the next compaction of the sink
 removes anything the manifest doesn't name before it does anything else,
 and re-running compaction is idempotent. The registrar's snapshot of the
-sink (id, instant, lineage) is what the manifest records, unchanged by
+run (id, instant, lineage) is what the manifest records, unchanged by
 step 4, so time-travel reads (`--read-as-of`) remain valid across a
 compaction — the bytes served are identical.
 
 :func:`gc_unreferenced` is the package's one data GC: the same rule
 (delete what the manifest does not name) cleans a crashed compaction
-here, a crashed publish on resume (``pipeline.run_pipeline``, where the
-uncommitted sink has no manifest, so nothing is named) and an expired
-sink's files (``Registrar.expire_snapshots``).
+here and a crashed publish on resume (``pipeline.run_pipeline``, where
+the uncommitted run has no manifest, so nothing is named).
 
 Reference analog: the spooler's "flush small batches, let downstream
 consolidate" contract (spooler.go's size/timeout flush); this is the
@@ -74,11 +74,12 @@ from pyspark.sql import SparkSession
 from pyspark.sql import functions as F
 
 from .manifest import (
+    find_sink,
     fold_stats,
-    publish_manifest,
-    published_sinks,
-    read_manifest,
+    publish_run,
+    read_run,
     resolve_sink_paths,
+    sink_entry,
     sink_sources,
     write_sink_files,
 )
@@ -86,23 +87,19 @@ from .manifest import (
 DEFAULT_TARGET_BYTES = 128 * 1024 * 1024
 
 
-def gc_unreferenced(run_dir: str, sink: str, referenced=None) -> int:
+def gc_unreferenced(run_dir: str, sink: str, referenced) -> int:
     """The package's one data GC: delete every file in ``sink``'s
     directory that ``referenced`` (paths relative to ``run_dir``) does not
-    name — by default the files its manifest names, and none when it has
-    no manifest. One rule serves resume (an uncommitted sink's files are a
-    crashed attempt's orphans), compaction (a committed sink's unnamed
-    files are a crashed compaction's leftovers; referenced bytes are never
-    touched) and expiry (which passes no names, before it removes the
-    manifest). Per-key deletes only. Returns files removed."""
+    name. One rule serves resume (an uncommitted run's files are a crashed
+    attempt's orphans: nothing is named) and compaction (a committed
+    sink's unnamed files are a crashed compaction's leftovers; referenced
+    bytes are never touched). Per-key deletes only. Returns files
+    removed."""
     d = os.path.join(run_dir, f"sink={sink}")
     try:
         names = os.listdir(d)
     except FileNotFoundError:
         return 0
-    if referenced is None:
-        m = read_manifest(run_dir, sink)
-        referenced = m["files"] if m else ()
     keep = {os.path.join(run_dir, f) for f in referenced}
     n = 0
     for f in names:
@@ -124,13 +121,14 @@ def compact_sink(
     """Rewrite one committed sink to ≈``target_bytes`` files (module
     docstring has the full protocol). Returns an action report; a no-op
     (already at or below the target file count) rewrites nothing."""
-    m = read_manifest(run_dir, sink)
+    run = read_run(run_dir)
+    m = find_sink(run, sink)
     if m is None:
         raise ValueError(
-            f"sink {sink!r} has no manifest in {run_dir}: it is uncommitted, "
-            "so there is nothing to compact"
+            f"sink {sink!r} is not in a committed manifest of {run_dir}: "
+            "it is uncommitted, so there is nothing to compact"
         )
-    gc_unreferenced(run_dir, sink)
+    gc_unreferenced(run_dir, sink, m["files"])
     total_bytes = sum(os.path.getsize(os.path.join(run_dir, f)) for f in m["files"])
     n_out = max(1, math.ceil(total_bytes / target_bytes))
     report = {
@@ -153,7 +151,7 @@ def compact_sink(
     # (file-level min-max alone coarsens to useless at n_out=1). The cap
     # becomes rows per row group at the input's bytes per row.
     df = (
-        spark.read.parquet(*resolve_sink_paths(run_dir, [sink]))
+        spark.read.parquet(*resolve_sink_paths(run_dir, [m]))
         .select("*", F.lit(sink).alias("sink"))
         .coalesce(n_out)
     )
@@ -174,20 +172,24 @@ def compact_sink(
     rows = sum(s["row_count"] for s in sources)
     same = {s["source"]: s for s in sources} == {s["source"]: s for s in m["sources"]}
     if not same or rows != m["row_count"]:
-        gc_unreferenced(run_dir, sink)
+        gc_unreferenced(run_dir, sink, m["files"])
         raise RuntimeError(
             f"compaction rewrite of sink {sink!r} produced {rows} rows, "
             f"manifest says {m['row_count']}; per-source statistics "
             f"{'match' if same else 'differ'} — refusing to swap"
         )
 
-    # 4. the commit point, keeping the commit's lineage and instant (the
-    # snapshot the manifest records is unchanged); 5. old files are
-    # unreferenced from here on
-    publish_manifest(
-        run_dir, sink, new_files, sources, m["lineage"], m["committed_at"]
+    # 4. the commit point: the run manifest with this sink's files
+    # replaced, keeping its lineage, the run's instant and everything else
+    # the manifest records; 5. old files are unreferenced from here on
+    new = sink_entry(sink, new_files, sources, m["lineage"])
+    publish_run(
+        run_dir,
+        [new if e["sink"] == sink else e for e in run["sinks"]],
+        run.get("tail"),
+        run["committed_at"],
     )
-    gc_unreferenced(run_dir, sink)
+    gc_unreferenced(run_dir, sink, new_files)
     report.update(files_after=len(new_files), rewritten=True)
     return report
 
@@ -202,7 +204,7 @@ def compact_run(
 ) -> list[dict]:
     """Compact every committed sink of a run."""
     run_dir = os.path.join(out_dir, f"run_id={run_id}")
-    sinks = published_sinks(run_dir)
+    sinks = [e["sink"] for e in (read_run(run_dir) or {}).get("sinks", ())]
     if not sinks:
         raise ValueError(f"{run_dir} has no committed sink — nothing to compact")
     return [

@@ -1,28 +1,32 @@
-"""The commit protocol: manifest files instead of directory moves.
+"""The commit protocol: one manifest per run instead of directory moves.
 
-Every sink a run publishes is committed the same way — the reference's
-own write-temp-then-rename-one-file trick (its registrar_other.go:9-15)
+Every run is committed the same way — the reference's own
+write-temp-then-rename-one-file trick (its registrar_other.go:9-15)
 applied to a table. It needs no atomic directory rename, which object
 stores (S3/GCS) do not have (a "rename" there is copy-per-key + delete,
-and a reader can observe a half-moved prefix); Iceberg and Delta commit
-the same way:
+and a reader can observe a half-moved prefix); Delta Lake and Iceberg
+commit many files the same way, with one atomic metadata write:
 
 * data files are written ONCE, under unique names, directly in their final
-  partition directory — never moved;
-* a commit atomically publishes ONE SMALL MANIFEST file
-  (:func:`publish_manifest`, the package's only commit writer) listing
-  exactly the data files that belong to the sink, with the sink's
-  per-source statistics, its lineage rows and its commit instant; readers
-  resolve files through the manifest (:func:`resolve_sink_paths`) and
-  ignore everything else in the directory — a sink with no manifest is
-  uncommitted and has no readable data;
-* crash recovery = delete unreferenced files and redo — readers never saw
-  them because no manifest named them.
+  ``sink=S/`` directory — never moved;
+* the commit atomically publishes ONE SMALL MANIFEST per run,
+  ``run_id=R/_manifest.json`` (:func:`publish_run`, the package's only
+  commit writer), listing each non-empty sink's files, row count,
+  per-source statistics and lineage rows, the run's commit instant and,
+  for a tail poll, the tail offsets after the poll; readers resolve files
+  through the manifest (:func:`resolve_sink_paths`) and ignore everything
+  else in the directory — a run with no manifest is uncommitted and has
+  no readable data;
+* crash recovery = delete the uncommitted run's files and redo it —
+  readers never saw them because no manifest named them.
 
-The manifest is the sink's one commit record: resume, lineage, the
-snapshot log and time travel (plans/registrar.py) and the whole-table
-read (``pipeline.read_table``) all enumerate the table's commits through
-:func:`committed`, one listing of each run's ``_manifests/``.
+The manifest is the run's one commit record: resume, lineage, the
+snapshot log and time travel (plans/registrar.py), the tail loop's
+offsets (run.py) and the whole-table read (``pipeline.read_table``) all
+enumerate the table's commits through :func:`committed`. Its name has no
+``=``, so a hive-partition-discovering glob reader (DuckDB's
+``read_json('run_id=*/_manifest.json')``) derives only ``run_id`` from
+its path, and the document has no key of that name.
 
 No commit in the package renames anything but the one-file swap. Every
 committed data file — a publish's and a compaction's — is written by ONE
@@ -53,7 +57,7 @@ import pyarrow.parquet as pq
 from pyspark.sql import DataFrame
 from pyspark.sql.pandas.types import from_arrow_schema
 
-MANIFEST_DIR = "_manifests"
+RUN_MANIFEST = "_manifest.json"
 
 # what the writer returns: one row per (sink, file, part_id, source)
 FILE_STATS = pa.schema(
@@ -75,17 +79,23 @@ SOURCE_STATS = ["row_count", "token_total", "max_tokens"]
 def publish_file(final: str, data) -> str:
     """The one primitive a store must provide: atomically swap one small
     file into place — the package's only write-temp-then-rename, behind
-    manifests, the run's ``_metrics``, the tail state and the signature
-    store's sidecar.
+    run manifests, the run's ``_metrics`` and the signature store's
+    sidecar.
 
     ``data`` (bytes-like) goes to a temp file in ``final``'s directory
     named ``.<basename>.<uuid>.tmp``: no ``*.parquet`` or ``*.json`` glob
     (DuckDB's matches dot-files) can see one a crash leaves behind. A
-    write or swap that raises removes its temp file."""
+    write or swap that raises removes its temp file. ``final``'s directory
+    is created on its first file."""
     d, base = os.path.split(final)
     tmp = os.path.join(d, f".{base}.{uuid.uuid4().hex}.tmp")
     try:
-        with open(tmp, "wb") as fh:
+        try:
+            fh = open(tmp, "wb")
+        except FileNotFoundError:
+            os.makedirs(d, exist_ok=True)
+            fh = open(tmp, "wb")
+        with fh:
             fh.write(data)
         os.replace(tmp, final)
     except BaseException:
@@ -206,107 +216,104 @@ def fold_stats(
 
 
 def sink_sources(stats: pa.Table) -> dict[str, list[dict]]:
-    """Each sink's manifest ``sources`` (per-source statistics, sorted by
-    source) from the writer's statistics — the one fold a publish builds
-    its manifests with and a compaction proves its rewrite with."""
+    """Each sink's ``sources`` (per-source statistics, sorted by source)
+    from the writer's statistics — the one fold a publish builds its run
+    manifest with and a compaction proves its rewrite with."""
     return {
         sink: [{k: r[k] for k in ["source", *SOURCE_STATS]} for r in rows]
         for sink, rows in fold_stats(stats, ["sink", "source"], SOURCE_STATS).items()
     }
 
 
-def _manifest_path(run_dir: str, sink: str) -> str:
-    return os.path.join(run_dir, MANIFEST_DIR, f"sink={sink}.json")
-
-
-def publish_manifest(
-    run_dir: str,
-    sink: str,
-    files: list[str],
-    sources: list[dict],
-    lineage: list[dict] = (),
-    committed_at: str | None = None,
-) -> str:
-    """Atomically publish sink's manifest: the commit point for its data,
-    and its one commit record. `files` are paths relative to run_dir
-    (portable across store mounts); `sources` are the sink's per-source
-    statistics (``source``, ``row_count``, ``token_total``,
+def sink_entry(sink: str, files, sources: list[dict], lineage=()) -> dict:
+    """One sink's entry in a run manifest: its ``files`` (relative to the
+    run dir, portable across store mounts), its ``row_count``, its
+    per-source statistics (``source``, ``row_count``, ``token_total``,
     ``max_tokens``), from which the run's ``_metrics`` is built without
-    re-reading data. ``row_count`` is their sum. `lineage` rows
-    (``partition_id``, ``row_count``, ``token_total``) are the sink's
-    per-input-partition statistics; ``committed_at`` (ISO 8601, UTC) is
-    the commit instant — now, unless a re-publish (a compaction) keeps
-    the original."""
-    os.makedirs(os.path.join(run_dir, MANIFEST_DIR), exist_ok=True)
-    doc = {
+    re-reading data, and its ``lineage`` rows (``partition_id``,
+    ``row_count``, ``token_total``: per input partition)."""
+    return {
         "sink": sink,
         "files": sorted(files),
         "row_count": sum(s["row_count"] for s in sources),
         "sources": sources,
-        "lineage": lineage,
+        "lineage": list(lineage),
+    }
+
+
+def publish_run(
+    run_dir: str,
+    sinks: list[dict],
+    tail: dict | None = None,
+    committed_at: str | None = None,
+) -> str:
+    """Atomically publish the run's manifest ``_manifest.json``: the commit
+    point for all its data, and its one commit record. ``sinks`` are
+    :func:`sink_entry` dicts; ``tail`` (a tail poll's offsets) is stored
+    as given; ``committed_at`` (ISO 8601, UTC) is the commit instant —
+    now, unless a re-publish (a compaction) keeps the original. The
+    document has no ``run_id`` key: that is the directory's hive
+    partition value."""
+    doc = {
+        "sinks": sorted(sinks, key=lambda e: e["sink"]),
         "committed_at": committed_at
         or datetime.now(timezone.utc).isoformat(timespec="microseconds"),
     }
-    return publish_file(_manifest_path(run_dir, sink), json.dumps(doc).encode())
+    if tail is not None:
+        doc["tail"] = tail
+    return publish_file(os.path.join(run_dir, RUN_MANIFEST), json.dumps(doc).encode())
 
 
-def read_manifest(run_dir: str, sink: str) -> dict | None:
+def read_run(run_dir: str) -> dict | None:
+    """The run's manifest, or None when the run is uncommitted."""
     try:
-        with open(_manifest_path(run_dir, sink)) as fh:
+        with open(os.path.join(run_dir, RUN_MANIFEST)) as fh:
             return json.load(fh)
     except OSError:
         return None
 
 
-def resolve_sink_paths(run_dir: str, sinks) -> list[str]:
+def find_sink(manifest: dict | None, sink: str) -> dict | None:
+    """``sink``'s entry in a run manifest, or None."""
+    entries = manifest["sinks"] if manifest else ()
+    return next((e for e in entries if e["sink"] == sink), None)
+
+
+def resolve_sink_paths(run_dir: str, entries) -> list[str]:
     """Reader-side resolution: the paths a scan must name to see exactly
-    the committed files of ``sinks``. A sink with no manifest (never
-    committed) or an empty one contributes nothing. When the manifest
-    names exactly the visible files in the sink directory — the normal
-    case — the directory itself stands for them: one path per sink keeps a
-    multi-sink read under Spark's parallel-listing threshold
+    the committed files of the sink ``entries`` (from the run's manifest).
+    When an entry names exactly the visible files in its sink directory —
+    the normal case — the directory itself stands for them: one path per
+    sink keeps a multi-sink read under Spark's parallel-listing threshold
     (``spark.sql.sources.parallelPartitionDiscovery.threshold``, 32 paths),
     which would otherwise cost a listing job per read. When anything else
-    is there (orphans of a crashed attempt, or of a crashed compaction),
-    the listed files are named one by one so the orphans stay invisible."""
+    is there (orphans of a crashed compaction), the listed files are named
+    one by one so the orphans stay invisible."""
     out: list[str] = []
-    for sink in sinks:
-        m = read_manifest(run_dir, sink)
-        if m is None or not m["files"]:
+    for e in entries:
+        if not e["files"]:
             continue
-        d = os.path.join(run_dir, f"sink={sink}")
+        d = os.path.join(run_dir, f"sink={e['sink']}")
         visible = {
-            os.path.join(f"sink={sink}", f)
+            os.path.join(f"sink={e['sink']}", f)
             for f in os.listdir(d)
             if not f.startswith((".", "_"))
         }
-        if visible == set(m["files"]):
+        if visible == set(e["files"]):
             out.append(d)
         else:
-            out.extend(os.path.join(run_dir, f) for f in m["files"])
+            out.extend(os.path.join(run_dir, f) for f in e["files"])
     return out
-
-
-def published_sinks(run_dir: str) -> list[str]:
-    """Sinks of a run that have a manifest, sorted."""
-    try:
-        names = os.listdir(os.path.join(run_dir, MANIFEST_DIR))
-    except (FileNotFoundError, NotADirectoryError):
-        return []
-    return sorted(
-        f[len("sink=") : -len(".json")]
-        for f in names
-        if f.startswith("sink=") and f.endswith(".json")
-    )
 
 
 def committed(
     out_dir: str, run_id: str | None = None
-) -> Iterator[tuple[str, str, str]]:
-    """The table's one commit enumerator: (run_id, run_dir, sink) of every
-    committed sink under ``out_dir`` — or of ``run_id``'s run only, which
-    lists that run's ``_manifests/`` and nothing else — in run, then sink
-    order. Nothing is read."""
+) -> Iterator[tuple[str, str, dict]]:
+    """The table's one commit enumerator: (run_id, run_dir, manifest) of
+    every committed run under ``out_dir``, in run order — or of
+    ``run_id``'s run only, which opens that one manifest and lists
+    nothing. A run with no manifest (uncommitted, or removed between the
+    listing and its read by a concurrent expiry) is skipped."""
     if run_id is None:
         try:
             names = sorted(os.listdir(out_dir))
@@ -317,5 +324,6 @@ def committed(
         runs = [run_id]
     for r in runs:
         run_dir = os.path.join(out_dir, f"run_id={r}")
-        for sink in published_sinks(run_dir):
-            yield r, run_dir, sink
+        m = read_run(run_dir)
+        if m is not None:
+            yield r, run_dir, m

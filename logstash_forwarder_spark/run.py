@@ -98,10 +98,10 @@ def main(argv: list[str] | None = None) -> int:
         "--expire-keep-last",
         type=int,
         metavar="N",
-        help="maintenance: expire all but the N newest registrar snapshots "
-        "of --out (Iceberg expire_snapshots retainLast; composable with "
-        "--expire-older-than) + per-key GC of the expired runs' published "
-        "data, then exit",
+        help="maintenance: expire all but the N newest runs (registrar "
+        "snapshots) of --out (Iceberg expire_snapshots retainLast; "
+        "composable with --expire-older-than) + per-key GC of the expired "
+        "runs' published data, then exit",
     )
     p.add_argument(
         "--expire-older-than",
@@ -110,22 +110,6 @@ def main(argv: list[str] | None = None) -> int:
         "ISO_TS (the current snapshot is always retained; composable with "
         "--expire-keep-last) + per-key GC of the expired runs' published "
         "data, then exit",
-    )
-    p.add_argument(
-        "--expire-keep-last-runs",
-        type=int,
-        metavar="K",
-        help="maintenance: expire all snapshots except those of the K "
-        "newest RUNS (run-aware retention — the unit the tail daemon "
-        "commits in), then exit",
-    )
-    p.add_argument(
-        "--export-dedup-on",
-        metavar="COL",
-        help="with --export-shards: collapse cross-run replay duplicates "
-        "on this replay-stable identity column (doc_id = file:line_no for "
-        "harvested text) before sharding — the consumer half of the tail "
-        "loop's at-least-once recovery window (pipeline.read_table)",
     )
     p.add_argument(
         "--ship-lumberjack",
@@ -141,9 +125,9 @@ def main(argv: list[str] | None = None) -> int:
         type=int,
         metavar="K",
         help="with --tail-glob/--conf --tail: after each poll commit, "
-        "expire registrar snapshots beyond the K newest runs and GC "
-        "their published data — bounded metadata AND storage at daemon "
-        "cadence (Iceberg expire_snapshots in the loop)",
+        "expire the runs beyond the K newest and GC their published data "
+        "— bounded metadata AND storage at daemon cadence (Iceberg "
+        "expire_snapshots in the loop)",
     )
     p.add_argument(
         "--read-as-of",
@@ -260,7 +244,7 @@ def main(argv: list[str] | None = None) -> int:
         from .pipeline import read_table
 
         spark = _get_session(args)
-        table = read_table(spark, args.out, dedup_on=args.export_dedup_on)
+        table = read_table(spark, args.out)
         export_shards(
             table, args.export_shards, args.shards, sort_col=args.curriculum
         )
@@ -282,11 +266,7 @@ def main(argv: list[str] | None = None) -> int:
         )
         return 0
 
-    if (
-        args.expire_keep_last is not None
-        or args.expire_older_than
-        or args.expire_keep_last_runs is not None
-    ):
+    if args.expire_keep_last is not None or args.expire_older_than:
         # pure-metadata maintenance — no SparkSession needed
         import os
         from datetime import datetime, timezone
@@ -301,7 +281,6 @@ def main(argv: list[str] | None = None) -> int:
         rep = Registrar(os.path.join(args.out, "_checkpoint")).expire_snapshots(
             keep_last=args.expire_keep_last,
             older_than=older,
-            keep_last_runs=args.expire_keep_last_runs,
         )
         print(json.dumps(rep))
         return 0
@@ -324,7 +303,7 @@ def main(argv: list[str] | None = None) -> int:
                             "seq": s.sequence_number,
                             "snapshot_id": s.snapshot_id,
                             "run_id": s.run_id,
-                            "sink": s.sink,
+                            "sinks": list(s.sinks),
                             "committed_at": s.committed_at.isoformat(),
                         }
                         for s in reg.snapshots()
@@ -403,7 +382,6 @@ def main(argv: list[str] | None = None) -> int:
             {
                 "run_id": res.run_id,
                 "sinks_committed": res.sinks_committed,
-                "sinks_skipped": res.sinks_skipped,
                 "rows_staged": res.rows_staged,
                 "elapsed_sec": round(res.elapsed_sec, 3),
                 "backend": res.backend,
@@ -531,33 +509,28 @@ def _conf_source_dim(spark, groups):
 def _tail_loop(spark, args) -> int:
     """The reference daemon's loop at poll granularity: stat the glob,
     seek-read grown bytes, pipe new complete lines through the full
-    parse → enrich → route → commit pipeline, persist the registrar
-    offsets, sleep, repeat.
+    parse → enrich → route → commit pipeline, sleep, repeat.
 
-    Offsets live in ``<out>/_tailstate.json``, written via a single-file
-    atomic swap AFTER the poll's pipeline commit — a crash between commit
-    and state write re-harvests that poll's lines under the SAME poll
-    run_id, whose sinks the registrar then skips (exactly-once for a pure
-    crash-replay). One window is at-least-once, not exactly-once: if the
-    file ALSO grows between that crash and the restart, the recovery
-    poll's resulting offsets differ, its content fingerprint differs, and
-    the already-committed lines re-commit bundled with the growth under a
-    FRESH run_id (the alternative — reusing the old id — would make the
-    registrar skip the new growth entirely, silently dropping data; we
-    choose duplicate-on-recovery over loss). Downstream consumers reading
-    across all run_ids can dedup on ``(file, line_no)``, which is stable
-    across replays. The poll
-    counter itself persists in the state file, so a RESTARTED invocation
-    — same ``--run-id`` or not — continues numbering instead of reusing
-    ``<base>-p0`` (which would make the registrar skip brand-new lines as
-    already-shipped and silently drop them). Each poll commits under
-    run_id ``<base>-pK`` so published data stays per-poll queryable and
-    the snapshot log records one transaction per poll."""
+    The offsets are part of the commit. Every poll that moves them
+    commits exactly one run, ``<base>-p<K>``, whose manifest carries a
+    ``tail`` block: the poll number K and the tail state after the poll
+    (per file: resume offset, base line, head fingerprint). A poll with
+    lines commits them and the offsets in ``run_pipeline``'s one swap; a
+    poll with no lines to publish — a ``--tail-from-end`` attach, an
+    all-duplicates ``--dedup-store`` poll, a ``--ship-lumberjack`` poll
+    once its final ack has arrived — commits a run with the offsets and
+    no sinks. A (re)started loop, same ``--run-id`` or not, takes its
+    state and poll number from the newest committed run with a ``tail``
+    block. A poll that crashed before its swap left nothing visible, so
+    the restart redoes it from the previous run's state, re-harvesting
+    its lines together with any growth since: each complete line is
+    committed exactly once, and no read-side dedup is needed."""
     import os
     import time
     import uuid
 
-    from .plans.manifest import publish_file
+    from .plans.manifest import publish_run
+    from .plans.registrar import Registrar
     from .sources.textlog import (
         lines_to_sequences,
         poll_tail_once,
@@ -567,11 +540,12 @@ def _tail_loop(spark, args) -> int:
     ship_to = None
     if args.ship_lumberjack:
         # the reference's LITERAL daemon: follow files, ship grown lines
-        # over lumberjack with blocking acks, persist offsets AFTER the
-        # final ack (harvester → publisher1 → registrar ordering —
-        # at-least-once on crash, duplicates-over-loss, exactly the
-        # reference's own recovery window; receivers dedup on the
-        # replay-stable (file, offset) identity the frames carry).
+        # over lumberjack with blocking acks, commit the offsets AFTER the
+        # final ack (harvester → publisher1 → registrar ordering). A crash
+        # between the ack and the commit re-ships the poll's lines on
+        # restart — the wire is at-least-once, as the reference's is;
+        # receivers dedup on the replay-stable (file, offset) identity the
+        # frames carry.
         if args.dedup_store:
             raise SystemExit(
                 "--ship-lumberjack with --dedup-store is not supported in "
@@ -594,14 +568,10 @@ def _tail_loop(spark, args) -> int:
 
             dedup_store = SignatureStore(args.dedup_store)
 
-    state_path = os.path.join(args.out, "_tailstate.json")
-    state: dict[str, tuple[int, int]] = {}
-    poll_base = 0
-    if os.path.exists(state_path):
-        with open(state_path) as fh:
-            raw = json.load(fh)
-        poll_base = int(raw.pop("_polls", 0))
-        state = {k: tuple(v) for k, v in raw.items()}
+    reg = Registrar(os.path.join(args.out, "_checkpoint"))
+    last = reg.tail()
+    state = _tail_state(last) if last else {}
+    poll_no = last["poll"] + 1 if last else 0
     base = args.run_id or uuid.uuid4().hex[:8]
     if args.tail_glob:
         tail_globs: str | list[str] = args.tail_glob
@@ -639,7 +609,6 @@ def _tail_loop(spark, args) -> int:
         dim = dim_per_poll()
     polls = []
     for k in range(max(args.polls, 1)):
-        poll_no = poll_base + k
         if dim_per_poll is not None and k > 0:
             dim = dim_per_poll()
         harvested, new_state = poll_tail_once(
@@ -647,31 +616,21 @@ def _tail_loop(spark, args) -> int:
         )
         n_lines = row_count(harvested)
         rec = {"poll": poll_no, "new_lines": n_lines}
-        if n_lines and ship_to is not None:
-            rec.update(_ship_lumberjack(harvested, *ship_to))
-        elif n_lines:
-            # poll identity = counter + CONTENT fingerprint of the poll's
-            # resulting offsets: a pure crash-replay reproduces the same id
-            # (registrar skips, exactly-once), while a recovery poll that
-            # bundles NEW growth gets a fresh id — without this, growth
-            # harvested under an already-committed id would be skipped and
-            # silently dropped while the state advanced past it
-            import hashlib
-
-            fp = hashlib.md5(
-                json.dumps(sorted((k2, list(v)) for k2, v in new_state.items())).encode()
-            ).hexdigest()[:8]
-            seqs = lines_to_sequences(harvested)
+        if new_state != state:
+            run_id = f"{base}-p{poll_no}"
+            tail = {"poll": poll_no, "files": _tail_files(new_state)}
+            seqs = None
+            if n_lines and ship_to is not None:
+                rec.update(_ship_lumberjack(harvested, *ship_to))
+            elif n_lines:
+                seqs = lines_to_sequences(harvested)
             kept_sigs = None
-            if dedup_store is not None:
+            if seqs is not None and dedup_store is not None:
                 # line-level dedup against the persistent signature store:
                 # re-globbed rotated copies / replayed content ship once.
-                # Dedup runs BEFORE publish, but the store append is
-                # DEFERRED until after the pipeline commit (publish-first:
-                # a crash between the two re-ships at most this poll's
-                # lines — duplicates-over-loss, the tail loop's documented
-                # recovery choice; the registrar's replay-skip still
-                # catches the pure-replay case).
+                # The store append follows the run commit, so a crash
+                # between the two lets a later copy of this poll's lines
+                # through once — duplicates over loss.
                 from .operators.incremental import incremental_dedup_batch
 
                 line_ids = F.concat_ws(
@@ -684,7 +643,7 @@ def _tail_loop(spark, args) -> int:
                     spark,
                     dedup_store,
                     lines_df,
-                    batch_id=f"{base}-p{poll_no}-{fp}",
+                    batch_id=run_id,
                     id_col="line_id",
                     tau_pct=args.dedup_near_tau,
                     commit=False,
@@ -699,56 +658,39 @@ def _tail_loop(spark, args) -> int:
                 )
                 n_kept = kept_sigs.count()
                 rec["dup_lines"] = n_lines - n_kept
-            if kept_sigs is None or n_kept:
-                # (an all-duplicates poll skips the publish but still
-                # commits its empty signature batch and advances offsets)
+                if not n_kept:
+                    seqs = None
+            rec["run_id"] = run_id
+            if seqs is not None:
                 res = run_pipeline(
                     spark,
                     seqs,
                     dim,
                     PipelineSpec(
-                        out_dir=args.out,
-                        run_id=f"{base}-p{poll_no}-{fp}",
-                        sort_col=args.sort_by,
+                        out_dir=args.out, run_id=run_id, sort_col=args.sort_by
                     ),
+                    tail=tail,
                 )
                 rec.update(
-                    run_id=res.run_id,
                     sinks_committed=res.sinks_committed,
                     rows_staged=res.rows_staged,
                     backend=res.backend,
                 )
+            else:
+                # offsets only: a run with no sinks
+                publish_run(os.path.join(args.out, f"run_id={run_id}"), [], tail)
             if kept_sigs is not None:
-                # store append AFTER the publish (publish-first ordering);
-                # exist_ok: a crash-replay recomputes the same batch_id
-                dedup_store.append(
-                    kept_sigs, f"{base}-p{poll_no}-{fp}", exist_ok=True
-                )
+                dedup_store.append(kept_sigs, run_id)
             if args.tail_retain_polls:
                 # retention at daemon cadence: expire runs beyond the K
                 # newest AFTER this poll's commit — metadata AND published
-                # storage stay bounded over an unbounded poll count.
-                # Replay-safe: the persisted poll counter only grows, so
-                # an expired poll run_id never recurs.
-                from .plans.registrar import Registrar
-
-                exp = Registrar(
-                    os.path.join(args.out, "_checkpoint")
-                ).expire_snapshots(keep_last_runs=args.tail_retain_polls)
+                # storage stay bounded over an unbounded poll count. The
+                # newest run carries the offsets and is never expired.
+                exp = reg.expire_snapshots(keep_last=args.tail_retain_polls)
                 if exp["expired"]:
-                    rec["expired_runs"] = sorted(
-                        {e["run_id"] for e in exp["expired"]}
-                    )
-        if new_state != state:
-            # persist whenever offsets moved — not only on published
-            # lines: a --tail-from-end attach poll advances state with
-            # ZERO new lines, and losing the attach point would re-seek
-            # to a newer EOF next launch and drop interim growth
+                    rec["expired_runs"] = sorted(e["run_id"] for e in exp["expired"])
             state = new_state
-            doc = {k2: list(v) for k2, v in state.items()}
-            doc["_polls"] = poll_no + 1
-            os.makedirs(args.out, exist_ok=True)
-            publish_file(state_path, json.dumps(doc).encode())
+            poll_no += 1
         # this poll's eager checkpoint is superseded once its lines are
         # committed (or there were none): free the storage, or a long
         # --polls daemon grows executor block storage without bound
@@ -767,6 +709,26 @@ def _tail_loop(spark, args) -> int:
         )
     )
     return 0
+
+
+def _tail_files(state: dict[str, tuple]) -> list[dict]:
+    """A tail state (``poll_tail_once``'s) as the run manifest's ``tail``
+    block lists it: one object per file."""
+    return [
+        {
+            "file": f,
+            "resume_offset": o,
+            "base_line": b,
+            "head_bytes": n,
+            "head_digest": h,
+        }
+        for f, (o, b, n, h) in sorted(state.items())
+    ]
+
+
+def _tail_state(tail: dict) -> dict[str, tuple]:
+    keys = ("resume_offset", "base_line", "head_bytes", "head_digest")
+    return {e["file"]: tuple(e[k] for k in keys) for e in tail["files"]}
 
 
 if __name__ == "__main__":

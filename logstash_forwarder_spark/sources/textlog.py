@@ -43,7 +43,7 @@ from collections.abc import Iterator
 
 import pyarrow as pa
 
-from pyspark.sql import DataFrame
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 HARVEST_SCHEMA = (
@@ -301,22 +301,27 @@ def harvest_text_files(spark, path_glob: str | list[str]) -> DataFrame:
     return raw.mapInArrow(_harvest_kernel, HARVEST_SCHEMA)
 
 
-def lines_to_sequences(lines: DataFrame, *, vocab: int = 2_147_483_647) -> DataFrame:
-    """Bridge harvested lines into the pipeline's sequences shape
-    (doc_id, tokens:array<int>, n_tok, source): whitespace tokens hashed to
-    stable int32 ids (xxhash64 mod vocab), doc_id = file:line_no (the
-    reference's (path, offset) event identity, harvester.go:68-78), source =
-    file stem. Incomplete trailing lines are excluded — the reference never
-    ships a line before its newline arrives.
+def hashed_tokens(line: str = "line", vocab: int = 2_147_483_647) -> Column:
+    """The one tokenizer expression: ``line``'s whitespace-separated words,
+    each hashed to a stable int32 id (``xxhash64`` mod ``vocab``).
 
     Log lines are short, so the interpreted-HOF cost of ``transform`` is
     per-ingest negligible here; bulk token work stays in the Arrow kernels
-    (operators/parse.py) downstream.
-    """
-    words = F.filter(F.split("line", r"\s+"), lambda w: w != F.lit(""))
-    tokens = F.transform(
+    (operators/parse.py) downstream."""
+    words = F.filter(F.split(line, r"\s+"), lambda w: w != F.lit(""))
+    return F.transform(
         words, lambda w: F.pmod(F.xxhash64(w), F.lit(vocab)).cast("int")
     )
+
+
+def lines_to_sequences(lines: DataFrame, *, vocab: int = 2_147_483_647) -> DataFrame:
+    """Bridge harvested lines into the pipeline's sequences shape
+    (doc_id, tokens:array<int>, n_tok, source): :func:`hashed_tokens`,
+    doc_id = file:line_no (the reference's (path, offset) event identity,
+    harvester.go:68-78), source = file stem. Incomplete trailing lines are
+    excluded — the reference never ships a line before its newline
+    arrives."""
+    tokens = hashed_tokens(vocab=vocab)
     return lines.filter("is_complete").select(
         F.concat_ws(":", "file", F.col("line_no").cast("string")).alias("doc_id"),
         tokens.alias("tokens"),

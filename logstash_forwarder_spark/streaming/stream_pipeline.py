@@ -7,14 +7,16 @@ publisher1.go:44-127) — maps onto micro-batches:
 * spool-size / idle-timeout  → ``maxFilesPerTrigger`` + trigger interval
   (or ``availableNow`` for drain-everything runs)
 * publish + ack              → one ``run_pipeline`` call per epoch; the
-  atomic per-sink manifest commit IS the ack
+  run's one atomic manifest swap IS the ack
 * sequence numbers           → ``epoch_id`` (monotone per checkpoint), used
   in each epoch's run_id so lineage rows are per-epoch
 * backpressure               → the micro-batch pull model itself
 
 Streaming's own checkpointLocation handles source-offset tracking (which
-files are consumed); the registrar handles sink-commit idempotence *within*
-an epoch — together: exactly-once end to end.
+files are consumed); the epoch's run manifest makes a replayed epoch
+idempotent — a run already committed is not written again, and one whose
+swap a crash pre-empted is redone whole — together: exactly-once end to
+end.
 """
 
 from __future__ import annotations

@@ -5,7 +5,7 @@ import re
 
 import pytest
 
-from logstash_forwarder_spark.plans.registrar import Registrar
+from logstash_forwarder_spark.plans import manifest
 from logstash_forwarder_spark.session import get_spark
 
 
@@ -55,28 +55,26 @@ def no_dir_rename(monkeypatch):
 
 
 class InjectedFailure(RuntimeError):
-    """A simulated crash, raised by ``crash_after_commits``."""
+    """A simulated crash, raised by ``crash_at_run_swap``."""
 
 
 @pytest.fixture
-def crash_after_commits(monkeypatch):
-    """``crash_after_commits(n)``: raise InjectedFailure right after the
-    n-th registrar commit from now — a run that dies mid-way through its
-    sink commits. Fires once; later commits (the resume) run normally."""
+def crash_at_run_swap(monkeypatch):
+    """``crash_at_run_swap()``: the next swap of a run manifest
+    (``run_id=R/_manifest.json``) raises InjectedFailure instead — a run
+    that dies after writing its data files and before its one commit.
+    Fires once; later swaps (the resume) run normally."""
 
-    def arm(n: int) -> None:
-        real = Registrar.commit
-        left = [n]
+    def arm() -> None:
+        real = manifest.publish_file
 
-        def commit(self, *args, **kwargs):
-            path = real(self, *args, **kwargs)
-            left[0] -= 1
-            if left[0] == 0:
-                monkeypatch.setattr(Registrar, "commit", real)
-                raise InjectedFailure(f"injected crash after {n} commits")
-            return path
+        def publish_file(final, data):
+            if os.path.basename(final) == manifest.RUN_MANIFEST:
+                monkeypatch.setattr(manifest, "publish_file", real)
+                raise InjectedFailure("injected crash at the run swap")
+            return real(final, data)
 
-        monkeypatch.setattr(Registrar, "commit", commit)
+        monkeypatch.setattr(manifest, "publish_file", publish_file)
 
     return arm
 

@@ -13,7 +13,7 @@ from logstash_forwarder_spark.datagen import gen_sequences, gen_source_dim
 from logstash_forwarder_spark.pipeline import PipelineSpec, read_sink, run_pipeline
 from logstash_forwarder_spark.plans import compact as compact_mod
 from logstash_forwarder_spark.plans.compact import compact_run, compact_sink
-from logstash_forwarder_spark.plans.manifest import read_manifest
+from logstash_forwarder_spark.plans.manifest import RUN_MANIFEST, find_sink, read_run
 from logstash_forwarder_spark.plans.registrar import Registrar
 
 from .conftest import InjectedFailure
@@ -47,6 +47,11 @@ def _snapshot(spark, tmp_out, run_id, sinks):
         schemas[s] = df.schema
         rows.extend(df.collect())
     return schemas, sorted(rows, key=lambda r: (r.sink, r.doc_id))
+
+
+def read_manifest(run_dir, sink):
+    """The sink's entry in the run's manifest."""
+    return find_sink(read_run(run_dir), sink)
 
 
 def _files_on_disk(run_dir, sink):
@@ -126,13 +131,13 @@ def test_compact_crash_before_swap_is_invisible(spark, tmp_out, no_dir_rename):
     def boom(*a, **k):
         raise OSError("injected: crash at the commit point")
 
-    orig = compact_mod.publish_manifest
-    compact_mod.publish_manifest = boom
+    orig = compact_mod.publish_run
+    compact_mod.publish_run = boom
     try:
         with pytest.raises(OSError, match="injected"):
             compact_sink(spark, run_dir, sink)
     finally:
-        compact_mod.publish_manifest = orig
+        compact_mod.publish_run = orig
 
     # reader sees the OLD committed state, untouched; the crash left
     # unreferenced new files beside it
@@ -187,27 +192,29 @@ def test_compact_refuses_row_count_mismatch(spark, tmp_out, no_dir_rename):
 
     run_dir, sinks = _publish(spark, tmp_out)
     sink = _multi_file_sink(run_dir, sinks)
-    mp = os.path.join(run_dir, "_manifests", f"sink={sink}.json")
+    mp = os.path.join(run_dir, RUN_MANIFEST)
     good = json.load(open(mp))
-    row_count_off = dict(good, row_count=good["row_count"] + 1)
+    i = [e["sink"] for e in good["sinks"]].index(sink)
+    row_count_off = json.loads(json.dumps(good))
+    row_count_off["sinks"][i]["row_count"] += 1
     token_total_off = json.loads(json.dumps(good))
-    token_total_off["sources"][0]["token_total"] += 1
+    token_total_off["sinks"][i]["sources"][0]["token_total"] += 1
     # simulate corrupted commit pointers
     for m in (row_count_off, token_total_off):
         json.dump(m, open(mp, "w"))
         with pytest.raises(RuntimeError, match="refusing to swap"):
             compact_sink(spark, run_dir, sink)
-        assert read_manifest(run_dir, sink) == m
-        assert _files_on_disk(run_dir, sink) == set(m["files"])
+        assert read_run(run_dir) == m
+        assert _files_on_disk(run_dir, sink) == set(m["sinks"][i]["files"])
 
 
 def test_compact_refuses_uncommitted_sink(
-    spark, tmp_out, no_dir_rename, crash_after_commits
+    spark, tmp_out, no_dir_rename, crash_at_run_swap
 ):
-    """A sink whose data files are on disk but that has no manifest (the
-    run crashed before committing it) has no commit pointer to swap:
+    """A sink whose data files are on disk but that no run manifest lists
+    (the run crashed before its commit) has no commit pointer to swap:
     compaction refuses it rather than promoting orphans."""
-    crash_after_commits(1)
+    crash_at_run_swap()
     with pytest.raises(InjectedFailure):
         run_pipeline(
             spark,
@@ -216,19 +223,19 @@ def test_compact_refuses_uncommitted_sink(
             PipelineSpec(out_dir=tmp_out, run_id="r1"),
         )
     run_dir = os.path.join(tmp_out, "run_id=r1")
-    done = Registrar(os.path.join(tmp_out, "_checkpoint")).committed_sinks("r1")
+    assert Registrar(os.path.join(tmp_out, "_checkpoint")).committed_sinks("r1") == set()
     orphaned = [
         s
         for s in ("sink_apache", "sink_default", "sink_dev", "sink_syslog")
-        if s not in done and glob.glob(os.path.join(run_dir, f"sink={s}", "*.parquet"))
+        if glob.glob(os.path.join(run_dir, f"sink={s}", "*.parquet"))
     ]
     assert orphaned
     for s in orphaned:
-        assert read_manifest(run_dir, s) is None
         with pytest.raises(ValueError, match="uncommitted"):
             compact_sink(spark, run_dir, s)
-    with pytest.raises(ValueError, match="nothing to compact"):
-        compact_run(spark, tmp_out, "never-ran")
+    for run_id in ("r1", "never-ran"):
+        with pytest.raises(ValueError, match="nothing to compact"):
+            compact_run(spark, tmp_out, run_id)
 
 
 def test_compact_composes_with_sorted_layout(spark, tmp_out, no_dir_rename):

@@ -3,8 +3,9 @@
 
 At a poll-per-run tail cadence the snapshot log grows without bound —
 expiry is the retention half of the maintenance pair next to compaction.
-Everything runs under the no-directory-rename shim: expiry is per-key
-deletes (data first, manifests last) + empty-dir rmdir only."""
+A snapshot is a run, so expiry removes whole runs. Everything runs under
+the no-directory-rename shim: expiry is per-key deletes (data first, the
+run manifest last) + empty-dir rmdir only."""
 
 from __future__ import annotations
 
@@ -16,7 +17,7 @@ import pytest
 from logstash_forwarder_spark.datagen import gen_sequences, gen_source_dim
 from logstash_forwarder_spark.pipeline import PipelineSpec, run_pipeline
 from logstash_forwarder_spark.plans.compact import compact_run
-from logstash_forwarder_spark.plans.manifest import read_manifest
+from logstash_forwarder_spark.plans.manifest import publish_run
 from logstash_forwarder_spark.plans.registrar import Registrar
 
 N = 1_500
@@ -45,11 +46,10 @@ def test_expire_keep_last_drops_old_run_and_gcs_data(
     _publish(spark, tmp_out, "new")
     reg = _reg(tmp_out)
     snaps = reg.snapshots()
-    new_count = sum(1 for s in snaps if s.run_id == "new")
     old_snaps = [s for s in snaps if s.run_id == "old"]
-    assert old_snaps and new_count
+    assert len(old_snaps) == 1 and len(snaps) == 2
 
-    rep = reg.expire_snapshots(keep_last=new_count)
+    rep = reg.expire_snapshots(keep_last=1)
     assert {e["snapshot_id"] for e in rep["expired"]} == {
         s.snapshot_id for s in old_snaps
     }
@@ -80,16 +80,16 @@ def test_expire_keep_last_drops_old_run_and_gcs_data(
         gen_source_dim(spark),
         PipelineSpec(out_dir=tmp_out, run_id="new"),
     )
-    assert not res.sinks_committed and res.sinks_skipped
-    assert res.rows_staged == 0
+    assert not res.sinks_committed and res.rows_staged == 0
 
     # idempotent: nothing left to expire at the same cut
-    rep2 = reg.expire_snapshots(keep_last=new_count)
+    rep2 = reg.expire_snapshots(keep_last=1)
     assert rep2["expired"] == [] and rep2["data_files_removed"] == 0
 
 
 def test_expire_older_than_respects_retain_floor(spark, tmp_out, no_dir_rename):
-    _publish(spark, tmp_out, "only")
+    _publish(spark, tmp_out, "first")
+    _publish(spark, tmp_out, "second")
     reg = _reg(tmp_out)
     snaps = reg.snapshots()
     future = snaps[-1].committed_at + timedelta(days=1)
@@ -113,9 +113,8 @@ def test_expire_works_across_compaction_boundary(spark, tmp_out, no_dir_rename):
     for run_id in ("old", "new"):
         assert any(r["rewritten"] for r in compact_run(spark, tmp_out, run_id))
     reg = _reg(tmp_out)
-    new_count = sum(1 for s in reg.snapshots() if s.run_id == "new")
 
-    rep = reg.expire_snapshots(keep_last=new_count)
+    rep = reg.expire_snapshots(keep_last=1)
     assert rep["expired"]
     left = reg.snapshots()
     assert {s.run_id for s in left} == {"new"}
@@ -133,9 +132,8 @@ def test_expire_crash_midway_is_finished_by_a_rerun(
     spark, tmp_out, no_dir_rename, monkeypatch
 ):
     """Data first, metadata second: a crash after a few per-key deletes
-    leaves every unfinished expiry enumerable from its manifests, so a
-    second call removes every file and directory the first one left —
-    one sink of a surviving run and a whole expired run alike."""
+    leaves the unfinished run enumerable from its manifest, so a second
+    call removes every file and directory the first one left."""
     for rid in ("p0", "p1"):
         _publish(spark, tmp_out, rid)
     reg = _reg(tmp_out)
@@ -148,22 +146,21 @@ def test_expire_crash_midway_is_finished_by_a_rerun(
     }
     real_remove = os.remove
     calls = [0]
-    crash_at = [3]
 
     def crashing_remove(path, *a, **k):
         calls[0] += 1
-        if calls[0] == crash_at[0]:
+        if calls[0] == 3:
             raise OSError("injected crash inside expiry")
         return real_remove(path, *a, **k)
 
     monkeypatch.setattr(os, "remove", crashing_remove)
     with pytest.raises(OSError, match="injected"):
-        reg.expire_snapshots(keep_last_runs=1)
+        reg.expire_snapshots(keep_last=1)
     monkeypatch.setattr(os, "remove", real_remove)
-    # the crash stopped before any manifest went: all p0 snapshots listed
+    # the crash stopped before the manifest went: p0 is still listed
     assert [s.snapshot_id for s in reg.snapshots()] == [s.snapshot_id for s in snaps]
 
-    rep = reg.expire_snapshots(keep_last_runs=1)
+    rep = reg.expire_snapshots(keep_last=1)
     assert {e["run_id"] for e in rep["expired"]} == {"p0"}
     assert [s.snapshot_id for s in reg.snapshots()] == [s.snapshot_id for s in p1]
     assert not os.path.exists(os.path.join(tmp_out, "run_id=p0"))
@@ -174,51 +171,33 @@ def test_expire_crash_midway_is_finished_by_a_rerun(
     }
     assert after == before  # the survivor's files, and nothing else
 
-    # the same for one expired sink of a surviving run, crashing at its
-    # second delete (a data file, or its manifest if it has one file)
-    victim = p1[0]
-    run_dir = os.path.join(tmp_out, "run_id=p1")
-    assert read_manifest(run_dir, victim.sink)["files"]
-    calls[0], crash_at[0] = 0, 2
-    monkeypatch.setattr(os, "remove", crashing_remove)
-    with pytest.raises(OSError, match="injected"):
-        reg.expire_snapshots(keep_last=len(p1) - 1)
-    monkeypatch.setattr(os, "remove", real_remove)
-    assert victim.snapshot_id in {s.snapshot_id for s in reg.snapshots()}
-    reg.expire_snapshots(keep_last=len(p1) - 1)
-    assert [s.snapshot_id for s in reg.snapshots()] == [s.snapshot_id for s in p1[1:]]
-    assert not os.path.exists(os.path.join(run_dir, f"sink={victim.sink}"))
-    assert not os.path.exists(
-        os.path.join(run_dir, "_manifests", f"sink={victim.sink}.json")
-    )
 
-
-def test_expire_keep_last_runs_is_run_aware(spark, tmp_out, no_dir_rename):
-    """keep_last_runs retains every snapshot of the K newest RUNS — the
-    tail daemon's retention unit (one poll == one run of up to |sinks|
-    snapshots) — without counting snapshots."""
+def test_expire_keep_last_counts_runs(spark, tmp_out, no_dir_rename):
+    """keep_last counts RUNS — the tail daemon's retention unit (one poll
+    == one run) — and every surviving run keeps its full sink set. The
+    newest run with a ``tail`` block, which holds the tail loop's
+    offsets, is never expired, however many runs come after it."""
+    tail = {"poll": 0, "files": []}
+    publish_run(os.path.join(tmp_out, "run_id=t-p0"), [], tail)
     for rid in ("p0", "p1", "p2"):
         _publish(spark, tmp_out, rid)
     reg = _reg(tmp_out)
-    rep = reg.expire_snapshots(keep_last_runs=2)
+    rep = reg.expire_snapshots(keep_last=2)
     assert {e["run_id"] for e in rep["expired"]} == {"p0"}
     left = reg.snapshots()
-    assert {s.run_id for s in left} == {"p1", "p2"}
-    # BOTH surviving runs keep their full sink set
-    per_run: dict[str, int] = {}
-    for s in left:
-        per_run[s.run_id] = per_run.get(s.run_id, 0) + 1
-    assert per_run["p1"] == per_run["p2"] >= 2
+    assert [s.run_id for s in left] == ["t-p0", "p1", "p2"]
+    assert len(left[1].sinks) == len(left[2].sinks) == 4
     assert not os.path.exists(os.path.join(tmp_out, "run_id=p0"))
-    # idempotent at the same cut
-    assert reg.expire_snapshots(keep_last_runs=2)["expired"] == []
+    assert reg.tail() == tail
+    # idempotent at the same cut; the tail run survives keep_last=1 too
+    assert reg.expire_snapshots(keep_last=2)["expired"] == []
+    reg.expire_snapshots(keep_last=1)
+    assert [s.run_id for s in reg.snapshots()] == ["t-p0", "p2"]
 
 
 def test_expire_argument_validation(tmp_path):
     reg = Registrar(str(tmp_path / "_checkpoint"))
-    with pytest.raises(ValueError, match="keep_last, older_than"):
+    with pytest.raises(ValueError, match="keep_last and/or older_than"):
         reg.expire_snapshots()
     with pytest.raises(ValueError, match="keep_last must be >= 1"):
         reg.expire_snapshots(keep_last=0)
-    with pytest.raises(ValueError, match="keep_last_runs must be >= 1"):
-        reg.expire_snapshots(keep_last_runs=0)

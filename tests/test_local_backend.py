@@ -24,7 +24,7 @@ from logstash_forwarder_spark.pipeline import (
     read_table,
     run_pipeline,
 )
-from logstash_forwarder_spark.plans.manifest import read_manifest
+from logstash_forwarder_spark.plans.manifest import read_run
 from logstash_forwarder_spark.plans.registrar import Registrar
 from logstash_forwarder_spark.sources import textlog
 from logstash_forwarder_spark.sources.textlog import (
@@ -86,8 +86,8 @@ def _published(spark, out, run_id, res):
     """Everything a run publishes but its data file names and part_ids."""
     run_dir = os.path.join(out, f"run_id={run_id}")
     manifests = {
-        s: {k: read_manifest(run_dir, s)[k] for k in ("sources", "row_count")}
-        for s in res.sinks_committed + res.sinks_skipped
+        e["sink"]: {k: e[k] for k in ("sources", "row_count")}
+        for e in read_run(run_dir)["sinks"]
     }
     lineage = {}
     for r in Registrar(os.path.join(out, "_checkpoint")).lineage(run_id).to_pylist():
@@ -190,22 +190,28 @@ def test_backends_agree_on_growth_and_an_empty_poll(spark, tmp_path, monkeypatch
 
 
 def test_local_resume_after_crash_matches_spark(
-    spark, tmp_path, monkeypatch, crash_after_commits
+    spark, tmp_path, monkeypatch, crash_at_run_swap
 ):
-    """A local run that dies after its first sink commit resumes to the
-    same publish as an uninterrupted Spark run."""
+    """A local run that dies after its data files and before its run swap
+    leaves nothing visible to ``read_table`` or the snapshot log, and its
+    re-run publishes the same as an uninterrupted Spark run: every row
+    exactly once."""
     logs = tmp_path / "logs"
     _write_logs(logs)
     local, _ = _poll(spark, monkeypatch, logs, {}, "local")
     seqs = lines_to_sequences(local)
     out = str(tmp_path / "out_local")
     spec = PipelineSpec(out_dir=out, run_id="p")
-    crash_after_commits(1)
+    crash_at_run_swap()
     with pytest.raises(InjectedFailure):
         run_pipeline(spark, seqs, gen_source_dim(spark), spec)
+    assert glob.glob(os.path.join(out, "run_id=p", "sink=*", "*.parquet"))
+    assert Registrar(os.path.join(out, "_checkpoint")).snapshots() == []
+    with pytest.raises(ValueError, match="no published data"):
+        read_table(spark, out)
     res = run_pipeline(spark, seqs, gen_source_dim(spark), spec)
     assert res.backend == "local"
-    assert len(res.sinks_skipped) == 1 and len(res.sinks_committed) == 3
+    assert res.rows_staged == seqs.count()
     resumed = _published(spark, out, "p", res)
 
     far = lines_to_sequences(local.localCheckpoint())

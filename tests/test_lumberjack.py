@@ -69,13 +69,34 @@ def test_unicode_values_survive():
     assert pairs["line"] == "héllo wörld — ☃"
 
 
-def test_malformed_streams_raise():
-    with pytest.raises(ValueError, match="version"):
-        list(decode_stream(b"2D" + struct.pack(">II", 1, 0)))
-    with pytest.raises(ValueError, match="frame type"):
-        list(decode_stream(b"1X"))
-    with pytest.raises((ValueError, struct.error)):
-        list(decode_stream(b"1D" + struct.pack(">I", 1)))  # truncated
+_FRAME = encode_data_frame(1, [("line", "hello world"), ("empty", "")])
+_PAYLOAD = encode_payload([_FRAME, encode_data_frame(2, [("file", "/a.log")])])
+# every strict prefix that ends inside a frame; a payload cut right after
+# its 6-byte window frame is a complete frame stream, so it is not one
+_CUTS = [("frame", n) for n in range(1, len(_FRAME))] + [
+    ("payload", n) for n in range(1, len(_PAYLOAD)) if n != 6
+]
+
+
+@pytest.mark.parametrize(
+    "which, cut", _CUTS, ids=[f"{w}-{n}" for w, n in _CUTS]
+)
+def test_malformed_streams_raise(which, cut):
+    """A bad version byte, an unknown frame type and every truncation
+    raise ValueError from both entry points — the buffer decoder and the
+    socket reader — which share one parse loop."""
+    import io
+
+    from logstash_forwarder_spark.operators.lumberjack_net import read_frames
+
+    buf = {"frame": _FRAME, "payload": _PAYLOAD}[which][:cut]
+    for decode in (decode_stream, lambda b: read_frames(io.BytesIO(b))):
+        with pytest.raises(ValueError, match="version"):
+            list(decode(b"2D" + struct.pack(">II", 1, 0)))
+        with pytest.raises(ValueError, match="frame type"):
+            list(decode(b"1X"))
+        with pytest.raises(ValueError, match="truncated|mid-frame|ends"):
+            list(decode(buf))
 
 
 def test_spark_roundtrip_multi_partition(spark):

@@ -8,6 +8,7 @@ the filesystem."""
 
 from __future__ import annotations
 
+import glob
 import os
 import shutil
 
@@ -20,9 +21,11 @@ from logstash_forwarder_spark.datagen import gen_sequences, gen_source_dim
 from logstash_forwarder_spark.pipeline import PipelineSpec, read_sink, run_pipeline
 from logstash_forwarder_spark.plans.compact import compact_run
 from logstash_forwarder_spark.plans.manifest import (
-    publish_manifest,
-    read_manifest,
+    find_sink,
+    publish_run,
+    read_run,
     resolve_sink_paths,
+    sink_entry,
 )
 from logstash_forwarder_spark.plans.registrar import Registrar
 
@@ -36,13 +39,12 @@ def _spec(tmp_out, run_id, **kw):
     return PipelineSpec(out_dir=tmp_out, run_id=run_id, **kw)
 
 
+def _entry(tmp_out, run_id, sink):
+    return find_sink(read_run(os.path.join(tmp_out, f"run_id={run_id}")), sink)
+
+
 def _all_rows(spark, tmp_out, run_id, sinks):
-    frames = []
-    for s in sinks:
-        try:
-            frames.append(read_sink(spark, tmp_out, run_id, s))
-        except ValueError:
-            pass  # empty sink: manifest with no files
+    frames = [read_sink(spark, tmp_out, run_id, s) for s in sinks]
     df = frames[0]
     for f in frames[1:]:
         df = df.unionByName(f)
@@ -63,8 +65,10 @@ def test_resolve_clean_sink_to_its_directory(tmp_path):
     run_dir = str(tmp_path / "run_id=r")
     files = _touch_sink_files(run_dir, "a", ["part-0.parquet", "part-1.parquet"])
     _touch_sink_files(run_dir, "a", [".part-0.parquet.crc"])
-    publish_manifest(run_dir, "a", files, [])
-    assert resolve_sink_paths(run_dir, ["a"]) == [os.path.join(run_dir, "sink=a")]
+    publish_run(run_dir, [sink_entry("a", files, [])])
+    assert resolve_sink_paths(run_dir, read_run(run_dir)["sinks"]) == [
+        os.path.join(run_dir, "sink=a")
+    ]
 
 
 def test_resolve_sink_with_orphan_to_manifest_files(tmp_path):
@@ -72,20 +76,55 @@ def test_resolve_sink_with_orphan_to_manifest_files(tmp_path):
     the manifest's files, so the orphan stays invisible."""
     run_dir = str(tmp_path / "run_id=r")
     files = _touch_sink_files(run_dir, "a", ["part-0.parquet", "part-1.parquet"])
-    publish_manifest(run_dir, "a", files, [])
+    publish_run(run_dir, [sink_entry("a", files, [])])
     _touch_sink_files(run_dir, "a", ["part-orphan.parquet"])
-    assert sorted(resolve_sink_paths(run_dir, ["a"])) == sorted(
+    assert sorted(resolve_sink_paths(run_dir, read_run(run_dir)["sinks"])) == sorted(
         os.path.join(run_dir, f) for f in files
     )
 
 
 def test_resolve_empty_or_uncommitted_sink_to_nothing(tmp_path):
-    """An empty manifest, a sink with files but no manifest, and an unknown
-    sink all resolve to no path."""
+    """An entry with no files resolves to no path; a sink with files on
+    disk but no entry in the run manifest, and a run with no manifest,
+    have no entry to resolve."""
     run_dir = str(tmp_path / "run_id=r")
-    publish_manifest(run_dir, "empty", [], [])
+    publish_run(run_dir, [sink_entry("empty", [], [])])
     _touch_sink_files(run_dir, "uncommitted", ["part-0.parquet"])
-    assert resolve_sink_paths(run_dir, ["empty", "uncommitted", "missing"]) == []
+    assert resolve_sink_paths(run_dir, read_run(run_dir)["sinks"]) == []
+    assert find_sink(read_run(run_dir), "uncommitted") is None
+    assert read_run(str(tmp_path / "run_id=never")) is None
+
+
+def test_run_manifest_read_with_hive_discovery(tmp_path):
+    """DuckDB's default ``read_json`` over ``run_id=*/_manifest.json``
+    discovers ``run_id`` from the path, and the document has no key that
+    the partition value shadows: every run's sinks come back under their
+    own run id, a run with offsets and no sinks included."""
+    import duckdb
+
+    reg = Registrar(str(tmp_path / "_checkpoint"))
+    reg.commit("r1", "sink_a", [], files=["sink=sink_a/f1"], sources=[
+        {"source": "s", "row_count": 3, "token_total": 9, "max_tokens": 4}
+    ])
+    reg.commit("r1", "sink_b", [], files=["sink=sink_b/f2"], sources=[
+        {"source": "s", "row_count": 2, "token_total": 2, "max_tokens": 1}
+    ])
+    reg.commit("r2", "sink_a", [], files=["sink=sink_a/f3"], sources=[
+        {"source": "t", "row_count": 5, "token_total": 5, "max_tokens": 1}
+    ])
+    tail = {"poll": 0, "files": [{"file": "/x.log", "resume_offset": 4, "base_line": 1,
+                                  "head_bytes": 4, "head_digest": "ab"}]}
+    publish_run(str(tmp_path / "run_id=r3"), [], tail)
+    rows = duckdb.sql(
+        "SELECT run_id, s.sink, s.row_count FROM (SELECT run_id, unnest(sinks) AS s "
+        f"FROM read_json('{tmp_path}/run_id=*/_manifest.json')) ORDER BY ALL"
+    ).fetchall()
+    assert rows == [("r1", "sink_a", 3), ("r1", "sink_b", 2), ("r2", "sink_a", 5)]
+    runs = duckdb.sql(
+        f"SELECT run_id, tail.poll FROM read_json('{tmp_path}/run_id=*/_manifest.json') "
+        "ORDER BY run_id"
+    ).fetchall()
+    assert runs == [("r1", None), ("r2", None), ("r3", 0)]
 
 
 def test_manifest_run_resume_exactly_once(spark, tmp_out, no_dir_rename):
@@ -93,10 +132,9 @@ def test_manifest_run_resume_exactly_once(spark, tmp_out, no_dir_rename):
     dim = gen_source_dim(spark)
     res = run_pipeline(spark, seqs, dim, _spec(tmp_out, "m1"))
     assert len(res.sinks_committed) == 4 and res.rows_staged == N
-    # identical rerun: all sinks skipped, nothing re-staged
+    # identical rerun: the run is committed, nothing is re-staged
     res2 = run_pipeline(spark, seqs, dim, _spec(tmp_out, "m1"))
     assert res2.sinks_committed == [] and res2.rows_staged == 0
-    assert sorted(res2.sinks_skipped) == sorted(res.sinks_committed)
     # published data complete and duplicate-free; lineage agrees
     got = _all_rows(spark, tmp_out, "m1", res.sinks_committed)
     n, nd = got.agg(
@@ -107,63 +145,67 @@ def test_manifest_run_resume_exactly_once(spark, tmp_out, no_dir_rename):
     lin = reg.lineage("m1")
     assert sum(lin.column("row_count").to_pylist()) == N
     # per-sink manifest row_count matches the published reality
-    run_dir = os.path.join(tmp_out, "run_id=m1")
     by_sink = {r["sink"]: r["n"] for r in got.groupBy("sink").agg(F.count(F.lit(1)).alias("n")).collect()}
     for sink, want in by_sink.items():
-        assert read_manifest(run_dir, sink)["row_count"] == want
+        assert _entry(tmp_out, "m1", sink)["row_count"] == want
 
 
-def test_manifest_kill_resume(spark, tmp_out, no_dir_rename, crash_after_commits):
-    seqs = gen_sequences(spark, N)
-    dim = gen_source_dim(spark)
-    crash_after_commits(2)
-    with pytest.raises(InjectedFailure):
-        run_pipeline(spark, seqs, dim, _spec(tmp_out, "mk"))
-    reg = Registrar(os.path.join(tmp_out, "_checkpoint"))
-    assert len(reg.committed_sinks("mk")) == 2
-    res = run_pipeline(spark, seqs, dim, _spec(tmp_out, "mk"))
-    assert len(res.sinks_committed) + len(res.sinks_skipped) == 4
-    got = _all_rows(spark, tmp_out, "mk", ["sink_apache", "sink_default", "sink_dev", "sink_syslog"])
-    n, nd = got.agg(F.count(F.lit(1)), F.countDistinct("doc_id")).first()
-    assert (n, nd) == (N, N)
-    assert sum(reg.lineage("mk").column("row_count").to_pylist()) == N
-
-
-def test_manifest_crash_before_commit_swap_is_redone(
-    spark, tmp_out, no_dir_rename
-):
-    """A crash after the data write but before a sink's one commit swap
-    leaves data files no manifest names: the sink is uncommitted, no
-    reader sees its files, and resume deletes them and redoes the sink
-    with no duplicates."""
+def test_manifest_kill_resume(spark, tmp_out, no_dir_rename, crash_at_run_swap):
+    """A crash after the data files and before the run's one swap leaves
+    nothing visible to ``read_table``, the snapshot log, the lineage or
+    the resume lookup; the re-run commits every row exactly once."""
     from logstash_forwarder_spark.pipeline import read_table
 
     seqs = gen_sequences(spark, N)
     dim = gen_source_dim(spark)
-    res = run_pipeline(spark, seqs, dim, _spec(tmp_out, "mw"))
-    run_dir = os.path.join(tmp_out, "run_id=mw")
-    victim = sorted(
-        s for s in res.sinks_committed if read_manifest(run_dir, s)["files"]
-    )[0]
-    orphans = [
-        os.path.join(run_dir, f) for f in read_manifest(run_dir, victim)["files"]
-    ]
-    os.remove(os.path.join(run_dir, "_manifests", f"sink={victim}.json"))
+    crash_at_run_swap()
+    with pytest.raises(InjectedFailure):
+        run_pipeline(spark, seqs, dim, _spec(tmp_out, "mk"))
+    assert glob.glob(os.path.join(tmp_out, "run_id=mk", "sink=*", "*.parquet"))
     reg = Registrar(os.path.join(tmp_out, "_checkpoint"))
-    assert victim not in reg.committed_sinks("mw")
-    assert read_table(spark, tmp_out).where(F.col("sink") == victim).count() == 0
-    res2 = run_pipeline(spark, seqs, dim, _spec(tmp_out, "mw"))
-    assert res2.sinks_committed == [victim]
+    assert reg.snapshots() == [] and reg.committed_sinks("mk") == set()
+    assert reg.lineage().num_rows == 0
+    with pytest.raises(ValueError, match="no published data"):
+        read_table(spark, tmp_out)
+    res = run_pipeline(spark, seqs, dim, _spec(tmp_out, "mk"))
+    assert len(res.sinks_committed) == 4 and res.rows_staged == N
+    got = read_table(spark, tmp_out)
+    n, nd = got.agg(F.count(F.lit(1)), F.countDistinct("doc_id")).first()
+    assert (n, nd) == (N, N)
+    assert sum(reg.lineage("mk").column("row_count").to_pylist()) == N
+    assert [s.run_id for s in reg.snapshots()] == ["mk"]
+
+
+def test_manifest_crash_before_commit_swap_is_redone(
+    spark, tmp_out, no_dir_rename, crash_at_run_swap
+):
+    """The data files of a run whose swap a crash pre-empted are orphans:
+    resume deletes every one of them before it redoes the run, and a
+    committed run beside it is untouched."""
+    seqs = gen_sequences(spark, N)
+    dim = gen_source_dim(spark)
+    run_pipeline(spark, seqs, dim, _spec(tmp_out, "ok"))
+    ok_files = sorted(glob.glob(os.path.join(tmp_out, "run_id=ok", "**"), recursive=True))
+    crash_at_run_swap()
+    with pytest.raises(InjectedFailure):
+        run_pipeline(spark, seqs, dim, _spec(tmp_out, "mw"))
+    orphans = glob.glob(os.path.join(tmp_out, "run_id=mw", "sink=*", "*.parquet"))
+    assert orphans
+    res = run_pipeline(spark, seqs, dim, _spec(tmp_out, "mw"))
+    assert res.rows_staged == N
     assert not any(os.path.exists(f) for f in orphans)
     got = _all_rows(spark, tmp_out, "mw", res.sinks_committed)
     n, nd = got.agg(F.count(F.lit(1)), F.countDistinct("doc_id")).first()
     assert (n, nd) == (N, N)
+    assert sorted(glob.glob(os.path.join(tmp_out, "run_id=ok", "**"), recursive=True)) == ok_files
 
 
-def test_one_commit_swap_per_sink(spark, tmp_out, no_dir_rename, monkeypatch):
-    """A run's metadata writes are one ``publish_file`` per committed sink
-    plus the run's one ``_metrics`` swap — the manifest is each sink's
-    only commit record — and nothing lands under ``_checkpoint/``."""
+@pytest.mark.parametrize("backend", ["spark", "local"])
+def test_one_commit_swap_per_run(spark, tmp_out, no_dir_rename, monkeypatch, backend):
+    """A run makes exactly two ``publish_file`` swaps, its manifest and
+    then its ``_metrics``, on both backends, and nothing lands under
+    ``_checkpoint/``; a call on the committed run writes no data file and
+    swaps nothing."""
     from logstash_forwarder_spark import pipeline
     from logstash_forwarder_spark.plans import manifest
 
@@ -177,18 +219,20 @@ def test_one_commit_swap_per_sink(spark, tmp_out, no_dir_rename, monkeypatch):
     monkeypatch.setattr(manifest, "publish_file", counting)
     monkeypatch.setattr(pipeline, "publish_file", counting)
     seqs = gen_sequences(spark, N)
+    if backend == "local":
+        seqs = spark.createDataFrame(seqs.toArrow(), seqs.schema)
     dim = gen_source_dim(spark)
     res = run_pipeline(spark, seqs, dim, _spec(tmp_out, "one"))
-    metrics = os.path.join("run_id=one", "_metrics", "part-00000.parquet")
-    manifests = [
-        os.path.join("run_id=one", "_manifests", f"sink={s}.json")
-        for s in res.sinks_committed
+    assert res.backend == backend and len(res.sinks_committed) == 4
+    assert swaps == [
+        os.path.join("run_id=one", "_manifest.json"),
+        os.path.join("run_id=one", "_metrics", "part-00000.parquet"),
     ]
-    assert sorted(swaps) == sorted([*manifests, metrics])
-    assert len(res.sinks_committed) == 4
     swaps.clear()
-    res = run_pipeline(spark, seqs, dim, _spec(tmp_out, "one"))  # all skipped
-    assert res.sinks_committed == [] and swaps == [metrics]
+    files = sorted(glob.glob(os.path.join(tmp_out, "**"), recursive=True))
+    res = run_pipeline(spark, seqs, dim, _spec(tmp_out, "one"))
+    assert res.sinks_committed == [] and swaps == []
+    assert sorted(glob.glob(os.path.join(tmp_out, "**"), recursive=True)) == files
     ckpt = os.path.join(tmp_out, "_checkpoint")
     assert not os.path.exists(ckpt) or os.listdir(ckpt) == []
 
@@ -201,9 +245,7 @@ def test_manifest_orphan_files_invisible(spark, tmp_out, no_dir_rename):
     dim = gen_source_dim(spark)
     res = run_pipeline(spark, seqs, dim, _spec(tmp_out, "mo"))
     run_dir = os.path.join(tmp_out, "run_id=mo")
-    sink = sorted(
-        s for s in res.sinks_committed if read_manifest(run_dir, s)["files"]
-    )[0]
+    sink = res.sinks_committed[0]
     before = read_sink(spark, tmp_out, "mo", sink).count()
     d = os.path.join(run_dir, f"sink={sink}")
     src = next(f for f in os.listdir(d) if f.endswith(".parquet"))
@@ -219,57 +261,51 @@ def test_manifest_orphan_files_invisible(spark, tmp_out, no_dir_rename):
 
 
 def test_manifest_time_travel_midpoint(spark, tmp_out, no_dir_rename):
-    """read_as_of at the second commit sees exactly the first two sinks'
-    rows — manifest-resolved, not directory-listed."""
-    seqs = gen_sequences(spark, N)
+    """read_as_of at the middle one of three run commits sees the first
+    two runs whole and the third not at all — manifest-resolved, not
+    directory-listed."""
     dim = gen_source_dim(spark)
-    run_pipeline(spark, seqs, dim, _spec(tmp_out, "mt"))
+    for i, run_id in enumerate(("mt0", "mt1", "mt2")):
+        run_pipeline(spark, gen_sequences(spark, 500 * (i + 1)), dim, _spec(tmp_out, run_id))
     reg = Registrar(os.path.join(tmp_out, "_checkpoint"))
-    snaps = [s for s in reg.snapshots() if s.run_id == "mt"]
-    assert len(snaps) == 4
-    cut = snaps[1]
-    df = reg.read_as_of(spark, tmp_out, "mt", snapshot_id=cut.snapshot_id)
-    visible = {s.sink for s in snaps[:2]}
-    assert set(r.sink for r in df.select("sink").distinct().collect()) <= visible
-    want = sum(
-        read_manifest(os.path.join(tmp_out, "run_id=mt"), s)["row_count"]
-        for s in visible
-    )
-    assert df.count() == want
+    snaps = reg.snapshots()
+    assert [s.run_id for s in snaps] == ["mt0", "mt1", "mt2"]
+    cut = snaps[1].snapshot_id
+    for i, run_id in enumerate(("mt0", "mt1")):
+        assert reg.read_as_of(spark, tmp_out, run_id, snapshot_id=cut).count() == 500 * (i + 1)
+    with pytest.raises(ValueError, match="no committed data"):
+        reg.read_as_of(spark, tmp_out, "mt2", snapshot_id=cut)
 
 
 def test_manifest_empty_sinks(spark, tmp_out, no_dir_rename):
-    """A run whose rows reach only some sinks: the empty sinks still commit
-    (empty manifest + empty lineage), resume skips all four, and readers
-    treat the empty manifests as no-data rather than falling back to
-    directory listing."""
+    """A run whose rows reach only some sinks lists only those in its
+    manifest: the others have no entry and no directory, readers report
+    them as holding no data, and the re-run writes nothing."""
     seqs = gen_sequences(spark, 1)
     dim = gen_source_dim(spark)
     res = run_pipeline(spark, seqs, dim, _spec(tmp_out, "me"))
-    assert len(res.sinks_committed) == 4 and res.rows_staged == 1
+    assert len(res.sinks_committed) == 1 and res.rows_staged == 1
     run_dir = os.path.join(tmp_out, "run_id=me")
-    manifests = {s: read_manifest(run_dir, s) for s in res.sinks_committed}
-    assert all(m is not None for m in manifests.values())
-    n_with_data = sum(1 for m in manifests.values() if m["files"])
-    assert n_with_data >= 1
-    empty = [s for s, m in manifests.items() if not m["files"]]
-    assert len(empty) == 4 - n_with_data
-    for s in empty:
+    assert [e["sink"] for e in read_run(run_dir)["sinks"]] == res.sinks_committed
+    assert [d for d in os.listdir(run_dir) if d.startswith("sink=")] == [
+        f"sink={res.sinks_committed[0]}"
+    ]
+    for s in {"sink_apache", "sink_default", "sink_dev", "sink_syslog"} - set(res.sinks_committed):
         with pytest.raises(ValueError, match="no published data"):
             read_sink(spark, tmp_out, "me", s)
     res2 = run_pipeline(spark, seqs, dim, _spec(tmp_out, "me"))
-    assert res2.sinks_committed == [] and len(res2.sinks_skipped) == 4
+    assert res2.sinks_committed == [] and res2.rows_staged == 0
 
 
-def test_metrics_from_manifests_match_oracle(
-    spark, tmp_out, no_dir_rename, crash_after_commits
+def test_metrics_match_oracle(
+    spark, tmp_out, no_dir_rename, crash_at_run_swap
 ):
     """``_metrics`` equals the oracle's per-(sink, source) counts of the
-    input (a) after a clean run, (b) after a crash and a resume, where the
-    skipped sink's statistics come from its manifest, and (c) after
-    compacting the run and re-running it, which skips every sink — the
-    manifest swap carries the statistics. A run with no rows writes a
-    zero-row ``_metrics`` both readers accept."""
+    input (a) after a clean run, (b) after a crash at the run swap and a
+    resume, and (c) after compacting the run, deleting its ``_metrics``
+    and re-running it: the committed run republishes ``_metrics`` from
+    its manifest, whose swap carried the statistics. A run with no rows
+    writes a zero-row ``_metrics`` both readers accept."""
     seqs = gen_sequences(spark, N)
     dim = gen_source_dim(spark)
     dim_map = {r.source: dict(r.fields) for r in dim.collect()}
@@ -283,17 +319,17 @@ def test_metrics_from_manifests_match_oracle(
     res = run_pipeline(spark, seqs, dim, _spec(tmp_out, "clean"))  # (a)
     check(res)
 
-    crash_after_commits(1)  # (b)
+    crash_at_run_swap()  # (b)
     with pytest.raises(InjectedFailure):
         run_pipeline(spark, seqs, dim, _spec(tmp_out, "resumed"))
     res = run_pipeline(spark, seqs, dim, _spec(tmp_out, "resumed"))
-    assert len(res.sinks_skipped) == 1
+    assert res.rows_staged == N
     check(res)
 
     assert any(r["rewritten"] for r in compact_run(spark, tmp_out, "clean"))  # (c)
     shutil.rmtree(os.path.join(tmp_out, "run_id=clean", "_metrics"))
     res = run_pipeline(spark, seqs, dim, _spec(tmp_out, "clean"))
-    assert res.sinks_committed == [] and len(res.sinks_skipped) == 4
+    assert res.sinks_committed == [] and res.rows_staged == 0
     check(res)
 
     res = run_pipeline(spark, seqs.limit(0), dim, _spec(tmp_out, "no-rows"))
@@ -302,21 +338,19 @@ def test_metrics_from_manifests_match_oracle(
 
 
 def test_read_table_skips_uncommitted_orphans(
-    spark, tmp_out, no_dir_rename, crash_after_commits
+    spark, tmp_out, no_dir_rename, crash_at_run_swap
 ):
     """read_table: the cross-run consumer surface. A bare run_id=*/sink=*
     glob would see a crashed attempt's in-place data files;
     read_table resolves through manifests and must not."""
-    import glob as globmod
-
     from logstash_forwarder_spark.pipeline import read_table
 
     seqs = gen_sequences(spark, N)
     dim = gen_source_dim(spark)
     run_pipeline(spark, seqs, dim, _spec(tmp_out, "t1"))
-    # second run crashes after 2 of 4 sink commits: the remaining sinks
-    # have in-place data files but no manifest
-    crash_after_commits(2)
+    # the second run crashes at its swap: all its sinks have in-place
+    # data files but no manifest names them
+    crash_at_run_swap()
     with pytest.raises(InjectedFailure):
         run_pipeline(spark, seqs, dim, _spec(tmp_out, "t2"))
 
@@ -325,12 +359,9 @@ def test_read_table_skips_uncommitted_orphans(
         r.run_id: r.n
         for r in df.groupBy("run_id").agg(F.count(F.lit(1)).alias("n")).collect()
     }
-    assert per_run["t1"] == N
-    # t2 contributes ONLY its two committed sinks
-    committed_rows = per_run.get("t2", 0)
-    assert 0 < committed_rows < N
+    assert per_run == {"t1": N}
     # while the raw glob DOES see the orphans (the hazard being guarded)
-    raw_files = globmod.glob(
+    raw_files = glob.glob(
         os.path.join(tmp_out, "run_id=t2", "sink=*", "*.parquet")
     )
     raw_rows = (
@@ -344,46 +375,3 @@ def test_read_table_skips_uncommitted_orphans(
     assert (
         df2.groupBy("run_id", "doc_id").count().where("count > 1").count() == 0
     )
-
-
-def test_read_table_dedup_on_collapses_replay_duplicates(spark, tmp_out):
-    """The consumer half of the tail loop's at-least-once recovery
-    window: the SAME replay-stable doc_ids committed under two run_ids
-    (a recovery poll bundling old lines with growth) collapse to one row
-    each with dedup_on, keeping the min-run_id replica; disjoint rows
-    are untouched."""
-    from logstash_forwarder_spark.datagen import gen_source_dim
-    from logstash_forwarder_spark.pipeline import (
-        PipelineSpec,
-        read_table,
-        run_pipeline,
-    )
-
-    def seqs(spark, ids):
-        return spark.createDataFrame(
-            [(f"app:{i}", [i % 7, (i + 1) % 7], 2, "app") for i in ids],
-            "doc_id string, tokens array<int>, n_tok int, source string",
-        )
-
-    dim = gen_source_dim(spark)
-    run_pipeline(
-        spark, seqs(spark, range(0, 100)), dim,
-        PipelineSpec(out_dir=tmp_out, run_id="t-p0"),
-    )
-    # recovery poll: re-ships 50..99 bundled with new growth 100..149
-    run_pipeline(
-        spark, seqs(spark, range(50, 150)), dim,
-        PipelineSpec(out_dir=tmp_out, run_id="t-p1"),
-    )
-    raw = read_table(spark, tmp_out)
-    assert raw.count() == 200  # duplicates visible in the raw view
-    clean = read_table(spark, tmp_out, dedup_on="doc_id")
-    assert clean.count() == 150
-    assert clean.select("doc_id").distinct().count() == 150
-    # overlapping ids kept the min-run_id replica; growth kept its own
-    runs = {
-        r.doc_id: r.run_id
-        for r in clean.select("doc_id", "run_id").collect()
-    }
-    assert runs["app:75"] == "t-p0"
-    assert runs["app:125"] == "t-p1"

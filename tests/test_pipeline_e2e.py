@@ -22,7 +22,7 @@ from logstash_forwarder_spark.pipeline import (
     read_table,
     run_pipeline,
 )
-from logstash_forwarder_spark.plans.manifest import read_manifest
+from logstash_forwarder_spark.plans.manifest import read_run
 from logstash_forwarder_spark.plans.registrar import Registrar
 from logstash_forwarder_spark.schema import (
     PARSED_FIELDS_SCHEMA,
@@ -61,12 +61,7 @@ def _golden_dfs(spark):
 def _run(spark, tmp_out, seqs, dim, run_id="golden"):
     spec = PipelineSpec(out_dir=tmp_out, run_id=run_id)
     res = run_pipeline(spark, seqs, dim, spec)
-    frames = []
-    for s in res.sinks_committed + res.sinks_skipped:
-        try:
-            frames.append(read_sink(spark, tmp_out, run_id, s).toPandas())
-        except ValueError:
-            pass  # sink with zero rows: empty manifest
+    frames = [read_sink(spark, tmp_out, run_id, s).toPandas() for s in res.sinks_committed]
     got = pd.concat(frames, ignore_index=True)
     return res, got
 
@@ -193,7 +188,7 @@ def test_sorted_publish_folds_lineage_per_input_partition(spark, tmp_out):
     keys = [(r["sink"], r["partition_id"]) for r in lin]
     assert len(keys) == len(set(keys))
     run_dir = os.path.join(tmp_out, "run_id=sorted")
-    manifests = {s: read_manifest(run_dir, s) for s in res.sinks_committed}
+    manifests = {e["sink"]: e for e in read_run(run_dir)["sinks"]}
     for s, m in manifests.items():
         assert sum(r["row_count"] for r in lin if r["sink"] == s) == m["row_count"]
     # some sink spans several writer tasks, so the fold is exercised

@@ -3,8 +3,8 @@
 The reference is at-least-once — a crash between ack and registry write
 duplicates events on resume (/root/reference/publisher1.go:126 →
 registrar.go:31-34). The north_rule demands exactly-once: kill after the
-first sink commit, resume with the same run_id, assert no duplicates and no
-loss per sink.
+data files are written and before the run's one commit swap, resume with
+the same run_id, assert no duplicates and no loss per sink.
 """
 
 from __future__ import annotations
@@ -16,7 +16,7 @@ import pytest
 
 from logstash_forwarder_spark.datagen import gen_sequences, gen_source_dim
 from logstash_forwarder_spark.pipeline import PipelineSpec, run_pipeline
-from logstash_forwarder_spark.plans.manifest import read_manifest
+from logstash_forwarder_spark.plans.manifest import read_run
 from logstash_forwarder_spark.plans.registrar import LineageRow, Registrar
 
 from .conftest import InjectedFailure
@@ -33,25 +33,24 @@ def _read_all_sinks(spark, out_dir, run_id):
     )
 
 
-def test_kill_after_first_sink_then_resume(
-    spark, tmp_out, no_dir_rename, crash_after_commits
+def test_kill_at_run_swap_then_resume(
+    spark, tmp_out, no_dir_rename, crash_at_run_swap
 ):
     seqs = gen_sequences(spark, N_ROWS, num_partitions=8).cache()
     dim = gen_source_dim(spark)
     spec = PipelineSpec(out_dir=tmp_out, run_id="killrun")
 
-    crash_after_commits(1)
+    crash_at_run_swap()
     with pytest.raises(InjectedFailure):
         run_pipeline(spark, seqs, dim, spec)
 
     reg = Registrar(os.path.join(tmp_out, "_checkpoint"))
-    done_after_crash = reg.committed_sinks("killrun")
-    assert len(done_after_crash) >= 1  # at least the first commit landed
+    assert reg.committed_sinks("killrun") == set()  # nothing committed
 
-    # resume with the same run_id, no fault
+    # resume with the same run_id, no fault: the whole run is redone
     spec2 = PipelineSpec(out_dir=tmp_out, run_id="killrun", routes=spec.routes)
     res = run_pipeline(spark, seqs, dim, spec2)
-    assert set(res.sinks_skipped) == done_after_crash
+    assert res.rows_staged == N_ROWS
 
     got = _read_all_sinks(spark, tmp_out, "killrun").toPandas()
     # exactly-once: no duplicates, no loss
@@ -90,10 +89,7 @@ def test_partial_staging_dir_from_crashed_attempt(spark, tmp_out, no_dir_rename)
     assert not os.path.exists(junk)
     got = _read_all_sinks(spark, tmp_out, "stale").toPandas()
     assert len(got) == 1_000 and got.doc_id.is_unique
-    assert (
-        sum(read_manifest(run_dir, s)["row_count"] for s in res.sinks_committed)
-        == 1_000
-    )
+    assert sum(e["row_count"] for e in read_run(run_dir)["sinks"]) == 1_000
 
 
 def test_registrar_atomic_and_idempotent(tmp_path):
@@ -124,9 +120,9 @@ def test_registrar_atomic_and_idempotent(tmp_path):
 
 def test_resume_lookup_reads_only_the_runs_commit_files(tmp_path, monkeypatch):
     """The registrar is a keyed map: with 200 other runs committed,
-    committed_sinks of one run lists that run's ``_manifests/`` and reads
-    nothing, and lineage of one run lists it and reads that run's
-    manifests — never the whole commit history."""
+    committed_sinks and lineage of one run open that run's
+    ``_manifest.json`` and nothing else, and list no directory — never
+    the whole commit history."""
     import builtins
 
     reg = Registrar(str(tmp_path / "_checkpoint"))
@@ -148,51 +144,55 @@ def test_resume_lookup_reads_only_the_runs_commit_files(tmp_path, monkeypatch):
         return real_open(path, *args, **kwargs)
 
     monkeypatch.setattr(os, "listdir", listdir)
+    monkeypatch.setattr(os, "scandir", listdir)
     monkeypatch.setattr(builtins, "open", open_)
 
     def access(lookup):
         listed.clear()
         opened.clear()
         got = lookup()
-        return got, listed[:], sorted(opened)
+        return got, listed[:], opened[:]
 
-    run_manifests = os.path.join("run_id=R", "_manifests")
+    run_manifest = os.path.join("run_id=R", "_manifest.json")
     got, ls, reads = access(lambda: reg.committed_sinks("R"))
     assert got == {"sink_a", "sink_b"}
-    assert ls == [run_manifests] and reads == []
+    assert ls == [] and reads == [run_manifest]
     got, ls, reads = access(lambda: reg.lineage("R"))
     assert sum(got["row_count"].to_pylist()) == 7
-    assert ls == [run_manifests]
-    assert reads == [
-        os.path.join(run_manifests, f"sink={s}.json") for s in ("sink_a", "sink_b")
-    ]
+    assert ls == [] and reads == [run_manifest]
 
 
 def test_commit_lists_and_reads_nothing(tmp_path, monkeypatch):
-    """Registrar.commit is one write: no directory listing and no file
-    opened for reading, however many commits the table already holds."""
+    """Registrar.commit, the per-sink shim, is one read and one swap: no
+    directory listing, and the only file opened for reading is its own
+    run's manifest, however many commits the table already holds."""
     import builtins
 
     reg = Registrar(str(tmp_path / "_checkpoint"))
     for i in range(20):
         reg.commit(f"r{i}", "sink_a", [LineageRow(0, 1, 1)])
     real_open = builtins.open
+    reads: list[str] = []
 
     def no_listing(*a, **k):
         raise AssertionError("commit listed a directory")
 
-    def write_only(path, mode="r", *args, **kwargs):
-        assert set(mode) & set("wxa"), f"commit opened {path} for reading"
+    def tracking(path, mode="r", *args, **kwargs):
+        if not set(mode) & set("wxa"):
+            reads.append(os.path.relpath(path, tmp_path))
         return real_open(path, mode, *args, **kwargs)
 
     monkeypatch.setattr(os, "listdir", no_listing)
     monkeypatch.setattr(os, "scandir", no_listing)
-    monkeypatch.setattr(builtins, "open", write_only)
-    path = reg.commit("r-new", "sink_a", [LineageRow(0, 2, 20)], files=["f"])
+    monkeypatch.setattr(builtins, "open", tracking)
+    reg.commit("r-new", "sink_a", [LineageRow(0, 2, 20)], files=["f"])
+    path = reg.commit("r-new", "sink_b", [LineageRow(0, 3, 30)])
     monkeypatch.undo()
-    assert path == str(tmp_path / "run_id=r-new" / "_manifests" / "sink=sink_a.json")
-    assert reg.committed_sinks("r-new") == {"sink_a"}
-    assert reg.lineage("r-new")["row_count"].to_pylist() == [2]
+    run_manifest = os.path.join("run_id=r-new", "_manifest.json")
+    assert reads == [run_manifest, run_manifest]
+    assert path == str(tmp_path / run_manifest)
+    assert reg.committed_sinks("r-new") == {"sink_a", "sink_b"}
+    assert reg.lineage("r-new")["row_count"].to_pylist() == [2, 3]
 
 
 @pytest.mark.parametrize(
@@ -219,8 +219,8 @@ def test_keyed_lookup_is_exact_for_shared_name_prefixes(tmp_path, first, second)
 def test_failed_swap_leaves_no_file_a_glob_reader_counts(tmp_path, monkeypatch):
     """A crash inside a commit's single-file swap must not leave a temp
     file that an external glob reader takes for a commit: DuckDB's
-    ``run_id=*/_manifests/*.json`` glob (it matches dot-files) must list
-    exactly the published manifests, and the failed commit is not one."""
+    ``run_id=*/*.json`` glob (it matches dot-files) must list exactly the
+    published manifests, and the failed commit is not one."""
     import duckdb
 
     real = os.replace
@@ -244,10 +244,10 @@ def test_failed_swap_leaves_no_file_a_glob_reader_counts(tmp_path, monkeypatch):
 
     con = duckdb.connect()
     manifests = con.sql(
-        f"SELECT file FROM glob('{tmp_path}/run_id=*/_manifests/*.json')"
+        f"SELECT file FROM glob('{tmp_path}/run_id=*/*.json')"
     )
     assert [os.path.relpath(f, tmp_path) for (f,) in manifests.fetchall()] == [
-        os.path.join("run_id=r1", "_manifests", "sink=sink_a.json")
+        os.path.join("run_id=r1", "_manifest.json")
     ]
     assert reg.committed_sinks("r1") == {"sink_a"}
     assert reg.committed_sinks("r2") == set()

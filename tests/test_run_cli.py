@@ -19,8 +19,7 @@ def test_run_cli_input_path(spark, tmp_path, capsys):
     rc = main(["--input", in_dir, "--out", str(tmp_path / "out"), "--run-id", "cli1"])
     assert rc == 0
     summary = json.loads(capsys.readouterr().out.strip().splitlines()[-1])
-    assert summary["rows_staged"] == 0
-    assert summary["sinks_skipped"] == sorted(summary["sinks_skipped"])
+    assert summary["rows_staged"] == 0 and summary["sinks_committed"] == []
 
 
 def test_run_cli_manifest_mode(spark, tmp_path, capsys):
@@ -36,21 +35,16 @@ def test_run_cli_manifest_mode(spark, tmp_path, capsys):
     rc = main(["--gen", "800", "--out", out, "--run-id", "m1"])
     assert rc == 0
     summary = json.loads(capsys.readouterr().out.strip().splitlines()[-1])
-    assert summary["rows_staged"] == 0 and len(summary["sinks_skipped"]) == 4
+    assert summary["rows_staged"] == 0 and summary["sinks_committed"] == []
 
     import os
 
     from logstash_forwarder_spark.pipeline import read_sink
-    from logstash_forwarder_spark.plans.manifest import read_manifest
+    from logstash_forwarder_spark.plans.manifest import read_run
 
-    run_dir = os.path.join(out, "run_id=m1")
-    total = 0
-    for s in summary["sinks_skipped"]:
-        m = read_manifest(run_dir, s)
-        assert m is not None
-        if m["files"]:
-            total += read_sink(spark, out, "m1", s).count()
-    assert total == 800
+    entries = read_run(os.path.join(out, "run_id=m1"))["sinks"]
+    assert len(entries) == 4 and all(e["files"] for e in entries)
+    assert sum(read_sink(spark, out, "m1", e["sink"]).count() for e in entries) == 800
 
 
 def test_run_cli_gen(spark, tmp_path, capsys):
@@ -74,7 +68,8 @@ def test_run_cli_text_glob(spark, tmp_path, capsys):
     # 3 complete lines; the unterminated "partial" is held back (reference
     # semantics: a line ships only once its newline arrives)
     assert summary["rows_staged"] == 3
-    assert len(summary["sinks_committed"]) == 4
+    # the run lists only the sinks rows were routed to
+    assert summary["sinks_committed"] == ["sink_default"]
 
     # resume: identical rerun stages nothing
     rc = main(
@@ -86,36 +81,43 @@ def test_run_cli_text_glob(spark, tmp_path, capsys):
 
 
 def test_run_cli_snapshots_and_as_of(spark, tmp_path, capsys):
+    import pytest
+
     out = str(tmp_path / "out4")
-    rc = main(["--gen", "2000", "--out", out, "--run-id", "snap1"])
-    assert rc == 0
+    assert main(["--gen", "2000", "--out", out, "--run-id", "snap1"]) == 0
+    assert main(["--gen", "500", "--out", out, "--run-id", "snap2"]) == 0
     capsys.readouterr()
 
     rc = main(["--snapshots", "--out", out])
     assert rc == 0
     snaps = json.loads(capsys.readouterr().out.strip().splitlines()[-1])
-    assert len(snaps) >= 2
-    assert [s["seq"] for s in snaps] == list(range(len(snaps)))
+    assert [(s["seq"], s["run_id"]) for s in snaps] == [(0, "snap1"), (1, "snap2")]
+    assert all(len(s["sinks"]) == 4 for s in snaps)
 
-    first, last = snaps[0], snaps[-1]
+    first, last = snaps
     rc = main(["--read-as-of", first["snapshot_id"], "--run-id", "snap1", "--out", out])
     assert rc == 0
     res = json.loads(capsys.readouterr().out.strip().splitlines()[-1])
-    assert set(res["sink_rows"]) == {first["sink"]}
-
-    rc = main(["--read-as-of", last["snapshot_id"], "--run-id", "snap1", "--out", out])
+    assert set(res["sink_rows"]) == set(first["sinks"])
+    assert sum(res["sink_rows"].values()) == 2000
+    # snap2 is not visible at snap1's snapshot, and is at its own
+    with pytest.raises(ValueError, match="no committed data"):
+        main(["--read-as-of", first["snapshot_id"], "--run-id", "snap2", "--out", out])
+    rc = main(["--read-as-of", last["snapshot_id"], "--run-id", "snap2", "--out", out])
     assert rc == 0
     res = json.loads(capsys.readouterr().out.strip().splitlines()[-1])
-    assert set(res["sink_rows"]) == {s["sink"] for s in snaps}
-    assert sum(res["sink_rows"].values()) == 2000
+    assert sum(res["sink_rows"].values()) == 500
 
 
-def test_cli_tail_glob_polls(spark, tmp_path, capsys):
+def test_cli_tail_glob_polls(spark, tmp_path, capsys, monkeypatch):
     """--tail-glob daemon mode: poll 1 ships the initial complete lines,
     growth between polls ships incrementally under per-poll run_ids, and
-    a RESTARTED invocation resumes from the persisted offsets (no
-    re-shipping)."""
+    a RESTARTED invocation resumes from the offsets its newest run
+    committed (no re-shipping). A poll with lines makes exactly two
+    swaps, its run manifest and its ``_metrics``; no state file is
+    written."""
     import json as _json
+    import os
 
     from logstash_forwarder_spark.run import main
 
@@ -131,33 +133,48 @@ def test_cli_tail_glob_polls(spark, tmp_path, capsys):
     ])
     assert rc == 0
     lines = [_json.loads(x) for x in capsys.readouterr().out.strip().splitlines()]
-    assert lines[0]["new_lines"] == 2 and lines[0]["run_id"].startswith("tail1-p0-")
+    assert lines[0]["new_lines"] == 2 and lines[0]["run_id"] == "tail1-p0"
     assert lines[0]["backend"] == "local"  # a driver-sized poll
     assert lines[-1]["total_lines"] == 2
 
     # grow the file (completing the partial), then a NEW invocation
-    # resumes from _tailstate.json and ships only the growth
+    # resumes from the committed offsets and ships only the growth
     with open(log, "ab") as fh:
         fh.write(b" three\ngamma four\n")
-    # REGRESSION (code review): restarting with the SAME --run-id must not
-    # reuse p0 (whose sinks are committed) — the poll counter persists, so
-    # new growth ships under p1 instead of being skipped and dropped
+    swaps: list[str] = []
+    real_replace = os.replace
+
+    def replace(src, dst, *a, **k):
+        swaps.append(os.path.relpath(dst, out))
+        return real_replace(src, dst, *a, **k)
+
+    monkeypatch.setattr(os, "replace", replace)
+    # restarting with the SAME --run-id continues the poll numbering from
+    # the newest committed run: the new growth ships under p1
     rc = main([
         "--tail-glob", f"{d}/*.log", "--polls", "1", "--out", out,
         "--run-id", "tail1",
     ])
+    monkeypatch.setattr(os, "replace", real_replace)
     assert rc == 0
     lines2 = [_json.loads(x) for x in capsys.readouterr().out.strip().splitlines()]
     assert lines2[0]["new_lines"] == 2  # "partial three", "gamma four"
-    assert lines2[0]["run_id"].startswith("tail1-p1-")
+    assert lines2[0]["run_id"] == "tail1-p1"
     assert lines2[0]["sinks_committed"]  # actually shipped, not skipped
+    assert swaps == [
+        os.path.join("run_id=tail1-p1", "_manifest.json"),
+        os.path.join("run_id=tail1-p1", "_metrics", "part-00000.parquet"),
+    ]
+    # no state file beside the runs: the offsets live in the manifests
+    assert sorted(os.listdir(out)) == ["run_id=tail1-p0", "run_id=tail1-p1"]
 
-    # a third run with no growth ships nothing
+    # a third run with no growth ships nothing and commits nothing
     rc = main([
         "--tail-glob", f"{d}/*.log", "--polls", "1", "--out", out,
     ])
     lines3 = [_json.loads(x) for x in capsys.readouterr().out.strip().splitlines()]
-    assert rc == 0 and lines3[0]["new_lines"] == 0
+    assert rc == 0 and lines3[0]["new_lines"] == 0 and "run_id" not in lines3[0]
+    assert sorted(os.listdir(out)) == ["run_id=tail1-p0", "run_id=tail1-p1"]
 
     # every harvested line landed exactly once across the two runs
     import duckdb
@@ -167,6 +184,39 @@ def test_cli_tail_glob_polls(spark, tmp_path, capsys):
         f"read_parquet('{out}/run_id=*/sink=*/*.parquet', hive_partitioning=true)"
     ).fetchone()
     assert n == 4 and distinct == 4
+
+
+def test_cli_tail_resumes_across_expiry(spark, tmp_path, capsys):
+    """A tail poll, then a --gen run into the same --out, then
+    --expire-keep-last 1: the expiry keeps the poll's run, which holds
+    the offsets, so the restarted tail resumes from them and ships no
+    line twice."""
+    import os
+
+    d = tmp_path / "live"
+    d.mkdir()
+    log = d / "app.log"
+    log.write_bytes(b"one a\ntwo b\n")
+    out = str(tmp_path / "out")
+    tail = ["--tail-glob", f"{d}/*.log", "--polls", "1", "--out", out, "--run-id", "tx"]
+    assert main(tail) == 0
+    assert main(["--gen", "300", "--out", out, "--run-id", "g1"]) == 0
+    with open(log, "ab") as fh:
+        fh.write(b"three c\n")
+    assert main(["--expire-keep-last", "1", "--out", out]) == 0
+    capsys.readouterr()
+    assert sorted(os.listdir(out)) == ["run_id=g1", "run_id=tx-p0"]
+    assert main(tail) == 0
+    rec = json.loads(capsys.readouterr().out.strip().splitlines()[0])
+    assert rec["new_lines"] == 1 and rec["run_id"] == "tx-p1"
+
+    import duckdb
+
+    n, distinct = duckdb.sql(
+        f"SELECT count(*), count(DISTINCT doc_id) FROM "
+        f"read_parquet('{out}/run_id=tx-*/sink=*/*.parquet', hive_partitioning=true)"
+    ).fetchone()
+    assert (n, distinct) == (3, 3)
 
 
 def test_cli_driver_sized_poll_starts_no_job_of_its_own(
@@ -450,7 +500,13 @@ def test_cli_tail_dedup_store(spark, tmp_path, capsys):
     assert rc == 0
     p3 = [_json.loads(x) for x in capsys.readouterr().out.strip().splitlines()]
     assert p3[0]["new_lines"] == 2 and p3[0]["dup_lines"] == 2
-    assert "run_id" not in p3[0]  # no publish happened
+    assert "rows_staged" not in p3[0]  # no publish happened
+    import os
+
+    from logstash_forwarder_spark.plans.manifest import read_run
+
+    # ... but a run carrying the offsets, with no sinks, was committed
+    assert read_run(os.path.join(out, f"run_id={p3[0]['run_id']}"))["sinks"] == []
 
     # and the skipped content does NOT come back on the next poll
     rc = main([
@@ -562,7 +618,7 @@ def test_cli_compact_sinks(spark, tmp_path, capsys):
     import os
 
     from logstash_forwarder_spark.pipeline import read_sink
-    from logstash_forwarder_spark.plans.manifest import read_manifest
+    from logstash_forwarder_spark.plans.manifest import find_sink, read_run
 
     out = str(tmp_path / "outc")
     rc = main(["--gen", "2000", "--out", out, "--run-id", "k1"])
@@ -584,7 +640,7 @@ def test_cli_compact_sinks(spark, tmp_path, capsys):
     )
     for s, n in before.items():
         assert read_sink(spark, out, "k1", s).count() == n
-        m = read_manifest(run_dir, s)
+        m = find_sink(read_run(run_dir), s)
         assert len(m["files"]) >= 1
 
     # requires --run-id
@@ -669,12 +725,12 @@ def test_cli_tail_retain_polls(spark, tmp_path, capsys):
     rec2 = [_json.loads(x) for x in capsys.readouterr().out.strip().splitlines()]
     # the oldest poll run was expired at commit time
     assert len(rec2[0]["expired_runs"]) == 1
-    assert rec2[0]["expired_runs"][0].startswith("ret-p0-")
+    assert rec2[0]["expired_runs"] == ["ret-p0"]
     run_dirs = sorted(
         p for p in __import__("os").listdir(out) if p.startswith("run_id=")
     )
     assert len(run_dirs) == 2
-    assert not any("-p0-" in p for p in run_dirs)
+    assert run_dirs == ["run_id=ret-p1", "run_id=ret-p2"]
     # offsets were NOT rewound: no re-ship of expired lines
     import duckdb
 

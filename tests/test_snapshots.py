@@ -1,6 +1,7 @@
 """Iceberg-style snapshot log over the registrar: commit ordering,
-VERSION AS OF / TIMESTAMP AS OF reads at sink-commit granularity, and the
-log's survival of compaction, which swaps the manifests that record it."""
+VERSION AS OF / TIMESTAMP AS OF reads at run-commit granularity (one
+snapshot per run), and the log's survival of compaction, which swaps the
+manifests that record it."""
 
 from __future__ import annotations
 
@@ -22,14 +23,14 @@ def _run(spark, tmp_out, run_id="snaprun"):
 
 
 def test_snapshot_ordering_and_current(spark, tmp_out):
-    reg = _run(spark, tmp_out)
+    _run(spark, tmp_out, run_id="r1")
+    reg = _run(spark, tmp_out, run_id="r2")
     snaps = reg.snapshots()
-    assert len(snaps) >= 2  # one per committed sink
-    assert [s.sequence_number for s in snaps] == list(range(len(snaps)))
-    assert all(
-        a.committed_at <= b.committed_at for a, b in zip(snaps, snaps[1:])
-    )
+    assert [s.run_id for s in snaps] == ["r1", "r2"]  # one per run
+    assert [s.sequence_number for s in snaps] == [0, 1]
+    assert snaps[0].committed_at <= snaps[1].committed_at
     assert all(s.committed_at.tzinfo is not None for s in snaps)
+    assert all(len(s.sinks) == 4 for s in snaps)
     assert reg.current().snapshot_id == snaps[-1].snapshot_id
     # stable across re-listing
     assert [s.snapshot_id for s in reg.snapshots()] == [
@@ -38,40 +39,38 @@ def test_snapshot_ordering_and_current(spark, tmp_out):
 
 
 def test_version_as_of_sees_prefix_of_commits(spark, tmp_out):
-    reg = _run(spark, tmp_out)
-    snaps = reg.snapshots()
-    first, last = snaps[0], snaps[-1]
-    df_first = reg.read_as_of(spark, tmp_out, "snaprun", snapshot_id=first.snapshot_id)
-    df_full = reg.read_as_of(spark, tmp_out, "snaprun", snapshot_id=last.snapshot_id)
+    _run(spark, tmp_out, run_id="r1")
+    reg = _run(spark, tmp_out, run_id="r2")
+    first, last = reg.snapshots()
+    df_first = reg.read_as_of(spark, tmp_out, "r1", snapshot_id=first.snapshot_id)
     sinks_first = {r.sink for r in df_first.select("sink").distinct().collect()}
-    sinks_full = {r.sink for r in df_full.select("sink").distinct().collect()}
-    assert sinks_first == {first.sink}
-    assert sinks_full == {s.sink for s in snaps}
-    assert df_first.count() < df_full.count()
+    assert sinks_first == set(first.sinks)  # the whole run, every sink
+    assert df_first.count() == 3000
+    with pytest.raises(ValueError, match="no committed data"):
+        reg.read_as_of(spark, tmp_out, "r2", snapshot_id=first.snapshot_id)
+    assert reg.read_as_of(spark, tmp_out, "r2", snapshot_id=last.snapshot_id).count() == 3000
 
 
 def test_timestamp_as_of_and_errors(spark, tmp_out):
     reg = _run(spark, tmp_out)
-    snaps = reg.snapshots()
-    # TIMESTAMP AS OF includes every commit whose instant is <= the
-    # requested time; each sink commit carries its own instant, so the
-    # first snapshot's instant can cut between sinks of one run
-    df = reg.read_as_of(spark, tmp_out, "snaprun", as_of=snaps[0].committed_at)
-    expect = {s.sink for s in snaps if s.committed_at <= snaps[0].committed_at}
-    assert {r.sink for r in df.select("sink").distinct().collect()} == expect
-    # a timestamp strictly before the first commit sees nothing
+    [snap] = reg.snapshots()
+    # TIMESTAMP AS OF includes every run whose instant is <= the requested
+    # time: the run's one instant shows all its sinks at once
+    df = reg.read_as_of(spark, tmp_out, "snaprun", as_of=snap.committed_at)
+    assert {r.sink for r in df.select("sink").distinct().collect()} == set(snap.sinks)
+    # a timestamp strictly before the commit sees nothing
     import datetime
 
-    with pytest.raises(ValueError, match="no committed sink"):
+    with pytest.raises(ValueError, match="no committed data"):
         reg.read_as_of(
             spark,
             tmp_out,
             "snaprun",
-            as_of=snaps[0].committed_at - datetime.timedelta(seconds=1),
+            as_of=snap.committed_at - datetime.timedelta(seconds=1),
         )
     with pytest.raises(ValueError, match="unknown snapshot_id"):
         reg.read_as_of(spark, tmp_out, "snaprun", snapshot_id="nope")
-    with pytest.raises(ValueError, match="no committed sink"):
+    with pytest.raises(ValueError, match="no committed data"):
         reg.read_as_of(spark, tmp_out, "otherrun")
 
 
@@ -85,7 +84,7 @@ def test_cross_run_snapshot_cut(spark, tmp_path):
     snaps = log2.snapshots()
     r1_last = [s for s in snaps if s.run_id == "r1"][-1]
     r2_last = [s for s in snaps if s.run_id == "r2"][-1]
-    with pytest.raises(ValueError, match="no committed sink"):
+    with pytest.raises(ValueError, match="no committed data"):
         log2.read_as_of(spark, out, "r2", snapshot_id=r1_last.snapshot_id)
     df = log2.read_as_of(spark, out, "r2", snapshot_id=r2_last.snapshot_id)
     assert df.count() > 0
@@ -95,7 +94,7 @@ def test_cross_run_snapshot_cut(spark, tmp_path):
 
 def _snapshot_log(reg):
     return [
-        (s.snapshot_id, s.run_id, s.sink, s.committed_at, s.sequence_number)
+        (s.snapshot_id, s.run_id, s.sinks, s.committed_at, s.sequence_number)
         for s in reg.snapshots()
     ]
 
@@ -138,8 +137,8 @@ def test_compaction_preserves_everything(spark, tmp_out):
 
 def test_commits_after_compaction_and_override(spark, tmp_out):
     """New commits after a compaction appear beside the compacted ones; a
-    re-commit of a compacted (run, sink) OVERRIDES its record (same
-    snapshot identity, no duplicate); resume still skips."""
+    per-sink re-commit into a compacted run OVERRIDES that sink's entry
+    (same snapshot identity, no duplicate) and keeps the others."""
     from logstash_forwarder_spark.plans.registrar import LineageRow
 
     reg = _run(spark, tmp_out, run_id="r1")
@@ -160,7 +159,7 @@ def test_commits_after_compaction_and_override(spark, tmp_out):
         rc for s, rc in zip(t["sink"].to_pylist(), t["row_count"].to_pylist())
         if s == sinks[0]
     ] == [11]
-    assert {s for s in t["sink"].to_pylist()} <= set(sinks)
+    assert sorted(set(t["sink"].to_pylist())) == sinks
     assert len(reg.snapshots()) == n_snaps + 1  # same identity, no dup
 
 
@@ -189,7 +188,7 @@ def test_time_travel_across_compaction_boundary(spark, tmp_out):
     cut = pre[-1].snapshot_id
     df1 = reg.read_as_of(spark, tmp_out, "snaprun", snapshot_id=cut)
     assert df1.count() == 3000
-    with pytest.raises(ValueError, match="no committed sink"):
+    with pytest.raises(ValueError, match="no committed data"):
         reg.read_as_of(spark, tmp_out, "snaprun2", snapshot_id=cut)
     # at the newest snapshot run-2 is fully visible
     df2 = reg.read_as_of(

@@ -393,7 +393,7 @@ def test_tail_rotation_legacy_state_tolerated(spark, tmp_path):
     d.mkdir()
     log = d / "app.log"
     log.write_bytes(b"one\ntwo\nthree\n")
-    legacy = {str(log): (8, 2)}  # as loaded from an old _tailstate.json
+    legacy = {str(log): (8, 2)}  # a state entry with no head fingerprint
     out, state = poll_tail_once(spark, f"{d}/*.log", legacy)
     assert [(r.line_no, r.line) for r in out.collect()] == [(2, "three")]
     assert len(state[str(log)]) == 4  # fingerprint recorded on advance
