@@ -25,12 +25,11 @@ One logical run = one envelope/ack cycle of the reference
   so files no manifest names — a failed task attempt's partial file, or
   a run whose commit a crash pre-empted — are invisible. A run whose
   manifest exists is done and is never rewritten; an uncommitted run's
-  files are all orphans, which resume deletes
-  (``compact.gc_unreferenced``) before it redoes the whole run →
-  exactly-once routed rows (strictly stronger than the reference's
-  at-least-once, SURVEY §3.4). No file or directory is ever renamed but
-  the one-file manifest swap, so the same protocol is correct on object
-  stores (S3/GCS).
+  files are all orphans, which resume deletes (``manifest.gc_run``,
+  keeping nothing) before it redoes the whole run → exactly-once routed
+  rows (strictly stronger than the reference's at-least-once, SURVEY
+  §3.4). No file or directory is ever renamed but the one-file manifest
+  swap, so the same protocol is correct on object stores (S3/GCS).
 * **One kernel, two backends.** Parse and enrich are one Arrow kernel,
   ``parse_enrich`` (operators/enrich.py): ``parse_batch``, then a pyarrow
   left join of the dim's rows, collected once in the driver. When
@@ -48,9 +47,10 @@ One logical run = one envelope/ack cycle of the reference
   records which ran. Both commit through the same manifest swap.
 * **Metrics from the writer's statistics.** ``_metrics`` (per-(sink,
   source) row count, token total, max tokens) is built on the driver from
-  the sink entries the manifest was just built from — no data or
-  manifest is re-read — and written as one parquet file through the same
-  single-file swap, after the manifest. A run is thus two swaps. No Spark
+  the sink entries the manifest is built from — no data is re-read — and
+  written as one plain parquet file BEFORE the manifest swap, which
+  commits it as it commits the data files. A run is thus exactly one
+  swap, and every run this module commits has its ``_metrics``. No Spark
   job runs after the write.
 """
 
@@ -60,11 +60,14 @@ import os
 import time
 import uuid
 from dataclasses import dataclass, field
+from datetime import datetime
 
 import pyarrow as pa
 import pyarrow.parquet as pq
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
+from pyspark.sql.pandas.types import from_arrow_schema
 
 from .datagen import default_routes
 from .operators.enrich import (
@@ -75,12 +78,13 @@ from .operators.enrich import (
     parse_enrich_stage,
 )
 from .operators.route import route_stage
-from .plans.compact import gc_unreferenced
 from .plans.manifest import (
+    METRICS_FILE,
+    as_utc,
+    commit_instant,
     committed,
-    find_sink,
     fold_stats,
-    publish_file,
+    gc_run,
     publish_run,
     read_run,
     resolve_sink_paths,
@@ -102,7 +106,6 @@ METRICS_SCHEMA = pa.schema(
         ("max_tokens", pa.int32()),
     ]
 )
-METRICS_FILE = "part-00000.parquet"
 
 
 @dataclass
@@ -183,24 +186,18 @@ def run_pipeline(
     """Publish ``sequences`` as run ``spec.run_id`` and commit it with one
     manifest swap, ``tail`` (a tail poll's offsets, stored as given)
     included. A run whose manifest exists is already committed: nothing
-    is written for it but a ``_metrics`` a crash left missing."""
+    is written for it."""
     t0 = time.monotonic()
     backend = "local" if is_driver_local(sequences) else "spark"
     run_dir = os.path.join(spec.out_dir, f"run_id={spec.run_id}")
-    run = read_run(run_dir)
-    if run is not None:
-        metrics = os.path.join(run_dir, "_metrics")
-        if not os.path.exists(os.path.join(metrics, METRICS_FILE)):
-            _publish_metrics(run_dir, run["sinks"])
+    metrics = os.path.dirname(os.path.join(run_dir, METRICS_FILE))
+    if read_run(run_dir) is not None:
         return RunResult(spec.run_id, [], 0, metrics, time.monotonic() - t0, backend)
 
     # an uncommitted run's files are a crashed attempt's orphans: GC them,
     # then write data files ONCE, under final names, returning each file's
     # per-(input partition, source) statistics — metadata-sized
-    if os.path.isdir(run_dir):
-        for name in os.listdir(run_dir):
-            if name.startswith("sink="):
-                gc_unreferenced(run_dir, name[len("sink=") :], ())
+    gc_run(run_dir)
     if backend == "local":
         stats = _write_local(sequences, source_dim, spec, run_dir)
     else:
@@ -224,6 +221,7 @@ def run_pipeline(
         )
         for sink, sources in sink_sources(stats).items()
     ]
+    _write_metrics(run_dir, entries)
     # the commit = the ack (O-R5): one atomic FILE swap names every
     # sink's data files, records the lineage and, for a poll, the offsets
     publish_run(run_dir, entries, tail)
@@ -231,7 +229,7 @@ def run_pipeline(
         run_id=spec.run_id,
         sinks_committed=[e["sink"] for e in entries],
         rows_staged=sum(e["row_count"] for e in entries),
-        metrics_path=_publish_metrics(run_dir, entries),
+        metrics_path=metrics,
         elapsed_sec=time.monotonic() - t0,
         backend=backend,
     )
@@ -278,51 +276,71 @@ def _write_local(
     return write_sink_batches(table.to_batches(), run_dir, name)
 
 
-def _publish_metrics(run_dir: str, entries: list[dict]) -> str:
+def _write_metrics(run_dir: str, entries: list[dict]) -> None:
     """The north-rule metrics — per-(sink, source) row count, token total
     and max tokens over the run's sink ``entries`` (the manifest's) — as
-    ONE parquet file ``_metrics/part-00000.parquet`` (zero rows when no
-    sink got any). Returns the ``_metrics`` directory, which both
-    ``pq.read_table`` and ``spark.read.parquet`` read."""
+    ONE plain parquet file ``_metrics/part-00000.parquet`` (zero rows when
+    no sink got any), written before the manifest swap that commits it.
+    Both ``pq.read_table`` and ``spark.read.parquet`` read its
+    directory."""
     rows = [{"sink": e["sink"], **src} for e in entries for src in e["sources"]]
-    buf = pa.BufferOutputStream()
-    pq.write_table(pa.Table.from_pylist(rows, schema=METRICS_SCHEMA), buf)
-    metrics_dir = os.path.join(run_dir, "_metrics")
-    publish_file(os.path.join(metrics_dir, METRICS_FILE), buf.getvalue())
-    return metrics_dir
-
-
-def read_sink(spark: SparkSession, out_dir: str, run_id: str, sink: str) -> DataFrame:
-    run_dir = os.path.join(out_dir, f"run_id={run_id}")
-    e = find_sink(read_run(run_dir), sink)
-    sources = resolve_sink_paths(run_dir, [e] if e else [])
-    if not sources:
-        raise ValueError(f"sink {sink!r} has no published data in {run_dir}")
-    return spark.read.option("basePath", run_dir).parquet(*sources)
+    path = os.path.join(run_dir, METRICS_FILE)
+    os.makedirs(os.path.dirname(path), exist_ok=True)
+    pq.write_table(pa.Table.from_pylist(rows, schema=METRICS_SCHEMA), path)
 
 
 def read_table(
-    spark: SparkSession, out_dir: str, sinks: list[str] | None = None
+    spark: SparkSession,
+    out_dir: str,
+    sinks: list[str] | None = None,
+    as_of: str | datetime | None = None,
 ) -> DataFrame:
-    """The whole output table — every committed run's sinks.
+    """The output table — every committed run's sinks (only ``sinks``,
+    when given) — as of a snapshot: ``as_of`` is a run id (the read
+    holds that run and every run committed before it) or a datetime (the
+    runs committed at or before it; a naive one is UTC). An unknown or
+    expired run id raises ``ValueError``, and so does a cut with no data.
 
     A bare ``run_id=*/sink=*`` glob is WRONG here: data files are written
     in place before the manifest commit, so the glob can see a crashed
     attempt's uncommitted orphans (and, after a compaction crash,
-    superseded originals). This reader takes each run's sinks from its
-    manifest (``manifest.committed``, the enumerator the registrar reads
-    through) and resolves them the way read_sink does, keeping both hive
-    partition columns (``run_id``, ``sink``) via basePath. This is the
-    consumer surface for the tail daemon's many per-poll runs; every poll
-    commits its lines and its offsets in one swap, so no line appears in
-    two runs and no read-side dedup is needed."""
-    sources = [
-        path
-        for _, run_dir, m in committed(out_dir)
-        for path in resolve_sink_paths(
-            run_dir, [e for e in m["sinks"] if sinks is None or e["sink"] in sinks]
-        )
+    superseded originals). This reader takes the runs in commit order
+    from ``manifest.committed`` and each run's files from its manifest.
+    Every poll commits its lines and its offsets in one swap, so no line
+    appears in two runs and no read-side dedup is needed. The schema is
+    explicit — one data file's footer, with ``run_id`` and ``sink`` as
+    strings — so Spark infers no type from a directory name: run ``007``
+    stays ``"007"``, sink ``1.50`` stays ``"1.50"``."""
+    runs = committed(out_dir)
+    if isinstance(as_of, str):
+        ids = [r for r, _, _ in runs]
+        if as_of not in ids:
+            raise ValueError(f"run {as_of!r} is not committed under {out_dir}")
+        runs = runs[: ids.index(as_of) + 1]
+    elif as_of is not None:
+        runs = [t for t in runs if commit_instant(t[2]) <= as_utc(as_of)]
+    picked = [
+        (run_dir, e)
+        for _, run_dir, m in runs
+        for e in m["sinks"]
+        if e["files"] and (sinks is None or e["sink"] in sinks)
     ]
-    if not sources:
+    if not picked:
         raise ValueError(f"no published data under {out_dir}")
-    return spark.read.option("basePath", out_dir).parquet(*sources)
+    run_dir, e = picked[0]
+    data = from_arrow_schema(pq.read_schema(os.path.join(run_dir, e["files"][0])))
+    names = data.fieldNames()
+    names += [c for c in ("run_id", "sink") if c not in names]
+    schema = T.StructType(
+        [
+            T.StructField(n, T.StringType()) if n in ("run_id", "sink") else data[n]
+            for n in names
+        ]
+    )
+    paths = [p for run_dir, e in picked for p in resolve_sink_paths(run_dir, [e])]
+    return (
+        spark.read.schema(schema)
+        .option("basePath", out_dir)
+        .parquet(*paths)
+        .select(*names)
+    )

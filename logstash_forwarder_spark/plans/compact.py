@@ -17,8 +17,8 @@ swap):
 
 1. resolve the sink's entry in the run's CURRENT manifest (a sink with
    none is uncommitted — there is no commit pointer to swap — and fails
-   loudly), and delete the data files its directory holds besides the
-   entry's (a crashed compaction's leftovers, :func:`gc_unreferenced`);
+   loudly), and delete every file of the run that the manifest does not
+   name (a crashed compaction's leftovers);
 2. read exactly the manifest-listed files, ``coalesce`` them down to
    ``ceil(bytes / target_bytes)`` partitions — a narrow dependency, NO
    shuffle: each output task just concatenates input files — and write
@@ -36,7 +36,8 @@ swap):
    replaced — the manifest is the run's one commit record, so the swap
    carries the sink's ``lineage``, the other sinks, the tail offsets and
    the run's ``committed_at`` over unchanged;
-5. delete the now-unreferenced old files (per-key deletes).
+5. delete the now-unreferenced old files (per-key deletes), with the
+   same GC as step 1.
 
 Crash anywhere before step 4 leaves only UNREFERENCED new files —
 invisible to every reader; a crash after 4 leaves unreferenced OLD
@@ -47,10 +48,10 @@ run (id, instant, lineage) is what the manifest records, unchanged by
 step 4, so time-travel reads (`--read-as-of`) remain valid across a
 compaction — the bytes served are identical.
 
-:func:`gc_unreferenced` is the package's one data GC: the same rule
-(delete what the manifest does not name) cleans a crashed compaction
-here and a crashed publish on resume (``pipeline.run_pipeline``, where
-the uncommitted run has no manifest, so nothing is named).
+Both GC steps are the package's one GC, ``manifest.gc_run``, keeping
+the current manifest's names (``manifest.run_files``: its files, the
+manifest and ``_metrics``); resume, the tail restart and expiry call the
+same function with their own names to keep.
 
 Reference analog: the spooler's "flush small batches, let downstream
 consolidate" contract (spooler.go's size/timeout flush); this is the
@@ -76,38 +77,17 @@ from pyspark.sql import functions as F
 from .manifest import (
     find_sink,
     fold_stats,
+    gc_run,
     publish_run,
     read_run,
     resolve_sink_paths,
+    run_files,
     sink_entry,
     sink_sources,
     write_sink_files,
 )
 
 DEFAULT_TARGET_BYTES = 128 * 1024 * 1024
-
-
-def gc_unreferenced(run_dir: str, sink: str, referenced) -> int:
-    """The package's one data GC: delete every file in ``sink``'s
-    directory that ``referenced`` (paths relative to ``run_dir``) does not
-    name. One rule serves resume (an uncommitted run's files are a crashed
-    attempt's orphans: nothing is named) and compaction (a committed
-    sink's unnamed files are a crashed compaction's leftovers; referenced
-    bytes are never touched). Per-key deletes only. Returns files
-    removed."""
-    d = os.path.join(run_dir, f"sink={sink}")
-    try:
-        names = os.listdir(d)
-    except FileNotFoundError:
-        return 0
-    keep = {os.path.join(run_dir, f) for f in referenced}
-    n = 0
-    for f in names:
-        p = os.path.join(d, f)
-        if p not in keep and os.path.isfile(p):
-            os.remove(p)
-            n += 1
-    return n
 
 
 def compact_sink(
@@ -128,7 +108,7 @@ def compact_sink(
             f"sink {sink!r} is not in a committed manifest of {run_dir}: "
             "it is uncommitted, so there is nothing to compact"
         )
-    gc_unreferenced(run_dir, sink, m["files"])
+    gc_run(run_dir, run_files(run))
     total_bytes = sum(os.path.getsize(os.path.join(run_dir, f)) for f in m["files"])
     n_out = max(1, math.ceil(total_bytes / target_bytes))
     report = {
@@ -172,7 +152,7 @@ def compact_sink(
     rows = sum(s["row_count"] for s in sources)
     same = {s["source"]: s for s in sources} == {s["source"]: s for s in m["sources"]}
     if not same or rows != m["row_count"]:
-        gc_unreferenced(run_dir, sink, m["files"])
+        gc_run(run_dir, run_files(run))
         raise RuntimeError(
             f"compaction rewrite of sink {sink!r} produced {rows} rows, "
             f"manifest says {m['row_count']}; per-source statistics "
@@ -183,13 +163,9 @@ def compact_sink(
     # replaced, keeping its lineage, the run's instant and everything else
     # the manifest records; 5. old files are unreferenced from here on
     new = sink_entry(sink, new_files, sources, m["lineage"])
-    publish_run(
-        run_dir,
-        [new if e["sink"] == sink else e for e in run["sinks"]],
-        run.get("tail"),
-        run["committed_at"],
-    )
-    gc_unreferenced(run_dir, sink, new_files)
+    run["sinks"] = [new if e["sink"] == sink else e for e in run["sinks"]]
+    publish_run(run_dir, run["sinks"], run.get("tail"), run["committed_at"])
+    gc_run(run_dir, run_files(run))
     report.update(files_after=len(new_files), rewritten=True)
     return report
 

@@ -20,13 +20,20 @@ commit many files the same way, with one atomic metadata write:
 * crash recovery = delete the uncommitted run's files and redo it —
   readers never saw them because no manifest named them.
 
-The manifest is the run's one commit record: resume, lineage, the
-snapshot log and time travel (plans/registrar.py), the tail loop's
-offsets (run.py) and the whole-table read (``pipeline.read_table``) all
-enumerate the table's commits through :func:`committed`. Its name has no
-``=``, so a hive-partition-discovering glob reader (DuckDB's
-``read_json('run_id=*/_manifest.json')``) derives only ``run_id`` from
-its path, and the document has no key of that name.
+The manifest is the one thing that decides what a run directory holds
+and when it counts. Everything else in the run — its data files and its
+``_metrics`` — is written before the swap, so a run is exactly one
+:func:`publish_file` call. One GC, :func:`gc_run`, deletes whatever a
+given set of names does not list: resume, the tail restart, compaction
+and expiry each pass their own set.
+
+Every reader takes the commit order from one place, :func:`committed`
+(by ``committed_at``, then run id): resume, lineage, the snapshot log
+and expiry (plans/registrar.py), the tail loop's offsets (run.py) and
+the table read, current or as of a run (``pipeline.read_table``). The
+manifest's name has no ``=``, so a hive-partition-discovering glob
+reader (DuckDB's ``read_json('run_id=*/_manifest.json')``) derives only
+``run_id`` from its path, and the document has no key of that name.
 
 No commit in the package renames anything but the one-file swap. Every
 committed data file — a publish's and a compaction's — is written by ONE
@@ -58,6 +65,8 @@ from pyspark.sql import DataFrame
 from pyspark.sql.pandas.types import from_arrow_schema
 
 RUN_MANIFEST = "_manifest.json"
+# the run's north-rule metrics, written before its manifest swap
+METRICS_FILE = os.path.join("_metrics", "part-00000.parquet")
 
 # what the writer returns: one row per (sink, file, part_id, source)
 FILE_STATS = pa.schema(
@@ -79,8 +88,7 @@ SOURCE_STATS = ["row_count", "token_total", "max_tokens"]
 def publish_file(final: str, data) -> str:
     """The one primitive a store must provide: atomically swap one small
     file into place — the package's only write-temp-then-rename, behind
-    run manifests, the run's ``_metrics`` and the signature store's
-    sidecar.
+    run manifests and the signature store's sidecar.
 
     ``data`` (bytes-like) goes to a temp file in ``final``'s directory
     named ``.<basename>.<uuid>.tmp``: no ``*.parquet`` or ``*.json`` glob
@@ -306,24 +314,64 @@ def resolve_sink_paths(run_dir: str, entries) -> list[str]:
     return out
 
 
-def committed(
-    out_dir: str, run_id: str | None = None
-) -> Iterator[tuple[str, str, dict]]:
+def committed(out_dir: str, run_id: str | None = None) -> list[tuple[str, str, dict]]:
     """The table's one commit enumerator: (run_id, run_dir, manifest) of
-    every committed run under ``out_dir``, in run order — or of
-    ``run_id``'s run only, which opens that one manifest and lists
-    nothing. A run with no manifest (uncommitted, or removed between the
-    listing and its read by a concurrent expiry) is skipped."""
+    every committed run under ``out_dir``, in commit order (by
+    ``committed_at``, then by run id) — or of ``run_id``'s run only,
+    which opens that one manifest and lists nothing. A run with no
+    manifest (uncommitted, or removed between the listing and its read by
+    a concurrent expiry) is skipped."""
     if run_id is None:
         try:
-            names = sorted(os.listdir(out_dir))
+            names = os.listdir(out_dir)
         except FileNotFoundError:
             names = []
         runs = [d[len("run_id=") :] for d in names if d.startswith("run_id=")]
     else:
         runs = [run_id]
+    found = []
     for r in runs:
         run_dir = os.path.join(out_dir, f"run_id={r}")
         m = read_run(run_dir)
         if m is not None:
-            yield r, run_dir, m
+            found.append((r, run_dir, m))
+    return sorted(found, key=lambda t: (commit_instant(t[2]), t[0]))
+
+
+def commit_instant(manifest: dict) -> datetime:
+    """The run's ``committed_at``, tz-aware UTC."""
+    return datetime.fromisoformat(manifest["committed_at"])
+
+
+def as_utc(dt: datetime) -> datetime:
+    """A caller's cut-off as tz-aware (a naive one is taken as UTC), so it
+    compares with commit instants."""
+    return dt.replace(tzinfo=timezone.utc) if dt.tzinfo is None else dt
+
+
+def run_files(manifest: dict) -> set[str]:
+    """Every name a committed run holds, relative to its directory: its
+    sinks' data files, its manifest and its ``_metrics``."""
+    return {
+        RUN_MANIFEST,
+        METRICS_FILE,
+        *(f for e in manifest["sinks"] for f in e["files"]),
+    }
+
+
+def gc_run(run_dir: str, keep=()) -> int:
+    """The package's one GC: delete every file under ``run_dir`` that
+    ``keep`` (paths relative to ``run_dir``) does not name, bottom-up,
+    and remove each directory this leaves empty — ``run_dir`` itself
+    included. Per-key deletes only, no rename. Returns files removed."""
+    keep = {os.path.join(run_dir, k) for k in keep}
+    n = 0
+    for root, _, files in os.walk(run_dir, topdown=False):
+        for f in files:
+            p = os.path.join(root, f)
+            if p not in keep:
+                os.remove(p)
+                n += 1
+        if not os.listdir(root):
+            os.rmdir(root)
+    return n

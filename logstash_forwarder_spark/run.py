@@ -131,9 +131,10 @@ def main(argv: list[str] | None = None) -> int:
     )
     p.add_argument(
         "--read-as-of",
-        metavar="SNAPSHOT_ID",
-        help="time-travel read: per-sink row counts of --run-id's published "
-        "data as of SNAPSHOT_ID (plans/registrar.py Registrar.read_as_of), then exit",
+        dest="as_of",
+        metavar="RUN_ID",
+        help="time-travel read: per-run, per-sink row counts of the table "
+        "under --out as of run RUN_ID's commit (pipeline.read_table), then exit",
     )
     p.add_argument(
         "--compact-sinks",
@@ -285,39 +286,36 @@ def main(argv: list[str] | None = None) -> int:
         print(json.dumps(rep))
         return 0
 
-    if args.snapshots or args.read_as_of:
-        # pure-metadata modes first: --snapshots never needs a SparkSession
-        # (manifest JSON files), so don't pay JVM startup for it
+    if args.snapshots:
+        # pure metadata (manifest JSON files): no SparkSession, no JVM
         import os
 
         from .plans.registrar import Registrar
 
-        if args.read_as_of and not args.run_id:
-            p.error("--read-as-of requires --run-id")
-        reg = Registrar(os.path.join(args.out, "_checkpoint"))
-        if args.snapshots:
-            print(
-                json.dumps(
-                    [
-                        {
-                            "seq": s.sequence_number,
-                            "snapshot_id": s.snapshot_id,
-                            "run_id": s.run_id,
-                            "sinks": list(s.sinks),
-                            "committed_at": s.committed_at.isoformat(),
-                        }
-                        for s in reg.snapshots()
-                    ]
-                )
+        snaps = Registrar(os.path.join(args.out, "_checkpoint")).snapshots()
+        print(
+            json.dumps(
+                [
+                    {
+                        "seq": s.sequence_number,
+                        "run_id": s.run_id,
+                        "sinks": list(s.sinks),
+                        "committed_at": s.committed_at.isoformat(),
+                    }
+                    for s in snaps
+                ]
             )
-            return 0
-        spark = _get_session(args)
-        df = reg.read_as_of(spark, args.out, args.run_id, snapshot_id=args.read_as_of)
-        counts = {
-            r["sink"]: r["n"]
-            for r in df.groupBy("sink").count().withColumnRenamed("count", "n").collect()
-        }
-        print(json.dumps({"run_id": args.run_id, "as_of": args.read_as_of, "sink_rows": counts}))
+        )
+        return 0
+
+    if args.as_of:
+        from .pipeline import read_table
+
+        df = read_table(_get_session(args), args.out, as_of=args.as_of)
+        rows: dict[str, dict[str, int]] = {}
+        for r in df.groupBy("run_id", "sink").count().collect():
+            rows.setdefault(r["run_id"], {})[r["sink"]] = r["count"]
+        print(json.dumps({"as_of": args.as_of, "rows": rows}))
         return 0
 
     spark = _get_session(args)
@@ -520,16 +518,20 @@ def _tail_loop(spark, args) -> int:
     all-duplicates ``--dedup-store`` poll, a ``--ship-lumberjack`` poll
     once its final ack has arrived — commits a run with the offsets and
     no sinks. A (re)started loop, same ``--run-id`` or not, takes its
-    state and poll number from the newest committed run with a ``tail``
-    block. A poll that crashed before its swap left nothing visible, so
-    the restart redoes it from the previous run's state, re-harvesting
-    its lines together with any growth since: each complete line is
-    committed exactly once, and no read-side dedup is needed."""
+    state and poll number K from the committed ``tail`` block with the
+    highest poll number. A poll that crashed before its swap left nothing
+    visible, so the restart redoes it from the previous run's state,
+    re-harvesting its lines together with any growth since: each complete
+    line is committed exactly once, and no read-side dedup is needed.
+    Before its first poll the loop GCs every uncommitted
+    ``run_id=*-p<K>``, the crashed poll's files under whatever
+    ``--run-id`` base it ran with (one writer per ``--out``)."""
+    import glob
     import os
     import time
     import uuid
 
-    from .plans.manifest import publish_run
+    from .plans.manifest import gc_run, publish_run, read_run
     from .plans.registrar import Registrar
     from .sources.textlog import (
         lines_to_sequences,
@@ -572,6 +574,10 @@ def _tail_loop(spark, args) -> int:
     last = reg.tail()
     state = _tail_state(last) if last else {}
     poll_no = last["poll"] + 1 if last else 0
+    crashed = os.path.join(glob.escape(args.out), f"run_id=*-p{poll_no}")
+    for run_dir in glob.glob(crashed):
+        if read_run(run_dir) is None:
+            gc_run(run_dir)
     base = args.run_id or uuid.uuid4().hex[:8]
     if args.tail_glob:
         tail_globs: str | list[str] = args.tail_glob
@@ -594,12 +600,10 @@ def _tail_loop(spark, args) -> int:
             return 1
 
         def dim_per_poll():
-            import glob as globmod
-
             return _conf_source_dim(
                 spark,
                 [
-                    (g.fields, globmod.glob(pat))
+                    (g.fields, glob.glob(pat))
                     for g in fcfg.files
                     for pat in g.paths
                     if pat != "-"
@@ -685,10 +689,10 @@ def _tail_loop(spark, args) -> int:
                 # retention at daemon cadence: expire runs beyond the K
                 # newest AFTER this poll's commit — metadata AND published
                 # storage stay bounded over an unbounded poll count. The
-                # newest run carries the offsets and is never expired.
+                # highest poll carries the offsets and is never expired.
                 exp = reg.expire_snapshots(keep_last=args.tail_retain_polls)
                 if exp["expired"]:
-                    rec["expired_runs"] = sorted(e["run_id"] for e in exp["expired"])
+                    rec["expired_runs"] = sorted(exp["expired"])
             state = new_state
             poll_no += 1
         # this poll's eager checkpoint is superseded once its lines are

@@ -10,7 +10,7 @@ import pytest
 from pyspark.sql import functions as F
 
 from logstash_forwarder_spark.datagen import gen_sequences, gen_source_dim
-from logstash_forwarder_spark.pipeline import PipelineSpec, read_sink, run_pipeline
+from logstash_forwarder_spark.pipeline import PipelineSpec, read_table, run_pipeline
 from logstash_forwarder_spark.plans import compact as compact_mod
 from logstash_forwarder_spark.plans.compact import compact_run, compact_sink
 from logstash_forwarder_spark.plans.manifest import RUN_MANIFEST, find_sink, read_run
@@ -41,7 +41,7 @@ def _snapshot(spark, tmp_out, run_id, sinks):
     schemas, rows = {}, []
     for s in sinks:
         try:
-            df = read_sink(spark, tmp_out, run_id, s)
+            df = read_table(spark, tmp_out, sinks=[s]).where(F.col("run_id") == run_id)
         except ValueError:
             continue
         schemas[s] = df.schema
@@ -263,14 +263,14 @@ def test_compact_composes_with_sorted_layout(spark, tmp_out, no_dir_rename):
     run_dir = os.path.join(tmp_out, "run_id=s1")
 
     def scanned() -> tuple[int, int]:
-        df = read_sink(spark, tmp_out, "s1", "sink_syslog").where(
+        df = read_table(spark, tmp_out, sinks=["sink_syslog"]).where(
             (F.col("n_tok") >= 100) & (F.col("n_tok") < 110)
         )
         rows = df.collect()
         return len(rows), scan_output_rows(df)
 
     n_before, scan_before = scanned()
-    total = read_sink(spark, tmp_out, "s1", "sink_syslog").count()
+    total = read_table(spark, tmp_out, sinks=["sink_syslog"]).count()
 
     rep = compact_sink(
         spark,

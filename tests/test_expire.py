@@ -15,7 +15,7 @@ from datetime import timedelta
 import pytest
 
 from logstash_forwarder_spark.datagen import gen_sequences, gen_source_dim
-from logstash_forwarder_spark.pipeline import PipelineSpec, run_pipeline
+from logstash_forwarder_spark.pipeline import PipelineSpec, read_table, run_pipeline
 from logstash_forwarder_spark.plans.compact import compact_run
 from logstash_forwarder_spark.plans.manifest import publish_run
 from logstash_forwarder_spark.plans.registrar import Registrar
@@ -50,9 +50,7 @@ def test_expire_keep_last_drops_old_run_and_gcs_data(
     assert len(old_snaps) == 1 and len(snaps) == 2
 
     rep = reg.expire_snapshots(keep_last=1)
-    assert {e["snapshot_id"] for e in rep["expired"]} == {
-        s.snapshot_id for s in old_snaps
-    }
+    assert rep["expired"] == ["old"]
     assert rep["data_files_removed"] > 0
 
     # metadata: only the new run's snapshots survive, sequence renumbered
@@ -63,15 +61,10 @@ def test_expire_keep_last_drops_old_run_and_gcs_data(
     assert not os.path.exists(os.path.join(tmp_out, "run_id=old"))
 
     # time travel to a SURVIVING snapshot is intact
-    df = reg.read_as_of(
-        spark, tmp_out, "new", snapshot_id=left[-1].snapshot_id
-    )
-    assert df.count() == N
+    assert read_table(spark, tmp_out, as_of=left[-1].run_id).count() == N
     # ... and to an expired one raises, like Iceberg
-    with pytest.raises(ValueError, match="unknown snapshot_id"):
-        reg.read_as_of(
-            spark, tmp_out, "new", snapshot_id=old_snaps[0].snapshot_id
-        )
+    with pytest.raises(ValueError, match="not committed"):
+        read_table(spark, tmp_out, as_of=old_snaps[0].run_id)
 
     # resume of the surviving run is unaffected: identical re-run skips
     res = run_pipeline(
@@ -97,7 +90,7 @@ def test_expire_older_than_respects_retain_floor(spark, tmp_out, no_dir_rename):
     rep = reg.expire_snapshots(older_than=future)
     left = reg.snapshots()
     assert len(left) == 1
-    assert left[0].snapshot_id == snaps[-1].snapshot_id
+    assert left[0].run_id == snaps[-1].run_id
     assert len(rep["expired"]) == len(snaps) - 1
     # a cutoff before everything expires nothing
     past = snaps[0].committed_at - timedelta(days=1)
@@ -158,11 +151,11 @@ def test_expire_crash_midway_is_finished_by_a_rerun(
         reg.expire_snapshots(keep_last=1)
     monkeypatch.setattr(os, "remove", real_remove)
     # the crash stopped before the manifest went: p0 is still listed
-    assert [s.snapshot_id for s in reg.snapshots()] == [s.snapshot_id for s in snaps]
+    assert reg.snapshots() == snaps
 
     rep = reg.expire_snapshots(keep_last=1)
-    assert {e["run_id"] for e in rep["expired"]} == {"p0"}
-    assert [s.snapshot_id for s in reg.snapshots()] == [s.snapshot_id for s in p1]
+    assert rep["expired"] == ["p0"]
+    assert [s.run_id for s in reg.snapshots()] == [s.run_id for s in p1]
     assert not os.path.exists(os.path.join(tmp_out, "run_id=p0"))
     after = {
         os.path.join(root, f)
@@ -183,7 +176,7 @@ def test_expire_keep_last_counts_runs(spark, tmp_out, no_dir_rename):
         _publish(spark, tmp_out, rid)
     reg = _reg(tmp_out)
     rep = reg.expire_snapshots(keep_last=2)
-    assert {e["run_id"] for e in rep["expired"]} == {"p0"}
+    assert rep["expired"] == ["p0"]
     left = reg.snapshots()
     assert [s.run_id for s in left] == ["t-p0", "p1", "p2"]
     assert len(left[1].sinks) == len(left[2].sinks) == 4
@@ -201,3 +194,17 @@ def test_expire_argument_validation(tmp_path):
         reg.expire_snapshots()
     with pytest.raises(ValueError, match="keep_last must be >= 1"):
         reg.expire_snapshots(keep_last=0)
+
+
+def test_tail_and_expiry_follow_the_highest_poll(tmp_path):
+    """The tail resume point is the highest poll number, not the newest
+    ``committed_at``: with the clock stepped back between polls 0 and 1,
+    ``tail()`` returns poll 1 and ``keep_last=1`` keeps its run."""
+    reg = Registrar(str(tmp_path / "_checkpoint"))
+    tails = {p: {"poll": p, "files": []} for p in (0, 1)}
+    publish_run(str(tmp_path / "run_id=t-p0"), [], tails[0], "2026-01-01T00:00:02+00:00")
+    publish_run(str(tmp_path / "run_id=t-p1"), [], tails[1], "2026-01-01T00:00:01+00:00")
+    assert [s.run_id for s in reg.snapshots()] == ["t-p1", "t-p0"]
+    assert reg.tail() == tails[1]
+    assert reg.expire_snapshots(keep_last=1)["expired"] == []
+    assert reg.tail() == tails[1]

@@ -62,7 +62,7 @@ def test_pipeline_sort_col_prunes_published_scans(spark, tmp_path):
     from logstash_forwarder_spark.datagen import gen_sequences, gen_source_dim
     from logstash_forwarder_spark.pipeline import (
         PipelineSpec,
-        read_sink,
+        read_table,
         run_pipeline,
     )
     from logstash_forwarder_spark.plans.layout import scan_output_rows
@@ -85,8 +85,8 @@ def test_pipeline_sort_col_prunes_published_scans(spark, tmp_path):
 
     # collect-then-read-metrics (the executed-plan clone gotcha)
     def scanned(run_id: str) -> tuple[int, int]:
-        df = read_sink(spark, out, run_id, "sink_syslog").where(
-            (F.col("n_tok") >= 100) & (F.col("n_tok") < 110)
+        df = read_table(spark, out, sinks=["sink_syslog"]).where(
+            (F.col("run_id") == run_id) & (F.col("n_tok") >= 100) & (F.col("n_tok") < 110)
         )
         rows = df.collect()
         return len(rows), scan_output_rows(df)

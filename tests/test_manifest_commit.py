@@ -18,7 +18,7 @@ import pytest
 from pyspark.sql import functions as F
 
 from logstash_forwarder_spark.datagen import gen_sequences, gen_source_dim
-from logstash_forwarder_spark.pipeline import PipelineSpec, read_sink, run_pipeline
+from logstash_forwarder_spark.pipeline import PipelineSpec, read_table, run_pipeline
 from logstash_forwarder_spark.plans.compact import compact_run
 from logstash_forwarder_spark.plans.manifest import (
     find_sink,
@@ -43,12 +43,8 @@ def _entry(tmp_out, run_id, sink):
     return find_sink(read_run(os.path.join(tmp_out, f"run_id={run_id}")), sink)
 
 
-def _all_rows(spark, tmp_out, run_id, sinks):
-    frames = [read_sink(spark, tmp_out, run_id, s) for s in sinks]
-    df = frames[0]
-    for f in frames[1:]:
-        df = df.unionByName(f)
-    return df
+def _all_rows(spark, tmp_out, run_id):
+    return read_table(spark, tmp_out).where(F.col("run_id") == run_id)
 
 
 def _touch_sink_files(run_dir, sink, names):
@@ -136,7 +132,7 @@ def test_manifest_run_resume_exactly_once(spark, tmp_out, no_dir_rename):
     res2 = run_pipeline(spark, seqs, dim, _spec(tmp_out, "m1"))
     assert res2.sinks_committed == [] and res2.rows_staged == 0
     # published data complete and duplicate-free; lineage agrees
-    got = _all_rows(spark, tmp_out, "m1", res.sinks_committed)
+    got = _all_rows(spark, tmp_out, "m1")
     n, nd = got.agg(
         F.count(F.lit(1)), F.countDistinct("doc_id")
     ).first()
@@ -150,30 +146,48 @@ def test_manifest_run_resume_exactly_once(spark, tmp_out, no_dir_rename):
         assert _entry(tmp_out, "m1", sink)["row_count"] == want
 
 
-def test_manifest_kill_resume(spark, tmp_out, no_dir_rename, crash_at_run_swap):
-    """A crash after the data files and before the run's one swap leaves
-    nothing visible to ``read_table``, the snapshot log, the lineage or
-    the resume lookup; the re-run commits every row exactly once."""
-    from logstash_forwarder_spark.pipeline import read_table
+def _check_metrics(res, seqs, dim):
+    """The run's ``_metrics`` equals the oracle's per-(sink, source)
+    counts of the input."""
+    dim_map = {r.source: dict(r.fields) for r in dim.collect()}
+    want = oracle_sink_source_counts(oracle_pipeline(seqs.toPandas(), dim_map))
+    got = pq.read_table(res.metrics_path).to_pandas()
+    got = got.sort_values(["sink", "source"]).reset_index(drop=True)
+    pd.testing.assert_frame_equal(got, want, check_dtype=False)
 
-    seqs = gen_sequences(spark, N)
+
+def test_manifest_kill_resume(spark, tmp_out, no_dir_rename, crash_at_run_swap):
+    """On both backends, a crash at the run's one swap — after its data
+    files and its ``_metrics`` are written — leaves nothing visible to
+    ``read_table``, the snapshot log, the lineage or the resume lookup;
+    the re-run commits every row exactly once, with ``_metrics`` equal to
+    the oracle."""
     dim = gen_source_dim(spark)
-    crash_at_run_swap()
-    with pytest.raises(InjectedFailure):
-        run_pipeline(spark, seqs, dim, _spec(tmp_out, "mk"))
-    assert glob.glob(os.path.join(tmp_out, "run_id=mk", "sink=*", "*.parquet"))
-    reg = Registrar(os.path.join(tmp_out, "_checkpoint"))
-    assert reg.snapshots() == [] and reg.committed_sinks("mk") == set()
-    assert reg.lineage().num_rows == 0
-    with pytest.raises(ValueError, match="no published data"):
-        read_table(spark, tmp_out)
-    res = run_pipeline(spark, seqs, dim, _spec(tmp_out, "mk"))
-    assert len(res.sinks_committed) == 4 and res.rows_staged == N
-    got = read_table(spark, tmp_out)
-    n, nd = got.agg(F.count(F.lit(1)), F.countDistinct("doc_id")).first()
-    assert (n, nd) == (N, N)
-    assert sum(reg.lineage("mk").column("row_count").to_pylist()) == N
-    assert [s.run_id for s in reg.snapshots()] == ["mk"]
+    for backend in ("spark", "local"):
+        out = os.path.join(tmp_out, backend)
+        seqs = gen_sequences(spark, N)
+        if backend == "local":
+            seqs = spark.createDataFrame(seqs.toArrow(), seqs.schema)
+        crash_at_run_swap()
+        with pytest.raises(InjectedFailure):
+            run_pipeline(spark, seqs, dim, _spec(out, "mk"))
+        run_dir = os.path.join(out, "run_id=mk")
+        assert glob.glob(os.path.join(run_dir, "sink=*", "*.parquet"))
+        assert os.path.exists(os.path.join(run_dir, "_metrics", "part-00000.parquet"))
+        reg = Registrar(os.path.join(out, "_checkpoint"))
+        assert reg.snapshots() == [] and reg.committed_sinks("mk") == set()
+        assert reg.lineage().num_rows == 0
+        with pytest.raises(ValueError, match="no published data"):
+            read_table(spark, out)
+        res = run_pipeline(spark, seqs, dim, _spec(out, "mk"))
+        assert res.backend == backend
+        assert len(res.sinks_committed) == 4 and res.rows_staged == N
+        got = read_table(spark, out)
+        n, nd = got.agg(F.count(F.lit(1)), F.countDistinct("doc_id")).first()
+        assert (n, nd) == (N, N)
+        assert sum(reg.lineage("mk").column("row_count").to_pylist()) == N
+        assert [s.run_id for s in reg.snapshots()] == ["mk"]
+        _check_metrics(res, seqs, dim)
 
 
 def test_manifest_crash_before_commit_swap_is_redone(
@@ -194,7 +208,7 @@ def test_manifest_crash_before_commit_swap_is_redone(
     res = run_pipeline(spark, seqs, dim, _spec(tmp_out, "mw"))
     assert res.rows_staged == N
     assert not any(os.path.exists(f) for f in orphans)
-    got = _all_rows(spark, tmp_out, "mw", res.sinks_committed)
+    got = _all_rows(spark, tmp_out, "mw")
     n, nd = got.agg(F.count(F.lit(1)), F.countDistinct("doc_id")).first()
     assert (n, nd) == (N, N)
     assert sorted(glob.glob(os.path.join(tmp_out, "run_id=ok", "**"), recursive=True)) == ok_files
@@ -202,32 +216,31 @@ def test_manifest_crash_before_commit_swap_is_redone(
 
 @pytest.mark.parametrize("backend", ["spark", "local"])
 def test_one_commit_swap_per_run(spark, tmp_out, no_dir_rename, monkeypatch, backend):
-    """A run makes exactly two ``publish_file`` swaps, its manifest and
-    then its ``_metrics``, on both backends, and nothing lands under
-    ``_checkpoint/``; a call on the committed run writes no data file and
-    swaps nothing."""
-    from logstash_forwarder_spark import pipeline
+    """A run makes exactly one ``publish_file`` swap, its manifest's, on
+    both backends; its ``_metrics`` is already written when the swap
+    runs, and nothing lands under ``_checkpoint/``. A call on the
+    committed run writes no file and swaps nothing."""
     from logstash_forwarder_spark.plans import manifest
 
     swaps: list[str] = []
     real = manifest.publish_file
+    metrics = os.path.join(tmp_out, "run_id=one", "_metrics", "part-00000.parquet")
+    metrics_first: list[bool] = []
 
     def counting(final, data):
         swaps.append(os.path.relpath(final, tmp_out))
+        metrics_first.append(os.path.exists(metrics))
         return real(final, data)
 
     monkeypatch.setattr(manifest, "publish_file", counting)
-    monkeypatch.setattr(pipeline, "publish_file", counting)
     seqs = gen_sequences(spark, N)
     if backend == "local":
         seqs = spark.createDataFrame(seqs.toArrow(), seqs.schema)
     dim = gen_source_dim(spark)
     res = run_pipeline(spark, seqs, dim, _spec(tmp_out, "one"))
     assert res.backend == backend and len(res.sinks_committed) == 4
-    assert swaps == [
-        os.path.join("run_id=one", "_manifest.json"),
-        os.path.join("run_id=one", "_metrics", "part-00000.parquet"),
-    ]
+    assert swaps == [os.path.join("run_id=one", "_manifest.json")]
+    assert metrics_first == [True]
     swaps.clear()
     files = sorted(glob.glob(os.path.join(tmp_out, "**"), recursive=True))
     res = run_pipeline(spark, seqs, dim, _spec(tmp_out, "one"))
@@ -246,22 +259,19 @@ def test_manifest_orphan_files_invisible(spark, tmp_out, no_dir_rename):
     res = run_pipeline(spark, seqs, dim, _spec(tmp_out, "mo"))
     run_dir = os.path.join(tmp_out, "run_id=mo")
     sink = res.sinks_committed[0]
-    before = read_sink(spark, tmp_out, "mo", sink).count()
+    before = read_table(spark, tmp_out, sinks=[sink]).count()
     d = os.path.join(run_dir, f"sink={sink}")
     src = next(f for f in os.listdir(d) if f.endswith(".parquet"))
     shutil.copyfile(
         os.path.join(d, src), os.path.join(d, "part-orphan-from-crash.parquet")
     )
-    assert read_sink(spark, tmp_out, "mo", sink).count() == before
-    # snapshot read is manifest-aware too
-    reg = Registrar(os.path.join(tmp_out, "_checkpoint"))
-    cur = reg.current()
-    df = reg.read_as_of(spark, tmp_out, "mo", snapshot_id=cur.snapshot_id)
-    assert df.count() == N
+    assert read_table(spark, tmp_out, sinks=[sink]).count() == before
+    # a read as of the run is manifest-aware too
+    assert read_table(spark, tmp_out, as_of="mo").count() == N
 
 
 def test_manifest_time_travel_midpoint(spark, tmp_out, no_dir_rename):
-    """read_as_of at the middle one of three run commits sees the first
+    """A read as of the middle one of three run commits sees the first
     two runs whole and the third not at all — manifest-resolved, not
     directory-listed."""
     dim = gen_source_dim(spark)
@@ -270,11 +280,9 @@ def test_manifest_time_travel_midpoint(spark, tmp_out, no_dir_rename):
     reg = Registrar(os.path.join(tmp_out, "_checkpoint"))
     snaps = reg.snapshots()
     assert [s.run_id for s in snaps] == ["mt0", "mt1", "mt2"]
-    cut = snaps[1].snapshot_id
-    for i, run_id in enumerate(("mt0", "mt1")):
-        assert reg.read_as_of(spark, tmp_out, run_id, snapshot_id=cut).count() == 500 * (i + 1)
-    with pytest.raises(ValueError, match="no committed data"):
-        reg.read_as_of(spark, tmp_out, "mt2", snapshot_id=cut)
+    df = read_table(spark, tmp_out, as_of=snaps[1].run_id)
+    per_run = {r.run_id: r["count"] for r in df.groupBy("run_id").count().collect()}
+    assert per_run == {"mt0": 500, "mt1": 1000}
 
 
 def test_manifest_empty_sinks(spark, tmp_out, no_dir_rename):
@@ -292,7 +300,7 @@ def test_manifest_empty_sinks(spark, tmp_out, no_dir_rename):
     ]
     for s in {"sink_apache", "sink_default", "sink_dev", "sink_syslog"} - set(res.sinks_committed):
         with pytest.raises(ValueError, match="no published data"):
-            read_sink(spark, tmp_out, "me", s)
+            read_table(spark, tmp_out, sinks=[s])
     res2 = run_pipeline(spark, seqs, dim, _spec(tmp_out, "me"))
     assert res2.sinks_committed == [] and res2.rows_staged == 0
 
@@ -302,19 +310,15 @@ def test_metrics_match_oracle(
 ):
     """``_metrics`` equals the oracle's per-(sink, source) counts of the
     input (a) after a clean run, (b) after a crash at the run swap and a
-    resume, and (c) after compacting the run, deleting its ``_metrics``
-    and re-running it: the committed run republishes ``_metrics`` from
-    its manifest, whose swap carried the statistics. A run with no rows
-    writes a zero-row ``_metrics`` both readers accept."""
+    resume, and (c) after compacting the run and re-running it: the
+    compaction's GC keeps ``_metrics``, and the re-run of the committed
+    run writes nothing. A run with no rows writes a zero-row
+    ``_metrics`` both readers accept."""
     seqs = gen_sequences(spark, N)
     dim = gen_source_dim(spark)
-    dim_map = {r.source: dict(r.fields) for r in dim.collect()}
-    want = oracle_sink_source_counts(oracle_pipeline(seqs.toPandas(), dim_map))
 
     def check(res):
-        got = pq.read_table(res.metrics_path).to_pandas()
-        got = got.sort_values(["sink", "source"]).reset_index(drop=True)
-        pd.testing.assert_frame_equal(got, want, check_dtype=False)
+        _check_metrics(res, seqs, dim)
 
     res = run_pipeline(spark, seqs, dim, _spec(tmp_out, "clean"))  # (a)
     check(res)
@@ -327,14 +331,15 @@ def test_metrics_match_oracle(
     check(res)
 
     assert any(r["rewritten"] for r in compact_run(spark, tmp_out, "clean"))  # (c)
-    shutil.rmtree(os.path.join(tmp_out, "run_id=clean", "_metrics"))
     res = run_pipeline(spark, seqs, dim, _spec(tmp_out, "clean"))
     assert res.sinks_committed == [] and res.rows_staged == 0
     check(res)
 
     res = run_pipeline(spark, seqs.limit(0), dim, _spec(tmp_out, "no-rows"))
     assert pq.read_table(res.metrics_path).num_rows == 0
-    assert spark.read.parquet(res.metrics_path).columns == list(want.columns)
+    assert spark.read.parquet(res.metrics_path).columns == [
+        "sink", "source", "row_count", "token_total", "max_tokens"
+    ]
 
 
 def test_read_table_skips_uncommitted_orphans(
@@ -343,8 +348,6 @@ def test_read_table_skips_uncommitted_orphans(
     """read_table: the cross-run consumer surface. A bare run_id=*/sink=*
     glob would see a crashed attempt's in-place data files;
     read_table resolves through manifests and must not."""
-    from logstash_forwarder_spark.pipeline import read_table
-
     seqs = gen_sequences(spark, N)
     dim = gen_source_dim(spark)
     run_pipeline(spark, seqs, dim, _spec(tmp_out, "t1"))

@@ -18,7 +18,6 @@ from logstash_forwarder_spark.operators.parse import PARSED_COLS
 from logstash_forwarder_spark.pipeline import (
     PipelineSpec,
     build_plan,
-    read_sink,
     read_table,
     run_pipeline,
 )
@@ -61,8 +60,7 @@ def _golden_dfs(spark):
 def _run(spark, tmp_out, seqs, dim, run_id="golden"):
     spec = PipelineSpec(out_dir=tmp_out, run_id=run_id)
     res = run_pipeline(spark, seqs, dim, spec)
-    frames = [read_sink(spark, tmp_out, run_id, s).toPandas() for s in res.sinks_committed]
-    got = pd.concat(frames, ignore_index=True)
+    got = read_table(spark, tmp_out, as_of=run_id).toPandas()
     return res, got
 
 

@@ -213,7 +213,7 @@ def test_keyed_lookup_is_exact_for_shared_name_prefixes(tmp_path, first, second)
     for (run_id, sink), rows in ((first, 1), (second, 2)):
         assert reg.committed_sinks(run_id) == {sink}
         assert reg.lineage(run_id)["row_count"].to_pylist() == [rows]
-    assert len({s.snapshot_id for s in reg.snapshots()}) == 2
+    assert {s.run_id for s in reg.snapshots()} == {first[0], second[0]}
 
 
 def test_failed_swap_leaves_no_file_a_glob_reader_counts(tmp_path, monkeypatch):

@@ -39,12 +39,12 @@ def test_run_cli_manifest_mode(spark, tmp_path, capsys):
 
     import os
 
-    from logstash_forwarder_spark.pipeline import read_sink
+    from logstash_forwarder_spark.pipeline import read_table
     from logstash_forwarder_spark.plans.manifest import read_run
 
     entries = read_run(os.path.join(out, "run_id=m1"))["sinks"]
     assert len(entries) == 4 and all(e["files"] for e in entries)
-    assert sum(read_sink(spark, out, "m1", e["sink"]).count() for e in entries) == 800
+    assert read_table(spark, out).count() == 800
 
 
 def test_run_cli_gen(spark, tmp_path, capsys):
@@ -95,27 +95,30 @@ def test_run_cli_snapshots_and_as_of(spark, tmp_path, capsys):
     assert all(len(s["sinks"]) == 4 for s in snaps)
 
     first, last = snaps
-    rc = main(["--read-as-of", first["snapshot_id"], "--run-id", "snap1", "--out", out])
+    rc = main(["--read-as-of", first["run_id"], "--out", out])
     assert rc == 0
     res = json.loads(capsys.readouterr().out.strip().splitlines()[-1])
-    assert set(res["sink_rows"]) == set(first["sinks"])
-    assert sum(res["sink_rows"].values()) == 2000
-    # snap2 is not visible at snap1's snapshot, and is at its own
-    with pytest.raises(ValueError, match="no committed data"):
-        main(["--read-as-of", first["snapshot_id"], "--run-id", "snap2", "--out", out])
-    rc = main(["--read-as-of", last["snapshot_id"], "--run-id", "snap2", "--out", out])
+    # snap2 is not visible as of snap1, and is as of itself
+    assert list(res["rows"]) == ["snap1"]
+    assert set(res["rows"]["snap1"]) == set(first["sinks"])
+    assert sum(res["rows"]["snap1"].values()) == 2000
+    rc = main(["--read-as-of", last["run_id"], "--out", out])
     assert rc == 0
     res = json.loads(capsys.readouterr().out.strip().splitlines()[-1])
-    assert sum(res["sink_rows"].values()) == 500
+    assert {r: sum(n.values()) for r, n in res["rows"].items()} == {
+        "snap1": 2000,
+        "snap2": 500,
+    }
+    with pytest.raises(ValueError, match="not committed"):
+        main(["--read-as-of", "nope", "--out", out])
 
 
 def test_cli_tail_glob_polls(spark, tmp_path, capsys, monkeypatch):
     """--tail-glob daemon mode: poll 1 ships the initial complete lines,
     growth between polls ships incrementally under per-poll run_ids, and
     a RESTARTED invocation resumes from the offsets its newest run
-    committed (no re-shipping). A poll with lines makes exactly two
-    swaps, its run manifest and its ``_metrics``; no state file is
-    written."""
+    committed (no re-shipping). A poll with lines makes exactly one
+    swap, its run manifest's; no state file is written."""
     import json as _json
     import os
 
@@ -161,10 +164,7 @@ def test_cli_tail_glob_polls(spark, tmp_path, capsys, monkeypatch):
     assert lines2[0]["new_lines"] == 2  # "partial three", "gamma four"
     assert lines2[0]["run_id"] == "tail1-p1"
     assert lines2[0]["sinks_committed"]  # actually shipped, not skipped
-    assert swaps == [
-        os.path.join("run_id=tail1-p1", "_manifest.json"),
-        os.path.join("run_id=tail1-p1", "_metrics", "part-00000.parquet"),
-    ]
+    assert swaps == [os.path.join("run_id=tail1-p1", "_manifest.json")]
     # no state file beside the runs: the offsets live in the manifests
     assert sorted(os.listdir(out)) == ["run_id=tail1-p0", "run_id=tail1-p1"]
 
@@ -217,6 +217,32 @@ def test_cli_tail_resumes_across_expiry(spark, tmp_path, capsys):
         f"read_parquet('{out}/run_id=tx-*/sink=*/*.parquet', hive_partitioning=true)"
     ).fetchone()
     assert (n, distinct) == (3, 3)
+
+
+def test_cli_tail_restart_gcs_a_crashed_poll_of_another_base(spark, tmp_path, capsys):
+    """A poll that crashed before its swap under one ``--run-id`` base
+    left an uncommitted ``run_id=old-p3``: a data file and a stray
+    ``publish_file`` temp file. A restart under another base resumes at
+    poll 3, GCs that directory before its first poll and commits
+    ``new-p3``."""
+    import os
+
+    from logstash_forwarder_spark.plans.manifest import publish_run
+
+    d = tmp_path / "live"
+    d.mkdir()
+    (d / "app.log").write_bytes(b"one a\ntwo b\n")
+    out = tmp_path / "out"
+    publish_run(str(out / "run_id=old-p2"), [], {"poll": 2, "files": []})
+    orphan = out / "run_id=old-p3"
+    (orphan / "sink=sink_default").mkdir(parents=True)
+    (orphan / "sink=sink_default" / "part-x-00000-1.parquet").write_bytes(b"PAR1")
+    (orphan / "._manifest.json.0123abcd.tmp").write_bytes(b"{")
+    argv = ["--tail-glob", f"{d}/*.log", "--polls", "1", "--out", str(out)]
+    assert main([*argv, "--run-id", "new"]) == 0
+    rec = json.loads(capsys.readouterr().out.strip().splitlines()[0])
+    assert rec["run_id"] == "new-p3" and rec["new_lines"] == 2
+    assert sorted(os.listdir(out)) == ["run_id=new-p3", "run_id=old-p2"]
 
 
 def test_cli_driver_sized_poll_starts_no_job_of_its_own(
@@ -617,7 +643,7 @@ def test_cli_compact_sinks(spark, tmp_path, capsys):
     identical reader-visible contents."""
     import os
 
-    from logstash_forwarder_spark.pipeline import read_sink
+    from logstash_forwarder_spark.pipeline import read_table
     from logstash_forwarder_spark.plans.manifest import find_sink, read_run
 
     out = str(tmp_path / "outc")
@@ -627,7 +653,7 @@ def test_cli_compact_sinks(spark, tmp_path, capsys):
 
     run_dir = os.path.join(out, "run_id=k1")
     before = {
-        s: read_sink(spark, out, "k1", s).count()
+        s: read_table(spark, out, sinks=[s]).count()
         for s in ("sink_default", "sink_syslog")
     }
     rc = main(["--compact-sinks", "--out", out, "--run-id", "k1"])
@@ -639,7 +665,7 @@ def test_cli_compact_sinks(spark, tmp_path, capsys):
         r["files_after"] < r["files_before"] for r in rewritten
     )
     for s, n in before.items():
-        assert read_sink(spark, out, "k1", s).count() == n
+        assert read_table(spark, out, sinks=[s]).count() == n
         m = find_sink(read_run(run_dir), s)
         assert len(m["files"]) >= 1
 
