@@ -102,37 +102,3 @@ def range_bucket_join(
     )
     return out.drop("_bucket")
 
-
-def write_bucketed(
-    df: DataFrame,
-    name: str,
-    *,
-    bucket_cols: list[str],
-    n_buckets: int,
-    sort_cols: list[str] | None = None,
-    path: str | None = None,
-) -> str:
-    """Persist ``df`` as a bucketed (optionally sorted) parquet table.
-
-    Bucketing is the co-location contract for repeated big-big joins and
-    aggregations: two tables bucketed by the same key into the same bucket
-    count join with NO Exchange — the shuffle is paid ONCE at write time
-    instead of on every join. At 100 TB this is the difference between
-    re-shuffling the fact table per query and a merge-join over co-located
-    files. (A within-partition Sort remains on read: Spark ≥3.0 drops
-    bucket sort-order propagation by default;
-    ``spark.sql.legacy.bucketedTableScanOutputOrdering`` restores it for
-    single-file buckets.) ``path`` makes it an external table (metadata in
-    the session catalog, data where you say).
-    """
-    # one file per bucket (repartition on the bucket key with the same hash
-    # the bucketer uses) keeps bucket layout tidy and makes the legacy
-    # sort-order propagation flag applicable
-    df = df.repartition(n_buckets, *[F.col(c) for c in bucket_cols])
-    w = df.write.mode("overwrite").bucketBy(n_buckets, *bucket_cols)
-    if sort_cols:
-        w = w.sortBy(*sort_cols)
-    if path:
-        w = w.option("path", path)
-    w.format("parquet").saveAsTable(name)
-    return name

@@ -19,18 +19,24 @@ portable. Sequence numbers are connection-scoped in the reference; here
 they are PARTITION-scoped (one partition == one connection analog),
 numbered 1..n in the kernel's row order.
 
-Spark shape: encoding/decoding is row-local byte work — mapInPandas
-kernels, one payload blob per pandas batch on the way out (the writer's
-"bundle of events per flush"), zero shuffles in either direction. At
-100 TB the frame blobs ride the same partitioning as their source rows.
+Spark shape: encoding/decoding is row-local byte work over Arrow — one
+bundle encoder (:func:`encode_bundles`: ``frames_per_payload`` rows per
+payload blob, the writer's "bundle of events per flush") and one decoder
+(:func:`decode_bundles`: payload bytes to Arrow columns). The spool
+kernels here and the socket publisher (``lumberjack_net``) are mapInArrow
+kernels over those two, so a value crosses the wire the same way on
+every path: ``str()`` of its Python value, a bigint as its digits, and a
+null as no pair at all. Zero shuffles in either direction. At 100 TB the
+frame blobs ride the same partitioning as their source rows.
 """
 
 from __future__ import annotations
 
 import struct
 import zlib
-from collections.abc import Iterator
+from collections.abc import Iterable, Iterator
 
+import pyarrow as pa
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
@@ -146,6 +152,71 @@ def ack_for(frames: Iterator[tuple[str, object]]) -> bytes | None:
 
 
 # ---------------------------------------------------------------------------
+# Arrow bundle codec: the one encoder and the one decoder that every Spark
+# kernel (spool and socket, both directions) runs
+# ---------------------------------------------------------------------------
+
+
+def encode_bundles(
+    batches: Iterable[pa.RecordBatch], pair_cols: list[str], frames_per_payload: int
+) -> Iterator[tuple[int, int, bytes]]:
+    """Encode rows into flush bundles: ``(first_seq, n_frames, payload)``
+    per ``frames_per_payload`` rows, rows numbered 1..n in batch order.
+    Each value is sent as ``str()`` of its Python value, so a bigint
+    goes out as its digits (publisher1.go:235 writes the offset with
+    ``strconv.FormatInt``). A null value's pair is left out: the frame's
+    pair count says how many pairs follow, and the reader decodes the
+    missing key as NULL."""
+    seq = 0
+    pending: list[bytes] = []
+    for batch in batches:
+        cols = [batch.column(c).to_pylist() for c in pair_cols]
+        for j in range(batch.num_rows):
+            seq += 1
+            pairs = [
+                (c, str(v[j])) for c, v in zip(pair_cols, cols) if v[j] is not None
+            ]
+            pending.append(encode_data_frame(seq, pairs))
+            if len(pending) >= frames_per_payload:
+                yield seq - len(pending) + 1, len(pending), encode_payload(pending)
+                pending = []
+    if pending:
+        yield seq - len(pending) + 1, len(pending), encode_payload(pending)
+
+
+def decode_bundles(
+    payloads: Iterable[bytes], keys: list[str]
+) -> tuple[pa.RecordBatch, pa.Array]:
+    """Decode payload blobs into Arrow columns ``(sequence, <keys...>)``,
+    one row per data frame, and the index in ``payloads`` of each
+    event's payload. Extra pairs are ignored; a missing key is NULL."""
+    seqs: list[int] = []
+    rows: list[int] = []
+    vals: dict[str, list] = {k: [] for k in keys}
+    for i, payload in enumerate(payloads):
+        for t, v in decode_stream(payload):
+            if t == "D":
+                seq, pairs = v  # type: ignore[misc]
+                seqs.append(seq)
+                rows.append(i)
+                for k in keys:
+                    vals[k].append(pairs.get(k))
+    events = pa.RecordBatch.from_arrays(
+        [pa.array(seqs, pa.int64())] + [pa.array(vals[k], pa.string()) for k in keys],
+        names=["sequence", *keys],
+    )
+    return events, pa.array(rows, pa.int64())
+
+
+def ordered_events(df: DataFrame, pair_cols: list[str], order_col: str) -> DataFrame:
+    """What an encoder kernel reads: ``pair_cols`` (and ``order_col``),
+    sorted by ``order_col`` within each partition, the order sequences
+    number in."""
+    cols = dict.fromkeys([order_col, *pair_cols])
+    return df.select(*cols).sortWithinPartitions(order_col)
+
+
+# ---------------------------------------------------------------------------
 # Spark integration
 # ---------------------------------------------------------------------------
 
@@ -160,76 +231,33 @@ def events_to_frames(
 ) -> DataFrame:
     """Encode rows into lumberjack payload blobs, one blob per
     ``frames_per_payload`` rows (the writer's flush bundle). Every
-    string column in ``pair_cols`` becomes a k/v pair, mirroring the
-    writer's file/host/offset/line map (values rendered as strings —
-    the protocol only carries strings). Sequences number 1..n within
-    the partition in ``order_col`` order (connection-scoped analog).
-    Row-local: no shuffle; call ``coalesce(1)`` first if a single
-    wire-order stream is required."""
-    cols = [order_col] + [c for c in pair_cols if c != order_col]
-    sel = df.select(*dict.fromkeys(cols)).sortWithinPartitions(order_col)
+    column in ``pair_cols`` becomes a k/v pair, mirroring the writer's
+    file/host/offset/line map (see :func:`encode_bundles` for how values
+    and nulls are rendered). Sequences number 1..n within the partition
+    in ``order_col`` order (connection-scoped analog). Row-local: no
+    shuffle; call ``coalesce(1)`` first if a single wire-order stream is
+    required."""
 
-    def enc(batches: Iterator) -> Iterator:
-        import pandas as pd
-
-        seq = 0
-        pending: list[bytes] = []
-        first = 1
-        for pdf in batches:
-            vals = {c: pdf[c].astype(str).tolist() for c in pair_cols}
-            for j in range(len(pdf)):
-                seq += 1
-                pending.append(
-                    encode_data_frame(seq, [(c, vals[c][j]) for c in pair_cols])
-                )
-                if len(pending) >= frames_per_payload:
-                    yield pd.DataFrame(
-                        {
-                            "first_seq": [first],
-                            "n_frames": [len(pending)],
-                            "payload": [encode_payload(pending)],
-                        }
-                    )
-                    first = seq + 1
-                    pending = []
-        if pending:
-            import pandas as pd
-
-            yield pd.DataFrame(
-                {
-                    "first_seq": [first],
-                    "n_frames": [len(pending)],
-                    "payload": [encode_payload(pending)],
-                }
+    def enc(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
+        for first, n, payload in encode_bundles(batches, pair_cols, frames_per_payload):
+            yield pa.RecordBatch.from_pydict(
+                {"first_seq": [first], "n_frames": [n], "payload": [payload]}
             )
 
-    return sel.mapInPandas(enc, schema=FRAMES_SCHEMA)
+    return ordered_events(df, pair_cols, order_col).mapInArrow(enc, FRAMES_SCHEMA)
 
 
 def frames_to_events(frames: DataFrame, keys: list[str]) -> DataFrame:
     """Decode payload blobs back to rows: (sequence, <keys...>) — the
     reader side. Unknown extra pairs are ignored; missing keys decode
-    as NULL. Row-local mapInPandas, no shuffle."""
+    as NULL. Row-local mapInArrow, no shuffle."""
     schema = "sequence long, " + ", ".join(f"`{k}` string" for k in keys)
 
-    def dec(batches: Iterator) -> Iterator:
-        import pandas as pd
+    def dec(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
+        for batch in batches:
+            yield decode_bundles(batch.column("payload").to_pylist(), keys)[0]
 
-        for pdf in batches:
-            rows: dict[str, list] = {"sequence": []}
-            for k in keys:
-                rows[k] = []
-            for payload in pdf["payload"]:
-                for t, v in decode_stream(bytes(payload)):
-                    if t != "D":
-                        continue
-                    seq, pairs = v  # type: ignore[misc]
-                    rows["sequence"].append(seq)
-                    for k in keys:
-                        rows[k].append(pairs.get(k))
-            yield pd.DataFrame(rows)
-
-    return frames.select("payload").mapInPandas(dec, schema=schema)
+    return frames.select("payload").mapInArrow(dec, schema)
 
 
 LJ_HARVEST_SCHEMA = (
@@ -238,42 +266,45 @@ LJ_HARVEST_SCHEMA = (
 )
 
 
+def _offset(value: str | None) -> int | None:
+    try:
+        return int(value)  # type: ignore[arg-type]
+    except (TypeError, ValueError):
+        return None
+
+
 def harvest_lumberjack_files(spark, path_glob: str | list[str]) -> DataFrame:
     """Ingest lumberjack v1 SPOOL FILES — payload streams at rest (a
     captured connection, a queue dump, an object-store spool): binaryFile
     scan + the decode kernel, one row per data frame carrying the
     writer's standard keys (file/host/offset/line, publisher1.go:236-240;
     extra pairs are ignored here — ``frames_to_events`` reads arbitrary
-    keys). Discovery/parallelism = the binaryFile glob, same as
-    ``harvest_text_files``; decoding is row-local, zero shuffles."""
+    keys). ``offset`` is Python ``int()`` of the pair's value, NULL when
+    that raises or the pair is missing. Discovery/parallelism = the
+    binaryFile glob, same as ``harvest_text_files``; decoding is
+    row-local, zero shuffles."""
     raw = (
         spark.read.format("binaryFile").load(path_glob).select("path", "content")
     )
+    keys = ["file", "host", "offset", "line"]
 
-    def dec(batches: Iterator) -> Iterator:
-        import pandas as pd
+    def dec(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
+        for batch in batches:
+            ev, rows = decode_bundles(batch.column("content").to_pylist(), keys)
+            offsets = [_offset(v) for v in ev.column("offset").to_pylist()]
+            yield pa.RecordBatch.from_arrays(
+                [
+                    batch.column("path").take(rows),
+                    ev.column("sequence"),
+                    ev.column("file"),
+                    ev.column("host"),
+                    pa.array(offsets, pa.int64()),
+                    ev.column("line"),
+                ],
+                names=["spool_file", "sequence", *keys],
+            )
 
-        cols = ("spool_file", "sequence", "file", "host", "offset", "line")
-        for pdf in batches:
-            rows: dict[str, list] = {c: [] for c in cols}
-            for path, content in zip(pdf["path"], pdf["content"]):
-                for t, v in decode_stream(bytes(content)):
-                    if t != "D":
-                        continue
-                    seq, pairs = v  # type: ignore[misc]
-                    rows["spool_file"].append(path)
-                    rows["sequence"].append(seq)
-                    rows["file"].append(pairs.get("file"))
-                    rows["host"].append(pairs.get("host"))
-                    off = pairs.get("offset")
-                    try:
-                        rows["offset"].append(int(off))
-                    except (TypeError, ValueError):
-                        rows["offset"].append(None)
-                    rows["line"].append(pairs.get("line"))
-            yield pd.DataFrame(rows)
-
-    return raw.mapInPandas(dec, schema=LJ_HARVEST_SCHEMA)
+    return raw.mapInArrow(dec, LJ_HARVEST_SCHEMA)
 
 
 def lumberjack_to_sequences(decoded: DataFrame, *, vocab: int = 2_147_483_647) -> DataFrame:

@@ -19,12 +19,16 @@ Two halves:
 * :func:`publish_lumberjack` — ships a DataFrame with ONE CONNECTION
   PER PARTITION (the connection is the reference's unit of sequencing;
   sequences number 1..n within the partition, the codec's documented
-  partition-scoped analog). Executor-side: each partition encodes its
-  rows into flush bundles (window frame + one zlib envelope), sends,
-  and BLOCKS for the bulk ack before the next bundle — publisher1.go's
-  send-then-wait loop. Returns per-partition (n_events, acked) stats,
-  collected eagerly: a ship is a side effect and must run exactly once
-  (a lazy result DataFrame would re-ship per action).
+  partition-scoped analog). Executor-side, a mapInArrow kernel over the
+  codec's one bundle encoder (``lumberjack.encode_bundles``, the same
+  one the spool writer ``events_to_frames`` runs, so values and nulls
+  go out the same way on both paths): each partition's rows become
+  flush bundles (window frame + one zlib envelope); each is sent, and
+  the kernel BLOCKS for its bulk ack before the next bundle —
+  publisher1.go's send-then-wait loop. Returns per-partition
+  (n_events, acked) stats, collected eagerly: a ship is a side effect
+  and must run exactly once (a lazy result DataFrame would re-ship per
+  action).
 
 TLS: both halves take an optional ``ssl.SSLContext`` — the transport
 the reference wraps its socket in (spec generates a self-signed
@@ -45,12 +49,14 @@ import socket
 import threading
 from collections.abc import Iterator
 
+import pyarrow as pa
+from pyspark import TaskContext
 from pyspark.sql import DataFrame
 
 from .lumberjack import (
     encode_ack_frame,
-    encode_data_frame,
-    encode_payload,
+    encode_bundles,
+    ordered_events,
     parse_frames,
 )
 
@@ -202,85 +208,47 @@ def publish_lumberjack(
     ``ssl_context_factory``: a zero-arg picklable callable building the
     client SSLContext ON THE EXECUTOR (contexts themselves don't
     pickle)."""
-    cols = [order_col] + [c for c in pair_cols if c != order_col]
-    sel = df.select(*dict.fromkeys(cols)).sortWithinPartitions(order_col)
-    pair_cols = list(pair_cols)
 
-    def ship(batches: Iterator) -> Iterator:
-        import pandas as pd
-        from pyspark import TaskContext
-
+    def ship(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
         ctx = TaskContext.get()
         pid = ctx.partitionId() if ctx is not None else -1
         ssl_ctx = ssl_context_factory() if ssl_context_factory else None
         n = 0
         acked = 0
         sock = None
-        fp = None
-        seq = 0
-        pending: list[bytes] = []
-        import socket as socketmod
-
-        def ensure_conn():
-            nonlocal sock, fp
-            if sock is None:
-                s = socketmod.create_connection((host, port), timeout=timeout)
-                if ssl_ctx is not None:
-                    s = ssl_ctx.wrap_socket(s, server_hostname=host)
-                sock = s
-                fp = s.makefile("rb")
-
-        def flush():
-            nonlocal acked
-            if not pending:
-                return
-            ensure_conn()
-            sock.sendall(encode_payload(pending))
-            want = seq
-            while acked < want:
-                got = next(read_frames(fp), None)
-                if got is None:
-                    raise ValueError(
-                        f"lumberjack: server closed before ack of {want}"
-                    )
-                if got[0] == "A":
-                    acked = max(acked, int(got[1]))
-            pending.clear()
-
         try:
-            for pdf in batches:
-                vals = {c: pdf[c].tolist() for c in pair_cols}
-                for j in range(len(pdf)):
-                    seq += 1
-                    n += 1
-                    pending.append(
-                        encode_data_frame(
-                            seq,
-                            [
-                                (
-                                    c,
-                                    ""
-                                    if vals[c][j] is None
-                                    else str(vals[c][j]),
-                                )
-                                for c in pair_cols
-                            ],
+            for _, n_frames, payload in encode_bundles(
+                batches, pair_cols, frames_per_payload
+            ):
+                if sock is None:
+                    sock = socket.create_connection((host, port), timeout=timeout)
+                    if ssl_ctx is not None:
+                        sock = ssl_ctx.wrap_socket(sock, server_hostname=host)
+                    acks = read_frames(sock.makefile("rb"))
+                sock.sendall(payload)
+                n += n_frames  # sequences run 1..n: the bundle's last is n
+                while acked < n:
+                    got = next(acks, None)
+                    if got is None:
+                        raise ValueError(
+                            f"lumberjack: server closed before ack of {n}"
                         )
-                    )
-                    if len(pending) >= frames_per_payload:
-                        flush()
-            flush()
+                    if got[0] == "A":
+                        acked = max(acked, int(got[1]))
         finally:
             if sock is not None:
                 try:
                     sock.close()
                 except OSError:
                     pass
-        yield pd.DataFrame(
-            {"partition_id": [pid], "n_events": [n], "acked": [acked]}
+        yield pa.RecordBatch.from_arrays(
+            [pa.array([pid], pa.int32()), pa.array([n]), pa.array([acked])],
+            names=["partition_id", "n_events", "acked"],
         )
 
-    stats = sel.mapInPandas(
-        ship, schema="partition_id int, n_events long, acked long"
-    ).collect()
+    stats = (
+        ordered_events(df, pair_cols, order_col)
+        .mapInArrow(ship, "partition_id int, n_events long, acked long")
+        .collect()
+    )
     return [r.asDict() for r in stats]

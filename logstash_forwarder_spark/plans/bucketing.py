@@ -57,7 +57,11 @@ def write_bucketed(
     """Publish ``df`` as an external parquet table bucketed (and by
     default sorted) on ``bucket_cols``. The ``repartition`` on the
     bucket key is the ONE shuffle this table ever pays for that key —
-    it also bounds the file count at ~``n_buckets``."""
+    it also bounds the file count at ~``n_buckets``, one file per
+    bucket. (A within-partition Sort remains on read: Spark ≥3.0 drops
+    bucket sort-order propagation by default;
+    ``spark.sql.legacy.bucketedTableScan.outputOrdering`` restores it
+    for single-file buckets.)"""
     if n_buckets <= 0:
         raise ValueError("write_bucketed: n_buckets must be positive")
     writer = (

@@ -400,11 +400,8 @@ def _ship_lumberjack(lines, host: str, port: int) -> dict:
     events = lines.select(
         "file",
         F.lit(socket.gethostname()).alias("host"),
-        F.col("byte_offset").cast("string").alias("offset"),
+        F.col("byte_offset").alias("offset"),
         "line",
-        # frames go out in byte order; the string offset would sort 12
-        # before 6
-        F.col("byte_offset").alias("_order"),
     )
     if is_driver_local(events):
         # a driver-harvested poll ships through one connection, as the
@@ -417,7 +414,7 @@ def _ship_lumberjack(lines, host: str, port: int) -> dict:
         host,
         port,
         pair_cols=["file", "host", "offset", "line"],
-        order_col="_order",
+        order_col="offset",
     )
     return {
         "shipped": sum(s["n_events"] for s in stats),

@@ -69,18 +69,18 @@ def test_bucketed_join_has_no_exchange(spark, tmp_path):
     same bucket count -> SortMergeJoin with NO Exchange in the executed
     plan (the shuffle was paid once, at write time; a within-partition
     Sort remains — Spark >=3.0 drops bucket sort-order propagation)."""
-    from logstash_forwarder_spark.operators.joins import write_bucketed
+    from logstash_forwarder_spark.plans.bucketing import write_bucketed
 
     n = 20_000
     facts = spark.range(n).selectExpr("id", "id % 97 AS v")
     dims = spark.range(n).selectExpr("id", "id % 31 AS w")
     write_bucketed(
         facts, "b_facts", bucket_cols=["id"], n_buckets=8,
-        sort_cols=["id"], path=str(tmp_path / "b_facts"),
+        path=str(tmp_path / "b_facts"),
     )
     write_bucketed(
         dims, "b_dims", bucket_cols=["id"], n_buckets=8,
-        sort_cols=["id"], path=str(tmp_path / "b_dims"),
+        path=str(tmp_path / "b_dims"),
     )
     # pin the join to SMJ so the assertion tests bucketing, not broadcast
     old = spark.conf.get("spark.sql.autoBroadcastJoinThreshold", "10485760")

@@ -127,6 +127,34 @@ def test_spark_roundtrip_multi_partition(spark):
     assert seqs[0] == 1 and seqs.count(1) == 4
 
 
+def test_events_to_frames_bytes_match_hand_built_bundles(spark):
+    """Rows whose pair values are non-null strings encode to exactly the
+    bundles encode_payload([encode_data_frame(...), ...]) builds by hand,
+    bundle by bundle: 1..n in order_col order, frames_per_payload frames
+    per bundle, a short last bundle."""
+    rows = [
+        (i, f"/var/log/{i % 2}.log", str(i * 7), f"line é {i}") for i in range(7)
+    ]
+    df = spark.createDataFrame(
+        rows, "i long, file string, offset string, line string"
+    ).coalesce(1)
+    got = [
+        (r.first_seq, r.n_frames, bytes(r.payload))
+        for r in events_to_frames(
+            df, ["file", "offset", "line"], order_col="i", frames_per_payload=3
+        ).collect()
+    ]
+    frames = [
+        encode_data_frame(i + 1, [("file", f), ("offset", o), ("line", ln)])
+        for i, f, o, ln in rows
+    ]
+    want = [
+        (first, len(bundle), encode_payload(bundle))
+        for first, bundle in ((1, frames[:3]), (4, frames[3:6]), (7, frames[6:]))
+    ]
+    assert got == want
+
+
 def test_harvest_lumberjack_spool_files(spark, tmp_path):
     """Spool ingest: payload streams at rest decode to one row per data
     frame with the writer's standard keys; event identity comes from the
@@ -171,6 +199,23 @@ def test_harvest_lumberjack_spool_files(spark, tmp_path):
     assert len(got) == 8
     assert got["/var/log/app0.log:0"] == ("app0", 4)  # "msg 0 0 alpha"
     assert all(src in ("app0", "app1") for src, _ in got.values())
+
+    # the offset rule: Python int() of the pair's value, NULL when that
+    # raises or the frame has no offset pair
+    odd = tmp_path / "odd"
+    odd.mkdir()
+    offsets = ["12", " 12", "+7", "1_000", "x", ""]
+    frames = [
+        encode_data_frame(i + 1, [("file", "/f"), ("offset", o), ("line", "l")])
+        for i, o in enumerate(offsets)
+    ]
+    frames.append(encode_data_frame(7, [("file", "/f"), ("line", "no offset")]))
+    (odd / "c.lj").write_bytes(encode_payload(frames))
+    rows = harvest_lumberjack_files(spark, f"{odd}/*.lj").collect()
+    assert {r.sequence: r.offset for r in rows} == {
+        1: 12, 2: 12, 3: 7, 4: 1000, 5: None, 6: None, 7: None,
+    }
+    assert all(r.spool_file.endswith("/odd/c.lj") for r in rows)
 
 
 def test_cli_lumberjack_ingest(spark, tmp_path, capsys):

@@ -82,6 +82,44 @@ def test_follow_file_and_emit_lines_as_events(spark, tmp_path, server):
         assert event["host"] == "testhost"
 
 
+def test_integers_and_nulls_cross_both_paths_alike(spark, server):
+    """One batch holding a null: a bigint goes out as its digits and a
+    null value as no pair at all, to a spool (events_to_frames, read
+    back by frames_to_events as NULL) and to a socket (publish_lumberjack
+    to LumberjackServer) alike."""
+    from logstash_forwarder_spark.operators.lumberjack import (
+        events_to_frames,
+        frames_to_events,
+    )
+
+    df = spark.createDataFrame(
+        [(1, 5, "x"), (2, -3, ""), (3, 2**40, "é"), (4, None, None)],
+        "i long, n long, s string",
+    ).coalesce(1)
+    want = {
+        1: {"n": "5", "s": "x"},
+        2: {"n": "-3", "s": ""},
+        3: {"n": "1099511627776", "s": "é"},
+        4: {},
+    }
+    frames = events_to_frames(df, ["n", "s"], order_col="i")
+    spool = {
+        r.sequence: {k: v for k, v in (("n", r.n), ("s", r.s)) if v is not None}
+        for r in frames_to_events(frames, ["n", "s"]).collect()
+    }
+    assert spool == want
+    stats = publish_lumberjack(
+        df, server.host, server.port, pair_cols=["n", "s"], order_col="i"
+    )
+    assert stats[0]["acked"] == 4
+    assert {e["_connection"] for e in server.events} == {1}
+    wire = {
+        e["_sequence"]: {k: v for k, v in e.items() if not k.startswith("_")}
+        for e in server.events
+    }
+    assert wire == want
+
+
 def test_one_connection_per_partition_sequences_restart(
     spark, tmp_path, server
 ):

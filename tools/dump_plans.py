@@ -211,15 +211,15 @@ def main() -> None:
 
     import tempfile
 
-    from logstash_forwarder_spark.operators.joins import write_bucketed
+    from logstash_forwarder_spark.plans.bucketing import write_bucketed
 
     bdir = tempfile.mkdtemp(prefix="plans_bucketed_")
     facts = spark.range(20_000).selectExpr("id", "id % 97 AS v")
     dims = spark.range(20_000).selectExpr("id", "id % 31 AS w")
     write_bucketed(facts, "p_facts", bucket_cols=["id"], n_buckets=8,
-                   sort_cols=["id"], path=f"{bdir}/facts")
+                   path=f"{bdir}/facts")
     write_bucketed(dims, "p_dims", bucket_cols=["id"], n_buckets=8,
-                   sort_cols=["id"], path=f"{bdir}/dims")
+                   path=f"{bdir}/dims")
     spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
     spark.conf.set("spark.sql.adaptive.autoBroadcastJoinThreshold", "-1")
     sections.append(
@@ -230,7 +230,7 @@ def main() -> None:
             "join reads co-located files directly — the same join on "
             "unbucketed inputs shows two Exchanges. A within-partition Sort "
             "remains: Spark ≥3.0 does not propagate bucket sort order "
-            "(spark.sql.legacy.bucketedTableScanOutputOrdering restores it "
+            "(spark.sql.legacy.bucketedTableScan.outputOrdering restores it "
             "for single-file buckets); eliding the shuffle is the part that "
             "matters at 100 TB.",
             plan_of(spark.table("p_facts").join(spark.table("p_dims"), "id")),

@@ -211,7 +211,7 @@ CLAIMS = {
         "join anywhere"
     ),
     "lumberjack_roundtrip": (
-        "encode and decode are row-local mapInPandas kernels (one "
+        "encode and decode are row-local mapInArrow kernels (one "
         "payload blob per flush bundle); the wire hop adds ZERO "
         "shuffles — the gated form's coalesce(1) is the connection "
         "analog, not an operator property"
